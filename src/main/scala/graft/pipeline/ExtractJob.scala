@@ -43,14 +43,17 @@ object ExtractJob {
     */
   private val BroadcastDeltaCap = 5000000L
 
+  /** Stride target of the sampled salting decision: it reads ≤ ~2x this
+    * many evenly-spaced input partitions.
+    */
+  private val SkewSampleParts = 8
+
   case class Config(
     outDir: String,
     runId: String = "run",
     groups: Int = 8,               // checkpoint granularity
     partitions: Int = 0,           // 0 = 4 x defaultParallelism
     bigDocBytes: Long = 1L << 20,  // cost-proxy threshold for skew isolation
-    salting: String = "auto",      // "on" | "off" | "auto" (sampled decision)
-    skewSampleParts: Int = 8,      // auto decision reads ≤ ~2x this many input partitions
     io: graft.sources.TableIO = null) { // default: HadoopTableIO(outDir)
     def tableIO: graft.sources.TableIO =
       if (io != null) io else graft.sources.HadoopTableIO(outDir)
@@ -179,7 +182,7 @@ object ExtractJob {
     // is _cost itself (octet_length over every span payload), so it is
     // BOUNDED (VERDICT r04 #3) in PARTITION units — a scan partition is
     // byte-bounded by the split config (maxPartitionBytes), so touching
-    // ≤ ~2x skewSampleParts evenly-spaced partitions bounds decision
+    // ≤ ~2x SkewSampleParts evenly-spaced partitions bounds decision
     // I/O in bytes with NO separate row-count job (r06 second pass: the
     // previous row-bounded design spent a count() job + a 13-partition
     // sample job ≈ 0.6 s of every run — ~17% of the whole bench job —
@@ -188,7 +191,7 @@ object ExtractJob {
     // total is scaled back up by the kept-partition fraction. A lone
     // monster doc can evade a sample; the miss cost is one straggler
     // task on the NARROW path, strictly cheaper than the full-payload
-    // shuffle a false "on" would buy at 10^12 docs. In an Iceberg
+    // shuffle a false positive would buy at 10^12 docs. In an Iceberg
     // deployment the exact max/sum come free from table column stats
     // instead. Skipped entirely when every group is already committed —
     // a no-op resume must not pay any input scan (report.salted is then
@@ -216,41 +219,37 @@ object ExtractJob {
       mx >= cfg.bigDocBytes || mx >= fairShare / 4
     }
     val anyToRun = (0 until cfg.groups).exists(g => !committed.contains(g))
-    val useSalt = anyToRun && (cfg.salting match {
-      case "on"  => true
-      case "off" => false
-      case _ =>
-        val p = math.max(1, cfg.skewSampleParts)
-        val k = srcParts / p // evenly-spaced stride; 0 handled below
-        if (k <= 1) {
-          // few input partitions (test corpora, resumes of small
-          // groups): one exact aggregate over everything. NOTE this is
-          // a PARTITION-count gate, not a row bound — a caller can
-          // shuffle a huge input into few partitions and land here
-          // paying a full payload pass (exactly what the pre-r06
-          // k>=srcN fallback paid too)
-          val s = withGroup.agg(max("_cost"), sum("_cost")).collect()(0)
-          !s.isNullAt(0) && skewDecision(s.getLong(0), s.getLong(1))
-        } else {
-          // PartitionPruningRDD: launch ONLY the kept partitions'
-          // tasks (a mapPartitionsWithIndex formulation would still
-          // dispatch one no-op task per skipped partition); unpulled
-          // partition iterators never open their files (FileScanRDD
-          // opens lazily on first pull), so the skipped partitions'
-          // payloads are never read
-          val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
-          val kept = org.apache.spark.rdd.PartitionPruningRDD.create(
-            costsRdd, i => i % k == 0)
-          val (mx, tot, cnt) = kept
-            .map(_.getLong(0))
-            .aggregate((0L, 0L, 0L))(
-              { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
-              { case ((m1, t1, c1), (m2, t2, c2)) =>
-                (math.max(m1, m2), t1 + t2, c1 + c2) })
-          cnt > 0 &&
-            skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
-        }
-    })
+    val useSalt = anyToRun && {
+      val k = srcParts / SkewSampleParts // evenly-spaced stride; 0 handled below
+      if (k <= 1) {
+        // few input partitions (test corpora, resumes of small
+        // groups): one exact aggregate over everything. NOTE this is
+        // a PARTITION-count gate, not a row bound — a caller can
+        // shuffle a huge input into few partitions and land here
+        // paying a full payload pass (exactly what the pre-r06
+        // k>=srcN fallback paid too)
+        val s = withGroup.agg(max("_cost"), sum("_cost")).collect()(0)
+        !s.isNullAt(0) && skewDecision(s.getLong(0), s.getLong(1))
+      } else {
+        // PartitionPruningRDD: launch ONLY the kept partitions'
+        // tasks (a mapPartitionsWithIndex formulation would still
+        // dispatch one no-op task per skipped partition); unpulled
+        // partition iterators never open their files (FileScanRDD
+        // opens lazily on first pull), so the skipped partitions'
+        // payloads are never read
+        val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
+        val kept = org.apache.spark.rdd.PartitionPruningRDD.create(
+          costsRdd, i => i % k == 0)
+        val (mx, tot, cnt) = kept
+          .map(_.getLong(0))
+          .aggregate((0L, 0L, 0L))(
+            { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
+            { case ((m1, t1, c1), (m2, t2, c2)) =>
+              (math.max(m1, m2), t1 + t2, c1 + c2) })
+        cnt > 0 &&
+          skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
+      }
+    }
 
     // small-file sources (a binaryFile directory scan) can arrive with
     // ONE partition per file — that many write tasks each paying a
@@ -258,7 +257,7 @@ object ExtractJob {
     // ingest into 170s). When the source partitioning is pathological
     // relative to the configured parallelism, merge with a NARROW
     // coalesce (no shuffle; skewed inputs take the salted repartition
-    // path instead, which the auto decision already detects).
+    // path instead, which the salting decision already detects).
     val mergeDown = !useSalt && srcParts > nPart * 4
 
     (0 until cfg.groups).foreach { g =>

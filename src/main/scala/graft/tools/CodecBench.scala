@@ -29,7 +29,7 @@ object CodecBench {
         val t0 = System.nanoTime()
         graft.pipeline.ExtractJob.run(spark, docs,
           graft.pipeline.ExtractJob.Config(out, runId = codec, groups = 1,
-            partitions = 64, salting = "off"))
+            partitions = 64))
         val sec = (System.nanoTime() - t0) / 1e9
         val bytes = size(new java.io.File(out))
         deleteRec(new java.io.File(out))

@@ -50,7 +50,7 @@ object CrawlBench {
     val docs = graft.sources.RawFiles.read(spark, dir.toString)
     val report = graft.pipeline.ExtractJob.run(spark, docs,
       graft.pipeline.ExtractJob.Config(out, runId = "crawl",
-        groups = 1, partitions = 64, salting = "off"))
+        groups = 1, partitions = 64))
     val sec = (System.nanoTime() - t0) / 1e9
     require(report.docsProcessed == wantDocs,
       s"expected $wantDocs fanned-out docs, got ${report.docsProcessed}")

@@ -34,7 +34,7 @@ object MixedBench {
     val docs = graft.sources.RawFiles.read(spark, dir.toString)
     val report = graft.pipeline.ExtractJob.run(spark, docs,
       graft.pipeline.ExtractJob.Config(out, runId = "mixed",
-        groups = 1, partitions = 64, salting = "off"))
+        groups = 1, partitions = 64))
     val sec = (System.nanoTime() - t0) / 1e9
     // ground-truth-derived doc count (the CrawlBench rule): files that
     // legitimately vanish (apparatus-only XML husks, encrypted .doc)

@@ -307,12 +307,9 @@ object RealPdfBench {
 
     val t0 = System.nanoTime()
     val docs = graft.sources.RawFiles.read(spark, dir.toString)
-    // salting="off": the corpus is uniform by construction, and the
-    // auto decision's stats pass would re-list + re-parse every file —
-    // on a real deployment those stats come from table metadata
     val report = graft.pipeline.ExtractJob.run(spark, docs,
       graft.pipeline.ExtractJob.Config(out, runId = "realpdf",
-        groups = 1, partitions = 64, salting = "off"))
+        groups = 1, partitions = 64))
     val sec = (System.nanoTime() - t0) / 1e9
     val outDf = graft.pipeline.ExtractJob.readOutput(spark, out)
     val rows = outDf.count()

@@ -1,11 +1,15 @@
 package graft
 
+import graft.tools.QueryProfile
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Smoke of the driver contract: entry() rows > 0; every query runs and
-  * returns rows at sf0.001; every oracleSql key exists in queries.
+  * returns rows at sf0.001; every oracleSql key exists in queries; the
+  * QueryProfile tool profiles those queries.
   */
 class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -18,17 +22,54 @@ class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  private val sfDir = "/root/testdata/sf0.001"
+
   test("entry() returns rows (driver smoke contract)") {
     spark.sparkContext.setLogLevel("WARN")
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("every query returns rows at sf0.001; oracle keys are valid") {
-    val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, dir).count()
+      val n = fn(spark, sfDir).count()
       assert(n > 0, s"query $name returned no rows")
     }
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("QueryProfile: one JSON line per query and rep, plans only in planDir") {
+    val names = Seq("q_doc_catalog", "q_topk")
+    def listing(p: Path): Set[String] =
+      if (!Files.isDirectory(p)) Set.empty
+      else Files.list(p).iterator().asScala.map(_.toString).toSet
+    val cwd = Paths.get("").toAbsolutePath
+    val cwdBefore = listing(cwd)
+    val plansBefore = listing(cwd.resolve("plans"))
+    val tmp = Files.createTempDirectory("graft-queryprofile")
+    val planDir = tmp.resolve("plans")
+    try {
+      val lines = QueryProfile.profile(spark, sfDir, names, reps = 1,
+        Some(planDir.toString))
+      assert(lines.size == 2)
+      names.zip(lines).foreach { case (q, line) =>
+        val num = (k: String) =>
+          s""""$k":(-?[0-9.]+)""".r.findFirstMatchIn(line)
+            .getOrElse(fail(s"no $k in $line")).group(1).toDouble
+        assert(line.startsWith(s"""{"query":"$q","rep":0,"""), line)
+        Seq("build_ms", "plan_ms", "exec_ms", "jobs", "stages")
+          .foreach(k => assert(num(k) >= 0, s"$k < 0 in $line"))
+        assert(num("jobs") >= 1, line)
+        assert(num("rows") == SparkEntry.queries(q)(spark, sfDir).count(), line)
+      }
+      assert(listing(planDir) == names.map(q => planDir.resolve(s"$q.txt").toString).toSet)
+      names.foreach(q => assert(Files.size(planDir.resolve(s"$q.txt")) > 0))
+      assert(listing(tmp) == Set(planDir.toString))
+      assert(listing(cwd) == cwdBefore && listing(cwd.resolve("plans")) == plansBefore,
+        "QueryProfile wrote outside its planDir")
+    } finally {
+      listing(planDir).foreach(f => Files.delete(Paths.get(f)))
+      Files.deleteIfExists(planDir)
+      Files.delete(tmp)
+    }
   }
 }

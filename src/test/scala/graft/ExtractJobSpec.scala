@@ -283,26 +283,50 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("salting decision from a bounded sample when input exceeds the cap") {
     import spark.implicits._
-    // 12 input partitions > skewSampleParts=2 → the stride-sampled path
-    // decides from every-6th partition (2 kept). Uniform corpus: OFF
-    // (the partition-fraction-scaled total keeps fair-share relative
-    // skew honest); every-3rd-doc-big corpus: ON (round-robin
-    // repartition spreads the big docs densely, so every kept
-    // partition contains them with certainty at these proportions).
-    val uniform = CorpusGen.dataset(spark, 300, 7L).repartition(12)
-      .as[core.InputDoc]
+    // 24 input partitions → stride 24/8 = 3: the decision reads every
+    // 3rd partition (8 kept). parallelize cuts contiguous slices of
+    // 12-13 docs, so in the every-3rd-doc-big corpus every slice, and
+    // hence every sampled one, holds big docs. Uniform corpus: OFF (the
+    // partition-fraction-scaled total keeps fair-share relative skew
+    // honest); big-doc corpus: ON.
+    val uniform = spark.createDataset(
+      spark.sparkContext.parallelize(CorpusGen.corpus(7L, 300), 24))
     val repA = ExtractJob.run(spark, uniform,
-      ExtractJob.Config(tmpDir("sampA"), "pa", groups = 1, partitions = 8,
-        skewSampleParts = 2))
+      ExtractJob.Config(tmpDir("sampA"), "pa", groups = 1, partitions = 8))
     assert(!repA.salted, "uniform corpus must not salt under sampling")
-    val skewed = spark.createDataset((0 until 300).map(i =>
-      core.InputDoc(f"s$i%04d", Vector(core.Span("text",
-        (if (i % 3 == 0) "x" * 65536 else "y" * 100), null, 0)))))
-      .repartition(12).as[core.InputDoc]
+    val skewed = spark.createDataset(spark.sparkContext.parallelize(
+      (0 until 300).map(i => InputDoc(f"s$i%04d", Vector(Span("text",
+        (if (i % 3 == 0) "x" * 65536 else "y" * 100), null, 0)))), 24))
     val repB = ExtractJob.run(spark, skewed,
       ExtractJob.Config(tmpDir("sampB"), "pb", groups = 1, partitions = 8,
-        bigDocBytes = 32768, skewSampleParts = 2))
+        bigDocBytes = 32768))
     assert(repB.salted, "sampled stats must detect the big-doc corpus")
+  }
+
+  test("sampled salting decision misses an unsampled monster, loses no rows") {
+    import spark.implicits._
+    // 32 slices → stride 4: slices 0, 4, …, 28 are sampled. The 2 MiB
+    // monster sits in slice 1, so the decision never sees it — the
+    // documented miss mode: one straggler task, never lost rows.
+    val monster = InputDoc("monster", Vector(Span("text", "x" * (2 << 20), null, 0)))
+    val (head, tail) = CorpusGen.corpus(7L, 320).splitAt(15)
+    val rdd = spark.sparkContext.parallelize(head ++ (monster +: tail), 32)
+    val monsterSlice = rdd.mapPartitionsWithIndex((i, it) =>
+      if (it.exists(_.doc_id == "monster")) Iterator(i) else Iterator.empty)
+      .collect().toSeq
+    assert(monsterSlice == Seq(1), s"monster in slices $monsterSlice")
+    val out = tmpDir("sampMiss")
+    val rep = ExtractJob.run(spark, spark.createDataset(rdd),
+      ExtractJob.Config(out, "pm", groups = 1, partitions = 8))
+    assert(!rep.salted, "an unsampled monster must not flip the decision")
+    assert(rep.docsProcessed == 321)
+    val got = ExtractJob.spansView(spark, out)
+      .where(col("doc_id") === "monster").collect().toSeq
+      .sortBy(_.getInt(4))
+      .map(r => (r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
+    val want = RefOracle.extract(monster).outSpans
+      .map(o => (o.kind, o.text, o.media_ref, o.order))
+    assert(want.nonEmpty && got == want, "monster output must match the oracle")
   }
 
   test("incremental ingestion: grown input table re-extracts ONLY new docs") {
