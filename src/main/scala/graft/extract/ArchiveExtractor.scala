@@ -236,10 +236,4 @@ object ArchiveExtractor {
     } catch { case _: Exception => () }
     out.toVector
   }
-
-  /** Body bytes of the named member — the byte-fetch half of the
-    * media-by-reference contract for archive-embedded media files.
-    */
-  def entryPayload(bytes: Array[Byte], name: String): Option[Array[Byte]] =
-    entries(bytes).find(_.name == name).map(_.body)
 }

@@ -1,5 +1,7 @@
 package graft.extract
 
+import Item.{Media, Text}
+
 /** Word 97–2003 binary (`.doc`, [MS-DOC]) front end — text extraction
   * from the WordDocument/Table stream pair inside a [[Cfb]] container.
   * The reference pipeline never reads these (PDF-only,
@@ -32,7 +34,7 @@ package graft.extract
   *     field CODE (nesting-correct — a HYPERLINK inside an IF keeps
   *     only the visible text); 0x02 footnote-ref, 0x05 annotation-ref
   *     and 0x08 drawn-object anchors drop.
-  *   - Picture anchors (0x01) emit [[Media]] items AT ANCHOR POSITION
+  *   - Picture anchors (0x01) emit [[Item.Media]] items AT ANCHOR POSITION
   *     (before the enclosing paragraph's text flushes — the DOCX
   *     tag-position rule). The n-th anchor pairs with the n-th bitmap
   *     BLIP in the `Data` stream ([[Blip.scan]] — a declared
@@ -59,12 +61,6 @@ package graft.extract
   * Word 2000+) flatten into the outer grid's cells.
   */
 object DocExtractor {
-
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** kind is always "image" (Word inline pictures are raster BLIPs;
-    * sounds/OLE objects never pair with a stored bitmap). */
-  final case class Media(kind: String, ref: String) extends Item
 
   private def u16(b: Array[Byte], off: Int): Int =
     if (off < 0 || off + 2 > b.length) -1
@@ -338,7 +334,9 @@ object DocExtractor {
         case _ if c >= ' ' => sb.append(c)
         case 0x01 => // picture/OLE anchor: media at anchor position
           anchors += 1
-          blocks += Media("image", s"pic$anchors")
+          // always "image": Word inline pictures are raster BLIPs;
+          // sounds/OLE objects never pair with a stored bitmap
+          blocks += Media("image", s"pic$anchors", inFile = true)
         case _ => () // 0x02/0x05/0x08 anchors + stray controls
       }
       i += 1
@@ -365,7 +363,7 @@ object DocExtractor {
     lazy val nPics = Cfb.stream(b, "Data")
       .map(d => Blip.scan(d).length).getOrElse(0)
     its.filter {
-      case Media(_, ref) => ref.drop(3).toInt <= nPics
+      case Media(_, ref, _) => ref.drop(3).toInt <= nPics
       case _ => true
     }
   }

@@ -3,6 +3,7 @@ package graft.extract
 import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** DOCX (WordprocessingML) front end: paragraphs + embedded media from
   * genuine `.docx` bytes, in document order.
@@ -11,7 +12,7 @@ import scala.collection.mutable.ArrayBuffer
   * X8; /root/reference/setup.sql:44-45 suffix-filters `%.pdf`), but the
   * north rule's interleaved text+media documents cover office formats in
   * any web-scale corpus. Like the genuine-PDF path ([[RealPdf]] via
-  * [[graft.sources.RawFiles.docSpans]]), DOCX decodes AT THE INGEST
+  * [[graft.sources.RawFiles.decodeAny]]), DOCX decodes AT THE INGEST
   * BOUNDARY into the spec's existing span vocabulary — paragraphs enter
   * as verbatim "text" spans, embedded images as by-reference media
   * spans — so [[graft.core.ExtractionSpec]] and both its independent
@@ -35,7 +36,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  - `<w:p>`/`<w:p ...>` opens a paragraph (an already-open paragraph
   *    is flushed first — defensive determinism; Word never nests);
-  *    `</w:p>` closes it, emitting one [[Text]] item iff the
+  *    `</w:p>` closes it, emitting one [[Item.Text]] item iff the
   *    accumulated text contains a non-whitespace char (emitted
   *    VERBATIM — no trimming or collapsing; DOCX run text is literal,
   *    unlike HTML). Self-closing `<w:p/>` emits nothing.
@@ -49,7 +50,7 @@ import scala.collection.mutable.ArrayBuffer
   *  - `<w:tab/>` appends a tab, `<w:br/>` and `<w:cr/>` append a
   *    newline — inside an open paragraph only; closing forms ignored.
   *  - `<w:tbl>` opens a table (flushing any open paragraph): the grid
-  *    emits at `</w:tbl>` as ONE [[Text]] item holding the engine's
+  *    emits at `</w:tbl>` as ONE [[Item.Text]] item holding the engine's
   *    TSV table vocabulary (tab-joined cells, newline-joined rows,
   *    ragged rows right-padded with empty cells — the same shape the
   *    PDF/markdown/HTML/XLSX/PPTX/ODT paths emit). `<w:tr>` closes a
@@ -67,7 +68,7 @@ import scala.collection.mutable.ArrayBuffer
   *    inside a table emit at tag position — i.e. BEFORE the table's
   *    Text item (the grid materializes at its close).
   *  - `<a:blip ... r:embed="rIdN">` (self-closing or not) resolves rIdN
-  *    through the relationship map and emits one [[Media]] item with
+  *    through the relationship map and emits one [[Item.Media]] item with
   *    ref = the Target verbatim and kind = by Target extension
   *    (png/jpg/jpeg/gif/bmp/tiff → "image", mp3/wav/flac → "audio",
   *    mp4/mkv/webm → "video", anything else → "image" — drawings are
@@ -87,10 +88,6 @@ import scala.collection.mutable.ArrayBuffer
   * package-absolute).
   */
 object DocxExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   def isDocx(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
@@ -217,7 +214,7 @@ object DocxExtractor {
                 (inPara || (tblDepth > 0 && inCell)) => appendText("\n")
             case "a:blip" if !closing =>
               attrOf(doc, lt, gt, "r:embed").flatMap(rels.get).foreach(t =>
-                out += Media(mediaKind(t), t))
+                out += Media(mediaKind(t), t, inFile = true))
             case _ => ()
           }
           i = gt + 1

@@ -2,6 +2,7 @@ package graft.extract
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** RFC 5322 / MIME (RFC 2045-2047) email front end: a `.eml` message
   * (or one member of an `.mbox` spool) decodes at the ingest boundary
@@ -50,10 +51,6 @@ import scala.collection.mutable.ArrayBuffer
   * pipeline never faces.
   */
 object EmlExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   /** A document attachment to fan out at ingest: `idx` is the leaf
     * part index (stable across re-parses), `body` the CTE-decoded
@@ -158,7 +155,7 @@ object EmlExtractor {
     val atts = Vector.newBuilder[Attachment]
     val perLeaf: Vector[Vector[Item]] = leaves.map { l =>
       mediaKind(l.mime) match {
-        case Some(k) => Vector(Media(k, mediaRef(l)))
+        case Some(k) => Vector(Media(k, mediaRef(l), inFile = true))
         case None =>
           val isAttachment = l.disposition == "attachment" &&
             l.filename.nonEmpty
@@ -169,14 +166,14 @@ object EmlExtractor {
             HtmlExtractor.items(
                 CharsetSniff.decode(l.body, html = true, l.charset))
               .map {
-                case HtmlExtractor.Block(t) => Text(t)
-                case HtmlExtractor.Media(k, src) =>
+                case Media(k, src, _) =>
                   val id = src.stripPrefix("cid:")
                   if (src.startsWith("cid:") && cidMap.contains(id)) {
                     referenced += id
                     val (mk, ref) = cidMap(id)
-                    Media(mk, ref)
-                  } else Media(k, src)
+                    Media(mk, ref, inFile = true)
+                  } else Item.mailed(k, src)
+                case t => t
               }
           } else if (l.mime.startsWith("text/") || l.mime.isEmpty) {
             val t = CharsetSniff.decode(l.body, html = false, l.charset)
@@ -206,8 +203,7 @@ object EmlExtractor {
     */
   def mediaPayload(bytes: Array[Byte], ref: String): Option[Array[Byte]] = {
     val m = "^p(\\d+):".r.findFirstMatchIn(ref)
-    m.flatMap { mm =>
-      val idx = mm.group(1).toInt
+    m.flatMap(_.group(1).toIntOption).flatMap { idx =>
       val s = new String(bytes, ISO_8859_1)
       val hdrEnd = headerBlockEnd(s)
       val headers = parseHeaders(s.substring(0, hdrEnd))

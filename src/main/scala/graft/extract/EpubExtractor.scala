@@ -1,5 +1,7 @@
 package graft.extract
 
+import Item.Media
+
 /** EPUB front end: spine-ordered chapter blocks + referenced media
   * from an EPUB (OCF zip) payload, in reading order.
   *
@@ -35,9 +37,9 @@ package graft.extract
   *    (declared).
   *  - Each chapter decodes via the BOM-tolerant UTF-8 rule
   *    ([[graft.sources.RawFiles.decodeTextPayload]] semantics) and
-  *    runs through [[HtmlExtractor.items]]: Block → [[Text]];
-  *    Media(kind, src) → [[Media]] with ref = src resolved against the
-  *    CHAPTER's directory (an in-archive path, fetchable via
+  *    runs through [[HtmlExtractor.items]]: text blocks pass as they
+  *    are; a media src becomes an [[Item.Media]] ref resolved against
+  *    the CHAPTER's directory (an in-archive path, fetchable via
   *    [[mediaPayload]]) — unless src carries a scheme
   *    (`http:`/`https:`/`data:`, case-insensitive), which passes
   *    verbatim (external reference).
@@ -45,10 +47,6 @@ package graft.extract
   *    within each chapter.
   */
 object EpubExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   private val ContainerPath = "META-INF/container.xml"
 
@@ -111,7 +109,6 @@ object EpubExtractor {
   private def decodeChapter(b: Array[Byte]): String =
     graft.sources.RawFiles.decodeTextPayload(b)
 
-  private val SchemeRx = "(?i)^(https?|data):.*".r
 
   /** Parse one EPUB payload into its ordered item stream. Callers must
     * have checked [[isEpub]]; a non-archive here returns Vector.empty.
@@ -142,12 +139,10 @@ object EpubExtractor {
           entries.get(path).toVector.flatMap { chBytes =>
             val chDir = dirOf(path)
             HtmlExtractor.items(decodeChapter(chBytes)).map {
-              case HtmlExtractor.Block(t) => Text(t)
-              case HtmlExtractor.Media(k, src) =>
-                val ref =
-                  if (SchemeRx.matches(src)) src
-                  else resolvePath(chDir, src)
-                Media(k, ref)
+              case Media(k, src, _) =>
+                Item.packaged(k,
+                  if (Item.isWebUrl(src)) src else resolvePath(chDir, src))
+              case t => t
             }
           }
         }
@@ -157,7 +152,7 @@ object EpubExtractor {
   }
 
   /** Byte-fetch half of media-by-reference for EPUB: the in-archive
-    * path a [[Media]] ref carries resolves against the ORIGINAL book
+    * path a [[Item.Media]] ref carries resolves against the ORIGINAL book
     * bytes.
     */
   def mediaPayload(bytes: Array[Byte], path: String): Option[Array[Byte]] =

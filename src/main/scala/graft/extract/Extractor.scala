@@ -39,8 +39,8 @@ object Extractor {
             .foreach(b => emits += Emit("pdf", b.text, null, b))
         case "html" =>
           HtmlExtractor.items(s.text).foreach {
-            case HtmlExtractor.Block(t) => emits += Emit("html", t, null, null)
-            case HtmlExtractor.Media(k, ref) => emits += Emit(k, null, ref, null)
+            case Item.Text(t) => emits += Emit("html", t, null, null)
+            case Item.Media(k, ref, _) => emits += Emit(k, null, ref, null)
           }
         case "text" =>
           emits += Emit("text", if (s.text == null) "" else s.text, null, null)

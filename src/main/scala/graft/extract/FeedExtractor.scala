@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** RSS 2.0 / Atom feed front end — syndication XML is how a crawl
   * discovers and often FIRST receives article content (description/
@@ -40,10 +41,6 @@ import scala.collection.mutable.ArrayBuffer
   * ingest flatMap, zero extra shuffle — identical to the WARC path.
   */
 object FeedExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   final case class Entry(idx: Int, id: String, items: Vector[Item])
 
@@ -85,12 +82,8 @@ object FeedExtractor {
     bodyRaw.foreach { b =>
       if (b.indexOf('<') >= 0) {
         val sub = HtmlExtractor.items(b)
-        val blocks = sub.collect { case HtmlExtractor.Block(t) => t }
-        sub.foreach {
-          case HtmlExtractor.Block(t) => items += Text(t)
-          case HtmlExtractor.Media(k, src) => items += Media(k, src)
-        }
-        if (blocks.isEmpty) {
+        items ++= sub
+        if (!sub.exists(_.isInstanceOf[Text])) {
           // no block cleared the boilerpipe length gate — feed bodies
           // are main content by construction, so keep the stripped text
           val t = HtmlExtractor.normalize(stripTags(b))
@@ -102,18 +95,14 @@ object FeedExtractor {
       }
     }
     // RSS enclosures + media:content; Atom enclosure links
-    tagAttrs(seg, "enclosure").foreach { at =>
-      at.get("url").filter(_.nonEmpty).foreach(u =>
-        items += Media(mediaKind(at.getOrElse("type", ""), u), u))
-    }
-    tagAttrs(seg, "media:content").foreach { at =>
-      at.get("url").filter(_.nonEmpty).foreach(u =>
-        items += Media(mediaKind(at.getOrElse("type", ""), u), u))
-    }
+    def enclosure(at: Map[String, String], url: Option[String]): Unit =
+      url.filter(_.nonEmpty).foreach(u => items +=
+        Media(mediaKind(at.getOrElse("type", ""), u), u, inFile = false))
+    tagAttrs(seg, "enclosure").foreach(at => enclosure(at, at.get("url")))
+    tagAttrs(seg, "media:content").foreach(at =>
+      enclosure(at, at.get("url")))
     if (!rss) tagAttrs(seg, "link").foreach { at =>
-      if (at.get("rel").contains("enclosure"))
-        at.get("href").filter(_.nonEmpty).foreach(u =>
-          items += Media(mediaKind(at.getOrElse("type", ""), u), u))
+      if (at.get("rel").contains("enclosure")) enclosure(at, at.get("href"))
     }
     val its = items.result()
     if (its.isEmpty) None

@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** HTML main-content extraction via text-density / link-density
   * boilerplate heuristics.
@@ -55,7 +56,8 @@ import scala.collection.mutable.ArrayBuffer
   *    text (whitespace runs collapsed to one space, trimmed) has length
   *    >= 25, AND linkChars * 3 <= contentChars (contentChars =
   *    non-whitespace char count of the accumulated text).
-  *  - MEDIA: a visible media occurrence emits one [[Media]] item —
+  *  - MEDIA: a visible media occurrence emits one external
+  *    [[Item.Media]] (`inFile` false) —
   *    `<img>` → kind "image"; `<video>`/`<audio>` with a direct src →
   *    their own kind; `<source>` → "video" when inside an open
   *    `<video>` element, else "audio" when inside an open `<audio>`,
@@ -84,17 +86,6 @@ import scala.collection.mutable.ArrayBuffer
   *    interleaved in document order.
   */
 object HtmlExtractor {
-
-  /** One extracted item, in document order. */
-  sealed trait Item
-  /** A retained main-content block's normalized text. */
-  final case class Block(text: String) extends Item
-  /** A visible media occurrence: kind ∈ image/video/audio, ref = the
-    * entity-decoded src attribute (media-by-reference — the north
-    * rule's interleaved text+media invariant, format-symmetric with
-    * the PDF embedded-image path, [[graft.sources.RawFiles.docSpans]]).
-    */
-  final case class Media(kind: String, ref: String) extends Item
 
   val BlockTags: Set[String] = Set(
     "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "td", "th", "tr",
@@ -128,7 +119,7 @@ object HtmlExtractor {
 
   /** Kept text blocks only (media items dropped) — the text view. */
   def extract(html: String): Vector[String] =
-    items(html).collect { case Block(t) => t }
+    items(html).collect { case Text(t) => t }
 
   def items(html: String): Vector[Item] = {
     if (html == null) return Vector.empty
@@ -151,7 +142,7 @@ object HtmlExtractor {
     def flush(): Unit = {
       val norm = normalize(buf.toString)
       if (!boilerMarked && norm.length >= MinBlockLen &&
-          linkChars * 3 <= contentChars) out += Block(norm)
+          linkChars * 3 <= contentChars) out += Text(norm)
       buf.setLength(0); contentChars = 0; linkChars = 0; boilerMarked = false
     }
 
@@ -225,7 +216,7 @@ object HtmlExtractor {
                 val kind = mediaKind(name)
                 if (kind != null) mediaRefOf(html, nameEnd, gt).foreach { raw =>
                   val ref = decodeEntities(raw)
-                  if (ref.nonEmpty) out += Media(kind, ref)
+                  if (ref.nonEmpty) out += Media(kind, ref, inFile = false)
                 }
               }
               if (name == "video" || name == "audio") {

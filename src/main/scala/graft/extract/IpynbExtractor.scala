@@ -2,6 +2,7 @@ package graft.extract
 
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
+import Item.{Media, Text}
 
 /** Jupyter notebook (`.ipynb`) front end — the document class code
   * corpora ship in volume (GitHub alone hosts ~10M notebooks; The
@@ -43,13 +44,6 @@ import com.fasterxml.jackson.databind.JsonNode
   * (Spark's own JSON dependency), like [[JsonlExtractor]].
   */
 object IpynbExtractor {
-
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** `inFile` media refs (`att<cell>:<name>` / `out<cell>:<idx>`)
-    * resolve via [[mediaPayload]]; external refs pass verbatim. */
-  final case class Media(kind: String, ref: String, inFile: Boolean)
-      extends Item
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -105,14 +99,13 @@ object IpynbExtractor {
   private def markdownItems(c: JsonNode, ci: Int): Vector[Item] = {
     val atts = c.get("attachments")
     MdExtractor.items(joined(c.get("source"))).flatMap {
-      case MdExtractor.Block(t) => Some(Text(t))
-      case MdExtractor.Media(mk, ref) if ref.startsWith("attachment:") =>
+      case Media(_, ref, _) if ref.startsWith("attachment:") =>
         val name = ref.stripPrefix("attachment:")
         val resolvable = atts != null && atts.has(name) &&
           ImageMimes.exists(m => atts.get(name).has(m))
         if (resolvable) Some(Media("image", s"att$ci:$name", inFile = true))
         else None // ghost ref: never mint an unresolvable media span
-      case MdExtractor.Media(mk, ref) => Some(Media(mk, ref, inFile = false))
+      case other => Some(other) // text blocks, external refs verbatim
     }
   }
 

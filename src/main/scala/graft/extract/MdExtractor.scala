@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** Markdown front end: blocks + referenced media from `.md` text, in
   * document order.
@@ -9,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * (/root/reference/setup.sql:44-45); markdown is the third most common
   * authored-text format in web/code corpora (READMEs, docs sites, wiki
   * dumps). Like DOCX, markdown decodes at the ingest boundary
-  * ([[graft.sources.RawFiles.docSpans]]) into the spec's existing span
+  * ([[graft.sources.RawFiles.decodeAny]]) into the spec's existing span
   * vocabulary: text blocks as "text" spans, image references as media
   * spans — [[graft.core.ExtractionSpec]] unchanged.
   *
@@ -60,7 +61,7 @@ import scala.collection.mutable.ArrayBuffer
   *    therefore read as soft-wrapped prose inside their run (declared:
   *    items are not separate blocks unless blank-line separated).
   *  - INLINE, applied to heading/paragraph lines: `![alt](url)` emits
-  *    one [[Media]] item AT TAG POSITION (kind by url extension —
+  *    one [[Item.Media]] AT TAG POSITION (kind by url extension —
   *    png/jpg/jpeg/gif/bmp/tiff → "image", mp3/wav/flac → "audio",
   *    mp4/mkv/webm → "video", default "image"; extension read before
   *    any `?`/`#`) and reads as its alt text; `[text](url)` reads as
@@ -77,10 +78,6 @@ import scala.collection.mutable.ArrayBuffer
   *  - Emphasis/inline-code markers stay literal (declared).
   */
 object MdExtractor {
-
-  sealed trait Item
-  final case class Block(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   private val Heading = "^(#{1,6}) (.*)$".r
   private val ListMarker = "^\\s*(?:[-*+]|\\d{1,9}\\.)\\s+".r
@@ -114,7 +111,7 @@ object MdExtractor {
       InlineRef.replaceAllIn(s, m => {
         val url = m.group(3)
         if (m.group(1) == "!") {
-          if (url.nonEmpty) out += Media(mediaKind(url), url)
+          if (url.nonEmpty) out += Media(mediaKind(url), url, inFile = false)
           java.util.regex.Matcher.quoteReplacement(m.group(2))
         } else java.util.regex.Matcher.quoteReplacement(m.group(2))
       })
@@ -122,7 +119,7 @@ object MdExtractor {
     def flushPara(): Unit = {
       if (para.nonEmpty) {
         val t = normalize(para.mkString(" "))
-        if (t.nonEmpty) out += Block(t)
+        if (t.nonEmpty) out += Text(t)
         para.clear()
       }
     }
@@ -162,7 +159,7 @@ object MdExtractor {
         val rows = (run.head +: run.drop(2))
           .map(l => cellsOf(l).map(c => normalize(inline(c)))
             .mkString("\t"))
-        out += Block(rows.mkString("\n"))
+        out += Text(rows.mkString("\n"))
       } else run.foreach(l => para += inline(stripMarkers(l)))
     }
 
@@ -179,7 +176,7 @@ object MdExtractor {
     val fence = ArrayBuffer.empty[String]
     def closeFence(): Unit = {
       if (fence.exists(_.exists(!_.isWhitespace)))
-        out += Block(fence.mkString("\n"))
+        out += Text(fence.mkString("\n"))
       fence.clear(); fenceLen = 0
     }
     lines.foreach { line =>
@@ -200,7 +197,7 @@ object MdExtractor {
           case Heading(_, text) =>
             flushPara()
             val t = normalize(inline(text))
-            if (t.nonEmpty) out += Block(t)
+            if (t.nonEmpty) out += Text(t)
           case _ =>
             para += inline(stripMarkers(line))
         }

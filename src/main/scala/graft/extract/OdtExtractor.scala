@@ -3,6 +3,7 @@ package graft.extract
 import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 import scala.collection.mutable.ArrayBuffer
+import Item.Text
 
 /** OpenDocument Text (ODF 1.2, the LibreOffice/OpenOffice `.odt`
   * format — a public OASIS standard) front end: the package is a zip
@@ -42,10 +43,6 @@ import scala.collection.mutable.ArrayBuffer
   * sibling a mixed corpus carries.
   */
 object OdtExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   /** The whole ODF document family: text (.odt), spreadsheet (.ods —
     * every sheet is a top-level `table:table`, so the same walk emits
@@ -182,7 +179,7 @@ object OdtExtractor {
                 href =>
                   val ref = if (href.startsWith("./")) href.substring(2)
                             else href
-                  if (ref.nonEmpty) out += Media(mediaKind(ref), ref)
+                  if (ref.nonEmpty) out += Item.packaged(mediaKind(ref), ref)
               }
             case _ => ()
           }

@@ -1,5 +1,7 @@
 package graft.extract
 
+import Item.{Media, Text}
+
 /** PowerPoint 97–2003 binary (`.ppt`, [MS-PPT]) front end — slide text
   * AND embedded-picture recovery from the `PowerPoint Document` /
   * `Pictures` streams inside a [[Cfb]] container. The reference
@@ -26,7 +28,7 @@ package graft.extract
   * in the document's drawing-group container. Each FBSE's `foDelay`
   * is the byte offset of the picture's BLIP record inside the
   * `Pictures` stream (or the BLIP is embedded in the FBSE itself).
-  * The walk emits a [[Media]] item AT SHAPE POSITION in stream order
+  * The walk emits a [[Item.Media]] item AT SHAPE POSITION in stream order
   * — the interleaved `(kind, text, media_ref, order)` invariant for
   * legacy decks, mirroring PPTX's tag-position media. Payloads
   * resolve by reference via [[mediaPayload]] (JPEG/PNG/DIB/TIFF
@@ -38,12 +40,6 @@ package graft.extract
   * skipped as non-content.
   */
 object PptExtractor {
-
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** kind is always "image" (PPT BLIPs are raster/vector pictures;
-    * sounds/videos live behind ExOleObj links, out of scope). */
-  final case class Media(kind: String, ref: String) extends Item
 
   private def u16(b: Array[Byte], off: Int): Int =
     if (off < 0 || off + 2 > b.length) -1
@@ -127,7 +123,9 @@ object PptExtractor {
           .map(_.replace('\u000B', '\n'))
           .map(_.trim).filter(_.nonEmpty)
           .map(Text.apply)
-      case EvPic(pib) => Vector(Media("image", s"pic$pib"))
+      // always "image": PPT BLIPs are raster/vector pictures;
+      // sounds/videos live behind ExOleObj links, out of scope
+      case EvPic(pib) => Vector(Media("image", s"pic$pib", inFile = true))
       case EvEnc => Vector.empty
     }
   }

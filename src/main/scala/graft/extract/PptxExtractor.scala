@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import Item.Text
 
 /** PPTX (PresentationML) front end: slide text + embedded media from
   * genuine `.pptx` bytes, in deck order.
@@ -31,7 +32,7 @@ import scala.collection.mutable.ArrayBuffer
   * Per slide, a left-to-right tag scan (char data ignored except inside
   * an open `<a:t>`):
   *  - `<a:p>` opens a paragraph, `</a:p>` closes it, emitting one
-  *    [[Text]] item iff the accumulated text has a non-whitespace char
+  *    [[Item.Text]] item iff the accumulated text has a non-whitespace char
   *    (VERBATIM — DrawingML run text is literal). Self-closing
   *    `<a:p/>` emits nothing; an unclosed paragraph flushes at
   *    end-of-part.
@@ -40,7 +41,7 @@ import scala.collection.mutable.ArrayBuffer
   *    `<a:br/>` appends a newline inside an open paragraph.
   *  - `<a:blip ... r:embed="rIdN">` resolves rIdN through the SLIDE's
   *    own rels part (`ppt/slides/_rels/<slide>.rels`) and emits one
-  *    [[Media]] item AT TAG POSITION (a picture inside a not-yet-closed
+  *    [[Item.Media]] item AT TAG POSITION (a picture inside a not-yet-closed
   *    paragraph precedes that paragraph's Text item). The media ref is
   *    the IN-ARCHIVE path: Target resolved against the slide's
   *    directory (`../media/x.png` → `ppt/media/x.png`), or
@@ -48,7 +49,7 @@ import scala.collection.mutable.ArrayBuffer
   *    through verbatim (linked, not embedded). kind by Target extension
   *    (the [[DocxExtractor]] table).
   *  - `<a:tbl>` (a DrawingML table inside a `<p:graphicFrame>`) reads
-  *    as ONE [[Text]] item in the engine's table vocabulary — cells
+  *    as ONE [[Item.Text]] item in the engine's table vocabulary — cells
   *    tab-joined, rows newline-joined — emitted at `</a:tbl>` position,
   *    matching the XLSX sheet / markdown pipe / HTML `<table>` TSV
   *    forms. Inside a table the paragraph machine is suppressed: cell
@@ -69,10 +70,6 @@ import scala.collection.mutable.ArrayBuffer
   * minted above — the PPTX quarter of the media-by-reference contract.
   */
 object PptxExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   private val PresPath = "ppt/presentation.xml"
   private val PresRels = "ppt/_rels/presentation.xml.rels"
@@ -280,10 +277,10 @@ object PptxExtractor {
               DocxExtractor.attrOf(doc, lt, gt, "r:embed")
                 .flatMap(rels.get).foreach { t =>
                   val ref =
-                    if (t.matches("(?i)^(https?|data):.*")) t
+                    if (Item.isWebUrl(t)) t
                     else normalizePath(
                       if (t.startsWith("/")) t.substring(1) else dir + t)
-                  out += Media(mediaKind(t), ref)
+                  out += Item.packaged(mediaKind(t), ref)
                 }
             case _ => ()
           }

@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** RTF front end: paragraph text, tables, and embedded pictures from
   * genuine `.rtf` bytes, in document order.
@@ -29,7 +30,7 @@ import scala.collection.mutable.ArrayBuffer
   * and ignored; a raw TAB reads as `\tab`.
   *
   * Text:
-  *  - `\par` / `\sect` / `\page` end the paragraph → one [[Text]] item
+  *  - `\par` / `\sect` / `\page` end the paragraph → one [[Item.Text]] item
   *    iff the accumulated text has a non-whitespace char (VERBATIM).
   *    `\line` appends a newline, `\tab` a tab.
   *  - `\'hh` appends the codepage byte; `\uN` appends the char
@@ -54,7 +55,7 @@ import scala.collection.mutable.ArrayBuffer
   * cells keep grid shape), `\row` closes a row (kept iff ≥1 cell),
   * `\intbl` marks the current paragraph as in-table so a `\par` inside
   * a cell reads as one space (`\pard` clears the mark). Consecutive
-  * rows join one table; the pending table emits as ONE [[Text]] item —
+  * rows join one table; the pending table emits as ONE [[Item.Text]] item —
   * cells tab-joined, rows newline-joined, iff ≥1 cell is nonempty — at
   * the next out-of-table paragraph flush, at a picture emission, or at
   * end of input, so it PRECEDES the following item, matching its
@@ -62,7 +63,7 @@ import scala.collection.mutable.ArrayBuffer
   * table — declared, not hit by honest writers).
   *
   * Pictures: `{\pict …}` hex data (or `\binN` raw data) becomes one
-  * [[Media]] item (kind "image") at the pict group's position, ref
+  * [[Item.Media]] item (kind "image") at the pict group's position, ref
   * minted as `pict_<idx>.<ext>` (per-doc occurrence index; ext png/jpg
   * from `\pngblip`/`\jpegblip`, else the wmf/emf family tag, else
   * `bin`). [[mediaPayload]] re-parses the document and returns the
@@ -70,10 +71,6 @@ import scala.collection.mutable.ArrayBuffer
   * media-by-reference contract.
   */
 object RtfExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   def isRtf(bytes: Array[Byte]): Boolean =
     bytes.length >= 5 && bytes(0) == '{' && bytes(1) == '\\' &&
@@ -103,7 +100,7 @@ object RtfExtractor {
     */
   def mediaPayload(bytes: Array[Byte], ref: String): Option[Array[Byte]] = {
     val m = "^pict_(\\d+)\\.[A-Za-z0-9]+$".r.findFirstMatchIn(ref)
-    m.flatMap(g => parse(bytes)._2.lift(g.group(1).toInt))
+    m.flatMap(_.group(1).toIntOption).flatMap(parse(bytes)._2.lift)
   }
 
   // group state: uc = \uc fallback count, skip = inside a skipped
@@ -153,7 +150,7 @@ object RtfExtractor {
       if (data.nonEmpty) {
         flushTable() // a picture after table rows keeps source order
         val ext = if (pictExt != null) pictExt else "bin"
-        out += Media("image", s"pict_${picts.length}.$ext")
+        out += Media("image", s"pict_${picts.length}.$ext", inFile = true)
         picts += data
       }
       pictHex = null; pictBin = null; pictExt = null

@@ -1,6 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable.ArrayBuffer
+import Item.{Media, Text}
 
 /** LaTeX front end — the arXiv-corpus format, a first-class source
   * for LLM pretraining sets. A `.tex` source decodes at the ingest
@@ -53,10 +54,6 @@ import scala.collection.mutable.ArrayBuffer
   * is a crawl-corpus reality its pipeline never faces.
   */
 object TexExtractor {
-
-  sealed trait Item
-  final case class Block(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   /** Conservative content magic: a documentclass/begin{document} at
     * the head of the file (comments/blank lines allowed before it).
@@ -114,7 +111,7 @@ object TexExtractor {
 
     def flush(): Unit = {
       val t = normWs(para.toString)
-      if (t.nonEmpty) out += Block(t)
+      if (t.nonEmpty) out += Text(t)
       para.setLength(0)
     }
 
@@ -155,7 +152,7 @@ object TexExtractor {
       */
     def inlineOf(t: String): String = {
       val sub = items("\\begin{document}" + t + "\n\n\\end{document}")
-      normWs(sub.collect { case Block(b) => b }.mkString(" "))
+      normWs(sub.collect { case Text(b) => b }.mkString(" "))
     }
 
     def findEnvEnd(from: Int, env: String): Int = {
@@ -205,7 +202,7 @@ object TexExtractor {
                       val e = findEnvEnd(after, env)
                       val body = s.substring(after, e)
                         .stripPrefix("\n").stripSuffix("\n")
-                      if (body.exists(!_.isWhitespace)) out += Block(body)
+                      if (body.exists(!_.isWhitespace)) out += Text(body)
                       i = math.min(s.length,
                         e + s"\\end{$env}".length)
                     case "comment" =>
@@ -240,7 +237,7 @@ object TexExtractor {
                 if (a < s.length && s.charAt(a) == '{') {
                   val (arg, after) = group(a)
                   val t = inlineOf(arg)
-                  if (t.nonEmpty) out += Block(t)
+                  if (t.nonEmpty) out += Text(t)
                   i = after
                 } else i = a
               case "includegraphics" =>
@@ -248,7 +245,8 @@ object TexExtractor {
                 if (a < s.length && s.charAt(a) == '{') {
                   val (arg, after) = group(a)
                   val ref = arg.trim
-                  if (ref.nonEmpty) out += Media(mediaKind(ref), ref)
+                  if (ref.nonEmpty)
+                    out += Media(mediaKind(ref), ref, inFile = false)
                   i = after
                 } else i = a
               case k if KeepArgCmds.contains(k) =>
@@ -334,7 +332,7 @@ object TexExtractor {
       val width = rows.map(_.length).max
       val tsv = rows.map(_.padTo(width, "").mkString("\t"))
         .mkString("\n")
-      if (tsv.exists(!_.isWhitespace)) { out += Block(tsv); () }
+      if (tsv.exists(!_.isWhitespace)) { out += Text(tsv); () }
     }
   }
 

@@ -160,12 +160,6 @@ object WarcExtractor {
     out.toVector
   }
 
-  /** Body bytes of the idx-th RETAINED record — the byte-fetch half of
-    * the media-by-reference contract for WARC-embedded media records.
-    */
-  def recordPayload(bytes: Array[Byte], idx: Int): Option[Array[Byte]] =
-    records(bytes).lift(idx).map(_.body)
-
   // ---------- internals ----------
 
   /** Index just past the blank line ending a header block starting at

@@ -1,5 +1,7 @@
 package graft.extract
 
+import Item.{Media, Text}
+
 /** Excel 97–2003 binary (`.xls`, [MS-XLS] BIFF8) front end — worksheet
   * text recovery from the `Workbook` stream inside a [[Cfb]]
   * container, emitting the same per-sheet used-range TSVs as
@@ -98,14 +100,9 @@ object XlsExtractor {
     } catch { case _: Exception => Vector.empty }
   }
 
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** kind is always "image" (sheet pictures are raster/vector BLIPs). */
-  final case class Media(kind: String, ref: String) extends Item
-
   /** The workbook as ordered items: per worksheet, its used-range TSV
     * (non-blank sheets only) followed by the sheet's embedded pictures
-    * in drawing order — one [[Media]] per OfficeArtFOPT `pib`
+    * in drawing order — one [[Item.Media]] per OfficeArtFOPT `pib`
     * resolving into the drawing-group BLIP store (`pic<pib>`, payloads
     * via [[mediaPayload]]; a pib past the store count stays silent,
     * the `.doc` ghost rule). Empty on anything unreadable/encrypted.
@@ -127,7 +124,8 @@ object XlsExtractor {
               else Vector.empty
             head ++ sheetPibs(wb, at)
               .filter(pib => pib >= 1 && pib <= nPics)
-              .map(pib => Media("image", s"pic$pib"))
+              // always "image": sheet pictures are raster/vector BLIPs
+              .map(pib => Media("image", s"pic$pib", inFile = true))
           }.flatten
       }
     } catch { case _: Exception => Vector.empty }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * UI's validation list, streamlit_app.py:655-678):
   *   .pdf → one "pdf" span (payload decoded as UTF-8 content stream;
   *   genuine PDF bytes additionally yield one "image" media span per
-  *   embedded-image occurrence — see [[docSpans]]);
+  *   embedded-image occurrence — see [[pdfSpans]]);
   *   .html/.htm → one "html" span; .txt/.text → one "text" span;
   *   .md/.markdown → decoded at ingest by [[graft.extract.MdExtractor]]
   *   into "text" spans (one per block) + media spans (one per image
@@ -92,6 +92,8 @@ import org.apache.spark.sql.functions._
   */
 object RawFiles {
 
+  import graft.extract._
+
   private val TextExt: Map[String, String] = Map(
     "pdf" -> "pdf", "html" -> "html", "htm" -> "html",
     "txt" -> "text", "text" -> "text", "docx" -> "docx",
@@ -125,6 +127,34 @@ object RawFiles {
     "avi" -> "video", "mov" -> "video", "m4v" -> "video",
     "mpg" -> "video", "mpeg" -> "video")
 
+  /** Single-file compression suffixes ([[graft.extract.Codecs]]). */
+  private val CodecExt: Set[String] =
+    Set("gz", "zst", "xz", "bz2", "lz4", "sz", "snappy")
+
+  /** Container kinds: a top-level file of one of these fans out into
+    * one InputDoc per member; as a member of another container (archive
+    * entry, pdf/eml attachment) it drops — ONE fan-out level.
+    */
+  private val Containers: Set[String] =
+    Set("warc", "zip", "tar", "jsonl", "eml", "mbox", "feed")
+
+  /** Suffix kinds whose front end needs no content magic. */
+  private val Textual: Set[String] =
+    Set("tex", "csv", "subs", "json", "ipynb", "md")
+
+  /** Binary document kinds: a file suffixed as one whose magic fails
+    * reads as one "text" span ("docx" etc. are ingest classifications,
+    * never span kinds).
+    */
+  private val Binary: Set[String] =
+    Set("docx", "epub", "xlsx", "pptx", "rtf", "odt", "doc", "xls", "ppt")
+
+  /** Formats a WARC record with an unrecognized binary mime may still
+    * decode as — the container magics a crawler's octet-stream hides.
+    */
+  private val RecordMagic: Set[String] =
+    Set("pdf", "docx", "epub", "xlsx", "pptx", "rtf")
+
   /** Path relative to the scan root by plain substring search — NO regex
     * (a user dir with regex metacharacters must not crash or corrupt
     * ids), scheme-agnostic (file:/, hdfs://, s3a:// URIs all contain the
@@ -135,115 +165,189 @@ object RawFiles {
     if (i >= 0) uriPath.substring(i + root.length) else uriPath
   }
 
-  /** Payload decode for one text-kind file as the full span sequence:
-    * genuine PDFs (binary, %PDF- magic) go through the byte-level
-    * [[graft.extract.RealPdf]] front end, re-entering as ONE "pdf" span
-    * holding the canonical PG/TX interchange payload PLUS one media
-    * span per embedded-image occurrence (kind "image", media_ref
-    * `<path>#img<seq>:obj<N>`, or `…:inline` for BI…EI inline images —
-    * the bytes stay inside the stored file, XObject payloads
-    * recoverable via `RealPdf.imageBytes(bytes, N)`; offsets 1..k in
-    * content-stream order, so [[graft.core.ExtractionSpec]]'s offset
-    * ordering reproduces the document's own text→media sequence).
-    * Genuine DOCX (zip magic + `word/document.xml`) decodes through
-    * [[graft.extract.DocxExtractor]] into the spec's EXISTING
-    * vocabulary — one verbatim "text" span per paragraph plus one
-    * media span per embedded blip (media_ref `<path>#<relsTarget>`,
-    * payloads recoverable via [[docxMediaPayload]]), offsets in
-    * document order — so [[graft.core.ExtractionSpec]] needs no new
-    * kind. Everything else decodes as a single UTF-8 span (a
-    * non-archive `.docx` falls back to a "text" span — "docx" is an
-    * ingest classification, never a span kind). ONE definition shared
-    * by the batch directory reader and the streaming source, so the
-    * two ingestion paths cannot drift.
+  /** Lower-cased text after the last `.` of `name`; "" when none. */
+  private def suffixOf(name: String): String = {
+    val lp = name.toLowerCase
+    val dot = lp.lastIndexOf('.')
+    if (dot < 0) "" else lp.substring(dot + 1)
+  }
+
+  /** Ingest kind of a file path by suffix: a text kind or a codec
+    * (`.warc.gz`/`.tar.gz` are their containers, not generic gzip);
+    * None for media and unsupported suffixes.
     */
-  /** File-level decode with WARC fan-out: a `.warc`/`.warc.gz` file
-    * (by suffix OR content magic — a crawler's misnamed `.txt` WARC
-    * still routes) expands into one InputDoc PER retained record; every
-    * other kind stays one file = one InputDoc via [[docSpans]]. The one
-    * definition shared by the batch scan and the streaming source.
-    */
-  private[graft] def docsOf(kind: String, path: String, bytes: Array[Byte],
-                            root: String): Seq[InputDoc] =
-    if (kind == "warc" || graft.extract.WarcExtractor.isWarc(bytes) ||
-        graft.extract.WarcExtractor.isWarcGz(bytes))
-      warcDocs(path, relativize(path, root), bytes)
-    else if (kind == "zip" || kind == "tar" ||
-             graft.extract.ArchiveExtractor.isPlainZip(bytes) ||
-             graft.extract.ArchiveExtractor.isTarGz(bytes) ||
-             graft.extract.ArchiveExtractor.isTar(bytes) ||
-             graft.extract.ArchiveExtractor.isSevenZ(bytes))
-      archiveDocs(path, relativize(path, root), bytes)
-    else if (kind == "jsonl") jsonlDocs(relativize(path, root), bytes)
-    else if (kind == "json")
-      // ONE Jackson parse routes notebook-vs-plain AND yields the
-      // records (ADVICE r05: the old isNotebookJson-then-valueRecords
-      // pair parsed every payload twice, and a notebook three times)
-      graft.extract.JsonlExtractor.routeJson(bytes) match {
-        case Right(recs) => jsonDocs(relativize(path, root), recs)
-        case Left(_) =>
-          val spans = docSpans("ipynb", path, bytes)
-          if (spans.isEmpty) Nil
-          else Seq(InputDoc(relativize(path, root), spans))
-      }
-    else if (kind == "feed" ||
-             (kind == "xml" && graft.extract.FeedExtractor.isFeed(bytes)))
-      feedDocs(relativize(path, root), bytes)
-    else if (kind == "mbox" && graft.extract.EmlExtractor.isMbox(bytes))
-      mboxDocs(path, relativize(path, root), bytes)
-    else if (kind == "eml" || ((kind == "text" || kind == "mbox") &&
-             graft.extract.EmlExtractor.isEml(bytes)))
-      emlDocs(path, relativize(path, root), bytes)
-    else if (kind == "gz" || kind == "zst" || kind == "xz" ||
-             kind == "bz2" || kind == "lz4" || kind == "sz" ||
-             kind == "snappy") compressedDoc(path, bytes, root, kind)
-    else if (graft.extract.RealPdf.isPdf(bytes))
-      pdfDocs(path, relativize(path, root), bytes)
+  private def kindOf(path: String): Option[String] = {
+    val lp = path.toLowerCase
+    if (lp.endsWith(".warc.gz")) Some("warc")
+    else if (lp.endsWith(".tar.gz")) Some("tar")
     else {
-      // a file with nothing extractable vanishes — the same posture as
-      // the pdf/eml/archive paths (apparatus-only XML, blank text, …)
-      val spans = docSpans(kind, path, bytes)
-      if (spans.isEmpty) Nil
-      else Seq(InputDoc(relativize(path, root), spans))
+      val e = suffixOf(lp)
+      if (CodecExt(e)) Some(e) else TextExt.get(e)
+    }
+  }
+
+  /** Routing kind of a container member by its own name: a text kind
+    * that is not itself a container (one fan-out level).
+    */
+  private def memberKind(name: String): Option[String] =
+    TextExt.get(suffixOf(name)).filterNot(Containers)
+
+  /** THE format decision for one payload: suffix kind + content magic
+    * → the decoder ingest runs and [[mediaPayload]] resolves against.
+    *
+    * CONTENT MAGIC overrides the suffix within the text-kind family:
+    * web corpora routinely misname files (a crawler's `.txt` that is
+    * really a PDF, a CMS download endpoint serving DOCX as `.html`).
+    * Only payloads that START with a container magic reroute — anything
+    * else keeps its suffix classification, so genuine text never
+    * misroutes; a binary-suffixed file whose magic fails decodes as
+    * "raw" (one span). Files OUTSIDE the text suffixes never get here:
+    * the reference's suffix filter (media by reference, unknown
+    * dropped) stays authoritative.
+    *
+    * At the top level (`nested` false) the fan-out containers are
+    * checked first — a `.warc`/`.warc.gz` (by suffix OR magic: a
+    * crawler's misnamed `.txt` WARC still routes), zip/tar/tar.gz/7z
+    * archives, jsonl/json, syndication feeds (a feed-rooted `.xml`
+    * too), mbox spools, email (a `.txt`/`.mbox` with an RFC 5322 header
+    * block too) and compressed files. A nested payload (archive member,
+    * attachment, WARC record) never fans out again; a feed there yields
+    * nothing ("none").
+    */
+  private def sniff(kind: String, bytes: Array[Byte],
+                    nested: Boolean): String = {
+    // the zip-packaged formats share one magic; classify once
+    lazy val zip =
+      if (!ArchiveExtractor.isZip(bytes)) ""
+      else if (DocxExtractor.isDocx(bytes)) "docx"
+      else if (EpubExtractor.isEpub(bytes)) "epub"
+      else if (XlsxExtractor.isXlsx(bytes)) "xlsx"
+      else if (PptxExtractor.isPptx(bytes)) "pptx"
+      else if (OdtExtractor.isOdt(bytes)) "odt"
+      else "zip"
+    lazy val feed = FeedExtractor.isFeed(bytes)
+    def fanOut: Option[String] =
+      if (kind == "warc" || WarcExtractor.isWarc(bytes) ||
+          WarcExtractor.isWarcGz(bytes)) Some("warc")
+      else if (kind == "zip" || kind == "tar" || zip == "zip" ||
+               ArchiveExtractor.isTarGz(bytes) ||
+               ArchiveExtractor.isTar(bytes) ||
+               ArchiveExtractor.isSevenZ(bytes)) Some("archive")
+      else if (kind == "jsonl" || kind == "json") Some(kind)
+      else if (kind == "feed" || (kind == "xml" && feed)) Some("feed")
+      else if (kind == "mbox" && EmlExtractor.isMbox(bytes)) Some("mbox")
+      else if (kind == "eml" || ((kind == "text" || kind == "mbox") &&
+               EmlExtractor.isEml(bytes))) Some("eml")
+      else if (CodecExt(kind)) Some(kind)
+      else None
+    (if (nested) None else fanOut).getOrElse {
+      if (RealPdf.isPdf(bytes)) "pdf"
+      else if (zip.nonEmpty && zip != "zip") zip
+      else if (RtfExtractor.isRtf(bytes)) "rtf"
+      // a CFB container WITHOUT a readable Office stream classifies as
+      // "doc", whose front end yields nothing — a structured-storage
+      // binary must never decode as mojibake "text"
+      else if (Cfb.isCfb(bytes)) Cfb.officeKind(bytes)
+      else if (kind == "text" && TexExtractor.isTex(bytes)) "tex"
+      else if (kind == "text" && {
+        val head = new String(bytes, 0, math.min(bytes.length, 512),
+          java.nio.charset.StandardCharsets.UTF_8)
+        SubtitleExtractor.isVtt(head) || SubtitleExtractor.isSrt(head)
+      }) "subs"
+      else if (kind == "xml" || kind == "feed") if (feed) "none" else "xml"
+      else if (Textual(kind)) kind
+      else "raw"
+    }
+  }
+
+  /** Classify + decode ONE file into its InputDocs: text kinds decode
+    * their payload (containers FAN OUT to one doc per member), media
+    * kinds pass by reference (bytes unused), and unsupported suffixes
+    * return empty (the reference's suffix filter). The one definition
+    * [[read]] and [[graft.streaming.StreamingIngest.startRawDir]] share.
+    */
+  def decodeAny(path: String, content: Array[Byte],
+                root: String): Seq[InputDoc] =
+    kindOf(path) match {
+      case Some(kind) => docsOf(kind, path, content, root)
+      case None => MediaExt.get(suffixOf(path)).map(kind =>
+        InputDoc(relativize(path, root),
+          Vector(Span(kind, null, path, 0)))).toSeq
     }
 
+  /** File-level decode: the [[sniff]]ed format either fans out (one
+    * InputDoc per WARC record, archive member, jsonl line, json array
+    * element, feed entry, mbox message, plus one per pdf/eml document
+    * attachment) or the file is one InputDoc. A file with nothing
+    * extractable vanishes (apparatus-only XML, blank text, …).
+    */
+  private def docsOf(kind: String, path: String, bytes: Array[Byte],
+                     root: String): Seq[InputDoc] = {
+    val rel = relativize(path, root)
+    sniff(kind, bytes, nested = false) match {
+      case "warc" => warcDocs(path, rel, bytes)
+      case "archive" => archiveDocs(path, rel, bytes)
+      case "jsonl" => jsonlDocs(rel, bytes)
+      case "json" =>
+        // ONE Jackson parse routes notebook-vs-plain AND yields the
+        // records (ADVICE r05: the old isNotebookJson-then-valueRecords
+        // pair parsed every payload twice, and a notebook three times)
+        JsonlExtractor.routeJson(bytes) match {
+          case Right(recs) => jsonDocs(rel, recs)
+          case Left(_) => oneDoc(rel, decode("ipynb", kind, path, bytes, ""))
+        }
+      case "feed" => feedDocs(path, rel, bytes)
+      case "mbox" => mboxDocs(path, rel, bytes)
+      case "eml" => emlDocs(path, rel, bytes)
+      case "pdf" => pdfDocs(path, rel, bytes)
+      case c if CodecExt(c) => compressedDoc(path, bytes, root, c)
+      case format => oneDoc(rel, decode(format, kind, path, bytes, ""))
+    }
+  }
+
+  private def oneDoc(docId: String, spans: Vector[Span]): Seq[InputDoc] =
+    if (spans.isEmpty) Nil else Seq(InputDoc(docId, spans))
+
+  /** One container member → its InputDoc (none when nothing decodes):
+    * its spans decode against the pseudo-path `<path>#<segment>`, so a
+    * member's own in-file refs read `<path>#<segment>#<ref>`.
+    */
+  private def memberDoc(docId: String, pseudo: String, kind: String,
+                        body: Array[Byte]): Seq[InputDoc] =
+    oneDoc(docId, decode(sniff(kind, body, nested = true), kind, pseudo,
+      body, ""))
+
+  /** A pdf/eml DOCUMENT attachment (`<rel>#a<idx>:<filename>`) routed
+    * by its own suffix through the matching front end — an email with
+    * an attached PDF yields the PDF's positioned spans, exactly like a
+    * WARC pdf record or an archive member. Containers drop.
+    */
+  private def attachmentDoc(path: String, rel: String, idx: Int,
+                            name: String, body: Array[Byte]): Seq[InputDoc] = {
+    val seg = s"a$idx:$name"
+    memberKind(name).toSeq.flatMap(k =>
+      memberDoc(s"$rel#$seg", s"$path#$seg", k, body))
+  }
+
   /** One genuine PDF → its InputDocs: the document itself (positioned
-    * spans + embedded-image media via [[docSpans]]) plus one InputDoc
-    * per EMBEDDED FILE (`<rel>#a<idx>:<filename>`, ISO 32000 §7.11.4 —
-    * the /EmbeddedFiles name tree and /FileAttachment annotations)
-    * routed by its own suffix through the matching front end — a PDF
-    * carrying an attached CSV/DOCX/TXT yields those documents' spans,
-    * exactly like an email attachment or an archive member. Nested
-    * containers drop (one fan-out level), and a PDF reached through a
-    * WARC record, archive member, or email attachment does NOT fan out
-    * its own attachments — the same one-level rule.
+    * spans + embedded-image media) plus one InputDoc per EMBEDDED FILE
+    * (ISO 32000 §7.11.4 — the /EmbeddedFiles name tree and
+    * /FileAttachment annotations) via [[attachmentDoc]]. A PDF reached
+    * through a WARC record, archive member, or email attachment does
+    * NOT fan out its own attachments — the one-level rule.
     */
   private def pdfDocs(path: String, rel: String,
-                      bytes: Array[Byte]): Seq[InputDoc] = {
-    val main = docSpans("pdf", path, bytes)
-    val mainDoc = if (main.isEmpty) Nil else Seq(InputDoc(rel, main))
-    val attDocs = graft.extract.RealPdf.attachments(bytes).flatMap { a =>
-      val lp = a.name.toLowerCase
-      val dot = lp.lastIndexOf('.')
-      val e = if (dot < 0) "" else lp.substring(dot + 1)
-      TextExt.get(e).filterNot(k =>
-          k == "warc" || k == "zip" || k == "tar" || k == "jsonl" ||
-          k == "eml" || k == "mbox" || k == "feed")
-        .flatMap { k =>
-          val sp = docSpans(k, s"$path#a${a.idx}:${a.name}", a.body)
-          if (sp.isEmpty) None
-          else Some(InputDoc(s"$rel#a${a.idx}:${a.name}", sp))
-        }
-    }
-    mainDoc ++ attDocs
-  }
+                      bytes: Array[Byte]): Seq[InputDoc] =
+    oneDoc(rel, pdfSpans(path, bytes)) ++
+      RealPdf.attachments(bytes).flatMap(a =>
+        attachmentDoc(path, rel, a.idx, a.name, a.body))
 
   /** One InputDoc per retained jsonl line
     * (`<relpath>#L<lineNo>:<record-id>`) — the shard re-ingestion path;
     * line semantics in [[graft.extract.JsonlExtractor]].
     */
   private def jsonlDocs(rel: String, bytes: Array[Byte]): Seq[InputDoc] =
-    graft.extract.JsonlExtractor.records(bytes).map { r =>
+    JsonlExtractor.records(bytes).map { r =>
       InputDoc(s"$rel#L${r.lineNo}:${r.id}",
         Vector(Span("text", r.text, null, 0)))
     }
@@ -257,7 +361,7 @@ object RawFiles {
     * it to the ipynb front end by content magic.
     */
   private def jsonDocs(rel: String,
-      recs: Seq[graft.extract.JsonlExtractor.Rec]): Seq[InputDoc] = {
+      recs: Seq[JsonlExtractor.Rec]): Seq[InputDoc] = {
     recs.map { r =>
       if (r.lineNo < 0) // the single-object sentinel: the file IS the doc
         InputDoc(rel, Vector(Span("text", r.text, null, 0)))
@@ -274,53 +378,22 @@ object RawFiles {
     * reference, URLs verbatim. A `.xml` that is not a feed never
     * reaches here — [[docsOf]] routes it to the generic-XML front end.
     */
-  private def feedDocs(rel: String, bytes: Array[Byte]): Seq[InputDoc] =
-    graft.extract.FeedExtractor.entries(bytes).map { e =>
-      InputDoc(s"$rel#e${e.idx}:${e.id}",
-        e.items.zipWithIndex.map {
-          case (graft.extract.FeedExtractor.Text(t), k) =>
-            Span("text", t, null, k)
-          case (graft.extract.FeedExtractor.Media(mk, ref), k) =>
-            Span(mk, null, ref, k)
-        }.toVector)
-    }
+  private def feedDocs(path: String, rel: String,
+                       bytes: Array[Byte]): Seq[InputDoc] =
+    FeedExtractor.entries(bytes).map(e =>
+      InputDoc(s"$rel#e${e.idx}:${e.id}", spansOf(e.items, path)))
 
   /** One email message → its InputDocs: the message body (Subject +
     * text parts + html parts through the boilerpipe gate + inline/
-    * attached media by reference, `p<idx>:<name>` tails resolvable via
-    * [[emlMediaPayload]]) as ONE InputDoc, plus one InputDoc per
-    * DOCUMENT attachment (`<rel>#a<idx>:<filename>`) routed by its
-    * own suffix through the matching front end — an email with an
-    * attached PDF yields the PDF's positioned spans, exactly like a
-    * WARC pdf record or an archive member. Nested containers
-    * (zip/warc/jsonl/eml attachments) drop: one fan-out level.
+    * attached media by reference, `p<idx>:<name>` tails) as ONE
+    * InputDoc, plus one per document attachment ([[attachmentDoc]]).
     */
   private def emlDocs(path: String, rel: String,
                       bytes: Array[Byte]): Seq[InputDoc] = {
-    val msg = graft.extract.EmlExtractor.parse(bytes)
-    val spans = msg.items.zipWithIndex.map {
-      case (graft.extract.EmlExtractor.Text(t), k) =>
-        Span("text", t, null, k)
-      case (graft.extract.EmlExtractor.Media(mk, ref), k) =>
-        val full = if (ref.matches("(?i)^(https?|data|cid):.*")) ref
-                   else s"$path#$ref"
-        Span(mk, null, full, k)
-    }.toVector
-    val main = if (spans.isEmpty) Nil else Seq(InputDoc(rel, spans))
-    val attDocs = msg.attachments.flatMap { a =>
-      val lp = a.filename.toLowerCase
-      val dot = lp.lastIndexOf('.')
-      val e = if (dot < 0) "" else lp.substring(dot + 1)
-      TextExt.get(e).filterNot(k =>
-          k == "warc" || k == "zip" || k == "tar" || k == "jsonl" ||
-          k == "eml" || k == "mbox")
-        .flatMap { k =>
-          val sp = docSpans(k, s"$path#a${a.idx}:${a.filename}", a.body)
-          if (sp.isEmpty) None
-          else Some(InputDoc(s"$rel#a${a.idx}:${a.filename}", sp))
-        }
-    }
-    main ++ attDocs
+    val msg = EmlExtractor.parse(bytes)
+    oneDoc(rel, spansOf(msg.items, path)) ++
+      msg.attachments.flatMap(a =>
+        attachmentDoc(path, rel, a.idx, a.filename, a.body))
   }
 
   /** mbox spool fan-out: one [[emlDocs]] expansion per member message
@@ -328,21 +401,15 @@ object RawFiles {
     */
   private def mboxDocs(path: String, rel: String,
                        bytes: Array[Byte]): Seq[InputDoc] =
-    graft.extract.EmlExtractor.mboxMessages(bytes).zipWithIndex.flatMap {
+    EmlExtractor.mboxMessages(bytes).zipWithIndex.flatMap {
       case (msg, i) => emlDocs(s"$path#m$i", s"$rel#m$i", msg)
     }
 
-  /** Byte-fetch for an email media span minted by [[emlDocs]]: the
-    * `p<idx>:…` tail indexes the message's deterministic leaf walk;
-    * returns the CTE-DECODED part payload (codec-ready bytes).
+  /** Inner kind of a `<name>.<ext>.<algo>` file: the text kind of
+    * `.<ext>`, or None (inner extensions outside the text family drop).
     */
-  def emlMediaPayload(emlBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf("#p")
-    if (h < 0) None
-    else graft.extract.EmlExtractor.mediaPayload(
-      emlBytes, mediaRef.substring(h + 1))
-  }
+  private def innerKind(path: String, algo: String): Option[String] =
+    TextExt.get(suffixOf(path.substring(0, path.length - (algo.length + 1))))
 
   /** Generic single-file compression: `<name>.<ext>.<algo>` (algo ∈
     * gz/zst/xz/bz2/lz4/sz/snappy) inflates via [[graft.extract.Codecs]]
@@ -356,393 +423,182 @@ object RawFiles {
     * first — WarcExtractor reads per-record gzip members natively).
     */
   private def compressedDoc(path: String, bytes: Array[Byte],
-                            root: String, algo: String): Seq[InputDoc] = {
-    val inner = path.substring(0, path.length - (algo.length + 1))
-    val lp = inner.toLowerCase
-    val dot = lp.lastIndexOf('.')
-    val e = if (dot < 0) "" else lp.substring(dot + 1)
-    TextExt.get(e) match {
-      case Some(k) =>
-        val inflated = graft.extract.Codecs.inflate(algo, bytes)
-        if (inflated.isEmpty) Nil else docsOf(k, path, inflated, root)
-      case None => Nil
+                            root: String, algo: String): Seq[InputDoc] =
+    innerKind(path, algo).toSeq.flatMap { k =>
+      val inflated = Codecs.inflate(algo, bytes)
+      if (inflated.isEmpty) Nil else docsOf(k, path, inflated, root)
     }
-  }
 
   /** One InputDoc per archive MEMBER file (`<relpath>#<member>`),
     * each routed by its own extension through the same suffix dispatch
-    * as a directory scan: text kinds decode via [[docSpans]] against
-    * the pseudo-path `<path>#<member>` (so a member pdf's embedded
-    * images mint `<path>#<member>#img<seq>:obj<N>` refs — fetch the
-    * member payload via [[archiveEntryPayload]] first), media suffixes
-    * become one by-reference span (bytes stay in the archive),
-    * unsupported suffixes drop, and NESTED archives (zip/tar/tgz/warc
-    * members) drop — one level of fan-out, documented in
-    * [[graft.extract.ArchiveExtractor]].
+    * as a directory scan: text kinds decode against the pseudo-path
+    * `<path>#<member>` (so a member pdf's embedded images mint
+    * `<path>#<member>#img<seq>:obj<N>` refs), media suffixes become one
+    * by-reference span `<path>#<member>` (bytes stay in the archive),
+    * unsupported suffixes drop, and NESTED containers (zip/tar/tgz/7z/
+    * warc/jsonl/eml/mbox/feed members) drop — one level of fan-out,
+    * documented in [[graft.extract.ArchiveExtractor]]. A `.xml` member
+    * decodes as generic XML; a feed-rooted one yields nothing.
     */
   private def archiveDocs(path: String, rel: String,
                           bytes: Array[Byte]): Seq[InputDoc] =
-    graft.extract.ArchiveExtractor.entries(bytes).flatMap { en =>
-      val lp = en.name.toLowerCase
-      val dot = lp.lastIndexOf('.')
-      val e = if (dot < 0) "" else lp.substring(dot + 1)
-      // container kinds inside a container drop — ONE fan-out level
-      // (zip/tar/warc members, jsonl shards, mail spools, feeds)
-      val nested = e == "zip" || e == "tar" || e == "tgz" || e == "7z" ||
-        e == "warc" || e == "jsonl" || e == "ndjson" || e == "eml" ||
-        e == "mbox" || e == "rss" || e == "atom" ||
-        lp.endsWith(".tar.gz") || lp.endsWith(".warc.gz")
-      // `.xml` members are NOT nested containers anymore: generic XML
-      // decodes via docSpans("xml"); a feed-rooted member still yields
-      // nothing there (one fan-out level).
+    ArchiveExtractor.entries(bytes).flatMap { en =>
       val docId = s"$rel#${en.name}"
       val pseudo = s"$path#${en.name}"
-      if (nested) None
-      else TextExt.get(e) match {
-        case Some(k) =>
-          val spans = docSpans(k, pseudo, en.body)
-          if (spans.isEmpty) None else Some(InputDoc(docId, spans))
-        case None => MediaExt.get(e).map(k =>
+      memberKind(en.name) match {
+        case Some(k) => memberDoc(docId, pseudo, k, en.body)
+        case None => MediaExt.get(suffixOf(en.name)).toSeq.map(k =>
           InputDoc(docId, Vector(Span(k, null, pseudo, 0))))
       }
     }
 
-  /** Byte-fetch for an archive media-member span minted by
-    * [[archiveDocs]]: the `#<member>` tail names the member file.
-    */
-  def archiveEntryPayload(archiveBytes: Array[Byte],
-                          mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.indexOf('#')
-    if (h < 0) None
-    else graft.extract.ArchiveExtractor.entryPayload(
-      archiveBytes, mediaRef.substring(h + 1))
-  }
-
-  /** One InputDoc per retained WARC record. Payload routing:
+  /** One InputDoc per retained WARC record
+    * (`<relpath>#r<idx>:<target-uri>`). Payload routing:
     * image/audio/video mimes become a single by-reference media span
-    * (`<path>#r<idx>` — bytes stay in the archive, recoverable via
-    * [[warcRecordPayload]]); document mimes route through [[docSpans]]
-    * with the pseudo-path `<path>#r<idx>` (so a pdf record's embedded
-    * images mint `<path>#r<idx>#img<seq>:obj<N>` refs — fetch the
-    * record payload first, then [[pdfImagePayload]] against it);
-    * unrecognized binary mimes drop UNLESS a content magic claims them
-    * (a pdf served as application/octet-stream still extracts). A
-    * record payload that is itself WARC reads as text — no recursion.
+    * (`<path>#r<idx>` — bytes stay in the archive); document mimes
+    * decode per [[recordRoute]] against the pseudo-path `<path>#r<idx>`
+    * (so a pdf record's embedded images mint
+    * `<path>#r<idx>#img<seq>:obj<N>` refs). A record payload that is
+    * itself WARC reads as text — no recursion.
     */
   private def warcDocs(path: String, rel: String,
                        bytes: Array[Byte]): Seq[InputDoc] =
-    graft.extract.WarcExtractor.records(bytes).zipWithIndex.flatMap {
+    WarcExtractor.records(bytes).zipWithIndex.flatMap {
       case (rec, idx) =>
         val docId = s"$rel#r$idx:${rec.targetUri}"
         val pseudo = s"$path#r$idx"
-        val mediaKind = Seq("image", "audio", "video")
-          .find(k => rec.mime.startsWith(k + "/"))
-        mediaKind match {
+        recordMedia(rec.mime) match {
           case Some(mk) =>
-            Some(InputDoc(docId, Vector(Span(mk, null, pseudo, 0))))
-          case None =>
-            warcPayloadKind(rec.mime, rec.body).flatMap { k =>
-              val spans = docSpans(k, pseudo, rec.body, rec.charset)
-              if (spans.isEmpty) None else Some(InputDoc(docId, spans))
-            }
+            Seq(InputDoc(docId, Vector(Span(mk, null, pseudo, 0))))
+          case None => recordRoute(rec).toSeq.flatMap { case (k, format) =>
+            oneDoc(docId, decode(format, k, pseudo, rec.body, rec.charset))
+          }
         }
     }
 
-  /** MIME → ingest kind for a WARC record payload. Document mimes map
-    * to their front ends; `text/`-prefixed and ABSENT mimes read as text
-    * (WET conversion records routinely omit parameters) — [[docSpans]]
-    * content magic still reroutes binary payloads it recognizes;
-    * anything else maps to text iff a content magic claims it, else
+  private def recordMedia(mime: String): Option[String] =
+    Seq("image", "audio", "video").find(k => mime.startsWith(k + "/"))
+
+  /** (ingest kind, format) of a WARC document record. Document mimes
+    * map to their front ends; `text/`-prefixed and ABSENT mimes read as
+    * text (WET conversion records routinely omit parameters) — the
+    * sniff still reroutes binary payloads it recognizes; any other mime
+    * decodes only if a document magic ([[RecordMagic]]) claims it, else
     * the record drops (the reference's suffix-filter posture).
     */
-  private def warcPayloadKind(mime: String,
-                              body: Array[Byte]): Option[String] = {
-    def magic: Boolean =
-      graft.extract.RealPdf.isPdf(body) ||
-      graft.extract.DocxExtractor.isDocx(body) ||
-      graft.extract.EpubExtractor.isEpub(body) ||
-      graft.extract.XlsxExtractor.isXlsx(body) ||
-      graft.extract.PptxExtractor.isPptx(body) ||
-      graft.extract.RtfExtractor.isRtf(body)
-    if (mime.contains("html")) Some("html")
-    else if (mime.contains("pdf")) Some("pdf")
-    else if (mime.contains("markdown")) Some("md")
-    else if (mime.contains("rtf")) Some("rtf")
-    else if (mime.contains("wordprocessingml")) Some("docx")
-    else if (mime.contains("spreadsheetml")) Some("xlsx")
-    else if (mime.contains("presentationml")) Some("pptx")
-    else if (mime.contains("epub")) Some("epub")
-    else if (mime.contains("ipynb")) Some("ipynb")
-    else if (mime.contains("json")) Some("json") // incl. application/json
-    else if (mime.startsWith("text/") || mime.isEmpty) Some("text")
-    else if (magic) Some("text") // docSpans reroutes by the magic
-    else None
+  private def recordRoute(
+      rec: WarcExtractor.Rec): Option[(String, String)] = {
+    val mime = rec.mime
+    val kind =
+      if (mime.contains("html")) "html"
+      else if (mime.contains("pdf")) "pdf"
+      else if (mime.contains("markdown")) "md"
+      else if (mime.contains("rtf")) "rtf"
+      else if (mime.contains("wordprocessingml")) "docx"
+      else if (mime.contains("spreadsheetml")) "xlsx"
+      else if (mime.contains("presentationml")) "pptx"
+      else if (mime.contains("epub")) "epub"
+      else if (mime.contains("ipynb")) "ipynb"
+      else if (mime.contains("json")) "json" // incl. application/json
+      else if (mime.startsWith("text/") || mime.isEmpty) "text"
+      else "" // an unrecognized binary mime
+    val k = if (kind.isEmpty) "text" else kind
+    val format = sniff(k, rec.body, nested = true)
+    if (kind.isEmpty && !RecordMagic(format)) None else Some((k, format))
   }
 
-  /** Byte-fetch for a WARC media-record span minted by [[warcDocs]]:
-    * the `#r<idx>` tail indexes the retained-record vector.
+  /** Span decode of one payload: see [[sniff]] for `format`. */
+  private def decode(format: String, kind: String, path: String,
+                     bytes: Array[Byte],
+                     transportCharset: String): Vector[Span] =
+    format match {
+      case "pdf" => pdfSpans(path, bytes)
+      case "raw" => Vector(Span(if (Binary(kind)) "text" else kind,
+        CharsetSniff.decode(bytes, html = kind == "html", transportCharset),
+        null, 0))
+      case _ => spansOf(itemsOf(format, path, bytes, transportCharset), path)
+    }
+
+  /** A genuine PDF through the byte-level [[graft.extract.RealPdf]]
+    * front end: ONE "pdf" span holding the canonical PG/TX interchange
+    * payload PLUS one "image" media span per embedded-image occurrence
+    * (media_ref `<path>#img<seq>:obj<N>`, or `…:inline` for BI…EI inline
+    * images — those have no object identity, only their occurrence
+    * position, and no fetchable payload); offsets 1..k in content-stream
+    * order, so [[graft.core.ExtractionSpec]]'s offset ordering
+    * reproduces the document's own text→media sequence.
     */
-  def warcRecordPayload(warcBytes: Array[Byte],
-                        mediaRef: String): Option[Array[Byte]] =
-    "#r(\\d+)$".r.findFirstMatchIn(mediaRef).flatMap(m =>
-      graft.extract.WarcExtractor.recordPayload(
-        warcBytes, m.group(1).toInt))
-
-  private[graft] def docSpans(kind: String, path: String,
-                              bytes: Array[Byte],
-                              transportCharset: String = ""): Vector[Span] = {
-    // CONTENT MAGIC overrides extension within the text-kind family:
-    // web corpora routinely misname files (a crawler's `.txt` that is
-    // really a PDF, a CMS download endpoint serving DOCX as `.html`).
-    // Only payloads that START with a binary container magic reroute
-    // (%PDF- / zip-with-word/document.xml) — anything else keeps its
-    // suffix classification, so genuine text never misroutes. Files
-    // OUTSIDE the text suffixes are untouched: the reference's suffix
-    // filter (media by reference, unknown dropped) stays authoritative.
-    val kindEff =
-      if (graft.extract.RealPdf.isPdf(bytes)) "pdf"
-      else if (graft.extract.DocxExtractor.isDocx(bytes)) "docx"
-      else if (graft.extract.EpubExtractor.isEpub(bytes)) "epub"
-      else if (graft.extract.XlsxExtractor.isXlsx(bytes)) "xlsx"
-      else if (graft.extract.PptxExtractor.isPptx(bytes)) "pptx"
-      else if (graft.extract.RtfExtractor.isRtf(bytes)) "rtf"
-      else if (graft.extract.OdtExtractor.isOdt(bytes)) "odt"
-      else if (graft.extract.Cfb.isCfb(bytes))
-        graft.extract.Cfb.officeKind(bytes)
-      else if (kind == "text" && graft.extract.TexExtractor.isTex(bytes))
-        "tex"
-      else if (kind == "text" && {
-        val head = new String(bytes, 0,
-          math.min(bytes.length, 512),
-          java.nio.charset.StandardCharsets.UTF_8)
-        graft.extract.SubtitleExtractor.isVtt(head) ||
-          graft.extract.SubtitleExtractor.isSrt(head)
-      }) "subs"
-      else kind
-    docSpansDispatch(kindEff, path, bytes, transportCharset)
+  private def pdfSpans(path: String, bytes: Array[Byte]): Vector[Span] = {
+    val (pages, images) = RealPdf.parseDoc(bytes, 1)
+    Span("pdf", RealPdf.toContentStream(pages), null, 0) +:
+      images.map { im =>
+        val tail = if (im.objNum > 0) s"obj${im.objNum}" else "inline"
+        Span("image", null, s"$path#img${im.seq}:$tail", im.seq + 1)
+      }
   }
 
-  private def docSpansDispatch(kind: String, path: String,
-                               bytes: Array[Byte],
-                               transportCharset: String): Vector[Span] =
-    if (kind == "pdf" && graft.extract.RealPdf.isPdf(bytes)) {
-      val (pages, images) = graft.extract.RealPdf.parseDoc(bytes, 1)
-      Span("pdf", graft.extract.RealPdf.toContentStream(pages), null, 0) +:
-        images.map { im =>
-          // objNum 0 = inline image (BI…EI) — it has no object identity,
-          // only its occurrence position
-          val tail = if (im.objNum > 0) s"obj${im.objNum}" else "inline"
-          Span("image", null, s"$path#img${im.seq}:$tail", im.seq + 1)
-        }
-    } else if (kind == "docx" && graft.extract.DocxExtractor.isDocx(bytes)) {
-      graft.extract.DocxExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.DocxExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.DocxExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
+  /** The front end of each item-producing format. Every format decodes
+    * at the ingest boundary into the spec's EXISTING span vocabulary,
+    * so [[graft.core.ExtractionSpec]] needs no new kind:
+    *  - docx/pptx/odt/rtf/doc/ppt: paragraphs (and TSV table blocks) as
+    *    verbatim "text", embedded pictures as in-file media at their
+    *    anchor position; epub: spine-ordered chapter blocks + media;
+    *    encrypted binary documents drop whole;
+    *  - xlsx/xls: the engine's TABLE vocabulary — each non-empty
+    *    worksheet's used range is ONE "text" span holding its TSV, in
+    *    workbook order (xls: followed by the sheet's pictures);
+    *  - tex/md: detex'd / markdown blocks, image refs VERBATIM (external
+    *    references, like an HTML src — there is no archive to resolve
+    *    against); ipynb: markdown cells through the md semantics, code
+    *    and result reprs verbatim, attachment/output images in-file;
+    *  - subs: one "text" span per cue (SubRip/WebVTT); csv: the whole
+    *    grid as ONE TSV span (delimiter sniffed for .csv); xml: one span
+    *    per text-bearing element ([[graft.extract.XmlExtractor]]);
+    *  - json at the span level (archive members, attachments — the
+    *    doc-level fan-out lives in [[jsonDocs]]): notebook-shaped
+    *    payloads through the ipynb front end, otherwise the retained
+    *    records' texts in order.
+    */
+  private def itemsOf(format: String, path: String, bytes: Array[Byte],
+                      transportCharset: String): Vector[Item] = {
+    def text = CharsetSniff.decode(bytes, html = false, transportCharset)
+    format match {
+      case "docx" => DocxExtractor.items(bytes)
+      case "epub" => EpubExtractor.items(bytes)
+      case "xlsx" => XlsxExtractor.sheets(bytes).collect {
+        case (_, tsv) if tsv.exists(!_.isWhitespace) => Item.Text(tsv) }
+      case "pptx" => PptxExtractor.items(bytes)
+      case "odt" => OdtExtractor.items(bytes)
+      case "rtf" => RtfExtractor.items(bytes)
+      case "doc" => DocExtractor.items(bytes)
+      case "xls" => XlsExtractor.items(bytes)
+      case "ppt" => PptExtractor.items(bytes)
+      case "tex" => TexExtractor.items(text)
+      case "md" => MdExtractor.items(text)
+      case "ipynb" => IpynbExtractor.items(bytes)
+      case "subs" => SubtitleExtractor.items(text).map(Item.Text)
+      case "csv" => Vector(CsvExtractor.tsv(text,
+          tabDelimited = path.toLowerCase.endsWith(".tsv")))
+        .filter(_.nonEmpty).map(Item.Text)
+      case "xml" => XmlExtractor.blocks(bytes).map(Item.Text)
+      case "json" => JsonlExtractor.routeJson(bytes) match {
+        case Left(_) => IpynbExtractor.items(bytes)
+        case Right(recs) => recs.map(r => Item.Text(r.text))
       }
-    } else if (kind == "epub" && graft.extract.EpubExtractor.isEpub(bytes)) {
-      // EPUB decodes at the ingest boundary: spine-ordered chapter
-      // blocks as "text" spans, chapter media as media spans whose ref
-      // tail is the IN-ARCHIVE path (payloads recoverable via
-      // [[epubMediaPayload]]); external http(s)/data srcs pass through
-      // verbatim like HTML.
-      graft.extract.EpubExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.EpubExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.EpubExtractor.Media(mk, ref), k) =>
-          val full = if (ref.matches("(?i)^(https?|data):.*")) ref
-                     else s"$path#$ref"
-          Span(mk, null, full, k)
-      }
-    } else if (kind == "xlsx" && graft.extract.XlsxExtractor.isXlsx(bytes)) {
-      // XLSX decodes at the ingest boundary into the engine's TABLE
-      // vocabulary: each non-empty worksheet's used range enters as one
-      // "text" span holding its TSV (tab-joined cells, newline-joined
-      // rows — exactly the shape markdown pipe tables and HTML <table>
-      // recovery produce), in workbook order. Empty sheets emit nothing.
-      graft.extract.XlsxExtractor.sheets(bytes)
-        .collect { case (_, tsv) if tsv.exists(!_.isWhitespace) => tsv }
-        .zipWithIndex.map { case (tsv, k) => Span("text", tsv, null, k) }
-    } else if (kind == "pptx" && graft.extract.PptxExtractor.isPptx(bytes)) {
-      // PPTX decodes at the ingest boundary like DOCX: slide paragraphs
-      // as verbatim "text" spans (presentation order), pictures as media
-      // spans whose ref tail is the IN-ARCHIVE path (payloads via
-      // [[pptxMediaPayload]]); external http(s)/data Targets verbatim.
-      graft.extract.PptxExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.PptxExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.PptxExtractor.Media(mk, ref), k) =>
-          val full = if (ref.matches("(?i)^(https?|data):.*")) ref
-                     else s"$path#$ref"
-          Span(mk, null, full, k)
-      }
-    } else if (kind == "rtf" && graft.extract.RtfExtractor.isRtf(bytes)) {
-      // RTF decodes at the ingest boundary like DOCX: paragraphs as
-      // verbatim "text" spans, tables as TSV text blocks (the engine's
-      // table vocabulary), embedded pictures as media spans whose ref
-      // tail is the minted per-doc pict id (payloads recoverable via
-      // [[rtfMediaPayload]]).
-      graft.extract.RtfExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.RtfExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.RtfExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "odt" && graft.extract.OdtExtractor.isOdt(bytes)) {
-      // ODT decodes at the ingest boundary like DOCX: paragraph/heading
-      // "text" spans, tables as TSV blocks (the engine's table
-      // vocabulary), images as media spans whose ref tail is the
-      // IN-ARCHIVE path (payloads via [[odtMediaPayload]]); external
-      // http(s)/data hrefs verbatim.
-      graft.extract.OdtExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.OdtExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.OdtExtractor.Media(mk, ref), k) =>
-          val full = if (ref.matches("(?i)^(https?|data):.*")) ref
-                     else s"$path#$ref"
-          Span(mk, null, full, k)
-      }
-    } else if (kind == "tex") {
-      // LaTeX decodes at the ingest boundary like markdown — detex'd
-      // blocks (headings/captions/paragraphs/verbatim/TSV tables) as
-      // "text" spans, \includegraphics refs as media spans with the
-      // path passing through VERBATIM (external reference; arXiv
-      // sources resolve figures at build time, not in the archive).
-      graft.extract.TexExtractor.items(
-          graft.extract.CharsetSniff.decode(bytes, html = false,
-            transportCharset))
-        .zipWithIndex.map {
-          case (graft.extract.TexExtractor.Block(t), k) =>
-            Span("text", t, null, k)
-          case (graft.extract.TexExtractor.Media(mk, ref), k) =>
-            Span(mk, null, ref, k)
-        }
-    } else if (kind == "doc" && graft.extract.Cfb.isCfb(bytes)) {
-      // Word 97–2003 binary decodes at the ingest boundary: the
-      // WordDocument piece table reassembles into paragraph "text"
-      // spans (field codes dropped/results kept, cell marks split,
-      // encrypted documents drop whole); 0x01 picture anchors emit
-      // media spans at anchor position, pairing with the Data
-      // stream's bitmap BLIPs (payloads via [[docMediaPayload]]).
-      // A CFB container WITHOUT a readable WordDocument yields
-      // nothing — a structured-storage binary must never decode as
-      // mojibake "text".
-      graft.extract.DocExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.DocExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.DocExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "ppt" && graft.extract.PptExtractor.isPpt(bytes)) {
-      // PowerPoint 97–2003 binary decodes at the ingest boundary like
-      // PPTX: slide paragraphs as verbatim "text" spans in stream
-      // order, embedded pictures as media spans AT SHAPE POSITION
-      // whose ref tail is the minted BLIP-store index (payloads
-      // recoverable via [[pptMediaPayload]]); encrypted decks drop
-      // whole.
-      graft.extract.PptExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.PptExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.PptExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "xls" && graft.extract.XlsExtractor.isXls(bytes)) {
-      // Excel 97–2003 binary decodes at the ingest boundary into the
-      // engine's TABLE vocabulary exactly like XLSX: each non-empty
-      // worksheet's used range is ONE "text" span holding its TSV, in
-      // workbook order; chart sheets and empty sheets emit nothing.
-      // ...followed by each sheet's embedded pictures as media spans
-      // (OfficeArtFOPT pib → MsoDrawingGroup BLIP store; payloads via
-      // [[xlsMediaPayload]])
-      graft.extract.XlsExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.XlsExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.XlsExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "csv") {
-      // Delimited data decodes at the ingest boundary into the TABLE
-      // vocabulary: the whole file is ONE "text" span holding its grid
-      // as TSV (delimiter sniffed for .csv — comma/semicolon/tab/pipe
-      // — RFC 4180 quoting, cells normalized, rows padded); empty
-      // files yield nothing.
-      val tsv = graft.extract.CsvExtractor.tsv(
-        graft.extract.CharsetSniff.decode(bytes, html = false,
-          transportCharset),
-        tabDelimited = path.toLowerCase.endsWith(".tsv"))
-      if (tsv.isEmpty) Vector.empty
-      else Vector(Span("text", tsv, null, 0))
-    } else if (kind == "xml" || kind == "feed") {
-      // Generic (non-feed) XML decodes at the ingest boundary: tags
-      // are structure, character data is content — one "text" span
-      // per text-bearing element per [[graft.extract.XmlExtractor]]'s
-      // block rule (CDATA verbatim, entities decoded, DOCTYPE/PI/
-      // comment apparatus dropped, XML-decl encoding honored). A FEED
-      // reaching this path (archive member / attachment — contexts
-      // where the one-fan-out-level rule forbids entry expansion)
-      // yields nothing, same as every nested container; top-level
-      // feeds fan out via [[docsOf]] before dispatch.
-      if (graft.extract.FeedExtractor.isFeed(bytes)) Vector.empty
-      else graft.extract.XmlExtractor.blocks(bytes)
-        .zipWithIndex.map { case (t, k) => Span("text", t, null, k) }
-    } else if (kind == "subs") {
-      // Subtitles decode at the ingest boundary: one "text" span per
-      // cue (timing/index/NOTE apparatus dropped, formatting and voice
-      // tags stripped, entities decoded, rolling duplicates collapsed)
-      // — the SubRip/WebVTT cue machine in
-      // [[graft.extract.SubtitleExtractor]]. A subtitle-suffixed file
-      // with no cues yields nothing.
-      graft.extract.SubtitleExtractor.items(
-          graft.extract.CharsetSniff.decode(bytes, html = false,
-            transportCharset))
-        .zipWithIndex.map { case (t, k) => Span("text", t, null, k) }
-    } else if (kind == "json") {
-      // whole-file JSON at the SPAN level (archive members, eml/pdf
-      // attachments — the doc-level single/array fan-out lives in
-      // [[jsonDocs]]): notebook-shaped payloads delegate to the ipynb
-      // front end by content magic; otherwise retained records' texts
-      // enter in order (object → one span, HF array → one per element).
-      graft.extract.JsonlExtractor.routeJson(bytes) match {
-        case Left(_) => docSpans("ipynb", path, bytes, transportCharset)
-        case Right(recs) => recs.zipWithIndex
-          .map { case (r, k) => Span("text", r.text, null, k) }
-      }
-    } else if (kind == "ipynb") {
-      // Jupyter notebooks decode at the ingest boundary: markdown
-      // cells through the MdExtractor semantics (headings, paragraphs,
-      // pipe tables), code cells and result reprs as verbatim "text"
-      // spans, attachment/output images as in-file media spans
-      // (payloads via [[ipynbMediaPayload]]); external markdown image
-      // URLs pass verbatim. Malformed JSON yields no spans.
-      graft.extract.IpynbExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.IpynbExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.IpynbExtractor.Media(mk, ref, inFile), k) =>
-          Span(mk, null, if (inFile) s"$path#$ref" else ref, k)
-      }
-    } else if (kind == "md") {
-      // Markdown decodes at the ingest boundary like DOCX — text blocks
-      // as "text" spans, image/media references as media spans with the
-      // URL passing through VERBATIM (external reference, like an HTML
-      // src attribute; there is no archive to resolve against).
-      graft.extract.MdExtractor.items(
-          graft.extract.CharsetSniff.decode(bytes, html = false,
-            transportCharset))
-        .zipWithIndex.map {
-          case (graft.extract.MdExtractor.Block(t), k) =>
-            Span("text", t, null, k)
-          case (graft.extract.MdExtractor.Media(mk, ref), k) =>
-            Span(mk, null, ref, k)
-        }
-    } else Vector(Span(
-      if (kind == "docx" || kind == "epub" || kind == "xlsx" ||
-          kind == "pptx" || kind == "rtf" || kind == "odt" ||
-          kind == "tex" || kind == "doc" || kind == "xls" ||
-          kind == "ppt") "text"
-      else kind,
-      graft.extract.CharsetSniff.decode(bytes, html = kind == "html",
-        transportCharset), null, 0))
+      case _ => Vector.empty // "none": a feed inside a container
+    }
+  }
+
+  /** Items → spans, offsets in item order: a text block is a "text"
+    * span; a media item's ref gets the `<path>#` prefix exactly when
+    * its front end marked it in-file.
+    */
+  private def spansOf(items: Vector[Item], path: String): Vector[Span] =
+    items.zipWithIndex.map {
+      case (Item.Text(t), k) => Span("text", t, null, k)
+      case (Item.Media(mk, ref, inFile), k) =>
+        Span(mk, null, if (inFile) s"$path#$ref" else ref, k)
+    }
 
   /** Text-payload decode: the full [[graft.extract.CharsetSniff]]
     * WHATWG chain with no transport signal and no meta prescan —
@@ -752,170 +608,113 @@ object RawFiles {
     * NUL-ridden or U+FFFD mojibake; honest UTF-8 never misroutes
     * (a BOM mid-file is content, and the validity scan is the exact
     * UTF-8 definition, so any valid UTF-8 payload decodes as UTF-8).
-    * HTML payloads do NOT come through here — [[docSpansDispatch]]
-    * decodes them with the meta prescan enabled.
+    * HTML payloads do NOT come through here — [[decode]] decodes them
+    * with the meta prescan enabled.
     */
   private[graft] def decodeTextPayload(bytes: Array[Byte]): String =
-    graft.extract.CharsetSniff.decode(bytes, html = false)
+    CharsetSniff.decode(bytes, html = false)
 
-  /** Byte-fetch for an EPUB media span minted by [[docSpans]]: the ref
-    * tail after `#` is the in-archive path, resolved against the
-    * ORIGINAL book bytes. The EPUB third of the media-by-reference
-    * contract ([[pdfImagePayload]] / [[docxMediaPayload]] are the
-    * others).
+  /** The byte-fetch half of the media-by-reference contract: spans carry
+    * references, the store carries bytes, and a decode stage joins them
+    * per partition. `containerBytes` are the bytes of the file at
+    * `<path>` and `mediaRef` an in-file ref `<path>#<tail>` that ingest
+    * minted from it. Resolution runs the same [[sniff]] ingest ran and
+    * peels the same fan-out levels (WARC record `r<idx>`, archive member
+    * `<name>`, pdf/eml attachment `a<idx>:<name>`, mbox message `m<idx>`,
+    * a compressed file's inflated payload), then asks the minting front
+    * end: a PDF `img<seq>:obj<N>` returns the image's CODEC-READY bytes
+    * ([[graft.extract.RealPdf.imageCodecBytes]] — an embedded JPEG
+    * unchanged, raster samples wrapped as a PNG, either way ready for
+    * [[graft.ops.Multimodal.ImageIoCodec]]); an email `p<idx>:<name>`
+    * the CTE-decoded part; DOCX/EPUB/PPTX/ODT the in-archive part;
+    * RTF/DOC/XLS/PPT/notebook pictures their decoded payload; a member
+    * segment alone the member's own bytes (a WARC media record, an
+    * archive media member). None for anything that names nothing —
+    * external refs, inline PDF images (their bytes live in the content
+    * stream), missing parts, malformed or overflowing indexes. When
+    * `<path>` itself contains `#`, each split is tried in order.
     */
-  /** Byte-fetch for a PPTX media span minted by [[docSpans]]: the ref
-    * tail after `#` is the in-archive part path.
-    */
-  def pptxMediaPayload(pptxBytes: Array[Byte],
-                       mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.PptxExtractor.mediaPayload(
-      pptxBytes, mediaRef.substring(h + 1))
-  }
+  def mediaPayload(containerBytes: Array[Byte],
+                   mediaRef: String): Option[Array[Byte]] =
+    Iterator.iterate(mediaRef.indexOf('#'))(h => mediaRef.indexOf('#', h + 1))
+      .takeWhile(_ >= 0)
+      .flatMap { h =>
+        val path = mediaRef.substring(0, h)
+        kindOf(path).flatMap(k => fetch(
+          sniff(k, containerBytes, nested = false), path, containerBytes,
+          mediaRef.substring(h + 1)))
+      }
+      .nextOption()
 
-  /** Byte-fetch for a legacy `.doc` media span minted by [[docSpans]]:
-    * the ref tail after `#` is `pic<n>`, the n-th bitmap BLIP of the
-    * document's Data stream.
+  /** The member of a container whose ref segment heads `tail`:
+    * `<segment>` alone → (member, ""), `<segment>#<rest>` → (member,
+    * rest).
     */
-  def docMediaPayload(docBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.DocExtractor.mediaPayload(
-      docBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a legacy `.xls` media span minted by [[docSpans]]:
-    * the ref tail after `#` is `pic<pib>`, resolved through the
-    * workbook's MsoDrawingGroup BLIP store.
-    */
-  def xlsMediaPayload(xlsBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.XlsExtractor.mediaPayload(
-      xlsBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a legacy `.ppt` media span minted by [[docSpans]]:
-    * the ref tail after `#` is `pic<pib>`, resolved through the deck's
-    * BLIP store (FBSE → `Pictures`-stream offset or embedded BLIP).
-    */
-  def pptMediaPayload(pptBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.PptExtractor.mediaPayload(
-      pptBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for an RTF media span minted by [[docSpans]]: the ref
-    * tail after `#` is the per-doc pict id, resolved by re-parsing the
-    * ORIGINAL rtf bytes.
-    */
-  def rtfMediaPayload(rtfBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.RtfExtractor.mediaPayload(
-      rtfBytes, mediaRef.substring(h + 1))
-  }
-
-  def epubMediaPayload(epubBytes: Array[Byte],
-                       mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.EpubExtractor.mediaPayload(
-      epubBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for an ODT media span minted by [[docSpans]]: the ref
-    * tail after `#` is the in-archive target (`Pictures/…`).
-    */
-  def odtMediaPayload(odtBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.OdtExtractor.mediaPayload(
-      odtBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a notebook media span minted by [[docSpans]]: the
-    * ref tail after `#` is `att<cell>:<name>` (markdown attachment) or
-    * `out<cell>:<idx>` (code output image), base64-decoded from the
-    * ORIGINAL notebook JSON.
-    */
-  def ipynbMediaPayload(nbBytes: Array[Byte],
-                        mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.IpynbExtractor.mediaPayload(
-      nbBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a DOCX media span minted by [[docSpans]]: the ref
-    * tail after `#` is the relationship Target, resolved against the
-    * ORIGINAL archive bytes (part `word/<target>`). The DOCX half of
-    * the media-by-reference contract ([[pdfImagePayload]] is the PDF
-    * half).
-    */
-  def docxMediaPayload(docxBytes: Array[Byte],
-                       mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.DocxExtractor.mediaPayload(
-      docxBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Recover the CODEC-READY payload behind a media span minted by
-    * [[docSpans]]: a media_ref of the form `<path>#img<seq>:obj<N>`
-    * resolves through [[graft.extract.RealPdf.imageCodecBytes]] against
-    * the ORIGINAL pdf bytes — a DCTDecode image returns its embedded
-    * JPEG unchanged; raster images (Flate/predictor, LZW, CCITT
-    * Group-4 scans) return their decoded samples wrapped as a PNG —
-    * either way the bytes feed
-    * [[graft.ops.Multimodal.ImageIoCodec]] directly. Inline `…:inline`
-    * refs return None — their bytes live in the content stream and
-    * carry dims-only metadata by design. This is the byte-fetch half
-    * of the media-by-reference contract: spans carry references, the
-    * store carries bytes, and a decode stage joins them per partition.
-    */
-  def pdfImagePayload(pdfBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf("#img")
-    if (h < 0) None
-    else {
-      val colon = mediaRef.indexOf(':', h)
-      if (colon < 0 || !mediaRef.startsWith("obj", colon + 1)) None
-      else mediaRef.substring(colon + 4).toIntOption
-        .flatMap(n => graft.extract.RealPdf.imageCodecBytes(pdfBytes, n))
+  private def headed[M](tail: String, members: Iterator[M])(
+      segment: M => String): Option[(M, String)] =
+    members.map(m => (m, segment(m))).collectFirst {
+      case (m, s) if tail == s => (m, "")
+      case (m, s) if tail.startsWith(s + "#") =>
+        (m, tail.substring(s.length + 1))
     }
-  }
 
-  /** Classify + decode ONE file into its InputDocs: text kinds decode
-    * their payload (WARC files FAN OUT to one doc per record), media
-    * kinds pass by reference (bytes unused), and unsupported suffixes
-    * return empty (the reference's suffix filter). Row-level twin of
-    * the column-level classification in [[read]]; used by
-    * [[graft.streaming.StreamingIngest.startRawDir]].
-    */
-  def decodeAny(path: String, content: Array[Byte],
-                root: String): Seq[InputDoc] = {
-    val lp = path.toLowerCase
-    val dot = lp.lastIndexOf('.')
-    val e = if (dot < 0) lp else lp.substring(dot + 1)
-    if (lp.endsWith(".warc.gz")) docsOf("warc", path, content, root)
-    else if (lp.endsWith(".tar.gz")) docsOf("tar", path, content, root)
-    else if (e == "gz" || e == "zst" || e == "xz" || e == "bz2" ||
-             e == "lz4" || e == "sz" || e == "snappy")
-      docsOf(e, path, content, root)
-    else TextExt.get(e) match {
-      case Some(kind) => docsOf(kind, path, content, root)
-      case None => MediaExt.get(e).map(kind =>
-        InputDoc(relativize(path, root),
-          Vector(Span(kind, null, path, 0)))).toSeq
+  private def fetch(format: String, path: String, bytes: Array[Byte],
+                    tail: String): Option[Array[Byte]] = {
+    // a member's own bytes, or a ref inside it routed by its name
+    def inMember(seg: String, name: String, body: Array[Byte],
+                 rest: String): Option[Array[Byte]] =
+      if (rest.isEmpty) Some(body)
+      else memberKind(name).flatMap(k =>
+        fetch(sniff(k, body, nested = true), s"$path#$seg", body, rest))
+    def attachment(atts: Iterator[(Int, String, Array[Byte])]) =
+      headed(tail, atts)(a => s"a${a._1}:${a._2}").flatMap {
+        case ((i, name, body), rest) => inMember(s"a$i:$name", name, body, rest)
+      }
+    format match {
+      case c if CodecExt(c) => innerKind(path, c).flatMap { k =>
+        val inflated = Codecs.inflate(c, bytes)
+        fetch(sniff(k, inflated, nested = false), path, inflated, tail)
+      }
+      case "warc" =>
+        headed(tail, WarcExtractor.records(bytes).iterator.zipWithIndex)(
+            r => s"r${r._2}").flatMap {
+          case ((rec, _), "") => Some(rec.body)
+          case ((rec, i), rest) => recordRoute(rec).flatMap(r =>
+            fetch(r._2, s"$path#r$i", rec.body, rest))
+        }
+      case "archive" =>
+        headed(tail, ArchiveExtractor.entries(bytes).iterator)(_.name)
+          .flatMap { case (en, rest) =>
+            inMember(en.name, en.name, en.body, rest) }
+      case "mbox" =>
+        headed(tail, EmlExtractor.mboxMessages(bytes).iterator.zipWithIndex)(
+            m => s"m${m._2}").flatMap {
+          case ((msg, i), rest) => fetch("eml", s"$path#m$i", msg, rest)
+        }
+      case "eml" =>
+        if (tail.startsWith("p")) EmlExtractor.mediaPayload(bytes, tail)
+        else attachment(EmlExtractor.parse(bytes).attachments.iterator
+          .map(a => (a.idx, a.filename, a.body)))
+      case "pdf" =>
+        if (tail.startsWith("img")) {
+          val colon = tail.indexOf(':')
+          if (colon < 0 || !tail.startsWith("obj", colon + 1)) None
+          else tail.substring(colon + 4).toIntOption
+            .flatMap(n => RealPdf.imageCodecBytes(bytes, n))
+        } else attachment(RealPdf.attachments(bytes).iterator
+          .map(a => (a.idx, a.name, a.body)))
+      case "json" => JsonlExtractor.routeJson(bytes).left.toOption
+        .flatMap(_ => IpynbExtractor.mediaPayload(bytes, tail))
+      case "ipynb" => IpynbExtractor.mediaPayload(bytes, tail)
+      case "docx" => DocxExtractor.mediaPayload(bytes, tail)
+      case "epub" => EpubExtractor.mediaPayload(bytes, tail)
+      case "pptx" => PptxExtractor.mediaPayload(bytes, tail)
+      case "odt" => OdtExtractor.mediaPayload(bytes, tail)
+      case "rtf" => RtfExtractor.mediaPayload(bytes, tail)
+      case "doc" => DocExtractor.mediaPayload(bytes, tail)
+      case "xls" => XlsExtractor.mediaPayload(bytes, tail)
+      case "ppt" => PptExtractor.mediaPayload(bytes, tail)
+      case _ => None
     }
   }
 

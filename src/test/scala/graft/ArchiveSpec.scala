@@ -151,7 +151,7 @@ class ArchiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(batch(s"$f0#docs/report_0.pdf").head.kind == "pdf")
     val img = batch(s"$f0#banner_0.png")
     assert(img.map(s => (s.kind, s.text)) == Vector(("image", null)))
-    val fetched = RawFiles.archiveEntryPayload(
+    val fetched = RawFiles.mediaPayload(
       Files.readAllBytes(dir.resolve(f0)), img.head.media_ref)
     assert(fetched.exists(_.sameElements(ArchiveGen.imgPayload(0))))
   }

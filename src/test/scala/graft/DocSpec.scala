@@ -1,7 +1,7 @@
 package graft
 
-import graft.extract.{Cfb, DocExtractor}
-import graft.extract.DocExtractor.Text
+import graft.extract.{Cfb, DocExtractor, Item}
+import graft.extract.Item.Text
 import graft.gen.DocGen
 import graft.sources.RawFiles
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +20,7 @@ class DocSpec extends AnyFunSuite {
     for (i <- 0 until 20) {
       val got = DocExtractor.items(DocGen.fileBytes(i)).map {
         case Text(t) => ("text", t, null)
-        case DocExtractor.Media(mk, ref) =>
+        case Item.Media(mk, ref, _) =>
           (mk, null, s"${DocGen.fileName(i)}#$ref")
       }
       val exp = DocGen.expectedDoc(i).map(r => (r.kind, r.text, r.media_ref))
@@ -31,16 +31,16 @@ class DocSpec extends AnyFunSuite {
   test("picture anchors pair with Data-stream BLIPs; payloads resolve") {
     val b = DocGen.fileBytes(8)
     // anchor 1 → PNG at its scanned offset; anchor 2 → double-UID JPEG
-    val p1 = RawFiles.docMediaPayload(b, s"${DocGen.fileName(8)}#pic1")
+    val p1 = RawFiles.mediaPayload(b, s"${DocGen.fileName(8)}#pic1")
     assert(p1.exists(_.sameElements(graft.gen.PptGen.pngPayload(8))))
     assert(javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(p1.get)).getWidth == 3)
-    val p2 = RawFiles.docMediaPayload(b, s"${DocGen.fileName(8)}#pic2")
+    val p2 = RawFiles.mediaPayload(b, s"${DocGen.fileName(8)}#pic2")
     assert(p2.exists(_.sameElements(graft.gen.PptGen.jpegPayload(8))))
     // the third anchor exceeds the stored-bitmap count: no media span,
     // no payload
     assert(DocExtractor.items(b)
-      .collect { case m: DocExtractor.Media => m }.size == 2)
+      .collect { case m: Item.Media => m }.size == 2)
     assert(DocExtractor.mediaPayload(b, "pic3").isEmpty)
     // a pictureless variant resolves nothing
     assert(DocExtractor.mediaPayload(DocGen.fileBytes(0), "pic1").isEmpty)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.extract.DocxExtractor
-import graft.extract.DocxExtractor.{Item, Media, Text}
+import graft.extract.Item
+import graft.extract.Item.{Media, Text}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.ByteArrayOutputStream
@@ -105,7 +106,7 @@ class DocxSpec extends AnyFunSuite {
     val out = Vector.newBuilder[Item]
     def emitBlip(e: Element): Unit = {
       val id = e.getAttribute("r:embed")
-      if (id.nonEmpty) rels.get(id).foreach(t => out += Media(kindOf(t), t))
+      if (id.nonEmpty) rels.get(id).foreach(t => out += Media(kindOf(t), t, true))
     }
     // walk in document order; inside a w:p, accumulate text and emit the
     // Text item at its close (blips inside emit immediately = before it)
@@ -247,7 +248,7 @@ class DocxSpec extends AnyFunSuite {
       media = Seq("media/image1.png" -> Array[Byte](1, 2, 3)))
     assert(DocxExtractor.items(b) == Vector(
       Text("Intro paragraph."),
-      Media("image", "media/image1.png"),
+      Media("image", "media/image1.png", true),
       Text("Figure caption continues after image."),
       Text("No image here.")))
   }
@@ -259,8 +260,8 @@ class DocxSpec extends AnyFunSuite {
       p(blip("rId1"), r("v")) + p(blip("rId2"), r("a")) +
       p(blip("rId3"), r("i"))), rels)
     assert(DocxExtractor.items(b).collect { case m: Media => m } == Vector(
-      Media("video", "media/clip1.mp4"), Media("audio", "media/pod.mp3"),
-      Media("image", "media/chart.jpeg")))
+      Media("video", "media/clip1.mp4", true), Media("audio", "media/pod.mp3", true),
+      Media("image", "media/chart.jpeg", true)))
   }
 
   test("text outside w:t or outside paragraphs never leaks") {
@@ -313,7 +314,7 @@ class DocxSpec extends AnyFunSuite {
       relsOf("rId1" -> "media/fig.png"),
       media = Seq("media/fig.png" -> Array[Byte](7)))
     val want = Vector(
-      Media("image", "media/fig.png"),
+      Media("image", "media/fig.png", true),
       Text("host n1 n2\tplain"))
     assert(DocxExtractor.items(b) == want)
     assert(domItems(b) == want)
@@ -410,7 +411,7 @@ class DocxSpec extends AnyFunSuite {
       assert(DocxExtractor.isDocx(b))
       val got = DocxExtractor.items(b).map {
         case Text(t) => ("text", t, null: String)
-        case Media(k, ref) => (k, null: String, ref.split('/').last)
+        case Media(k, ref, _) => (k, null: String, ref.split('/').last)
       }
       val want = graft.gen.DocxGen.expectedDoc(i)
         .map(r => (r.kind, r.text, r.media_ref))

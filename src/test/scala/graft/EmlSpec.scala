@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.EmlExtractor
+import graft.extract.{EmlExtractor, Item}
 import graft.gen.EmlGen
 import graft.sources.RawFiles
 import org.apache.spark.sql.SparkSession
@@ -76,20 +76,20 @@ class EmlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("parse: alternative picks plain; cid image emits once, at its reference position") {
     val alt = EmlExtractor.parse(EmlGen.fileBytes(3))
-    assert(alt.items.count { case EmlExtractor.Text(_) => true
+    assert(alt.items.count { case Item.Text(_) => true
                              case _ => false } == 2) // subject + plain
-    assert(alt.items.collect { case EmlExtractor.Text(t) => t }
+    assert(alt.items.collect { case Item.Text(t) => t }
       .exists(_.startsWith("Quarterly report")))
 
     val rel = EmlExtractor.parse(EmlGen.fileBytes(5))
     val kinds = rel.items.map {
-      case EmlExtractor.Text(_) => "t"
-      case EmlExtractor.Media(_, _) => "m"
+      case Item.Text(_) => "t"
+      case Item.Media(_, _, _) => "m"
     }
     // subject, block, media AT TAG POSITION, block — and no trailing
     // standalone emission of the cid part
     assert(kinds == Vector("t", "t", "m", "t"))
-    val refs = rel.items.collect { case EmlExtractor.Media(_, r) => r }
+    val refs = rel.items.collect { case Item.Media(_, r, _) => r }
     assert(refs == Vector("p1:part.jpeg"))
   }
 

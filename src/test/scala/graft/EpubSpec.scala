@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.{EpubExtractor, HtmlExtractor}
+import graft.extract.{EpubExtractor, HtmlExtractor, Item}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EPUB front-end spec: pinned behaviors + a DOM twin for the OCF/OPF
@@ -40,7 +40,7 @@ class EpubSpec extends AnyFunSuite {
     p.normalize().toString
   }
 
-  def twinItems(bytes: Array[Byte]): Vector[EpubExtractor.Item] = {
+  def twinItems(bytes: Array[Byte]): Vector[Item] = {
     val entries = zipMapFirstWins(bytes)
     val container = dom(entries("META-INF/container.xml"))
     val roots = container.getElementsByTagNameNS("*", "rootfile")
@@ -69,11 +69,11 @@ class EpubSpec extends AnyFunSuite {
         }
         entries.get(path).toVector.flatMap { ch =>
           HtmlExtractor.items(new String(ch, "UTF-8")).map {
-            case HtmlExtractor.Block(t) => EpubExtractor.Text(t)
-            case HtmlExtractor.Media(k, src) =>
+            case Item.Text(t) => Item.Text(t)
+            case Item.Media(k, src, _) =>
               val ref = if (src.matches("(?i)^(https?|data):.*")) src
                         else norm(chDir, src)
-              EpubExtractor.Media(k, ref)
+              Item.Media(k, ref, !ref.matches("(?i)^(https?|data):.*"))
           }
         }
       }
@@ -89,8 +89,8 @@ class EpubSpec extends AnyFunSuite {
       val f = EpubGen.fileName(i)
       val got = EpubExtractor.items(EpubGen.fileBytes(i)).zipWithIndex
         .map {
-          case (EpubExtractor.Text(t), k) => ("text", t, null, k)
-          case (EpubExtractor.Media(mk, ref), k) =>
+          case (Item.Text(t), k) => ("text", t, null, k)
+          case (Item.Media(mk, ref, _), k) =>
             // ground truth carries the bare image name; the extractor
             // mints the full in-archive path
             assert(ref == EpubGen.imgPath(i), s"doc $i ref $ref")
@@ -106,14 +106,14 @@ class EpubSpec extends AnyFunSuite {
     import graft.gen.EpubGen
     val b0 = EpubGen.fileBytes(0)
     val texts = EpubExtractor.items(b0).collect {
-      case EpubExtractor.Text(t) => t }
+      case Item.Text(t) => t }
     assert(!texts.exists(_.contains("link text")))
     // i=3: ch1 manifest-listed but absent from the archive
     val i3 = EpubExtractor.items(EpubGen.fileBytes(3))
-    assert(i3.length == 2 && i3.head.isInstanceOf[EpubExtractor.Media])
+    assert(i3.length == 2 && i3.head.isInstanceOf[Item.Media])
     // byte-fetch half of media-by-reference
     val ref = EpubExtractor.items(b0).collectFirst {
-      case EpubExtractor.Media(_, r) => r }.get
+      case Item.Media(_, r, _) => r }.get
     val payload = EpubExtractor.mediaPayload(b0, ref)
     assert(payload.exists(p => p.length == 5 && p(1) == 'P'.toByte))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import graft.extract.{Extractor, HtmlExtractor, PdfTokenizer}
+import graft.extract.{Extractor, HtmlExtractor, Item, PdfTokenizer}
 import graft.gen.CorpusGen
 import graft.oracle.RefOracle
 import org.scalatest.funsuite.AnyFunSuite
@@ -234,22 +234,22 @@ class ExtractorSpec extends AnyFunSuite {
       "<picture><source srcset=pic.png><img src=fb.png></picture>"
     val items = HtmlExtractor.items(html)
     assert(items == Vector(
-      HtmlExtractor.Block("First real paragraph long enough to keep around."),
-      HtmlExtractor.Media("image", "fig.png?a=1&b=2"),
+      Item.Text("First real paragraph long enough to keep around."),
+      Item.Media("image", "fig.png?a=1&b=2", false),
       // a media tag inside a not-yet-flushed block precedes that block
-      HtmlExtractor.Media("image", "innie.png"),
-      HtmlExtractor.Block("Inline split paragraph body text here."),
-      HtmlExtractor.Media("video", "clip.mp4"),
-      HtmlExtractor.Media("audio", "pod.mp3"),
-      HtmlExtractor.Media("image", "real.png"),
+      Item.Media("image", "innie.png", false),
+      Item.Text("Inline split paragraph body text here."),
+      Item.Media("video", "clip.mp4", false),
+      Item.Media("audio", "pod.mp3", false),
+      Item.Media("image", "real.png", false),
       // lazy-load fallback chain: data-src / srcset first candidate /
       // data-srcset; src wins when non-empty; <source> inside
       // <picture> stays ignored (the <img> fallback carries the ref)
-      HtmlExtractor.Media("image", "lazy.png"),
-      HtmlExtractor.Media("image", "small.png"),
-      HtmlExtractor.Media("image", "ds.png"),
-      HtmlExtractor.Media("image", "win.png"),
-      HtmlExtractor.Media("image", "fb.png")), items)
+      Item.Media("image", "lazy.png", false),
+      Item.Media("image", "small.png", false),
+      Item.Media("image", "ds.png", false),
+      Item.Media("image", "win.png", false),
+      Item.Media("image", "fb.png", false)), items)
     // dual-impl equality over the full extraction path
     val d = InputDoc("m", Vector(Span("html", html, null, 0)))
     assert(Extractor.extract(d).outSpans == RefOracle.extract(d).outSpans)
@@ -259,7 +259,7 @@ class ExtractorSpec extends AnyFunSuite {
       "<img src=x.png/><img src=a.png src=b.png><img = src=y.png>" +
       "<img/src=weird><IMG SRC=UP.PNG><img src=&#120;.png>"
     assert(HtmlExtractor.items(edge).collect {
-      case HtmlExtractor.Media(_, r) => r } ==
+      case Item.Media(_, r, _) => r } ==
       Vector("x.png/", "a.png", "y.png", "weird", "UP.PNG", "x.png"))
     val d2 = InputDoc("e", Vector(Span("html", edge, null, 0)))
     assert(Extractor.extract(d2).outSpans == RefOracle.extract(d2).outSpans)
@@ -278,10 +278,10 @@ class ExtractorSpec extends AnyFunSuite {
       "<p>Closing body paragraph long enough to keep as well.</p>"
     val items = HtmlExtractor.items(html)
     assert(items == Vector(
-      HtmlExtractor.Block("Article body paragraph long enough to keep around fine."),
-      HtmlExtractor.Block("Commentary is content, not a comment thread, kept."),
-      HtmlExtractor.Block("Badge classes do not hit the ad token by substring."),
-      HtmlExtractor.Block("Closing body paragraph long enough to keep as well.")),
+      Item.Text("Article body paragraph long enough to keep around fine."),
+      Item.Text("Commentary is content, not a comment thread, kept."),
+      Item.Text("Badge classes do not hit the ad token by substring."),
+      Item.Text("Closing body paragraph long enough to keep as well.")),
       items)
     val d = InputDoc("neg", Vector(Span("html", html, null, 0)))
     assert(Extractor.extract(d).outSpans == RefOracle.extract(d).outSpans)
@@ -289,7 +289,7 @@ class ExtractorSpec extends AnyFunSuite {
     val messy = "<div class=sidebar><p>junk long enough to be a block</p>" +
       "</section></div><p>After the sidebar, content long enough kept.</p>"
     assert(HtmlExtractor.items(messy) == Vector(
-      HtmlExtractor.Block("After the sidebar, content long enough kept.")))
+      Item.Text("After the sidebar, content long enough kept.")))
     val d2 = InputDoc("messy", Vector(Span("html", messy, null, 0)))
     assert(Extractor.extract(d2).outSpans == RefOracle.extract(d2).outSpans)
     // cross-name mis-nesting (ADVICE r05): both gates must release via
@@ -298,7 +298,7 @@ class ExtractorSpec extends AnyFunSuite {
       "<p>buried junk long enough to form a block</p></div></section>" +
       "<p>Kept after cross-name mis-nested junk containers close.</p>"
     assert(HtmlExtractor.items(crossNest) == Vector(
-      HtmlExtractor.Block(
+      Item.Text(
         "Kept after cross-name mis-nested junk containers close.")))
     val d3 = InputDoc("crossnest", Vector(Span("html", crossNest, null, 0)))
     assert(Extractor.extract(d3).outSpans == RefOracle.extract(d3).outSpans)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.extract.FeedExtractor
-import graft.extract.FeedExtractor.{Media, Text}
+import graft.extract.Item.{Media, Text}
 import graft.gen.FeedGen
 import graft.sources.RawFiles
 import org.apache.spark.sql.SparkSession
@@ -47,19 +47,19 @@ class FeedSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e5 = FeedExtractor.entries(FeedGen.fileBytes(5))
     assert(e5.length == 1)
     assert(e5.head.id == "https://example.org/clip/5")
-    assert(e5.head.items.collect { case Media(k, _) => k } ==
+    assert(e5.head.items.collect { case Media(k, _, _) => k } ==
       Vector("video"))
     // variant 2: escaped-html short description survives via fallback
     val e2 = FeedExtractor.entries(FeedGen.fileBytes(2))
     assert(e2.head.items.collect { case Text(t) => t } ==
       Vector("Episode 2", "short note 2"))
-    assert(e2.head.items.collect { case Media(k, r) => (k, r) } ==
+    assert(e2.head.items.collect { case Media(k, r, _) => (k, r) } ==
       Vector(("audio", "https://cdn.example/ep2.mp3")))
     // variant 1: CDATA html — media at tag position between blocks
     val e1 = FeedExtractor.entries(FeedGen.fileBytes(1))
     val kinds = e1.head.items.map {
       case Text(_) => "t"
-      case Media(_, _) => "m"
+      case Media(_, _, _) => "m"
     }
     assert(kinds == Vector("t", "t", "m", "t"))
   }

@@ -70,16 +70,24 @@ class IngestFuzzSpec extends AnyFunSuite {
     (0 until 48).foreach { k =>
       val whole = genuine(k)
       val name = s"t_$k." + suffixes(k % suffixes.length)
+      // the genuine payload's in-file media refs, fetched against every
+      // damaged copy: Some or None, never a throw
+      val refs = RawFiles.decodeAny(name, whole, "").flatMap(_.spans)
+        .map(_.media_ref).filter(r => r != null && r.startsWith(name + "#"))
+      def storm(b: Array[Byte]): Unit = {
+        RawFiles.decodeAny(name, b, "")
+        refs.foreach(r => assert(RawFiles.mediaPayload(b, r).forall(_ != null)))
+      }
       // truncations at hostile offsets
       Seq(1, 2, 4, whole.length / 3, whole.length / 2,
           math.max(1, whole.length - 3)).foreach { cut =>
-        RawFiles.decodeAny(name, whole.take(math.min(cut, whole.length)), "")
+        storm(whole.take(math.min(cut, whole.length)))
       }
       // mutation storm
       (0 until 6).foreach { _ =>
         val b = whole.clone()
         (0 until 1 + next(24)).foreach(_ => b(next(b.length)) = next(256).toByte)
-        RawFiles.decodeAny(name, b, "")
+        storm(b)
       }
     }
   }

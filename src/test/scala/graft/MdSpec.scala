@@ -1,7 +1,8 @@
 package graft
 
 import graft.extract.MdExtractor
-import graft.extract.MdExtractor.{Block, Item, Media}
+import graft.extract.Item
+import graft.extract.Item.{Media, Text}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Markdown front-end spec: pinned behaviors + dual-implementation
@@ -71,7 +72,7 @@ class MdSpec extends AnyFunSuite {
       // media first (document order within the line), then the text form
       ref.findAllMatchIn(line).foreach { m =>
         if (m.group(1) == "!" && m.group(3).nonEmpty)
-          out += Media(kindOf(m.group(3)), m.group(3))
+          out += Media(kindOf(m.group(3)), m.group(3), false)
       }
       ref.replaceAllIn(line,
         m => java.util.regex.Matcher.quoteReplacement(m.group(2)))
@@ -90,14 +91,14 @@ class MdSpec extends AnyFunSuite {
     segs.result().foreach { seg =>
       if (seg.fence) {
         if (seg.lines.exists(_.exists(!_.isWhitespace)))
-          out += Block(seg.lines.mkString("\n"))
+          out += Text(seg.lines.mkString("\n"))
       } else {
         // fold prose lines into paragraphs split on blanks/headings;
         // group `|` runs first and test the GitHub delimiter row
         val para = Vector.newBuilder[String]
         def flush(): Unit = {
           val t = para.result().mkString(" ").replaceAll("\\s+", " ").trim
-          if (t.nonEmpty) out += Block(t)
+          if (t.nonEmpty) out += Text(t)
           para.clear()
         }
         def cells(s: String): Vector[String] = {
@@ -121,7 +122,7 @@ class MdSpec extends AnyFunSuite {
               val tsv = (run.head +: run.drop(2)).map(l =>
                 cells(l).map(c => emitProse(c).replaceAll("\\s+", " ")
                   .trim).mkString("\t")).mkString("\n")
-              out += Block(tsv)
+              out += Text(tsv)
             } else run.foreach(l => para += emitProse(strip(l)))
             li = j
           } else {
@@ -131,7 +132,7 @@ class MdSpec extends AnyFunSuite {
               flush()
               val txt = emitProse(h.get.group(2))
                 .replaceAll("\\s+", " ").trim
-              if (txt.nonEmpty) out += Block(txt)
+              if (txt.nonEmpty) out += Text(txt)
             } else para += emitProse(strip(line))
             li += 1
           }
@@ -161,12 +162,12 @@ class MdSpec extends AnyFunSuite {
         |###### deep heading
         |####### seven hashes is prose""".stripMargin
     assert(MdExtractor.items(md) == Vector(
-      Block("Title here"),
-      Block("First paragraph line one line two joins with a space."),
-      Block("quoted line m1 and its continuation"),
-      Block("item one item two joins the run ordinal item too"),
-      Block("deep heading"),
-      Block("####### seven hashes is prose")))
+      Text("Title here"),
+      Text("First paragraph line one line two joins with a space."),
+      Text("quoted line m1 and its continuation"),
+      Text("item one item two joins the run ordinal item too"),
+      Text("deep heading"),
+      Text("####### seven hashes is prose")))
   }
 
   test("images emit at tag position and read as alt; links read as text") {
@@ -177,12 +178,12 @@ class MdSpec extends AnyFunSuite {
         |
         |![](noalt.gif) and [no-url]() stays text, ![alt-only]() too.""".stripMargin
     assert(MdExtractor.items(md) == Vector(
-      Block("Intro with a useful link kept."),
-      Media("image", "fig1.png"),
-      Media("video", "v.mp4?t=3"),
-      Block("Before chart one after clip done."),
-      Media("image", "noalt.gif"),
-      Block("and no-url stays text, alt-only too.")))
+      Text("Intro with a useful link kept."),
+      Media("image", "fig1.png", false),
+      Media("video", "v.mp4?t=3", false),
+      Text("Before chart one after clip done."),
+      Media("image", "noalt.gif", false),
+      Text("and no-url stays text, alt-only too.")))
   }
 
   test("fences: verbatim interior, count-matched closing, unclosed to EOF") {
@@ -191,10 +192,10 @@ class MdSpec extends AnyFunSuite {
         "````md\n```\ninner ![not](a.png) stays\n\n   literal  spacing\n````\n" +
         "after\n\n```\nunclosed tail\n"
     assert(MdExtractor.items(md) == Vector(
-      Block("para before"),
-      Block("```\ninner ![not](a.png) stays\n\n   literal  spacing"),
-      Block("after"),
-      Block("unclosed tail")))
+      Text("para before"),
+      Text("```\ninner ![not](a.png) stays\n\n   literal  spacing"),
+      Text("after"),
+      Text("unclosed tail")))
   }
 
   test("pipe tables: TSV block, delimiter row dropped, non-tables stay prose") {
@@ -211,15 +212,15 @@ class MdSpec extends AnyFunSuite {
         |
         || lone pipe line""".stripMargin
     assert(MdExtractor.items(md) == Vector(
-      Block("Intro para before the table"),
-      Media("image", "t.png"),
-      Block("name\tqty\nalpha a link\t3\nbeta pic\t4\textra"),
-      Block("after para"),
-      Block("| no | delimiter | | just | prose |"),
-      Block("| lone pipe line")))
+      Text("Intro para before the table"),
+      Media("image", "t.png", false),
+      Text("name\tqty\nalpha a link\t3\nbeta pic\t4\textra"),
+      Text("after para"),
+      Text("| no | delimiter | | just | prose |"),
+      Text("| lone pipe line")))
     // ragged + outer-pipe-free rows, table at EOF
     assert(MdExtractor.items("a | b\n| h1 | h2 |\n|---|---|\n| x |") ==
-      Vector(Block("a | b"), Block("h1\th2\nx")))
+      Vector(Text("a | b"), Text("h1\th2\nx")))
   }
 
   test("media kind by extension; crlf input") {
@@ -227,23 +228,23 @@ class MdSpec extends AnyFunSuite {
     assert(MdExtractor.mediaKind("pod.mp3#t") == "audio")
     assert(MdExtractor.mediaKind("bare") == "image")
     assert(MdExtractor.items("# A\r\n\r\nline one\r\nline two\r\n") ==
-      Vector(Block("A"), Block("line one line two")))
+      Vector(Text("A"), Text("line one line two")))
   }
 
   test("YAML front matter drops; unclosed or mid-file --- stays content") {
     // closed front matter: keys never become text
     assert(MdExtractor.items(
       "---\ntitle: X\ntags: [a]\n---\nBody text here.\n") ==
-      Vector(Block("Body text here.")))
+      Vector(Text("Body text here.")))
     // `...` closes too (the Pandoc form)
     assert(MdExtractor.items("---\nkey: v\n...\nAfter.\n") ==
-      Vector(Block("After.")))
+      Vector(Text("After.")))
     // unclosed: the --- reads as content (degrade, don't eat the doc)
     assert(MdExtractor.items("---\njust: maybe\nprose line\n") ==
-      Vector(Block("--- just: maybe prose line")))
+      Vector(Text("--- just: maybe prose line")))
     // a --- after line 0 is ordinary content
     assert(MdExtractor.items("lead\n---\nkey: v\n---\ntail\n") ==
-      Vector(Block("lead --- key: v --- tail")))
+      Vector(Text("lead --- key: v --- tail")))
     // front-matter-only file vanishes
     assert(MdExtractor.items("---\nonly: meta\n---\n").isEmpty)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.extract.IpynbExtractor
-import graft.extract.IpynbExtractor.{Media, Text}
+import graft.extract.Item.{Media, Text}
 import graft.gen.NbGen
 import graft.sources.RawFiles
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,17 +31,17 @@ class NbSpec extends AnyFunSuite {
   test("attachment and output payloads base64-decode to the generator's images") {
     // variant 1: markdown attachment (MIME base64 with embedded \n)
     val b1 = NbGen.fileBytes(1)
-    val p1 = RawFiles.ipynbMediaPayload(b1, s"${NbGen.fileName(1)}#att0:plot.png")
+    val p1 = RawFiles.mediaPayload(b1, s"${NbGen.fileName(1)}#att0:plot.png")
     assert(p1.exists(_.sameElements(graft.gen.PptGen.pngPayload(1))))
     assert(javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(p1.get)) != null)
     // variant 2: display_data output image
     val b2 = NbGen.fileBytes(2)
-    val p2 = RawFiles.ipynbMediaPayload(b2, s"${NbGen.fileName(2)}#out0:1")
+    val p2 = RawFiles.mediaPayload(b2, s"${NbGen.fileName(2)}#out0:1")
     assert(p2.exists(_.sameElements(graft.gen.PptGen.pngPayload(2))))
     // variant 4: nbformat-3 pyout bare png key
     val b4 = NbGen.fileBytes(4)
-    val p4 = RawFiles.ipynbMediaPayload(b4, s"${NbGen.fileName(4)}#out1:0")
+    val p4 = RawFiles.mediaPayload(b4, s"${NbGen.fileName(4)}#out1:0")
     assert(p4.exists(_.sameElements(graft.gen.PptGen.pngPayload(4))))
     // ghost refs resolve to nothing
     assert(IpynbExtractor.mediaPayload(b1, "att0:gone.png").isEmpty)

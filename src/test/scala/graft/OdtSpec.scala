@@ -1,7 +1,8 @@
 package graft
 
 import graft.extract.OdtExtractor
-import graft.extract.OdtExtractor.{Item, Media, Text}
+import graft.extract.Item
+import graft.extract.Item.{Media, Text}
 import graft.gen.OdtGen
 import graft.sources.RawFiles
 import org.apache.spark.sql.SparkSession
@@ -62,7 +63,7 @@ class OdtSpec extends AnyFunSuite with BeforeAndAfterAll {
                     r.endsWith(".webm") => "video"
           case _ => "image"
         }
-        out += Media(kind, ref): Unit
+        out += Media(kind, ref, !ref.matches("(?i)^(https?|data):.*")): Unit
       }
     }
 
@@ -163,12 +164,12 @@ class OdtSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("media: in-archive payload byte-fetch; external href verbatim; magic routing") {
     val b3 = OdtGen.fileBytes(3)
-    val media = OdtExtractor.items(b3).collect { case Media(k, r) => (k, r) }
+    val media = OdtExtractor.items(b3).collect { case Media(k, r, _) => (k, r) }
     assert(media == Vector(("image", "Pictures/img.png")))
     val payload = OdtExtractor.mediaPayload(b3, "Pictures/img.png")
     assert(payload.exists(_.length == 12))
     val b6 = OdtGen.fileBytes(6)
-    assert(OdtExtractor.items(b6).collect { case Media(_, r) => r } ==
+    assert(OdtExtractor.items(b6).collect { case Media(_, r, _) => r } ==
       Vector("https://cdn.example/ext.png"))
     // content magic: a lying .docx extension still routes to ODT
     assert(OdtExtractor.isOdt(b3))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.PptExtractor
+import graft.extract.{Item, PptExtractor}
 import graft.gen.PptGen
 import graft.sources.RawFiles
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,8 +14,8 @@ class PptSpec extends AnyFunSuite {
   test("generator round trip: all 4 variants yield their hand-written blocks") {
     for (i <- 0 until 12) {
       val got = PptExtractor.items(PptGen.fileBytes(i)).map {
-        case PptExtractor.Text(t) => ("text", t, null)
-        case PptExtractor.Media(mk, ref) =>
+        case Item.Text(t) => ("text", t, null)
+        case Item.Media(mk, ref, _) =>
           (mk, null, s"${PptGen.fileName(i)}#$ref")
       }
       val want = PptGen.expectedDoc(i).map(r => (r.kind, r.text, r.media_ref))
@@ -26,7 +26,7 @@ class PptSpec extends AnyFunSuite {
   test("picture payloads resolve through the BLIP store, both paths") {
     // variant 0: single-UID PNG at foDelay 0 in the Pictures stream
     val b0 = PptGen.fileBytes(0)
-    val p0 = RawFiles.pptMediaPayload(b0, s"${PptGen.fileName(0)}#pic1")
+    val p0 = RawFiles.mediaPayload(b0, s"${PptGen.fileName(0)}#pic1")
     assert(p0.exists(_.sameElements(PptGen.pngPayload(0))))
     // a genuine PNG: decodes via the real codec to the generator dims
     val img = javax.imageio.ImageIO.read(
@@ -34,28 +34,28 @@ class PptSpec extends AnyFunSuite {
     assert(img.getWidth == 3 && img.getHeight == 2)
     // variant 1: double-UID JPEG embedded inline in its FBSE
     val b1 = PptGen.fileBytes(1)
-    val p1 = RawFiles.pptMediaPayload(b1, s"${PptGen.fileName(1)}#pic2")
+    val p1 = RawFiles.mediaPayload(b1, s"${PptGen.fileName(1)}#pic2")
     assert(p1.exists(_.sameElements(PptGen.jpegPayload(1))))
     val jm = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(p1.get))
     assert(jm.getWidth == 3 && jm.getHeight == 2)
     // out-of-range and decoy refs resolve to None, never throw
-    assert(RawFiles.pptMediaPayload(b0, "x.ppt#pic9").isEmpty)
-    assert(RawFiles.pptMediaPayload(b1, "x.ppt#pic1").isEmpty) // decoy slot
+    assert(RawFiles.mediaPayload(b0, "x.ppt#pic9").isEmpty)
+    assert(RawFiles.mediaPayload(b1, "x.ppt#pic1").isEmpty) // decoy slot
     assert(PptExtractor.mediaPayload(b0, "bogus").isEmpty)
   }
 
   test("a decoy FOPT without pib emits no media span") {
     assert(PptExtractor.items(PptGen.fileBytes(2))
-      .collect { case m: PptExtractor.Media => m }.isEmpty)
+      .collect { case m: Item.Media => m }.isEmpty)
   }
 
   test("soft break stays inside its block; CR splits; decoys skipped") {
     val v1 = PptExtractor.items(PptGen.fileBytes(1))
-      .collect { case PptExtractor.Text(t) => t }
+      .collect { case Item.Text(t) => t }
     assert(v1.exists(_.contains("\n")))
     val v2 = PptExtractor.items(PptGen.fileBytes(2))
-      .collect { case PptExtractor.Text(t) => t }
+      .collect { case Item.Text(t) => t }
     assert(!v2.exists(_.contains("decoy")))
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import graft.extract.PptxExtractor
-import graft.extract.PptxExtractor.{Item, Media, Text}
+import graft.extract.Item
+import graft.extract.Item.{Media, Text}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PPTX front-end spec: pinned behaviors + dual-implementation parity.
@@ -74,7 +75,8 @@ class PptxSpec extends AnyFunSuite {
             val ref = if (t.matches("(?i)^(https?|data):.*")) t
                       else norm(if (t.startsWith("/")) t.substring(1)
                                 else dir + t)
-            out += Media(kindOf(t), ref)
+            out += Media(kindOf(t), ref,
+              !ref.matches("(?i)^(https?|data):.*"))
           }
         }
         def walkPara(n: Node, acc: StringBuilder): Unit = {
@@ -157,7 +159,7 @@ class PptxSpec extends AnyFunSuite {
       val got = PptxExtractor.items(b)
       val exp = graft.gen.PptxGen.expectedDoc(i).map { r =>
         if (r.kind == "text") Text(r.text)
-        else Media(r.kind, graft.gen.PptxGen.picPath(i))
+        else Media(r.kind, graft.gen.PptxGen.picPath(i), true)
       }
       assert(got == exp, s"deck $i")
       assert(got == domItems(b), s"deck $i twin")
@@ -183,7 +185,7 @@ class PptxSpec extends AnyFunSuite {
     assert(tail(inPara).last == Text("Figure caption for deck 4"))
     assert(tail(outPara).last == Text("Figure caption for deck 2"))
     // ../media Target normalized to the in-archive path
-    assert(tail(inPara).head == Media("image", "ppt/media/pic_4.png"))
+    assert(tail(inPara).head == Media("image", "ppt/media/pic_4.png", true))
     // payload recoverable through the by-reference contract
     assert(PptxExtractor.mediaPayload(graft.gen.PptxGen.fileBytes(4),
       "ppt/media/pic_4.png").get.take(4).map(_ & 0xff).toSeq ==

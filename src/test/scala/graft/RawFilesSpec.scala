@@ -112,7 +112,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // to a CODEC-READY payload — the raw 24x16 /DeviceGray samples
     // wrapped as a PNG a standard codec reads directly
     val pdfBytes = Files.readAllBytes(dir.resolve("doc_0001.pdf"))
-    val payload = RawFiles.pdfImagePayload(pdfBytes, img(1).media_ref)
+    val payload = RawFiles.mediaPayload(pdfBytes, img(1).media_ref)
     val png = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(payload.get))
     assert(png.getWidth == 24 && png.getHeight == 16)
@@ -121,9 +121,9 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(png.getRaster.getSample(1, 0, 0) == 8)
     assert(png.getRaster.getSample(0, 1, 0) == (24 * 7 + 1) % 256)
     // inline refs are dims-only metadata: no recoverable object stream
-    assert(RawFiles.pdfImagePayload(pdfBytes,
+    assert(RawFiles.mediaPayload(pdfBytes,
       "x.pdf#img2:inline").isEmpty)
-    assert(RawFiles.pdfImagePayload(pdfBytes, "no-fragment.pdf").isEmpty)
+    assert(RawFiles.mediaPayload(pdfBytes, "no-fragment.pdf").isEmpty)
   }
 
   test("genuine DOCX decodes to interleaved text+media spans at the ingest boundary") {
@@ -166,7 +166,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       oracleRows.outSpans.map(o => (o.kind, o.text, o.media_ref, o.order)))
     // byte-fetch half: the media ref resolves back to the stored part
     val bytes = Files.readAllBytes(dir.resolve("memo_0008.docx"))
-    val payload = RawFiles.docxMediaPayload(bytes, memo(1).media_ref)
+    val payload = RawFiles.mediaPayload(bytes, memo(1).media_ref)
     assert(payload.exists(_.nonEmpty))
   }
 
@@ -216,7 +216,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       "book_0001.epub#" + graft.gen.EpubGen.imgPath(1)))
     // byte-fetch half: the ref resolves back to the stored entry
     val bytes = Files.readAllBytes(dir.resolve("book_0001.epub"))
-    assert(RawFiles.epubMediaPayload(bytes, img.media_ref)
+    assert(RawFiles.mediaPayload(bytes, img.media_ref)
       .exists(_.length == 5))
     assert(docs("fake.epub").spans ==
       Vector(Span("text", "just plain bytes", null, 0)))
@@ -320,5 +320,112 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.spans.map(s => (s.kind, s.text))) ==
       RawFiles.decodeAny("deck.pptx", pptx, "")
         .map(_.spans.map(s => (s.kind, s.text))))
+  }
+
+  test("media by reference: every in-file ref of the 22 suffix classes fetches back") {
+    import graft.extract._
+    import graft.gen.{MixedGen, OdtGen}
+    // the item front end that minted a file's media, by suffix
+    def frontEnd(name: String, b: Array[Byte]): Option[Vector[Item]] =
+      name.substring(name.lastIndexOf('.') + 1) match {
+        case "docx" => Some(DocxExtractor.items(b))
+        case "md" => Some(MdExtractor.items(new String(b, "UTF-8")))
+        case "epub" => Some(EpubExtractor.items(b))
+        case "pptx" => Some(PptxExtractor.items(b))
+        case "rtf" => Some(RtfExtractor.items(b))
+        case "odt" | "ods" | "odp" => Some(OdtExtractor.items(b))
+        case "eml" => Some(EmlExtractor.items(b))
+        case "doc" => Some(DocExtractor.items(b))
+        case "xls" => Some(XlsExtractor.items(b))
+        case "ppt" => Some(PptExtractor.items(b))
+        case "ipynb" => Some(IpynbExtractor.items(b))
+        case _ => None
+      }
+    val files =
+      (0 until 88).map(i => (MixedGen.fileName(i), MixedGen.fileBytes(i))) ++
+      (0 until 12).map(i => (OdtGen.fileName(i), OdtGen.fileBytes(i)))
+    var inFile = 0
+    val fetchedBy = scala.collection.mutable.Map.empty[String, Int]
+    files.foreach { case (name, b) =>
+      val path = s"store/$name"
+      val docs = RawFiles.decodeAny(path, b, "store/")
+      val refs = docs.filter(_.doc_id == name).flatMap(_.spans)
+        .sortBy(_.offset).map(_.media_ref).filter(_ != null)
+      frontEnd(name, b) match {
+        // the `<path>#` prefix exactly where the front end said in-file
+        case Some(items) => assert(refs == items.collect {
+          case Item.Media(_, ref, true) => s"$path#$ref"
+          case Item.Media(_, ref, false) => ref
+        }, name)
+        case None => assert(refs.forall(r =>
+          r.startsWith(s"$path#") || (name.endsWith(".png") && r == path)),
+          name)
+      }
+      docs.flatMap(_.spans).map(_.media_ref)
+        .filter(r => r != null && r.startsWith(s"$path#")).foreach { ref =>
+          inFile += 1
+          val got = RawFiles.mediaPayload(b, ref)
+          // inline PDF images live in the content stream: None by design
+          if (ref.endsWith(":inline")) assert(got.isEmpty, ref)
+          else {
+            assert(got.exists(_.nonEmpty), ref)
+            val sfx = name.substring(name.lastIndexOf('.') + 1)
+            fetchedBy(sfx) = fetchedBy.getOrElse(sfx, 0) + 1
+          }
+        }
+    }
+    assert(inFile == 45)
+    assert(fetchedBy.values.sum == 41)
+    assert(fetchedBy.keySet == Set("pdf", "docx", "epub", "pptx", "rtf",
+      "odt", "odp", "eml", "doc", "ppt", "ipynb"))
+  }
+
+  test("mediaPayload peels the fan-out levels: archive member, compressed file, mbox message") {
+    import graft.gen.{MixedGen, NbGen}
+    val docx = MixedGen.fileBytes(8) // memo_0008.docx: one embedded image
+    val direct = RawFiles.mediaPayload(docx, "memo_0008.docx#media/image1.png")
+    assert(direct.exists(_.nonEmpty))
+    val zip = MixedGen.zipStored("inner/memo.docx" -> docx,
+      "notes/nb.ipynb" -> NbGen.fileBytes(1))
+    val gz = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val z = new java.util.zip.GZIPOutputStream(bos)
+      z.write(docx); z.close(); bos.toByteArray
+    }
+    val mbox = "From a@b Sat Jan  1 00:00:00 2000\n".getBytes("ISO-8859-1") ++
+      MixedGen.fileBytes(59) // msg00059_v11.eml: one inline jpeg part
+    val want = Map(
+      "store/bundle.zip#inner/memo.docx#media/image1.png" -> direct,
+      "store/bundle.zip#notes/nb.ipynb#att0:plot.png" ->
+        RawFiles.mediaPayload(NbGen.fileBytes(1), "nb.ipynb#att0:plot.png"),
+      "store/memo.docx.gz#media/image1.png" -> direct,
+      "store/spool.mbox#m0#p1:nested59.jpg" -> RawFiles.mediaPayload(
+        MixedGen.fileBytes(59), "msg00059_v11.eml#p1:nested59.jpg"))
+    assert(want.values.forall(_.exists(_.nonEmpty)))
+    val got = Seq("bundle.zip" -> zip, "memo.docx.gz" -> gz,
+        "spool.mbox" -> mbox).flatMap { case (name, b) =>
+      RawFiles.decodeAny(s"store/$name", b, "store/").flatMap(_.spans)
+        .map(_.media_ref).filter(r => r != null && r.contains("#"))
+        .map(r => r -> RawFiles.mediaPayload(b, r))
+    }
+    assert(got.map(_._1).toSet == want.keySet)
+    got.foreach { case (r, p) =>
+      assert(p.map(_.toSeq) == want(r).map(_.toSeq), r) }
+  }
+
+  test("mediaPayload: an overlong index in a ref names nothing, never throws") {
+    import graft.gen.{MixedGen, WarcGen}
+    val eml = MixedGen.fileBytes(59)
+    val rtf = MixedGen.fileBytes(13)
+    val warc = WarcGen.fileBytes(0)
+    val w = WarcGen.fileName(0)
+    // the well-formed refs resolve…
+    assert(RawFiles.mediaPayload(eml, "m.eml#p1:nested59.jpg").isDefined)
+    assert(RawFiles.mediaPayload(rtf, "m.rtf#pict_0.png").isDefined)
+    assert(RawFiles.mediaPayload(warc, s"$w#r5").isDefined)
+    // …and an index past Int range is None, not a NumberFormatException
+    assert(RawFiles.mediaPayload(eml, "m.eml#p99999999999:a.png").isEmpty)
+    assert(RawFiles.mediaPayload(rtf, "m.rtf#pict_99999999999.png").isEmpty)
+    assert(RawFiles.mediaPayload(warc, s"$w#r99999999999").isEmpty)
   }
 }

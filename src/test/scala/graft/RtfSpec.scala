@@ -1,7 +1,8 @@
 package graft
 
 import graft.extract.RtfExtractor
-import graft.extract.RtfExtractor.{Item, Media, Text}
+import graft.extract.Item
+import graft.extract.Item.{Media, Text}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
@@ -117,7 +118,7 @@ class RtfSpec extends AnyFunSuite {
       if (data.nonEmpty) {
         flushTbl()
         val ext = Option(pictExt).getOrElse("bin")
-        out += Media("image", s"pict_${picts.length}.$ext")
+        out += Media("image", s"pict_${picts.length}.$ext", true)
         picts += data
       }
       pictHex = null; pictBin = null; pictExt = null
@@ -233,7 +234,7 @@ class RtfSpec extends AnyFunSuite {
       val got = RtfExtractor.items(b)
       val exp = graft.gen.RtfGen.expectedDoc(i).map { r =>
         if (r.kind == "text") Text(r.text)
-        else Media(r.kind, graft.gen.RtfGen.pictRef(i))
+        else Media(r.kind, graft.gen.RtfGen.pictRef(i), true)
       }
       assert(got == exp, s"memo $i")
       assert(got == twinItems(b), s"memo $i twin")
@@ -303,7 +304,7 @@ class RtfSpec extends AnyFunSuite {
       val b = graft.gen.RtfGen.fileBytes(i)
       val media = RtfExtractor.items(b).collect { case m: Media => m }
       if (i % 2 == 0) {
-        assert(media == Vector(Media("image", "pict_0.png")), s"memo $i")
+        assert(media == Vector(Media("image", "pict_0.png", true)), s"memo $i")
         val payload = RtfExtractor.mediaPayload(b, "pict_0.png").get
         assert(payload.toSeq == graft.gen.RtfGen.pictPayload(i).toSeq,
           s"memo $i payload (bin=${i % 4 == 0})")

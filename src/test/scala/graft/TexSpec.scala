@@ -1,7 +1,7 @@
 package graft
 
 import graft.extract.TexExtractor
-import graft.extract.TexExtractor.{Block, Media}
+import graft.extract.Item.{Media, Text}
 import graft.gen.TexGen
 import graft.sources.RawFiles
 import org.apache.spark.sql.SparkSession
@@ -28,36 +28,36 @@ class TexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pins: comments, escapes, math, dashes, quotes, unknown commands") {
     assert(TexExtractor.items(tex("half % comment\nkept line")) ==
-      Vector(Block("half kept line")))
+      Vector(Text("half kept line")))
     assert(TexExtractor.items(tex("""50\% \& \$5 \_x \{y\} \#2""")) ==
-      Vector(Block("50% & $5 _x {y} #2")))
+      Vector(Text("50% & $5 _x {y} #2")))
     assert(TexExtractor.items(tex("$a+b$ then \\[c=d\\] end")) ==
-      Vector(Block("a+b then c=d end")))
+      Vector(Text("a+b then c=d end")))
     assert(TexExtractor.items(tex("x --- y -- z ``q'' w")) ==
-      Vector(Block("x — y – z “q” w")))
+      Vector(Text("x — y – z “q” w")))
     assert(TexExtractor.items(tex("\\alpha\\beta{kept} \\cite{x} tail")) ==
-      Vector(Block("kept tail")))
+      Vector(Text("kept tail")))
     assert(TexExtractor.items(tex("a~b\\\\c")) ==
-      Vector(Block("a b\nc")))
+      Vector(Text("a b\nc")))
     // preamble text never leaks
     assert(TexExtractor.items(
       "\\documentclass{article}\nleaky preamble\n\\begin{document}\nbody only\n\\end{document}") ==
-      Vector(Block("body only")))
+      Vector(Text("body only")))
   }
 
   test("pins: headings, nested wrappers, tabular, verbatim, accents") {
     assert(TexExtractor.items(tex("\\section*{Star Head}\npara")) ==
-      Vector(Block("Star Head"), Block("para")))
+      Vector(Text("Star Head"), Text("para")))
     assert(TexExtractor.items(tex("\\emph{\\textbf{deep} nest} flat")) ==
-      Vector(Block("deep nest flat")))
+      Vector(Text("deep nest flat")))
     val tab = tex("\\begin{tabular}{ll}\na & b \\\\\nc \\& d & e \\\\\n\\end{tabular}")
     assert(TexExtractor.items(tab) ==
-      Vector(Block("a\tb\nc & d\te")))
+      Vector(Text("a\tb\nc & d\te")))
     assert(TexExtractor.items(tex(
       "\\begin{verbatim}\nraw \\emph{not} processed\n\\end{verbatim}")) ==
-      Vector(Block("raw \\emph{not} processed")))
+      Vector(Text("raw \\emph{not} processed")))
     assert(TexExtractor.items(tex("Caf\\'e \\\"o \\~n")) ==
-      Vector(Block("Café ö ñ")))
+      Vector(Text("Café ö ñ")))
     // unterminated environment degrades, never throws
     assert(TexExtractor.items(tex("\\begin{tabular}{l}\nx & y"))
       .nonEmpty)

@@ -156,7 +156,7 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
       Vector(("image", null)))
     val ref = imgSpans.head.media_ref
     assert(ref.endsWith(s"/$f0#r5"))
-    val fetched = RawFiles.warcRecordPayload(
+    val fetched = RawFiles.mediaPayload(
       Files.readAllBytes(dir.resolve(f0)), ref)
     assert(fetched.exists(_.sameElements(WarcGen.imgPayload(0))))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.XlsExtractor
+import graft.extract.{Item, XlsExtractor}
 import graft.gen.XlsGen
 import graft.sources.RawFiles
 import org.scalatest.funsuite.AnyFunSuite
@@ -77,22 +77,22 @@ class XlsSpec extends AnyFunSuite {
     // TSV first, then the two resolvable pictures; the ghost pib 9 and
     // the decoy FOPT property stay silent
     assert(items == Vector(
-      XlsExtractor.Text(XlsGen.pictureTsv(3)),
-      XlsExtractor.Media("image", "pic1"),
-      XlsExtractor.Media("image", "pic2")))
+      Item.Text(XlsGen.pictureTsv(3)),
+      Item.Media("image", "pic1", true),
+      Item.Media("image", "pic2", true)))
     // payloads: PNG via the first FBSE (split across the CONTINUE),
     // double-UID JPEG via the second — byte-exact, imageio-decodable
-    val p1 = RawFiles.xlsMediaPayload(b, "plates_0003.xls#pic1")
+    val p1 = RawFiles.mediaPayload(b, "plates_0003.xls#pic1")
     assert(p1.exists(_.sameElements(graft.gen.PptGen.pngPayload(3))))
     assert(javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(p1.get)) != null)
-    val p2 = RawFiles.xlsMediaPayload(b, "plates_0003.xls#pic2")
+    val p2 = RawFiles.mediaPayload(b, "plates_0003.xls#pic2")
     assert(p2.exists(_.sameElements(graft.gen.PptGen.jpegPayload(3))))
     assert(XlsExtractor.mediaPayload(b, "pic9").isEmpty)
     assert(XlsExtractor.mediaPayload(b, "pic0").isEmpty)
     // picture-free variants emit TSV-only items and resolve nothing
     assert(XlsExtractor.items(XlsGen.fileBytes(0))
-      .forall(_.isInstanceOf[XlsExtractor.Text]))
+      .forall(_.isInstanceOf[Item.Text]))
     assert(XlsExtractor.mediaPayload(XlsGen.fileBytes(0), "pic1").isEmpty)
   }
 
