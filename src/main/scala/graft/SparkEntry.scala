@@ -1,14 +1,16 @@
 package graft
 
 import graft.core._
-import graft.extract.Extractor
+import graft.extract.{Extractor, HtmlExtractor, RealPdf}
 import graft.functions.{Position, PositionScala}
-import graft.gen.CorpusGen
+import graft.gen._
 import graft.ops.{Dedup, MediaDedup, Multimodal, Similarity, TextOps}
 import graft.oracle.{ExpectedChunk, PlainOracles, RefOracle}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets
+import scala.reflect.runtime.universe.TypeTag
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the operator map.
   *
@@ -27,6 +29,14 @@ import org.apache.spark.sql.functions._
   * implementations in [[graft.oracle]]; the [[ExpectedToken]] placeholder
   * in those twins is substituted with the materialized absolute path at
   * dump time.
+  *
+  * The generator-corpus queries are ONE table, [[genRows]]. A row names
+  * the query, how its corpus is written, the output shape and the
+  * generator's ground truth, and yields both its [[queries]] entry and
+  * its [[expected]] twin. The shapes: a [[Shape]] over the extracted rows
+  * ([[TailRef]], [[VerbatimRef]], [[NoRef]] spans, TSV by ord, the one
+  * TSV span), the [[perFile]] recipe, or a custom projection over
+  * [[ingest]]. A new generator format is one row.
   */
 object SparkEntry {
 
@@ -48,9 +58,10 @@ object SparkEntry {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** Scratch dir for queries that exercise a write path (q_csv_roundtrip,
-    * q_upload): created per invocation, deleted recursively at JVM exit so
-    * Verify/Bench runs don't accumulate /tmp garbage. Exit-time (not
-    * eager) because the returned DataFrame reads the dir lazily.
+    * q_upload) or write a generator corpus: created per invocation,
+    * deleted recursively at JVM exit so Verify/Bench runs don't
+    * accumulate /tmp garbage. Exit-time (not eager) because the returned
+    * DataFrame reads the dir lazily.
     */
   private def scratchDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
@@ -102,84 +113,268 @@ object SparkEntry {
               "position.relative_y")
   }
 
+  // ---------- generator corpora: one row per query ----------
+
+  /** One generator-corpus query and its expected twin. `write` lays the
+    * corpus into a fresh scratch dir INSIDE the query call, so
+    * [[graft.Bench]] and QueryProfile time it with the read; `read` runs
+    * the production path over that dir; `truth` is the generator's own
+    * ground truth in the query's columns, computed from the generator
+    * alone — never from RawFiles, Extractor or a parser.
+    */
+  private[graft] final case class GenRow(name: String, write: String => Unit,
+      read: (SparkSession, String) => DataFrame,
+      truth: SparkSession => DataFrame) {
+    def query(s: SparkSession): DataFrame = {
+      val tmp = scratchDir(s"graft-$name")
+      write(tmp)
+      read(s, tmp)
+    }
+  }
+
+  /** The production raw-ingest recipe: the RawFiles directory scan →
+    * InputDocs, handed to `project`.
+    */
+  private def ingest(project: (SparkSession, Dataset[InputDoc]) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (s, tmp) => project(s, graft.sources.RawFiles.read(s, tmp))
+
+  /** [[ingest]] → Extractor rows, handed to `project`. */
+  private def extracted(project: DataFrame => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    ingest { (s, docs) =>
+      import s.implicits._
+      project(docs.flatMap(d => Extractor.extractRows(d)).toDF())
+    }
+
+  /** The per-file recipe: one raw file scan, `f(fileName, bytes)` rows
+    * named `cols`, finished by `post`.
+    */
+  private def perFile[T <: Product : TypeTag](cols: String*)(
+      f: (String, Array[Byte]) => Seq[T])(post: DataFrame => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (s, tmp) => post(s.read.format("binaryFile").load(tmp)
+      .select(col("path"), col("content"))
+      .flatMap { r =>
+        val path = r.getString(0)
+        f(path.substring(path.lastIndexOf('/') + 1),
+          r.getAs[Array[Byte]]("content"))
+      }(Encoders.product[T])
+      .toDF(cols: _*))
+
+  /** Generator rows as a DataFrame, renamed to `cols` when given. */
+  private def truth[T <: Product : TypeTag](rows: => Seq[T], cols: String*)
+      : SparkSession => DataFrame = s => {
+    val df = s.createDataFrame(rows)
+    if (cols.isEmpty) df else df.toDF(cols: _*)
+  }
+
+  /** Writes the files `idx` of a generator (a subset of its corpus). */
+  private def writeFiles(idx: Seq[Int], name: Int => String,
+      bytes: Int => Array[Byte]): String => Unit = dir =>
+    idx.foreach(i =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name(i)),
+        bytes(i)): Unit)
+
+  /** An output shape over the extracted rows: `cols` (named `names`),
+    * rows kept by `where`, ordered by doc_id then ord. Its expected twin
+    * selects the same names from the generator's [[graft.gen.GtRow]]s.
+    */
+  private final case class Shape(names: Seq[String], cols: Seq[Column],
+      where: Option[Column] = None) extends (DataFrame => DataFrame) {
+    def apply(rows: DataFrame): DataFrame =
+      where.fold(rows)(c => rows.where(c)).select(cols: _*)
+        .orderBy(names.filter(Set("doc_id", "ord")).map(col): _*)
+    def truth(rows: => Seq[GtRow]): SparkSession => DataFrame =
+      s => s.createDataFrame(rows).select(names.map(col): _*)
+  }
+
+  private def spanShape(ref: Option[Column]): Shape =
+    Shape(Seq("doc_id", "kind", "text") ++ ref.map(_ => "media_ref") :+ "ord",
+      Seq(col("doc_id"), col("kind"), col("text")) ++ ref :+
+        col("order").as("ord"))
+
+  /** Spans, media_ref reduced to its path-independent tail so the output
+    * hashes identically across scratch dirs.
+    */
+  private val TailRef =
+    spanShape(Some(element_at(split(col("media_ref"), "/"), -1).as("media_ref")))
+  /** Spans, media_ref verbatim (external references). */
+  private val VerbatimRef = spanShape(Some(col("media_ref")))
+  /** Spans of a format without media. */
+  private val NoRef = spanShape(None)
+
+  /** doc_id, ord and each span's text, named `as`. */
+  private def textByOrd(as: String): Shape = Shape(Seq("doc_id", "ord", as),
+    Seq(col("doc_id"), col("order").as("ord"),
+      if (as == "text") col("text") else col("text").as(as)))
+  private val TsvByOrd = textByOrd("tsv")
+  /** The one TSV-bearing span (text holding a tab) of a table doc. */
+  private val TsvSpan = Shape(Seq("doc_id", "tsv"),
+    Seq(col("doc_id"), col("text").as("tsv")), Some(col("text").contains("\t")))
+
+  /** A span-shaped row: extracted rows through `shape`, truth = `gt`. */
+  private def spans(name: String, shape: Shape, write: String => Unit,
+      gt: => Seq[GtRow]): GenRow =
+    GenRow(name, write, extracted(shape), shape.truth(gt))
+
+  /** FORMAT-INVARIANT dedup — the engine's thesis in one query: one
+    * article in eight renditions extracts into the one span vocabulary,
+    * its per-doc text canonicalized (casefold + punct/ws fold), and the
+    * renditions collapse into ONE cluster; singleton notes stay alone.
+    * Scale shape, exactly: the per-doc text rebuild groups by doc_id, so
+    * each document's text crosses ONE exchange once, as the partial
+    * collect_list VALUE (one doc = one scan task, so the partial agg is
+    * already complete map-side) — the move-the-corpus-once floor any
+    * span→document reassembly pays. The CLUSTERING window then partitions
+    * on xxhash64(canonical): only (doc_id, 8-byte key) rides that second
+    * shuffle, never text (the PageFurniture rule).
+    */
+  private def crossFormatClusters(rows: DataFrame): DataFrame = {
+    val fullText = rows.where(col("text").isNotNull)
+      .groupBy("doc_id")
+      .agg(array_join(
+        transform(
+          array_sort(collect_list(struct(col("order"), col("text")))),
+          x => x.getField("text")),
+        "\n").as("full"))
+    val keyed = fullText.select(col("doc_id"),
+      xxhash64(TextOps.canonicalText(col("full"))).as("k"))
+    val w = Window.partitionBy("k")
+    keyed.select(col("doc_id"),
+        count(lit(1)).over(w).as("cluster_size"),
+        min("doc_id").over(w).as("cluster_rep"))
+      .orderBy("doc_id")
+  }
+
+  /** The markdown / pptx files that carry one pipe / a:tbl table. */
+  private val MdTables = (0 until 24).map(k => 22 * k + 9)
+  private val PptxTables = (0 until 24).map(3 * _)
+
+  /** Every generator-corpus query. A new generator format is one row; the
+    * per-format behaviour each row pins is in its front end's scaladoc.
+    */
+  private[graft] lazy val genRows: Seq[GenRow] = Seq(
+    // genuine PDFs: classic / Flate / ObjStm / LZW / two-page / RC4 / CJK-CMap
+    spans("ex_realpdf", textByOrd("text").copy(where = Some(col("text").isNotNull)),
+      PdfGen.write(_, 60), PdfGen.expected(60)),
+    // 22 suffix classes in one tree, media by reference
+    spans("ex_mixed", TailRef, MixedGen.write(_, 48), MixedGen.expected(48)),
+    // EPUB spine chapters, nav dropped, images at tag position
+    spans("ex_epub", TailRef, EpubGen.write(_, 24), EpubGen.expected(24)),
+    // PPTX slide paragraphs + pictures at tag position
+    spans("ex_pptx", TailRef, PptxGen.write(_, 24), PptxGen.expected(24)),
+    // RTF paragraphs, \cell/\row TSV, shppict pictures once
+    spans("ex_rtf", TailRef, RtfGen.write(_, 24), RtfGen.expected(24)),
+    // WARC / WET segments fan out one doc per retained record
+    spans("ex_warc", TailRef, WarcGen.write(_, 21), WarcGen.expected(21)),
+    // zip / tar / tar.gz / 7z fan out one doc per member
+    spans("ex_archive", TailRef, ArchiveGen.write(_, 18), ArchiveGen.expected(18)),
+    // notebook cells: markdown, code, outputs, attachment images
+    spans("ex_ipynb", TailRef, NbGen.write(_, 24), NbGen.expected(24)),
+    // MIME messages, cid: images, attachment fan-out
+    spans("ex_eml", TailRef, EmlGen.write(_, 24), EmlGen.expected(24)),
+    // ODF paragraphs, TSV tables, in-archive images
+    spans("ex_odt", TailRef, OdtGen.write(_, 24), OdtGen.expected(24)),
+    // mbox spools: one doc per message, attachments fan out below it
+    spans("ex_mbox", TailRef, EmlGen.writeMbox(_, 4), EmlGen.expectedMbox(4)),
+    // legacy PowerPoint records + BLIP-store pictures
+    spans("ex_ppt", TailRef, PptGen.write(_, 24), PptGen.expected(24)),
+    // legacy Word piece tables + anchor-position pictures
+    spans("ex_doc", TailRef, DocGen.write(_, 24), DocGen.expected(24)),
+    // WordprocessingML paragraphs, w:tbl TSV, blips at tag position
+    spans("ex_docx", TailRef, DocxGen.write(_, 24), DocxGen.expected(24)),
+    // legacy sheet TSV + Escher-store pictures
+    spans("q_xls_pictures", TailRef, XlsGen.writePictures(_, 12),
+      XlsGen.expectedPictures(12)),
+    // RSS/Atom: one doc per entry, enclosure URLs verbatim
+    spans("ex_feed", VerbatimRef, FeedGen.write(_, 24), FeedGen.expected(24)),
+    // detex'd LaTeX blocks, tabular TSV, \includegraphics verbatim
+    spans("ex_tex", VerbatimRef, TexGen.write(_, 24), TexGen.expected(24)),
+    // jsonl / json shards fan out one doc per retained record
+    spans("ex_jsonl", NoRef, JsonlGen.write(_, 24), JsonlGen.expected(24)),
+    // SubRip / WebVTT cue text
+    spans("ex_subs", NoRef, SubGen.write(_, 24), SubGen.expected(24)),
+    // generic-XML text-bearing element blocks
+    spans("ex_xml", NoRef, XmlGen.write(_, 24), XmlGen.expected(24)),
+    // PDF embedded files fan out one doc per attachment
+    spans("ex_pdf_attach", NoRef, AttachGen.write(_, 16), AttachGen.expected(16)),
+    // binary .doc grids through the PAPX layer, one TSV span per table
+    spans("q_table_tsv_doc", textByOrd("text"), DocGen.writeTables(_, 12),
+      DocGen.expectedTables(12)),
+    // XLSX used ranges, one TSV span per sheet
+    GenRow("q_table_tsv_xlsx", XlsxGen.write(_, 24), extracted(TsvByOrd),
+      truth(XlsxGen.expected(24))),
+    // BIFF8 used ranges, one TSV span per sheet
+    GenRow("q_table_tsv_xls", XlsGen.write(_, 24), extracted(TsvByOrd),
+      truth(XlsGen.expected(24))),
+    // .csv / .tsv: sniffed delimiter, RFC 4180 quoting
+    GenRow("q_table_tsv_csv", CsvGen.write(_, 24), extracted(TsvByOrd),
+      truth(CsvGen.expected(24))),
+    // markdown pipe tables as one TSV block
+    GenRow("q_table_tsv_md",
+      writeFiles(MdTables, MixedGen.fileName, MixedGen.fileBytes),
+      extracted(TsvSpan),
+      truth(MdTables.map(i => (MixedGen.fileName(i), MixedGen.mdTableTsv(i))),
+        "doc_id", "tsv")),
+    // DrawingML a:tbl as one TSV block
+    GenRow("q_table_tsv_pptx",
+      writeFiles(PptxTables, PptxGen.fileName, PptxGen.fileBytes),
+      extracted(TsvSpan),
+      truth(PptxTables.map(i => (PptxGen.fileName(i), PptxGen.tableTsv(i))),
+        "doc_id", "tsv")),
+    // charset sniffing at the ingest boundary: span level, before extraction
+    GenRow("ex_charset", CharsetGen.write(_, 24), ingest { (s, docs) =>
+        import s.implicits._
+        docs.flatMap(d => d.spans.map(sp =>
+            (d.doc_id, sp.kind, sp.text, sp.offset)))
+          .toDF("doc_id", "kind", "text", "ord")
+          .orderBy("doc_id", "ord")
+      }, NoRef.truth(CharsetGen.expected(24))),
+    // eight renditions of one article cluster together
+    GenRow("dd_cross_format", CrossGen.write(_, 12, 5),
+      extracted(crossFormatClusters),
+      truth(CrossGen.expected(12, 5), "doc_id", "cluster_size", "cluster_rep")),
+    // /Link URIs + display-mapped rects, domains via urlDomain
+    GenRow("q_pdf_links", LinkGen.write(_, 36),
+      perFile("doc_id", "page", "uri", "x0", "y0", "x1", "y1") { (name, b) =>
+        RealPdf.links(b).map(l => (name, l.page, l.uri, l.x0, l.y0, l.x1, l.y1))
+      } {
+        _.withColumn("domain", TextOps.urlDomain(col("uri")))
+          .select("doc_id", "page", "uri", "domain", "x0", "y0", "x1", "y1")
+          .orderBy("doc_id", "page", "uri")
+      }, truth(LinkGen.expected(36))),
+    // /Outlines preorder walk: title, depth, target page
+    GenRow("q_pdf_outline", LinkGen.write(_, 36),
+      perFile("doc_id", "pos", "depth", "title", "page") { (name, b) =>
+        RealPdf.outline(b).map(o => (name, o.pos, o.depth, o.title, o.page))
+      }(_.orderBy("doc_id", "pos")), truth(LinkGen.expectedOutline(36))),
+    // AcroForm field values + display-mapped widget rects
+    GenRow("q_pdf_formfields", FormGen.write(_, 36),
+      perFile("doc_id", "pos", "page", "name", "ftype", "value",
+          "x0", "y0", "x1", "y1") { (name, b) =>
+        RealPdf.formFields(b).map(ff => (name, ff.pos, ff.page, ff.name,
+          ff.ftype, ff.value, ff.x0, ff.y0, ff.x1, ff.y1))
+      }(_.orderBy("doc_id", "pos")), truth(FormGen.expected(36))),
+    // HTML <table> DOM recovery into the TSV vocabulary
+    GenRow("q_table_tsv_html", HtmlTableGen.write(_, 30),
+      perFile("doc_id", "table_id", "n_rows", "n_cols", "tsv") { (name, b) =>
+        HtmlExtractor.tables(new String(b, StandardCharsets.UTF_8))
+          .zipWithIndex.map { case (rows, tid) =>
+            (name, tid, rows.length, rows.map(_.length).max,
+              rows.map(_.mkString("\t")).mkString("\n"))
+          }
+      }(_.orderBy("doc_id", "table_id")), truth(HtmlTableGen.expected(30)))
+  )
+
   // ---------- the queries ----------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // === extraction engine (oracle: RefOracle expected tables) ===
     "ex_spans" -> ((s, dir) => {
       extractedRows(s, dir)
         .select("doc_id", "kind", "text", "media_ref", "order")
-    }),
-    "ex_realpdf" -> ((s, dir) => {
-      // genuine-PDF ingestion, driver-visible: deterministic real .pdf
-      // files (classic / Flate / ObjStm / LZW / two-page-Flate /
-      // RC4-encrypted / CJK-CMap sevenths) written to a scratch dir, ingested by
-      // the SAME binaryFile scan → RealPdf parse → PG/TX → Extractor
-      // path production uses, reduced to text rows. The oracle is the
-      // GENERATOR's ground truth (RealPdfBench.pagesOf) — independent
-      // of the parser.
-      import s.implicits._
-      val tmp = scratchDir("graft-expdf")
-      (0 until 60).foreach { i =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, f"doc_$i%04d.pdf"),
-          graft.tools.RealPdfBench.makePdf(i.toLong, i % 7))
-      }
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .where(col("text").isNotNull)
-        .select(col("doc_id"), col("order").as("ord"), col("text"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_mixed" -> ((s, dir) => {
-      // mixed-format directory ingestion, driver-visible: genuine PDFs
-      // (text-only / image-XObject / form-XObject / CCITT-G4 / JBIG2
-      // scanned tenths), HTML pages with known boilerplate AND embedded
-      // media, plain-text notes, genuine DOCX memos (paragraph text +
-      // embedded-image blips), Markdown posts (headings / soft-wrapped
-      // paragraphs / lists / fenced code / image refs), EPUB books,
-      // XLSX workbooks (used-range TSV sheets), legacy binary Office
-      // (.doc piece-table memos, .xls BIFF8 workbooks, .ppt decks with
-      // BLIP-store pictures), ipynb notebooks, generic XML, HF-style
-      // whole-file .json array exports (per-element fan-out docs), and
-      // standalone
-      // media files in ONE scratch tree, through the production binaryFile
-      // scan → RawFiles classification → Extractor. Output is the
-      // north-rule span invariant (kind, text, media_ref, order);
-      // media_ref reduced to its path-independent tail so the result
-      // hashes identically across scratch dirs. Oracle = the
-      // GENERATOR's ground truth (MixedGen.expected).
-      import s.implicits._
-      val tmp = scratchDir("graft-exmix")
-      graft.gen.MixedGen.write(tmp, 48)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_epub" -> ((s, dir) => {
-      // genuine EPUB ingestion, driver-visible: OCF zip → container.xml
-      // → OPF manifest+spine → XHTML chapters, through the production
-      // binaryFile scan → RawFiles classification → Extractor. Nav
-      // documents drop via the HTML link-density gate, chapter images
-      // emit at tag position with in-archive refs (../ hrefs
-      // normalized), absent chapters skip silently. media_ref reduced
-      // to its path-independent tail as in ex_mixed. Oracle: the
-      // GENERATOR's ground truth (EpubGen.expected).
-      import s.implicits._
-      val tmp = scratchDir("graft-epub")
-      graft.gen.EpubGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
     }),
     "ex_chunks" -> ((s, dir) => {
       // ≅ reference document_chunks incl. P13 extracted_at (setup.sql:123;
@@ -359,635 +554,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_urls"),
           countDistinct("doc_id").as("n_docs"))
         .orderBy("canonical_url")
-    }),
-    "q_pdf_links" -> ((s, dir) => {
-      // the PDF half of the provenance stage: /Link annotation URIs +
-      // display-mapped rects from GENUINE pdf bytes (LinkGen fixtures:
-      // direct + indirect /A actions, /Rotate 90 thirds, GoTo/Square/
-      // action-less decoys), domains via the same urlDomain the C4
-      // blocklist stage uses. Oracle: generator ground truth with an
-      // independently hand-derived rotation mapping.
-      import s.implicits._
-      val tmp = scratchDir("graft-links")
-      graft.gen.LinkGen.write(tmp, 36)
-      s.read.format("binaryFile").load(tmp)
-        .select(col("path"), col("content"))
-        .flatMap { r =>
-          val path = r.getString(0)
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          graft.extract.RealPdf.links(r.getAs[Array[Byte]]("content"))
-            .map(l => (name, l.page, l.uri, l.x0, l.y0, l.x1, l.y1))
-        }
-        .toDF("doc_id", "page", "uri", "x0", "y0", "x1", "y1")
-        .withColumn("domain", TextOps.urlDomain(col("uri")))
-        .select("doc_id", "page", "uri", "domain", "x0", "y0", "x1", "y1")
-        .orderBy("doc_id", "page", "uri")
-    }),
-    "q_pdf_outline" -> ((s, dir) => {
-      // document TOC recovery: /Outlines preorder walk (title, depth,
-      // target page) from the same genuine fixtures as q_pdf_links —
-      // /Dest arrays AND /GoTo actions resolve, outline-free quarters
-      // contribute nothing. Oracle: generator ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-outline")
-      graft.gen.LinkGen.write(tmp, 36)
-      s.read.format("binaryFile").load(tmp)
-        .select(col("path"), col("content"))
-        .flatMap { r =>
-          val path = r.getString(0)
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          graft.extract.RealPdf.outline(r.getAs[Array[Byte]]("content"))
-            .map(o => (name, o.pos, o.depth, o.title, o.page))
-        }
-        .toDF("doc_id", "pos", "depth", "title", "page")
-        .orderBy("doc_id", "pos")
-    }),
-    "q_table_tsv_html" -> ((s, dir) => {
-      // the HTML half of the table family: <table> DOM recovery into
-      // the same TSV vocabulary as positional-PDF grids and markdown
-      // pipes — data tables never clear the boilerpipe block gate (cells
-      // are short), so this is their only visibility path. HtmlTableGen
-      // fixtures: th headers, entity cells, <br>-in-cell, implicit
-      // </tr>/</td> closes, nested-in-cell tables (own id by open
-      // order), footer-wrapped layout tables (dropped), table-free
-      // fifths. Oracle: generator ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-htmltsv")
-      graft.gen.HtmlTableGen.write(tmp, 30)
-      s.read.format("binaryFile").load(tmp)
-        .select(col("path"), col("content"))
-        .flatMap { r =>
-          val path = r.getString(0)
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          val html = new String(r.getAs[Array[Byte]]("content"),
-            java.nio.charset.StandardCharsets.UTF_8)
-          graft.extract.HtmlExtractor.tables(html).zipWithIndex.map {
-            case (rows, tid) =>
-              (name, tid, rows.length, rows.map(_.length).max,
-                rows.map(_.mkString("\t")).mkString("\n"))
-          }
-        }
-        .toDF("doc_id", "table_id", "n_rows", "n_cols", "tsv")
-        .orderBy("doc_id", "table_id")
-    }),
-    "q_table_tsv_md" -> ((s, dir) => {
-      // markdown pipe tables land in the same TSV vocabulary as the
-      // positional-PDF table family (q_table_tsv): the md front end
-      // emits each GitHub table as ONE tab/newline-joined text block —
-      // recovered here from genuine .md files through the production
-      // ingest + extraction path. Oracle: generator ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-mdtsv")
-      (0 until 24).foreach { k =>
-        val i = 22 * k + 9
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, graft.gen.MixedGen.fileName(i)),
-          graft.gen.MixedGen.fileBytes(i)): Unit
-      }
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .where(col("text").contains("\t"))
-        .select(col("doc_id"), col("text").as("tsv"))
-        .orderBy("doc_id")
-    }),
-    "ex_pptx" -> ((s, dir) => {
-      // genuine PPTX ingestion, driver-visible: presentation.xml slide
-      // order → per-slide paragraph text (runs concatenated, a:br
-      // breaks) + picture media at tag position with in-archive refs
-      // (../ Targets normalized), absent slide parts skipped, through
-      // the production binaryFile scan → RawFiles classification →
-      // Extractor. media_ref reduced to its path-independent tail as in
-      // ex_epub. Oracle: the GENERATOR's ground truth (PptxGen).
-      import s.implicits._
-      val tmp = scratchDir("graft-pptx")
-      graft.gen.PptxGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_rtf" -> ((s, dir) => {
-      // genuine RTF ingestion, driver-visible: group-machine parse →
-      // paragraph text (codepage escapes, \u fallbacks, keyword chars),
-      // \cell/\row tables as TSV blocks, shppict pictures emitting
-      // exactly once with recoverable payloads — through the production
-      // binaryFile scan → RawFiles classification → Extractor.
-      // media_ref reduced to its path-independent tail as in ex_mixed.
-      // Oracle: the GENERATOR's ground truth (RtfGen).
-      import s.implicits._
-      val tmp = scratchDir("graft-rtf")
-      graft.gen.RtfGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_warc" -> ((s, dir) => {
-      // genuine web-archive ingestion, driver-visible: each crawl
-      // segment FANS OUT to one document per retained record
-      // (`<file>#r<idx>:<target-uri>`), payloads routed by MIME through
-      // the existing front ends — html records through the boilerpipe
-      // gate with interleaved media, pdf records through RealPdf,
-      // chunked HTTP bodies de-chunked, WET conversion records as text,
-      // image resources as media by reference; non-2xx and
-      // warcinfo/request/metadata records drop; odd segments are
-      // .warc.gz (per-record gzip members). Oracle: WarcGen ground
-      // truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-warc")
-      graft.gen.WarcGen.write(tmp, 21)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_archive" -> ((s, dir) => {
-      // genuine archive-dump ingestion, driver-visible: each .zip /
-      // .tar / .tar.gz / .7z FANS OUT to one document per member file
-      // (`<file>#<member>`), members routed by their own suffix
-      // through the existing front ends — html through the boilerpipe
-      // gate with interleaved media, pdf through RealPdf, text
-      // verbatim, png as media by reference; unsupported suffixes and
-      // NESTED archives drop. Oracle: ArchiveGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-archive")
-      graft.gen.ArchiveGen.write(tmp, 18)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_jsonl" -> ((s, dir) => {
-      // corpus-shard re-ingestion, driver-visible: each .jsonl /
-      // .ndjson / .jsonl.{gz,zst,xz,lz4,sz} shard FANS OUT to one
-      // document per retained JSON line (`<file>#L<lineNo>:<id>`) —
-      // text under the Dolma/HF/CCNet key conventions
-      // (text|content|raw_content), ids from id|url|doc_id,
-      // malformed/blank/text-less lines dropped, BOM and CRLF
-      // tolerated. Whole-file `.json` joins the family: a single
-      // pretty-printed object is ONE document (the file itself), an
-      // HF-style array export fans out per retained element
-      // (`<file>#r<idx>:<id>`), `.json.gz` routes by inner extension.
-      // Oracle: JsonlGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-jsonl")
-      graft.gen.JsonlGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_subs" -> ((s, dir) => {
-      // subtitle ingestion, driver-visible: SubRip/WebVTT cue machines
-      // — comma/dot millis timings (incl. MM:SS.mmm short form),
-      // BOM+CRLF tolerance, formatting/voice/karaoke tag stripping,
-      // entity decode, NOTE/STYLE/header apparatus dropped, rolling
-      // duplicates collapsed, SubRip-under-.txt content magic, and a
-      // cue-less .srt yielding nothing. Oracle: SubGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-subs")
-      graft.gen.SubGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_xml" -> ((s, dir) => {
-      // generic-XML ingestion, driver-visible: the XmlExtractor block
-      // rule (one block per text-bearing element, mixed inline content
-      // merging into its container), CDATA kept verbatim, named/
-      // decimal/hex entities decoded, DOCTYPE-internal-subset/PI/
-      // comment apparatus dropped, XML-decl encoding + UTF-16 BOM
-      // honored, unescaped bare `<` kept as content, apparatus-only
-      // files vanishing. Oracle: XmlGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-xml")
-      graft.gen.XmlGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_ipynb" -> ((s, dir) => {
-      // Jupyter-notebook ingestion, driver-visible: nbformat 3/4 cell
-      // walks — markdown cells through the full MdExtractor semantics
-      // (headings, paragraphs, pipe tables), code cells and
-      // execute_result reprs as verbatim blocks, attachment/output
-      // images as in-file media spans (ghost attachment refs drop),
-      // external image URLs verbatim, stream/error/raw noise dropped,
-      // malformed JSON yielding nothing. media_ref reduced to its
-      // path-independent tail as in ex_mixed. Oracle: NbGen ground
-      // truth (hand-assembled JSON, hand-written rows).
-      import s.implicits._
-      val tmp = scratchDir("graft-ipynb")
-      graft.gen.NbGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_eml" -> ((s, dir) => {
-      // email ingestion, driver-visible: RFC 5322 / MIME messages
-      // decode at the ingest boundary — RFC 2047 subjects, base64 /
-      // quoted-printable transfer encodings, charset params through
-      // the CharsetSniff chain, multipart/alternative picking the
-      // plain branch, html parts through the boilerpipe gate with
-      // cid: images resolved to their attached parts at tag position,
-      // media parts by reference, and DOCUMENT attachments fanning
-      // out as their own InputDocs through the matching front ends
-      // (.md/.txt here). media_ref reduced to its path-independent
-      // tail as in ex_mixed. Oracle: EmlGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-eml")
-      graft.gen.EmlGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_odt" -> ((s, dir) => {
-      // OpenDocument Text ingestion, driver-visible: ODF packages
-      // decode at the ingest boundary — paragraph/heading spans
-      // (text:s/tab/line-break expansion, entity decode, styled spans
-      // flowing), tables as TSV blocks in the engine's table
-      // vocabulary (number-columns-repeated expanded, ragged rows
-      // padded, multi-paragraph cells space-joined), footnote
-      // apparatus dropped, in-archive images by reference with
-      // recoverable payloads. media_ref reduced to its
-      // path-independent tail as in ex_mixed. Oracle: OdtGen ground
-      // truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-odt")
-      graft.gen.OdtGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "dd_cross_format" -> ((s, dir) => {
-      // FORMAT-INVARIANT dedup — the engine's thesis in one query:
-      // the same article staged as .html (boilerplate-wrapped), .md,
-      // .txt, .eml, generic .xml (DocBook-ish elements), whole-file
-      // .json (Dolma text key), legacy-binary
-      // .doc (CFB piece table) and .ppt (CFB text atoms) extracts into
-      // the one span vocabulary, its per-doc text canonicalized
-      // (casefold + punct/ws fold), and
-      // the eight renditions collapse into ONE cluster; singleton
-      // notes stay alone. Scale shape, exactly: the per-doc text
-      // rebuild groups by doc_id, so each document's text crosses ONE
-      // exchange once, as the partial collect_list VALUE (one doc =
-      // one scan task, so the partial agg is already complete
-      // map-side) — the move-the-corpus-once floor any span→document
-      // reassembly pays. The CLUSTERING window then partitions on
-      // xxhash64(canonical): only (doc_id, 8-byte key) rides that
-      // second shuffle, never text (the PageFurniture rule).
-      // Oracle: CrossGen ground truth (clusters by construction).
-      import s.implicits._
-      val tmp = scratchDir("graft-cross")
-      graft.gen.CrossGen.write(tmp, 12, 5)
-      val rows = graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d)).toDF()
-      val fullText = rows.where(col("text").isNotNull)
-        .groupBy("doc_id")
-        .agg(array_join(
-          transform(
-            array_sort(collect_list(struct(col("order"), col("text")))),
-            x => x.getField("text")),
-          "\n").as("full"))
-      val keyed = fullText.select(col("doc_id"),
-        xxhash64(graft.ops.TextOps.canonicalText(col("full"))).as("k"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("k")
-      keyed.select(col("doc_id"),
-          count(lit(1)).over(w).as("cluster_size"),
-          min("doc_id").over(w).as("cluster_rep"))
-        .orderBy("doc_id")
-    }),
-    "ex_feed" -> ((s, dir) => {
-      // RSS/Atom syndication ingestion, driver-visible: one feed file
-      // fans out to one document per item/entry (`<file>#e<idx>:<id>`)
-      // — titles, CDATA/entity-escaped html bodies through the
-      // boilerpipe gate with the stripped-text fallback for short
-      // descriptions, enclosure/media:content media by reference
-      // (URLs verbatim — no tail reduction); a non-feed .xml routes
-      // to the generic-XML front end instead (ex_xml).
-      // Oracle: FeedGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-feed")
-      graft.gen.FeedGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          col("media_ref"), col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_mbox" -> ((s, dir) => {
-      // mbox spool ingestion, driver-visible: one file = many emails
-      // (`<spool>#m<idx>`), each member through the full MIME machine
-      // incl. attachment fan-out (`…#m<idx>#a<idx>:<name>`) and media
-      // parts by reference (`…#m<idx>#p<idx>:<name>` tails). Oracle:
-      // EmlGen's expectedMbox — per-message ground truth with the
-      // spool identity substituted, framing written by the generator.
-      import s.implicits._
-      val tmp = scratchDir("graft-mbox")
-      graft.gen.EmlGen.writeMbox(tmp, 4)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_tex" -> ((s, dir) => {
-      // LaTeX (arXiv-source) ingestion, driver-visible: detex'd
-      // blocks — preamble dropped, comments stripped, formatting
-      // wrappers keep their text, citation/label apparatus drops,
-      // math delimiters drop, accents compose, verbatim kept raw,
-      // tabular → ONE TSV block (the engine's table vocabulary),
-      // \includegraphics media at tag position with VERBATIM refs
-      // (external references — no tail reduction needed). Oracle:
-      // TexGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-tex")
-      graft.gen.TexGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          col("media_ref"), col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_ppt" -> ((s, dir) => {
-      // PowerPoint 97–2003 binary ingestion, driver-visible: .ppt
-      // decks (CFB containers) decode at the ingest boundary — record
-      // tree walk, TextCharsAtom/TextBytesAtom paragraphs, picture
-      // shapes as media spans at shape position (FOPT pib → BLIP
-      // store), decoy metadata skipped, encrypted decks dropped whole.
-      // media_ref reduced to its path-independent tail as in ex_pptx.
-      // Oracle: PptGen ground truth (records assembled by hand).
-      import s.implicits._
-      val tmp = scratchDir("graft-ppt")
-      graft.gen.PptGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_doc" -> ((s, dir) => {
-      // legacy binary Office ingestion, driver-visible: Word 97–2003
-      // .doc files (CFB/OLE2 containers) decode at the ingest
-      // boundary — FAT/miniFAT stream walk, FIB + piece-table
-      // reassembly across mixed cp1252/UTF-16 pieces, field codes
-      // dropped with results kept, cell marks split, encrypted
-      // documents dropped whole, footnote CPs excluded, 0x01 picture
-      // anchors as media spans at anchor position (Data-stream BLIP
-      // pairing). media_ref reduced to its path-independent tail as
-      // in ex_pptx. Oracle: DocGen ground truth (the generator writes
-      // real containers by hand and its expected rows are the
-      // paragraph strings it chose — the parser never sees them).
-      import s.implicits._
-      val tmp = scratchDir("graft-doc")
-      graft.gen.DocGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_docx" -> ((s, dir) => {
-      // WordprocessingML ingestion with TABLES, driver-visible:
-      // genuine .docx packages through the production binaryFile scan
-      // → RawFiles classification → Extractor — paragraphs as verbatim
-      // "text" spans, each w:tbl as ONE span holding the engine's TSV
-      // table vocabulary (ragged rows padded, multi-paragraph cells
-      // space-joined, nested tables flattened into their host cell,
-      // whitespace-only grids silent), blips as media spans AT TAG
-      // POSITION (before the grid they sit in — it materializes at
-      // </w:tbl>). media_ref reduced to its path-independent tail as
-      // in ex_doc. Oracle: DocxGen ground truth (the generator commits
-      // to cell matrices and paragraph strings first, then renders the
-      // XML the scanner sees).
-      import s.implicits._
-      val tmp = scratchDir("graft-docx")
-      graft.gen.DocxGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_charset" -> ((s, dir) => {
-      // legacy-charset ingestion, driver-visible AT THE INGEST
-      // BOUNDARY: files in windows-1252 / shift_jis / gb18030 / koi8-r
-      // / windows-1251 / big5 / euc-kr / UTF-16-BOM / undeclared
-      // legacy bytes decode through the CharsetSniff WHATWG chain
-      // (BOM > transport > meta prescan > UTF-8 validity >
-      // windows-1252). The dump is span-level (pre-HtmlExtractor) —
-      // the contract under test is byte→Unicode, not boilerplate.
-      // Oracle: CharsetGen ground truth (the exact strings the
-      // generator encoded).
-      import s.implicits._
-      val tmp = scratchDir("graft-charset")
-      graft.gen.CharsetGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => d.spans.map(sp =>
-          (d.doc_id, sp.kind, sp.text, sp.offset)))
-        .toDF("doc_id", "kind", "text", "ord")
-        .orderBy("doc_id", "ord")
-    }),
-    "q_table_tsv_pptx" -> ((s, dir) => {
-      // DrawingML slide tables land in the same TSV vocabulary as the
-      // positional-PDF / markdown / HTML / XLSX table family: the pptx
-      // front end emits each a:tbl as ONE tab/newline-joined text
-      // block — recovered here from genuine .pptx decks through the
-      // production ingest + extraction path. Oracle: generator truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-pptxtsv")
-      (0 until 24).foreach { k =>
-        val i = 3 * k // every third deck carries a table slide
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, graft.gen.PptxGen.fileName(i)),
-          graft.gen.PptxGen.fileBytes(i)): Unit
-      }
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .where(col("text").contains("\t"))
-        .select(col("doc_id"), col("text").as("tsv"))
-        .orderBy("doc_id")
-    }),
-    "q_table_tsv_xlsx" -> ((s, dir) => {
-      // the spreadsheet quarter of the table family: genuine .xlsx
-      // workbooks through the production binaryFile scan → RawFiles
-      // classification → Extractor — each non-empty worksheet's used
-      // range enters as one "text" span holding its TSV (shared/inline/
-      // rich strings, lexical-form numerics, cached formula strings,
-      // booleans, holes and gap rows as empty cells/lines, absent sheet
-      // parts skipped). Oracle: generator ground truth (XlsxGen).
-      import s.implicits._
-      val tmp = scratchDir("graft-xlsxtsv")
-      graft.gen.XlsxGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("order").as("ord"), col("text").as("tsv"))
-        .orderBy("doc_id", "ord")
-    }),
-    "q_table_tsv_xls" -> ((s, dir) => {
-      // the legacy-binary quarter of the spreadsheet family: genuine
-      // BIFF8 .xls workbooks (CFB containers) through the production
-      // binaryFile scan → RawFiles CFB routing → Extractor — each
-      // non-empty worksheet's used range enters as one "text" span
-      // holding its TSV (SST incl. CONTINUE-spilled strings, RK/
-      // NUMBER/MULRK numerics, inline labels, booleans, cached
-      // formula results; chart and empty sheets vanish). Oracle:
-      // generator ground truth (XlsGen hand-assembles every record).
-      import s.implicits._
-      val tmp = scratchDir("graft-xlstsv")
-      graft.gen.XlsGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("order").as("ord"), col("text").as("tsv"))
-        .orderBy("doc_id", "ord")
-    }),
-    "q_table_tsv_csv" -> ((s, dir) => {
-      // the plain-data member of the table family: .csv/.tsv files
-      // land in the one TSV vocabulary — delimiter sniffed for .csv
-      // (comma / European semicolon / tab / pipe), RFC 4180 quoting
-      // (embedded delimiters, "" escapes, quoted newlines), cells
-      // normalized, ragged rows padded, BOM+CRLF tolerated, blank
-      // files yielding nothing. Oracle: CsvGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-csvtsv")
-      graft.gen.CsvGen.write(tmp, 24)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("order").as("ord"),
-          col("text").as("tsv"))
-        .orderBy("doc_id", "ord")
-    }),
-    "ex_pdf_attach" -> ((s, dir) => {
-      // PDF embedded files, driver-visible (ISO 32000 §7.11.4): the
-      // catalog /EmbeddedFiles name tree (incl. interior /Kids nodes)
-      // and /FileAttachment annotations fan out one InputDoc per
-      // attachment (`<file>#a<idx>:<name>`), each routed by its own
-      // suffix through the matching front end — a .md attachment
-      // yields markdown blocks, a .pdf attachment its page text (one
-      // fan-out level). Filespecs reachable both ways fan out ONCE;
-      // name-less filespecs and unsupported suffixes drop; /UF beats
-      // /F (UTF-16BE decoded); /EF streams run the filter chain
-      // (FlateDecode pinned). Oracle: AttachGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-pdfatt")
-      graft.gen.AttachGen.write(tmp, 16)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "q_xls_pictures" -> ((s, dir) => {
-      // the legacy-spreadsheet half of the media-by-reference
-      // contract: sheet pictures live behind the workbook-global
-      // MsoDrawingGroup BLIP store (FBSEs, CONTINUE-spilled) and the
-      // per-sheet MsoDrawing FOPT `pib` properties (DgContainer split
-      // across records with OBJ interleaved — how Excel writes
-      // shapes); each resolvable pib emits a media span after its
-      // sheet's TSV, ghosts stay silent. Oracle: XlsGen ground truth.
-      import s.implicits._
-      val tmp = scratchDir("graft-xlspic")
-      graft.gen.XlsGen.writePictures(tmp, 12)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("text"),
-          element_at(split(col("media_ref"), "/"), -1).as("media_ref"),
-          col("order").as("ord"))
-        .orderBy("doc_id", "ord")
-    }),
-    "q_table_tsv_doc" -> ((s, dir) => {
-      // the legacy-Word quarter of the table family: binary .doc grids
-      // resolve through the PAPX layer (PlcBtePapx → PAPX FKP →
-      // sprmPFInTable/sprmPFTtp tell a CELL mark from a ROW mark —
-      // both are the 0x07 character) and fold to ONE TSV span per
-      // table in the same vocabulary as the PDF/md/HTML/XLSX/PPTX/
-      // RTF/ODT/XLS paths; multi-paragraph cells space-join, empty
-      // cells keep grid shape. Genuine containers through the
-      // production scan; oracle: generator ground truth (DocGen
-      // hand-builds the FKP pages).
-      import s.implicits._
-      val tmp = scratchDir("graft-doctsv")
-      graft.gen.DocGen.writeTables(tmp, 12)
-      graft.sources.RawFiles.read(s, tmp)
-        .flatMap(d => Extractor.extractRows(d))
-        .toDF()
-        .select(col("doc_id"), col("order").as("ord"), col("text"))
-        .orderBy("doc_id", "ord")
-    }),
-    "q_pdf_formfields" -> ((s, dir) => {
-      // filled-form recovery: AcroForm field values never enter content
-      // streams (they render via appearance XObjects), so the layout
-      // walk is blind to them — this surfaces (qualified name, type,
-      // value, display-mapped widget rect) per field. FormGen fixtures:
-      // merged widgets, /FT+/V inheritance through a field tree,
-      // checkbox state names, multi-select choice arrays, UTF-16BE hex
-      // values, blank fields, /Sig decoys, /Rotate 90 thirds,
-      // form-less quarters. Oracle: generator ground truth with the
-      // independent hand-derived rotation mapping.
-      import s.implicits._
-      val tmp = scratchDir("graft-forms")
-      graft.gen.FormGen.write(tmp, 36)
-      s.read.format("binaryFile").load(tmp)
-        .select(col("path"), col("content"))
-        .flatMap { r =>
-          val path = r.getString(0)
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          graft.extract.RealPdf.formFields(r.getAs[Array[Byte]]("content"))
-            .map(ff => (name, ff.pos, ff.page, ff.name, ff.ftype,
-              ff.value, ff.x0, ff.y0, ff.x1, ff.y1))
-        }
-        .toDF("doc_id", "pos", "page", "name", "ftype", "value",
-          "x0", "y0", "x1", "y1")
-        .orderBy("doc_id", "pos")
     }),
     "q_lm_score" -> ((s, dir) => {
       // CCNet-style LM quality gate: Stupid-Backoff bigram model
@@ -1655,7 +1221,7 @@ object SparkEntry {
         Multimodal.decodeStage(s, Multimodal.fakeMediaTable(s, n, 42L)),
         stepMs = 5000L).orderBy("media_ref", "sample_ms")
     })
-  )
+  ) ++ genRows.map(r => r.name -> ((s: SparkSession, _: String) => r.query(s)))
 
   // ---------- expected tables (independent-implementation oracles) ----------
 
@@ -1675,7 +1241,8 @@ object SparkEntry {
     * pairwise. The ex_* expected extraction runs distributed (spark.range
     * + the single-threaded per-doc oracle), never on the driver.
     */
-  def expected: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def expected: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "ex_spans" -> ((s, dir) => {
       import s.implicits._
       val nDocs = t(s, dir, "documents").count() * 4
@@ -1861,25 +1428,6 @@ object SparkEntry {
           .map(ms => (m.media_ref, ms))
       }.toDF("media_ref", "sample_ms")
     }),
-    "ex_realpdf" -> ((s, dir) => {
-      import s.implicits._
-      // generator ground truth: what makePdf wrote — ExtractionSpec
-      // emits one span per page, every reading-order line newline-
-      // terminated (pdfminer get_text() semantics)
-      (0 until 60).flatMap { i =>
-        graft.tools.RealPdfBench.pagesOf(i.toLong, i % 7).zipWithIndex
-          .map { case (lines, k) =>
-            (f"doc_$i%04d.pdf", k, lines.map(_ + "\n").mkString) }
-      }.toDF("doc_id", "ord", "text")
-    }),
-    "ex_mixed" -> ((s, dir) => {
-      // generator ground truth — what MixedGen wrote (page lines, kept
-      // HTML blocks, image paint order), independent of every parser
-      import s.implicits._
-      graft.gen.MixedGen.expected(48)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
     "sim_sq8_topk" -> ((s, dir) => {
       // independent plain SQ8 over the (small) embeddings dim table
       import s.implicits._
@@ -1934,267 +1482,6 @@ object SparkEntry {
       graft.gen.TableGen.expectedPdf(18)
         .toDF("doc_id", "page", "table_id", "row", "col", "x0", "y0",
           "x1", "y1", "text", "n_rows", "n_cols")
-    }),
-    "q_pdf_links" -> ((s, dir) => {
-      // generator ground truth: the URIs/domains LinkGen wrote, rects
-      // through its own hand-derived 90° mapping
-      import s.implicits._
-      graft.gen.LinkGen.expected(36)
-        .map(g => (g.doc_id, g.page, g.uri, g.domain,
-          g.x0, g.y0, g.x1, g.y1))
-        .toDF("doc_id", "page", "uri", "domain", "x0", "y0", "x1", "y1")
-    }),
-    "q_pdf_outline" -> ((s, dir) => {
-      // generator ground truth: the preorder TOC LinkGen wrote
-      import s.implicits._
-      graft.gen.LinkGen.expectedOutline(36)
-        .map(g => (g.doc_id, g.pos, g.depth, g.title, g.page))
-        .toDF("doc_id", "pos", "depth", "title", "page")
-    }),
-    "ex_epub" -> ((s, dir) => {
-      // generator ground truth — what EpubGen wrote (spine-ordered kept
-      // blocks + tag-position images), independent of every parser
-      import s.implicits._
-      graft.gen.EpubGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "q_table_tsv_html" -> ((s, dir) => {
-      // generator ground truth: the tables HtmlTableGen wrote
-      import s.implicits._
-      graft.gen.HtmlTableGen.expected(30)
-        .map(g => (g.doc_id, g.table_id, g.n_rows, g.n_cols, g.tsv))
-        .toDF("doc_id", "table_id", "n_rows", "n_cols", "tsv")
-    }),
-    "q_table_tsv_md" -> ((s, dir) => {
-      // generator ground truth: the pipe-table TSV each md doc carries
-      import s.implicits._
-      (0 until 24).map { k =>
-        val i = 22 * k + 9
-        (graft.gen.MixedGen.fileName(i), graft.gen.MixedGen.mdTableTsv(i))
-      }.toDF("doc_id", "tsv")
-    }),
-    "ex_pptx" -> ((s, dir) => {
-      // generator ground truth — what PptxGen wrote (slide-ordered
-      // paragraphs + tag-position pictures), independent of every parser
-      import s.implicits._
-      graft.gen.PptxGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "q_table_tsv_pptx" -> ((s, dir) => {
-      // generator ground truth: the a:tbl TSV each table deck carries
-      import s.implicits._
-      (0 until 24).map { k =>
-        val i = 3 * k
-        (graft.gen.PptxGen.fileName(i), graft.gen.PptxGen.tableTsv(i))
-      }.toDF("doc_id", "tsv")
-    }),
-    "ex_rtf" -> ((s, dir) => {
-      // generator ground truth — what RtfGen wrote (paragraphs, table
-      // TSVs, pict refs), independent of every parser
-      import s.implicits._
-      graft.gen.RtfGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_warc" -> ((s, dir) => {
-      // generator ground truth — what WarcGen wrote into each segment
-      // (kept html blocks, pdf page text, de-chunked/WET text, media
-      // refs), independent of every parser
-      import s.implicits._
-      graft.gen.WarcGen.expected(21)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_archive" -> ((s, dir) => {
-      // generator ground truth — what ArchiveGen packed into each
-      // archive (kept html blocks, pdf page text, note/deep text,
-      // media refs), independent of every parser
-      import s.implicits._
-      graft.gen.ArchiveGen.expected(18)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_jsonl" -> ((s, dir) => {
-      // generator ground truth — the retained lines JsonlGen wrote
-      // with their physical line numbers and id conventions,
-      // independent of the parser
-      import s.implicits._
-      graft.gen.JsonlGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.ord))
-        .toDF("doc_id", "kind", "text", "ord")
-    }),
-    "ex_subs" -> ((s, dir) => {
-      // generator ground truth — the cue texts SubGen chose before
-      // assembling each file, independent of the cue machine
-      import s.implicits._
-      graft.gen.SubGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.ord))
-        .toDF("doc_id", "kind", "text", "ord")
-    }),
-    "ex_xml" -> ((s, dir) => {
-      // generator ground truth — the block texts XmlGen chose before
-      // assembling each file, independent of the scanner
-      import s.implicits._
-      graft.gen.XmlGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.ord))
-        .toDF("doc_id", "kind", "text", "ord")
-    }),
-    "ex_ipynb" -> ((s, dir) => {
-      // generator ground truth — the cell contents NbGen chose before
-      // hand-assembling each notebook's JSON, independent of the parser
-      import s.implicits._
-      graft.gen.NbGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_eml" -> ((s, dir) => {
-      // generator ground truth — subjects, decoded bodies, media part
-      // refs and attachment-doc spans EmlGen assembled by hand
-      // (boundaries, base64/qp, encoded words written by the
-      // generator, never the parser)
-      import s.implicits._
-      graft.gen.EmlGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_odt" -> ((s, dir) => {
-      // generator ground truth — the paragraphs, TSV grids and media
-      // refs OdtGen assembled into each package by hand, independent
-      // of every parser
-      import s.implicits._
-      graft.gen.OdtGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "dd_cross_format" -> ((s, dir) => {
-      // ground truth by construction: the eight renditions of each
-      // article cluster (rep = lexicographic min), solos stay alone
-      import s.implicits._
-      graft.gen.CrossGen.expected(12, 5)
-        .toDF("doc_id", "cluster_size", "cluster_rep")
-    }),
-    "ex_feed" -> ((s, dir) => {
-      // generator ground truth — per-entry rows with the feed-file
-      // identity, independent of the parser
-      import s.implicits._
-      graft.gen.FeedGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_mbox" -> ((s, dir) => {
-      // generator ground truth — per-message rows with the spool
-      // identity substituted, independent of the parser
-      import s.implicits._
-      graft.gen.EmlGen.expectedMbox(4)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_tex" -> ((s, dir) => {
-      // generator ground truth — the detex'd blocks, TSV grids and
-      // figure refs TexGen wrote (markup assembled by hand),
-      // independent of the parser
-      import s.implicits._
-      graft.gen.TexGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_charset" -> ((s, dir) => {
-      // generator ground truth — the exact Unicode strings CharsetGen
-      // ENCODED into each legacy-charset file, independent of the
-      // sniffing decoder
-      import s.implicits._
-      graft.gen.CharsetGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.ord))
-        .toDF("doc_id", "kind", "text", "ord")
-    }),
-    "ex_doc" -> ((s, dir) => {
-      // generator ground truth — the paragraph blocks + anchor-
-      // position picture refs DocGen chose before assembling each CFB
-      // container and piece table by hand, independent of the reader
-      import s.implicits._
-      graft.gen.DocGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_docx" -> ((s, dir) => {
-      // generator ground truth — the paragraph strings, table cell
-      // matrices (TSV'd by the generator's own padding), and media
-      // tails DocxGen chose BEFORE rendering any XML
-      import s.implicits._
-      graft.gen.DocxGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "ex_ppt" -> ((s, dir) => {
-      // generator ground truth — the slide blocks + picture refs
-      // PptGen chose before assembling each record tree by hand,
-      // independent of the reader
-      import s.implicits._
-      graft.gen.PptGen.expected(24)
-        .map(r => (r.doc_id, r.kind, r.text, r.media_ref, r.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "q_table_tsv_xlsx" -> ((s, dir) => {
-      // generator ground truth: the per-sheet used-range TSVs XlsxGen
-      // wrote, in workbook order — independent of every parser
-      import s.implicits._
-      (0 until 24).flatMap { i =>
-        graft.gen.XlsxGen.expectedSheets(i).zipWithIndex.map {
-          case ((_, tsv), k) => (graft.gen.XlsxGen.fileName(i), k, tsv)
-        }
-      }.toDF("doc_id", "ord", "tsv")
-    }),
-    "q_table_tsv_xls" -> ((s, dir) => {
-      // generator ground truth: the per-sheet used-range TSVs XlsGen
-      // committed to before assembling each BIFF record by hand —
-      // independent of every parser
-      import s.implicits._
-      graft.gen.XlsGen.expected(24)
-        .map(g => (g.doc_id, g.ord, g.tsv))
-        .toDF("doc_id", "ord", "tsv")
-    }),
-    "q_table_tsv_csv" -> ((s, dir) => {
-      // generator ground truth: the hand-written grids CsvGen chose
-      import s.implicits._
-      graft.gen.CsvGen.expected(24)
-        .map(g => (g.doc_id, g.ord, g.tsv))
-        .toDF("doc_id", "ord", "tsv")
-    }),
-    "ex_pdf_attach" -> ((s, dir) => {
-      // generator ground truth: the page lines + attachment contents
-      // AttachGen chose before assembling each PDF by hand
-      import s.implicits._
-      graft.gen.AttachGen.expected(16)
-        .map(g => (g.doc_id, g.kind, g.text, g.ord))
-        .toDF("doc_id", "kind", "text", "ord")
-    }),
-    "q_xls_pictures" -> ((s, dir) => {
-      // generator ground truth: the TSV + picture rows XlsGen chose
-      // before assembling the Escher store by hand
-      import s.implicits._
-      graft.gen.XlsGen.expectedPictures(12)
-        .map(g => (g.doc_id, g.kind, g.text, g.media_ref, g.ord))
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
-    }),
-    "q_table_tsv_doc" -> ((s, dir) => {
-      // generator ground truth: the paragraph + TSV rows DocGen chose
-      // before hand-building each PAPX FKP — independent of the reader
-      import s.implicits._
-      graft.gen.DocGen.expectedTables(12)
-        .map(g => (g.doc_id, g.ord, g.text))
-        .toDF("doc_id", "ord", "text")
-    }),
-    "q_pdf_formfields" -> ((s, dir) => {
-      // generator ground truth: the form fields FormGen wrote, rects
-      // through its own hand-derived 90° mapping
-      import s.implicits._
-      graft.gen.FormGen.expected(36)
-        .map(g => (g.doc_id, g.pos, g.page, g.name, g.ftype, g.value,
-          g.x0, g.y0, g.x1, g.y1))
-        .toDF("doc_id", "pos", "page", "name", "ftype", "value",
-          "x0", "y0", "x1", "y1")
     }),
     "q_url_canonical" -> ((s, dir) => {
       // independent char-walk canonicalization + plain-Scala
@@ -2259,7 +1546,7 @@ object SparkEntry {
               .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue())
         }.sortBy(_._1).toDF("lang", "n", "avg_chars")
     })
-  )
+  ) ++ genRows.map(r => r.name -> ((s: SparkSession, _: String) => r.truth(s)))
 
   private def collectDocs(s: SparkSession, dir: String, maxId: Long)
       : Seq[(Long, String)] =

@@ -163,29 +163,26 @@ object AttachGen {
         java.nio.file.Paths.get(dir, fileName(i)), fileBytes(i)): Unit
     }
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         ord: Int)
-
   /** Hand-written ground truth per variant: the main document's page
     * row plus one doc per fanned-out attachment.
     */
   def expectedDoc(i: Int): Seq[GtRow] = {
     val f = fileName(i)
-    val main = Seq(GtRow(f, "pdf", joined(pageLines(i)), 0))
+    val main = Seq(GtRow(f, "pdf", joined(pageLines(i)), null, 0))
     val att: Seq[GtRow] = (i % 4) match {
       case 0 => Seq(
-        GtRow(s"$f#a0:notes_$i.txt", "text", noteTxt(i), 0),
-        GtRow(s"$f#a1:readme_$i.md", "text", s"Readme $i", 0),
+        GtRow(s"$f#a0:notes_$i.txt", "text", noteTxt(i), null, 0),
+        GtRow(s"$f#a1:readme_$i.md", "text", s"Readme $i", null, 0),
         GtRow(s"$f#a1:readme_$i.md", "text",
-          s"Body para m${(i * 103) % 883} closes.", 1))
+          s"Body para m${(i * 103) % 883} closes.", null, 1))
       case 1 => Seq(
         // idx 1 is the .xyz file: discovered, but dropped at routing
-        GtRow(s"$f#a0:shared_$i.txt", "text", sharedTxt(i), 0),
-        GtRow(s"$f#a2:memo_$i.txt", "text", memoTxt(i), 0))
+        GtRow(s"$f#a0:shared_$i.txt", "text", sharedTxt(i), null, 0),
+        GtRow(s"$f#a2:memo_$i.txt", "text", memoTxt(i), null, 0))
       case 2 => Seq(
-        GtRow(s"$f#a0:unicodé_$i.txt", "text", plainTxt(i), 0))
+        GtRow(s"$f#a0:unicodé_$i.txt", "text", plainTxt(i), null, 0))
       case _ => Seq(
-        GtRow(s"$f#a0:inner_$i.pdf", "pdf", innerLine(i) + "\n", 0))
+        GtRow(s"$f#a0:inner_$i.pdf", "pdf", innerLine(i) + "\n", null, 0))
     }
     main ++ att
   }

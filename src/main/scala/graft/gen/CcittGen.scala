@@ -4,7 +4,7 @@ import graft.extract.Ccitt
 import scala.collection.mutable.ArrayBuffer
 
 /** Test-side ITU-T T.6 Group-4 ENCODER + scanned-style PDF fixture
-  * maker — the encode half of the round-trip discipline RealPdfBench
+  * maker — the encode half of the round-trip discipline PdfGen
   * already applies to RC4/AES (one side encrypts/encodes, the production
   * side decodes; changing either alone breaks the spec round-trip).
   * The modified-Huffman CODE TABLES are shared data with

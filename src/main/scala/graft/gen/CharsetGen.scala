@@ -32,8 +32,6 @@ import java.nio.file.{Files, Paths}
   */
 object CharsetGen {
 
-  final case class Row(doc_id: String, kind: String, text: String, ord: Int)
-
   private def cs(n: String): Charset = Charset.forName(n)
 
   /** (file suffix, declared-charset html wrapper or raw, encode charset,
@@ -111,11 +109,11 @@ object CharsetGen {
     * the EXACT Unicode string this generator encoded (BOM dropped for
     * variant 5 — the decode contract), kind html/text by suffix.
     */
-  def expected(n: Int): Seq[Row] =
+  def expected(n: Int): Seq[GtRow] =
     (0 until n).map { i =>
       val (suffix, content, _) = variant(i)
       val kind = if (suffix == "html") "html" else "text"
       val text = if (i % 12 == 5) content.substring(1) else content
-      Row(fileName(i), kind, text, 0)
+      GtRow(fileName(i), kind, text, null, 0)
     }
 }

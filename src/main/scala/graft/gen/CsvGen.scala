@@ -19,8 +19,6 @@ package graft.gen
   */
 object CsvGen {
 
-  final case class GtRow(doc_id: String, ord: Int, tsv: String)
-
   def fileName(i: Int): String = (i % 6) match {
     case 3 => f"data_$i%04d.tsv"
     case _ => f"data_$i%04d.csv"
@@ -52,7 +50,7 @@ object CsvGen {
     }
 
   /** Hand-written expected TSV per variant (variant 5 yields no rows). */
-  def expectedDoc(i: Int): Seq[GtRow] = {
+  def expectedDoc(i: Int): Seq[TsvRow] = {
     val f = fileName(i)
     val tsv: Option[String] = (i % 6) match {
       case 0 => Some(
@@ -67,8 +65,8 @@ object CsvGen {
         s"a\tb\tc\t\nshort $i\t\t\t\nlonger\t${i * 5}\ttail\textra")
       case _ => None
     }
-    tsv.map(t => GtRow(f, 0, t)).toSeq
+    tsv.map(t => TsvRow(f, 0, t)).toSeq
   }
 
-  def expected(n: Int): Seq[GtRow] = (0 until n).flatMap(expectedDoc)
+  def expected(n: Int): Seq[TsvRow] = (0 until n).flatMap(expectedDoc)
 }

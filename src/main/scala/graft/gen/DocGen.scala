@@ -42,9 +42,6 @@ package graft.gen
   */
 object DocGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   // ---------------------------------------------------------------
   // CFB writer (independent of graft.extract.Cfb)
   // ---------------------------------------------------------------

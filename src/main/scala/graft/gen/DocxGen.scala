@@ -19,9 +19,6 @@ package graft.gen
   */
 object DocxGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   def fileName(i: Int): String = f"report_$i%04d.docx"
 
   // ---------- ground truth (chosen before any XML exists) ----------

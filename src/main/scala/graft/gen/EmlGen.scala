@@ -28,9 +28,6 @@ import java.nio.file.{Files, Paths}
   */
 object EmlGen {
 
-  final case class Row(doc_id: String, kind: String, text: String,
-                       media_ref: String, ord: Int)
-
   private val CRLF = "\r\n"
   private def cs(n: String): Charset = Charset.forName(n)
 
@@ -186,7 +183,7 @@ object EmlGen {
     * media_ref TAIL — the `<file>#p…` form after path reduction, null
     * for text), in span order, main doc then attachment docs.
     */
-  def expected(n: Int): Seq[Row] = (0 until n).flatMap(expectedDoc)
+  def expected(n: Int): Seq[GtRow] = (0 until n).flatMap(expectedDoc)
 
   /** One mbox spool holding messages `k*per until (k+1)*per`, framed
     * mboxo-style by THIS generator (separator lines + blank-line
@@ -217,7 +214,7 @@ object EmlGen {
     * with its `<spool>#m<idx>` identity substituted (doc ids AND media
     * ref tails).
     */
-  def expectedMbox(nSpools: Int, per: Int = 6): Seq[Row] =
+  def expectedMbox(nSpools: Int, per: Int = 6): Seq[GtRow] =
     (0 until nSpools).flatMap { k =>
       (0 until per).flatMap { j =>
         val i = k * per + j
@@ -230,58 +227,58 @@ object EmlGen {
     }
 
   /** Ground truth rows for ONE message (main doc + attachment docs). */
-  def expectedDoc(i: Int): Seq[Row] = {
+  def expectedDoc(i: Int): Seq[GtRow] = {
     val f = fileName(i)
-    def subj(s: String) = Row(f, "text", "Subject: " + s, null, 0)
+    def subj(s: String) = GtRow(f, "text", "Subject: " + s, null, 0)
     (i % 12) match {
       case 0 => Seq(subj(s"Status update $i"),
-        Row(f, "text", plainBody(i), null, 1))
+        GtRow(f, "text", plainBody(i), null, 1))
       case 1 => Seq(subj(s"Budget $i"),
-        Row(f, "text",
+        GtRow(f, "text",
           s"Café budget — €$i total, détails attachés plus tard.",
           null, 1))
       case 2 => Seq(subj(s"Chinese memo $i"),
-        Row(f, "text",
+        GtRow(f, "text",
           s"中文邮件正文 number $i with multibyte payload.",
           null, 1))
       case 3 => Seq(subj(s"Alternative $i"),
-        Row(f, "text", plainBody(i), null, 1))
+        GtRow(f, "text", plainBody(i), null, 1))
       case 4 => Seq(subj(s"Mixed $i"),
-        Row(f, "text", plainBody(i), null, 1),
-        Row(f, "image", null, s"$f#p1:photo$i.png", 2))
+        GtRow(f, "text", plainBody(i), null, 1),
+        GtRow(f, "image", null, s"$f#p1:photo$i.png", 2))
       case 5 => Seq(subj(s"Related $i"),
-        Row(f, "text", htmlPara(i), null, 1),
-        Row(f, "image", null, s"$f#p1:part.jpeg", 2),
-        Row(f, "text",
+        GtRow(f, "text", htmlPara(i), null, 1),
+        GtRow(f, "image", null, s"$f#p1:part.jpeg", 2),
+        GtRow(f, "text",
           s"Second paragraph also long enough to clear the boilerplate gate $i.",
           null, 3))
       case 6 => Seq(subj(s"約束状態 $i"),
-        Row(f, "text", s"UTF-8 eight bit body ✓ number $i.", null, 1))
+        GtRow(f, "text", s"UTF-8 eight bit body ✓ number $i.", null, 1))
       case 7 => Seq(subj(s"Résumé du projet $i"),
-        Row(f, "text",
+        GtRow(f, "text",
           s"Corps du message numéro $i, accents décodés.",
           null, 1))
       case 8 =>
         Seq(subj(s"Docs $i"),
-          Row(f, "text", plainBody(i), null, 1),
-          Row(s"$f#a1:notes$i.md", "text", s"Notes $i", null, 0),
-          Row(s"$f#a1:notes$i.md", "text",
+          GtRow(f, "text", plainBody(i), null, 1),
+          GtRow(s"$f#a1:notes$i.md", "text", s"Notes $i", null, 0),
+          GtRow(s"$f#a1:notes$i.md", "text",
             "A markdown attachment paragraph with enough substance to read naturally.",
             null, 1))
       case 9 => Seq(subj(s"SJIS $i"),
-        Row(f, "text",
+        GtRow(f, "text",
           s"日本語の段落です。 Shift JIS body paragraph number $i here.",
           null, 1))
       case 10 =>
         Seq(subj(s"Attachments $i"),
-          Row(f, "text", plainBody(i), null, 1),
-          Row(f, "audio", null, s"$f#p2:clip$i.mp3", 2),
-          Row(s"$f#a1:readme$i.txt", "text",
+          GtRow(f, "text", plainBody(i), null, 1),
+          GtRow(f, "audio", null, s"$f#p2:clip$i.mp3", 2),
+          GtRow(s"$f#a1:readme$i.txt", "text",
             s"Attached plain document body $i, decoded through the text path.",
             null, 0))
       case _ => Seq(subj(s"Nested $i"),
-        Row(f, "text", plainBody(i), null, 1),
-        Row(f, "image", null, s"$f#p1:nested$i.jpg", 2))
+        GtRow(f, "text", plainBody(i), null, 1),
+        GtRow(f, "image", null, s"$f#p1:nested$i.jpg", 2))
     }
   }
 }

@@ -16,9 +16,6 @@ package graft.gen
   */
 object EpubGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   def fileName(i: Int): String = f"book_$i%04d.epub"
 
   /** Every third book nests chapters under `text/` with the image one

@@ -21,9 +21,6 @@ import java.nio.file.{Files, Paths}
   */
 object FeedGen {
 
-  final case class Row(doc_id: String, kind: String, text: String,
-                       media_ref: String, ord: Int)
-
   def fileName(i: Int): String = {
     val sfx = (i % 6) match {
       case 1 | 4 => "xml"
@@ -106,49 +103,49 @@ object FeedGen {
     }
   }
 
-  def expected(n: Int): Seq[Row] = (0 until n).flatMap(expectedDoc)
+  def expected(n: Int): Seq[GtRow] = (0 until n).flatMap(expectedDoc)
 
-  def expectedDoc(i: Int): Seq[Row] = {
+  def expectedDoc(i: Int): Seq[GtRow] = {
     val f = fileName(i)
     (i % 6) match {
       case 0 => Seq(
-        Row(s"$f#e0:urn:item:$i:a", "text", s"Story A $i", null, 0),
-        Row(s"$f#e0:urn:item:$i:a", "text", para1(i), null, 1),
-        Row(s"$f#e1:urn:item:$i:b", "text", s"Story B $i", null, 0),
-        Row(s"$f#e1:urn:item:$i:b", "text", para2(i), null, 1))
+        GtRow(s"$f#e0:urn:item:$i:a", "text", s"Story A $i", null, 0),
+        GtRow(s"$f#e0:urn:item:$i:a", "text", para1(i), null, 1),
+        GtRow(s"$f#e1:urn:item:$i:b", "text", s"Story B $i", null, 0),
+        GtRow(s"$f#e1:urn:item:$i:b", "text", para2(i), null, 1))
       case 1 =>
         val d = s"$f#e0:urn:rich:$i"
         Seq(
-          Row(d, "text", s"Rich story $i", null, 0),
-          Row(d, "text", para1(i), null, 1),
-          Row(d, "image", null, s"https://cdn.example/art$i.jpg", 2),
-          Row(d, "text", para2(i), null, 3))
+          GtRow(d, "text", s"Rich story $i", null, 0),
+          GtRow(d, "text", para1(i), null, 1),
+          GtRow(d, "image", null, s"https://cdn.example/art$i.jpg", 2),
+          GtRow(d, "text", para2(i), null, 3))
       case 2 =>
         val d = s"$f#e0:urn:ep:$i"
         Seq(
-          Row(d, "text", s"Episode $i", null, 0),
+          GtRow(d, "text", s"Episode $i", null, 0),
           // the escaped-html body has no gate-clearing block — the
           // stripped-text fallback keeps it
-          Row(d, "text", s"short note $i", null, 1),
-          Row(d, "audio", null, s"https://cdn.example/ep$i.mp3", 2))
+          GtRow(d, "text", s"short note $i", null, 1),
+          GtRow(d, "audio", null, s"https://cdn.example/ep$i.mp3", 2))
       case 3 =>
         val d = s"$f#e0:tag:example.org,2026:$i"
         Seq(
-          Row(d, "text", s"Atom note $i", null, 0),
-          Row(d, "text", para1(i), null, 1))
+          GtRow(d, "text", s"Atom note $i", null, 0),
+          GtRow(d, "text", para1(i), null, 1))
       case 4 =>
         val d = s"$f#e0:tag:example.org,2026:rich:$i"
         Seq(
-          Row(d, "text", s"Atom rich $i", null, 0),
-          Row(d, "text", para1(i), null, 1),
-          Row(d, "image", null, s"https://cdn.example/fig$i.png", 2),
-          Row(d, "image", null, s"https://cdn.example/full$i.png", 3))
+          GtRow(d, "text", s"Atom rich $i", null, 0),
+          GtRow(d, "text", para1(i), null, 1),
+          GtRow(d, "image", null, s"https://cdn.example/fig$i.png", 2),
+          GtRow(d, "image", null, s"https://cdn.example/full$i.png", 3))
       case _ =>
         val d = s"$f#e0:https://example.org/clip/$i"
         Seq(
-          Row(d, "text", s"Clip story $i", null, 0),
-          Row(d, "text", para1(i), null, 1),
-          Row(d, "video", null, s"https://cdn.example/clip$i.mp4", 2))
+          GtRow(d, "text", s"Clip story $i", null, 0),
+          GtRow(d, "text", para1(i), null, 1),
+          GtRow(d, "video", null, s"https://cdn.example/clip$i.mp4", 2))
     }
   }
 }

@@ -22,9 +22,6 @@ package graft.gen
   */
 object JsonlGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         ord: Int)
-
   def fileName(i: Int): String = (i % 10) match {
     case 0 => f"shard_$i%04d.jsonl"
     case 1 => f"shard_$i%04d.ndjson"
@@ -148,15 +145,15 @@ object JsonlGen {
   def expectedDoc(i: Int): Seq[GtRow] = {
     val f = fileName(i)
     (i % 10) match {
-      case 7 => Seq(GtRow(f, "text", t0(i), 0)) // the file IS the doc
+      case 7 => Seq(GtRow(f, "text", t0(i), null, 0)) // the file IS the doc
       case 8 | 9 => Seq(                        // array fan-out
-        GtRow(s"$f#r0:exp-$i-0", "text", t0(i), 0),
-        GtRow(s"$f#r4:https://example.org/$i/x", "text", t1(i), 0))
+        GtRow(s"$f#r0:exp-$i-0", "text", t0(i), null, 0),
+        GtRow(s"$f#r4:https://example.org/$i/x", "text", t1(i), null, 0))
       case _ => Seq(
-        GtRow(s"$f#L0:doc-$i-0", "text", t0(i), 0),
-        GtRow(s"$f#L1:https://example.org/$i/a", "text", t1(i), 0),
-        GtRow(s"$f#L3:${9000 + i}", "text", t3(i), 0),
-        GtRow(s"$f#L7:", "text", t7(i), 0))
+        GtRow(s"$f#L0:doc-$i-0", "text", t0(i), null, 0),
+        GtRow(s"$f#L1:https://example.org/$i/a", "text", t1(i), null, 0),
+        GtRow(s"$f#L3:${9000 + i}", "text", t3(i), null, 0),
+        GtRow(s"$f#L7:", "text", t7(i), null, 0))
     }
   }
 

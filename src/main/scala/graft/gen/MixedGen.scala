@@ -17,7 +17,7 @@ package graft.gen
   * [[graft.extract.Extractor]].
   *
   * File kinds by `i % 22`:
-  *   0 → `doc_NNNN.pdf`   Flate text-only (RealPdfBench variant 1);
+  *   0 → `doc_NNNN.pdf`   Flate text-only (PdfGen variant 1);
   *   1 → `doc_NNNN.pdf`   one page of text + two image XObjects
   *                        (raw /DeviceGray samples) painted after the
   *                        text block, then a BI…EI inline image;
@@ -114,19 +114,13 @@ package graft.gen
   *                        indexes drop ([[graft.extract.JsonlExtractor]]
   *                        `valueRecords`).
   *
-  * Text geometry matches [[graft.tools.RealPdfBench.makePdf]] (11 pt
+  * Text geometry matches [[PdfGen.makePdf]] (11 pt
   * font, x=72, leading 14 from y=760): every page's lines cluster into
   * ONE text box whose text is the newline-terminated line join —
   * pdfminer `get_text()` semantics, the same ground-truth shape
   * `ex_realpdf` pins.
   */
 object MixedGen {
-
-  /** One expected output row of `ex_mixed` (`media_ref` already reduced
-    * to its path-independent tail, see the query's `element_at`).
-    */
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
 
   def fileName(i: Int): String = (i % 22: @unchecked) match {
     case 0 | 1 | 2 => f"doc_$i%04d.pdf"
@@ -470,7 +464,7 @@ object MixedGen {
   // ---------- public surface ----------
 
   def fileBytes(i: Int): Array[Byte] = (i % 22: @unchecked) match {
-    case 0 => graft.tools.RealPdfBench.makePdf(i.toLong, 1)
+    case 0 => PdfGen.makePdf(i.toLong, 1)
     case 1 => makeImagePdf(i)
     case 2 => makeFormPdf(i)
     case 3 => makeHtml(i).getBytes("UTF-8")
@@ -524,7 +518,7 @@ object MixedGen {
     val f = fileName(i)
     (i % 22: @unchecked) match {
       case 0 =>
-        graft.tools.RealPdfBench.pagesOf(i.toLong, 1).zipWithIndex.map {
+        PdfGen.pagesOf(i.toLong, 1).zipWithIndex.map {
           case (ls, k) => GtRow(f, "pdf", joined(ls), null, k)
         }
       case 1 => Seq(

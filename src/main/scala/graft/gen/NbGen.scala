@@ -29,9 +29,6 @@ package graft.gen
   */
 object NbGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   def fileName(i: Int): String = f"nb_$i%04d.ipynb"
 
   private def esc(s: String): String =

@@ -25,9 +25,6 @@ import java.nio.file.{Files, Paths}
   */
 object OdtGen {
 
-  final case class Row(doc_id: String, kind: String, text: String,
-                       media_ref: String, ord: Int)
-
   def fileName(i: Int): String = {
     val sfx = (i % 10) match {
       case 8 => "ods"
@@ -184,12 +181,12 @@ object OdtGen {
     * TAIL, ord), in span order — what the generator put into each
     * document, independent of the parser.
     */
-  def expected(n: Int): Seq[Row] = (0 until n).flatMap(expectedDoc)
+  def expected(n: Int): Seq[GtRow] = (0 until n).flatMap(expectedDoc)
 
   /** Ground truth rows for ONE package. */
-  def expectedDoc(i: Int): Seq[Row] = {
+  def expectedDoc(i: Int): Seq[GtRow] = {
     val f = fileName(i)
-    def t(s: String, k: Int) = Row(f, "text", s, null, k)
+    def t(s: String, k: Int) = GtRow(f, "text", s, null, k)
     (i % 10) match {
       case 0 => Seq(
         t(s"Report $i overview", 0),
@@ -205,7 +202,7 @@ object OdtGen {
         t(s"Picture follows in document $i.", 0),
         // tail reduction: the span ref `<path>#Pictures/img.png` splits
         // on '/' — the DOCX `media/image1.png` convention
-        Row(f, "image", null, "img.png", 1),
+        GtRow(f, "image", null, "img.png", 1),
         t("caption-adjacent prose line", 2),
         t(s"Prose after the image for $i.", 3))
       case 4 => Seq(
@@ -216,7 +213,7 @@ object OdtGen {
         t(s"Styled runs flow into one paragraph $i.", 0),
         // media_ref already reduced to the path tail, the ex_* query
         // convention (full ref in the engine is the verbatim URL)
-        Row(f, "image", null, "ext.png", 1),
+        GtRow(f, "image", null, "ext.png", 1),
         t("external reference stays verbatim", 2))
       case 7 => Seq(
         t(s"first para second para $i\tsingle", 0))
@@ -226,7 +223,7 @@ object OdtGen {
       case _ => Seq(
         t(s"Slide title $i opens the deck.", 0),
         t(s"Bullet body line for presentation $i.", 1),
-        Row(f, "image", null, "slide.png", 2),
+        GtRow(f, "image", null, "slide.png", 2),
         t(s"Closing slide note $i.", 3))
     }
   }

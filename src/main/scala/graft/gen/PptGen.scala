@@ -22,9 +22,6 @@ package graft.gen
   */
 object PptGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   private val Utf16 = java.nio.charset.StandardCharsets.UTF_16LE
   private val Cp1252 = java.nio.charset.Charset.forName("windows-1252")
 

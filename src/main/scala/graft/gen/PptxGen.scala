@@ -20,9 +20,6 @@ package graft.gen
   */
 object PptxGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   def fileName(i: Int): String = f"deck_$i%04d.pptx"
 
   private def hasPic(i: Int): Boolean = i % 2 == 0

@@ -19,9 +19,6 @@ package graft.gen
   */
 object RtfGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
-
   def fileName(i: Int): String = f"memo_$i%04d.rtf"
 
   // (the `i % 7 == 6` arm puts pictures on MixedGen's rtf variant,

@@ -22,9 +22,6 @@ package graft.gen
   */
 object SubGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         ord: Int)
-
   def fileName(i: Int): String = (i % 6) match {
     case 0 => f"film_$i%04d.srt"
     case 1 => f"film_$i%04d.srt"
@@ -139,7 +136,7 @@ ${t4b(i)}
       case 4 => Seq(t4a(i), t4b(i))
       case _ => Nil
     }
-    cues.zipWithIndex.map { case (t, o) => GtRow(f, "text", t, o) }
+    cues.zipWithIndex.map { case (t, o) => GtRow(f, "text", t, null, o) }
   }
 
   def expected(n: Int): Seq[GtRow] = (0 until n).flatMap(expectedDoc)

@@ -21,9 +21,6 @@ import java.nio.file.{Files, Paths}
   */
 object TexGen {
 
-  final case class Row(doc_id: String, kind: String, text: String,
-                       media_ref: String, ord: Int)
-
   def fileName(i: Int): String = f"paper$i%05d_v${i % 8}.tex"
 
   private def pre(i: Int): String =
@@ -91,11 +88,11 @@ object TexGen {
   }
 
   /** Ground truth rows for ex_tex, in span order. */
-  def expected(n: Int): Seq[Row] = (0 until n).flatMap(expectedDoc)
+  def expected(n: Int): Seq[GtRow] = (0 until n).flatMap(expectedDoc)
 
-  def expectedDoc(i: Int): Seq[Row] = {
+  def expectedDoc(i: Int): Seq[GtRow] = {
     val f = fileName(i)
-    def t(s: String, k: Int) = Row(f, "text", s, null, k)
+    def t(s: String, k: Int) = GtRow(f, "text", s, null, k)
     (i % 8) match {
       case 0 => Seq(
         t(s"The Study $i", 0),
@@ -111,7 +108,7 @@ object TexGen {
         t(s"Discussion paragraph follows the table in paper $i.", 2))
       case 3 => Seq(
         t(s"Before the figure in paper $i.", 0),
-        Row(f, "image", null, s"plots/fig$i.png", 1),
+        GtRow(f, "image", null, s"plots/fig$i.png", 1),
         t(s"Training curve $i", 2),
         t(s"After the figure, analysis continues for $i.", 3))
       case 4 => Seq(

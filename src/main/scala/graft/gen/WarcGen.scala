@@ -7,7 +7,7 @@ package graft.gen
   * skipped), an HTTP 200 `text/html` response (the [[MixedGen]]
   * boilerpipe-stressor page — nav/script/footer junk, entity-bearing
   * media srcs), an HTTP 200 `application/pdf` response (a genuine
-  * [[graft.tools.RealPdfBench.makePdf]] document, dropped on every
+  * [[PdfGen.makePdf]] document, dropped on every
   * third segment so retained-record indices shift), an HTTP 404
   * (skipped — non-2xx carries no content), an HTTP 200 `text/plain`
   * with `Transfer-Encoding: chunked` (two chunks, an extension on the
@@ -24,9 +24,6 @@ package graft.gen
   * DOCX/EPUB/RTF.
   */
 object WarcGen {
-
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         media_ref: String, ord: Int)
 
   def fileName(i: Int): String =
     if (i % 2 == 1) f"crawl_$i%04d.warc.gz" else f"crawl_$i%04d.warc"
@@ -106,7 +103,7 @@ object WarcGen {
     val pdfResp = record("response", pdfUri(i),
       "application/http; msgtype=response",
       httpResponse("200 OK", Seq("Content-Type: application/pdf"),
-        graft.tools.RealPdfBench.makePdf(i.toLong, 1)))
+        PdfGen.makePdf(i.toLong, 1)))
     val notFound = record("response", s"https://example.org/$i/gone",
       "application/http; msgtype=response",
       httpResponse("404 Not Found", Seq("Content-Type: text/html"),
@@ -180,7 +177,7 @@ object WarcGen {
     }
     val pdf = if (!hasPdf(i)) Nil else {
       val id = nextId(pdfUri(i))
-      graft.tools.RealPdfBench.pagesOf(i.toLong, 1).zipWithIndex.map {
+      PdfGen.pagesOf(i.toLong, 1).zipWithIndex.map {
         case (ls, k) => GtRow(id, "pdf", MixedGen.joined(ls), null, k)
       }
     }

@@ -296,9 +296,6 @@ object XlsGen {
   private[graft] def pictureTsv(i: Int): String =
     s"Plate\tFigure $i\n${3 + i}\t"
 
-  final case class PicRow(doc_id: String, kind: String, text: String,
-                          media_ref: String, ord: Int)
-
   def writePictures(dir: String, n: Int): Unit =
     (0 until n).foreach { k =>
       java.nio.file.Files.write(
@@ -309,13 +306,13 @@ object XlsGen {
   /** Ground truth for the picture fixture: the sheet TSV then the two
     * resolvable pictures (the ghost pib stays silent).
     */
-  def expectedPictures(n: Int): Seq[PicRow] =
+  def expectedPictures(n: Int): Seq[GtRow] =
     (0 until n).flatMap { k =>
       val f = f"plates_$k%04d.xls"
       Seq(
-        PicRow(f, "text", pictureTsv(k), null, 0),
-        PicRow(f, "image", null, s"$f#pic1", 1),
-        PicRow(f, "image", null, s"$f#pic2", 2))
+        GtRow(f, "text", pictureTsv(k), null, 0),
+        GtRow(f, "image", null, s"$f#pic1", 1),
+        GtRow(f, "image", null, s"$f#pic2", 2))
     }
 
   /** A FILEPASS-protected workbook (RC4 header junk): readers must
@@ -350,11 +347,9 @@ object XlsGen {
       "Sparse" -> (s"X$i\t\t\n\t\t\n\t\t${9 + i}"))
   }
 
-  final case class GtRow(doc_id: String, ord: Int, tsv: String)
-
-  def expected(n: Int): Seq[GtRow] = (0 until n).flatMap { i =>
+  def expected(n: Int): Seq[TsvRow] = (0 until n).flatMap { i =>
     expectedSheets(i).zipWithIndex.map { case ((_, tsv), k) =>
-      GtRow(fileName(i), k, tsv)
+      TsvRow(fileName(i), k, tsv)
     }
   }
 }

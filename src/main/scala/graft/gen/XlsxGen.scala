@@ -125,4 +125,11 @@ object XlsxGen {
     Vector("Data" -> data) ++
       (if (twoSheets(i)) Vector("Extra" -> s"extra $i\t$i") else Vector.empty)
   }
+
+  /** One row per sheet TSV, in workbook order. */
+  def expected(n: Int): Seq[TsvRow] = (0 until n).flatMap { i =>
+    expectedSheets(i).zipWithIndex.map { case ((_, tsv), k) =>
+      TsvRow(fileName(i), k, tsv)
+    }
+  }
 }

@@ -27,9 +27,6 @@ import java.nio.file.{Files, Paths}
   */
 object XmlGen {
 
-  final case class GtRow(doc_id: String, kind: String, text: String,
-                         ord: Int)
-
   def fileName(i: Int): String = (i % 8) match {
     case 0 => f"catalog_$i%04d.xml"
     case 1 => f"article_$i%04d.xml"
@@ -155,7 +152,7 @@ object XmlGen {
   def expected(n: Int): Seq[GtRow] =
     (0 until n).flatMap { i =>
       expectedDoc(i).zipWithIndex.map { case ((doc, t), k) =>
-        GtRow(doc, "text", t, k)
+        GtRow(doc, "text", t, null, k)
       }
     }
 }

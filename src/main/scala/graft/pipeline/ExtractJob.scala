@@ -328,9 +328,24 @@ object ExtractJob {
   /** Read back the unified output table (all committed groups). */
   def readOutput(spark: SparkSession, outDir: String): Dataset[ExtractedRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$outDir/data")
-      .drop("group")
-      .as[ExtractedRow]
+    committedOutput(spark, outDir).drop("group").as[ExtractedRow]
+  }
+
+  /** The manifest-committed group dirs of one output root. */
+  private[graft] def committedDirs(outDir: String): Seq[String] =
+    Checkpoint.committedGroups(outDir).toSeq.sorted
+      .map(g => s"$outDir/data/group=$g")
+
+  /** The output rows of the manifest-committed groups only, with their
+    * `group` partition column: a group whose write landed but whose
+    * commit was lost stays invisible, as in [[readAllRuns]].
+    */
+  private def committedOutput(spark: SparkSession, outDir: String): DataFrame = {
+    import spark.implicits._
+    val dirs = committedDirs(outDir)
+    if (dirs.isEmpty)
+      spark.emptyDataset[ExtractedRow].toDF().withColumn("group", lit(0))
+    else spark.read.option("basePath", s"$outDir/data").parquet(dirs: _*)
   }
 
   /** The `spans` view — the correctness-invariant columns. */
@@ -363,13 +378,13 @@ object ExtractJob {
       .collect()(0).getInt(0)
   }
 
-  /** Q2 page-content query (streamlit_app.py:418-427) with partition
-    * pruning + reading order.
+  /** Q2 page-content query (streamlit_app.py:418-427) over the committed
+    * groups, with partition pruning + reading order.
     */
   def pageContent(spark: SparkSession, outDir: String, groups: Int,
                   docId: String, page: Int) = {
     val g = groupOf(spark, docId, groups)
-    spark.read.parquet(s"$outDir/data")
+    committedOutput(spark, outDir)
       .where(col("group") === g && col("doc_id") === docId &&
              col("page") === page)
       .orderBy(col("bbox_y0").desc, col("bbox_x0").asc)
@@ -475,10 +490,7 @@ object ExtractJob {
     */
   def readAllRuns(spark: SparkSession, outDir: String) = {
     import spark.implicits._
-    val dirs = for {
-      r <- listRuns(outDir)
-      g <- Checkpoint.committedGroups(r).toSeq.sorted
-    } yield s"$r/data/group=$g"
+    val dirs = listRuns(outDir).flatMap(committedDirs)
     if (dirs.isEmpty) spark.emptyDataset[ExtractedRow].toDF()
     else spark.read.parquet(dirs: _*)
   }

@@ -118,10 +118,7 @@ object StreamingIngest {
       else fs.listStatus(root)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
         .map(_.getPath.toString)
-    val dirs = for {
-      b <- batches.toSeq
-      g <- graft.pipeline.Checkpoint.committedGroups(b).toSeq.sorted
-    } yield s"$b/data/group=$g"
+    val dirs = batches.toSeq.flatMap(graft.pipeline.ExtractJob.committedDirs)
     if (dirs.isEmpty)
       spark.emptyDataset[graft.core.ExtractedRow].toDF()
     else spark.read.parquet(dirs: _*)

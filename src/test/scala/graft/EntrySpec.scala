@@ -8,7 +8,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Smoke of the driver contract: entry() rows > 0; every query runs and
-  * returns rows at sf0.001; every oracleSql key exists in queries; the
+  * returns rows at sf0.001; every oracleSql key exists in queries; every
+  * generator-corpus query equals its generator ground truth; the
   * QueryProfile tool profiles those queries.
   */
 class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -35,6 +36,23 @@ class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(n > 0, s"query $name returned no rows")
     }
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("every generator-corpus query matches its generator ground truth") {
+    SparkEntry.genRows.foreach { row =>
+      val q = row.name
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy(df.columns.map(org.apache.spark.sql.functions.col): _*)
+          .collect().map(_.toSeq).toSeq
+      val got = SparkEntry.queries(q)(spark, "unused")
+      val want = SparkEntry.expected(q)(spark, "unused")
+      assert(got.columns.toSeq == want.columns.toSeq, q)
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType), q)
+      val (g, w) = (sorted(got), sorted(want))
+      assert(g.nonEmpty, s"$q returned no rows")
+      assert(g.size == w.size, s"$q: ${g.size} vs ${w.size} rows")
+      g.zip(w).foreach { case (a, b) => assert(a == b, q) }
+    }
   }
 
   test("QueryProfile: one JSON line per query and rep, plans only in planDir") {

@@ -257,6 +257,25 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("count") > 1).count() == 0)
   }
 
+  test("readOutput and pageContent show only manifest-committed groups") {
+    val out = tmpDir("committed-read")
+    ExtractJob.run(spark, CorpusGen.dataset(spark, 100, 42L),
+      ExtractJob.Config(out, runId = "c1", groups = 2, partitions = 4))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id", "order").collect().toSeq
+    val group0 = sorted(spark.read.parquet(s"$out/data/group=0"))
+    val g1 = spark.read.parquet(s"$out/data/group=1")
+      .where(col("chunk_id").isNotNull).select("doc_id", "page").head()
+    val (docId, page) = (g1.getString(0), g1.getInt(1))
+    assert(ExtractJob.pageContent(spark, out, 2, docId, page).count() > 0)
+    // crash between the group-1 write and its commit: the data files stay,
+    // the manifest entry is gone
+    Files.delete(java.nio.file.Paths.get(out, "_checkpoint", "group_1.json"))
+    assert(group0.nonEmpty)
+    assert(sorted(ExtractJob.readOutput(spark, out).toDF()) == group0)
+    assert(ExtractJob.pageContent(spark, out, 2, docId, page).count() == 0)
+  }
+
   test("adaptive skew salting: monster doc triggers it, uniform corpus skips it") {
     import spark.implicits._
     val uniform = CorpusGen.dataset(spark, 200, 42L)

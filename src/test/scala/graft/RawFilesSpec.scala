@@ -255,7 +255,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft-sniff")
     // a genuine PDF saved as .txt (crawler artifact) → positioned spans
     Files.write(dir.resolve("really_a.txt"),
-      graft.tools.RealPdfBench.makePdf(7L, 0))
+      graft.gen.PdfGen.makePdf(7L, 0))
     // a genuine DOCX served as .html (CMS endpoint) → paragraph spans
     Files.write(dir.resolve("download.html"), graft.gen.MixedGen.fileBytes(8))
     // honest text stays text — even mentioning %PDF- mid-file

@@ -242,10 +242,10 @@ class RealPdfSpec extends AnyFunSuite {
     * encoder widens at nextIdx+early-1 — one entry before the decoder,
     * matching its one-add lag). Independent of the production decoder.
     */
-  // shared with the bench corpus generator (main scope) so the LZW
-  // quarter of RealPdfBench's mix uses the identical encoder
+  // shared with the PDF corpus generator (graft.gen.PdfGen) so the LZW
+  // quarter of PdfGen's mix uses the identical encoder
   private def lzwEncode(data: Array[Byte], early: Int = 1): Array[Byte] =
-    graft.tools.RealPdfBench.lzwEncode(data, early)
+    graft.gen.PdfGen.lzwEncode(data, early)
 
   test("LZWDecode: old-toolchain streams extract (incl. width growth past 511 entries)") {
     val content = "BT /F1 12 Tf 72 700 Td (lzw encoded text) Tj ET"
@@ -523,7 +523,7 @@ class RealPdfSpec extends AnyFunSuite {
     // LZW/two-page/RC4/CJK-CMap) under the same mutation storm — these bytes feed a
     // driver query, so crash-robustness is contract, not nicety
     (0 until 180).foreach { i =>
-      val b = graft.tools.RealPdfBench.makePdf(i % 10L, i % 7)
+      val b = graft.gen.PdfGen.makePdf(i % 10L, i % 7)
       (0 until 1 + next(30)).foreach { _ =>
         b(next(b.length)) = next(256).toByte
       }
@@ -558,7 +558,7 @@ class RealPdfSpec extends AnyFunSuite {
     // catalog/pages/page dicts live in an ObjStm whose bytes are
     // Flate-compressed THEN RC4-encrypted; the content stream is
     // encrypted independently under its own object key
-    import graft.tools.RealPdfBench.{benchRc4, encMaterial, md5}
+    import graft.gen.PdfGen.{rc4, encMaterial, md5}
     val (id0, o, u, fileKey) = encMaterial(99L)
     def objKey(num: Int): Array[Byte] = java.util.Arrays.copyOf(
       md5(fileKey, Array[Byte](num.toByte, 0, 0, 0, 0)), 16)
@@ -573,7 +573,7 @@ class RealPdfSpec extends AnyFunSuite {
     }
     val content = "BT /F1 12 Tf 72 700 Td (inside encrypted objstm) Tj ET"
       .getBytes("ISO-8859-1")
-    val encContent = benchRc4(objKey(4), content)
+    val encContent = rc4(objKey(4), content)
     val dicts = Seq(
       1 -> "<< /Type /Catalog /Pages 2 0 R >>",
       2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
@@ -583,7 +583,7 @@ class RealPdfSpec extends AnyFunSuite {
       val off = data.length; data += b + " "; (n, off) }
     val header = offs.map { case (n, off) => s"$n $off" }.mkString(" ") + " "
     val objStmPlain = (header + data).getBytes("ISO-8859-1")
-    val encObjStm = benchRc4(objKey(7), flate(objStmPlain))
+    val encObjStm = rc4(objKey(7), flate(objStmPlain))
 
     val out = new java.io.ByteArrayOutputStream()
     def w(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
@@ -608,21 +608,21 @@ class RealPdfSpec extends AnyFunSuite {
   }
 
   test("generator RC4 variant decrypts to its ground-truth lines") {
-    val pdf = graft.tools.RealPdfBench.makePdf(7L, 5)
+    val pdf = graft.gen.PdfGen.makePdf(7L, 5)
     val pages = RealPdf.parse(pdf, 1)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList ==
-      graft.tools.RealPdfBench.contentLines(7L, 5).toList)
+      graft.gen.PdfGen.contentLines(7L, 5).toList)
   }
 
   test("generator variant 6: CJK predefined-CMap docs decode to exact ground truth") {
     // the driver-visible seventh of the ex_realpdf mix: UniGB-UCS2-H
     // hex-string content with a real CJK prefix on every line
     (0 until 5).foreach { i =>
-      val pdf = graft.tools.RealPdfBench.makePdf(i.toLong, 6)
+      val pdf = graft.gen.PdfGen.makePdf(i.toLong, 6)
       val pages = RealPdf.parse(pdf, 1)
       assert(pages.length == 1)
-      val want = graft.tools.RealPdfBench.contentLines(i.toLong, 6)
+      val want = graft.gen.PdfGen.contentLines(i.toLong, 6)
       assert(pages(0).runs.map(_.text).toList == want.toList, s"doc $i")
       assert(want.head.startsWith("文档 "))
     }
