@@ -261,8 +261,10 @@ object Dedup {
     * materialized (one job) at CALL time so the self-join's two side
     * stages read the cache instead of racing to compute it — callers
     * that only want the plan (explain/plan dumps) pay the signature
-    * pass. The same holds for every pairs- and windows-producing op
-    * below that self-joins a persisted frame.
+    * pass. The same holds for every op in this object that forces a
+    * persisted frame before joining it: the pairs-producing self-joins
+    * and [[duplicatedWindows]], whose window frame feeds both its
+    * frequency aggregate and its join back.
     *
     * Shuffle shape: the band self-join moves only (id, band, band-hash)
     * rows — 24 bytes x bands per doc; the k-long signatures shuffle ONCE

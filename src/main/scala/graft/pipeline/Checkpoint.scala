@@ -48,13 +48,34 @@ object Checkpoint {
       .toSet
   }
 
+  /** `s` as a JSON string literal, quotes included — for the manifest and
+    * the metrics sidecar, whose run ids come from the caller.
+    */
+  private[graft] def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b.append('"').result()
+  }
+
+  /** Commit group `group` of `outDir`: its manifest entry records the run,
+    * the group's doc count and `durationMs`, the time from the start of
+    * the group's write to this commit (in [[ExtractJob.runBucketed]] the
+    * write includes the group's scan and extraction; in
+    * [[ExtractJob.run]] those happen once, in the pass before the first
+    * group, and are not in any group's duration).
+    */
   def commitGroup(outDir: String, group: Int, runId: String,
                   docCount: Long, durationMs: Long): Unit = {
     val d = dir(outDir)
     val fs = fsFor(d)
     fs.mkdirs(d)
-    val body =
-      s"""{"group":$group,"run_id":"$runId","doc_count":$docCount,"duration_ms":$durationMs}"""
+    val body = s"""{"group":$group,"run_id":${jsonString(runId)},""" +
+      s""""doc_count":$docCount,"duration_ms":$durationMs}"""
     val tmp = new Path(d, s".group_$group.json.tmp")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()

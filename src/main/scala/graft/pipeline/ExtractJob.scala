@@ -3,8 +3,10 @@ package graft.pipeline
 import graft.core._
 import graft.extract.Extractor
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
 
@@ -15,6 +17,12 @@ import scala.jdk.CollectionConverters._
   * warehouse size (README.md:268).
   *
   * Scale design (SURVEY.md §4):
+  *  - ONE PASS per run ([[run]]): the docs of the uncommitted groups are
+  *    scanned, decoded, salted or merged, and extracted once; the
+  *    extracted rows are held (MEMORY_AND_DISK) with their group, and
+  *    each group is written from the held partitions that hold its docs.
+  *    The input is read at most twice — the bounded skew-decision sample
+  *    and the pass — whatever `groups` is.
   *  - NO shuffle in the hot path except the skew-salting repartition;
   *    extraction is embarrassingly parallel per document, ordering is
   *    computed in-memory per doc (the reference's ROW_NUMBER window
@@ -24,14 +32,16 @@ import scala.jdk.CollectionConverters._
   *    own hash space; normal docs hash-partition uniformly. One giant doc
   *    occupies one task that the scheduler backfills around.
   *  - CHECKPOINT/RESUME: docs are bucketed by `xxhash64(doc_id)` into
-  *    `groups` sequential sub-jobs; each group's output directory is
-  *    written with overwrite semantics and committed to the manifest
-  *    atomically ([[Checkpoint]]) — exactly-once per group, idempotent
-  *    re-runs. At 10^12 docs, `groups` bounds the blast radius of a
-  *    failure to 1/groups of the input.
-  *  - METRICS/LINEAGE: each task appends a [[PartitionMetrics]] row via an
-  *    accumulator; the driver dedupes retries (keeps the max attempt) and
-  *    writes the sidecar table.
+  *    `groups`; each group's output directory is written with overwrite
+  *    semantics and committed to the manifest atomically ([[Checkpoint]])
+  *    in group order — exactly-once per group, idempotent re-runs. A
+  *    failure during the pass commits nothing; after the pass, a failure
+  *    loses at most the group being written, and a re-run redoes only the
+  *    uncommitted groups. [[runBucketed]] keeps one sub-job per group, so
+  *    at 10^12 docs a failure costs at most 1/groups of the input.
+  *  - METRICS/LINEAGE: each task appends one [[PartitionMetrics]] row per
+  *    group it extracted docs of via an accumulator; the driver dedupes
+  *    retries (keeps the max attempt) and writes the sidecar table.
   */
 object ExtractJob {
 
@@ -63,45 +73,58 @@ object ExtractJob {
                        groupsSkipped: Seq[Int], docsProcessed: Long,
                        elapsedMs: Long, salted: Boolean)
 
-  /** Extract an iterator of docs, streaming (iterator-to-iterator — no
-    * partition materialization), recording per-partition metrics.
+  /** Extract an iterator of (group, doc) pairs, streaming
+    * (iterator-to-iterator — no partition materialization), recording one
+    * metrics row per group the partition saw. A task of the one-pass path
+    * holds docs of several groups, so the counters are kept per group and
+    * `duration_ms` is the task time spent on that group's docs (fetching
+    * each doc, extracting it and handing on its rows).
     */
   private def extractPartition(
-      docs: Iterator[InputDoc], group: Int, runId: String,
+      docs: Iterator[(Int, InputDoc)], groups: Int, runId: String,
       acc: CollectionAccumulator[PartitionMetrics])
       : Iterator[ExtractedRow] = {
     val tc = TaskContext.get()
-    val t0 = System.nanoTime()
-    var nDocs = 0L; var nSpans = 0L; var nOut = 0L; var nChunks = 0L
-    var nText = 0L; var nMedia = 0L; var bytesIn = 0L
+    val nDocs, nSpans, nOut, nChunks, nText, nMedia, bytesIn, nanos =
+      new Array[Long](groups)
+    var g = -1 // group of the doc whose rows are being handed on
+    var mark = System.nanoTime()
+    def charge(): Unit = {
+      val now = System.nanoTime()
+      if (g >= 0) nanos(g) += now - mark
+      mark = now
+    }
     new Iterator[ExtractedRow] {
       private var cur: Iterator[ExtractedRow] = Iterator.empty
       private var done = false
       override def hasNext: Boolean = {
-        while (!cur.hasNext && docs.hasNext) {
-          val d = docs.next()
-          nDocs += 1
+        while (!cur.hasNext && { charge(); docs.hasNext }) {
+          val (dg, d) = docs.next()
+          g = dg
+          nDocs(g) += 1
           if (d.spans != null) {
-            nSpans += d.spans.size
-            d.spans.foreach(s => if (s.text != null) bytesIn += s.text.length)
+            nSpans(g) += d.spans.size
+            d.spans.foreach(s => if (s.text != null) bytesIn(g) += s.text.length)
           }
           val rows = Extractor.extractRows(d)
-          nOut += rows.size
+          nOut(g) += rows.size
           rows.foreach { r =>
-            if (r.chunk_id != null) nChunks += 1
-            if (r.kind == "text") nText += 1
-            if (ExtractionSpec.MediaKinds(r.kind)) nMedia += 1
+            if (r.chunk_id != null) nChunks(g) += 1
+            if (r.kind == "text") nText(g) += 1
+            if (ExtractionSpec.MediaKinds(r.kind)) nMedia(g) += 1
           }
           cur = rows.iterator
         }
         val h = cur.hasNext
         if (!h && !done) {
           done = true
-          acc.add(PartitionMetrics(runId, group,
-            if (tc == null) -1 else tc.partitionId(),
-            if (tc == null) -1L else tc.taskAttemptId(),
-            nDocs, nSpans, nOut, nChunks, nText, nMedia, bytesIn,
-            (System.nanoTime() - t0) / 1000000L, "committed"))
+          (0 until groups).filter(nDocs(_) > 0).foreach { k =>
+            acc.add(PartitionMetrics(runId, k,
+              if (tc == null) -1 else tc.partitionId(),
+              if (tc == null) -1L else tc.taskAttemptId(),
+              nDocs(k), nSpans(k), nOut(k), nChunks(k), nText(k), nMedia(k),
+              bytesIn(k), nanos(k) / 1000000L, "committed"))
+          }
         }
         h
       }
@@ -109,15 +132,24 @@ object ExtractJob {
     }
   }
 
+  /** The checkpoint group of a doc: pmod(xxhash64(doc_id), groups). */
+  private def hashGroup(groups: Int): Column =
+    pmod(xxhash64(col("doc_id")), lit(groups)).cast("int")
+
+  /** Extract `docs` into `cfg.outDir`, checkpointed per group (group =
+    * pmod(xxhash64(doc_id), groups)). ONE pass over the docs of the
+    * uncommitted groups scans and decodes them, salts or merges their
+    * partitions, extracts them and holds the rows with their group
+    * (MEMORY_AND_DISK); the groups are then written and committed in
+    * order from the held rows. A run with one group to write writes it
+    * straight from the pass. The input is read at most twice per run
+    * — the bounded skew-decision sample and the pass — whatever `groups`
+    * is.
+    */
   def run(spark: SparkSession, docs: Dataset[InputDoc], cfg: Config)
       : RunReport =
-    // group = pmod(xxhash64(doc_id), groups), computed in the scan. NOTE
-    // the per-group filter below cannot prune a computed column, so the
-    // `groups` sub-jobs together re-read the input `groups` times — fine
-    // at bench scale, NOT at 10^12 docs; there, lay the table out with a
-    // physical bucket column and use [[runBucketed]].
-    runImpl(spark, docs.toDF().withColumn("_group",
-      pmod(xxhash64(col("doc_id")), lit(cfg.groups)).cast("int")), cfg)
+    runImpl(spark, docs.toDF().withColumn("_group", hashGroup(cfg.groups)),
+      cfg, onePass = true)
 
   /** [[run]] over an input whose PHYSICAL layout already carries the
     * checkpoint group (parquet `partitionBy(bucketCol)` or an Iceberg
@@ -128,6 +160,11 @@ object ExtractJob {
     * ONCE instead of `groups` times. This is the 10^12-doc deployment
     * shape; semantics (checkpoint, resume, salting, metrics, output)
     * are identical to [[run]].
+    *
+    * Unlike [[run]] it keeps one sub-job per group (scan, extract, write,
+    * commit): each group's filter already prunes at the scan, so there is
+    * no repeated read to remove, and holding the whole output of a
+    * 10^12-doc table until its last group is written would not fit.
     *
     * CONTRACT: bucket values must lie in [0, cfg.groups) — the group
     * loop only visits 0..groups-1, so out-of-range values would be
@@ -148,11 +185,16 @@ object ExtractJob {
           s" but cfg.groups=${cfg.groups} only processes [0, ${cfg.groups})" +
           " — docs would be silently dropped")
     }
-    runImpl(spark, grouped, cfg)
+    runImpl(spark, grouped, cfg, onePass = false)
   }
 
-  private def runImpl(spark: SparkSession, grouped: DataFrame, cfg: Config)
-      : RunReport = {
+  /** The shared run: skew decision, then the groups' write/commit loop.
+    * `onePass` selects how a group's frame is obtained — filtered from the
+    * rows one held extraction pass produced ([[run]], when more than one
+    * group is to be written), or a sub-job of its own ([[runBucketed]]).
+    */
+  private def runImpl(spark: SparkSession, grouped: DataFrame, cfg: Config,
+                      onePass: Boolean): RunReport = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     val nPart = if (cfg.partitions > 0) cfg.partitions
@@ -170,10 +212,6 @@ object ExtractJob {
         coalesce(aggregate(col("spans"), lit(0L),
           (a, s) => a + coalesce(octet_length(s.getField("text")).cast("long"),
                                  lit(0L))), lit(0L)))
-
-    var docsProcessed = 0L
-    val groupsRun = Seq.newBuilder[Int]
-    val groupsSkipped = Seq.newBuilder[Int]
 
     // salting decision: the repartition shuffle moves the full payload —
     // worth it iff the cost distribution is skewed RELATIVE TO a
@@ -218,8 +256,8 @@ object ExtractJob {
       val fairShare = math.max(total / math.max(nPart, 1), 1L)
       mx >= cfg.bigDocBytes || mx >= fairShare / 4
     }
-    val anyToRun = (0 until cfg.groups).exists(g => !committed.contains(g))
-    val useSalt = anyToRun && {
+    val todo = (0 until cfg.groups).filterNot(committed.contains)
+    val useSalt = todo.nonEmpty && {
       val k = srcParts / SkewSampleParts // evenly-spaced stride; 0 handled below
       if (k <= 1) {
         // few input partitions (test corpora, resumes of small
@@ -238,7 +276,7 @@ object ExtractJob {
         // opens lazily on first pull), so the skipped partitions'
         // payloads are never read
         val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
-        val kept = org.apache.spark.rdd.PartitionPruningRDD.create(
+        val kept = PartitionPruningRDD.create(
           costsRdd, i => i % k == 0)
         val (mx, tot, cnt) = kept
           .map(_.getLong(0))
@@ -246,6 +284,12 @@ object ExtractJob {
             { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
             { case ((m1, t1, c1), (m2, t2, c2)) =>
               (math.max(m1, m2), t1 + t2, c1 + c2) })
+        // BIAS: file sources pack splits largest-first, so partition
+        // sizes tend to fall with the index, and the first partition of
+        // each stride (the one kept) tends to be the largest of it. The
+        // extrapolated total therefore errs high (a higher fair share,
+        // so the relative test salts less often), while the max always
+        // sees partition 0, which holds the largest file
         cnt > 0 &&
           skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
       }
@@ -260,36 +304,66 @@ object ExtractJob {
     // path instead, which the salting decision already detects).
     val mergeDown = !useSalt && srcParts > nPart * 4
 
-    (0 until cfg.groups).foreach { g =>
-      if (committed.contains(g)) groupsSkipped += g
-      else {
-        val gT0 = System.currentTimeMillis()
-        val gDocs = withGroup.filter(col("_group") === g)
-        // skew isolation: big docs get the full 64-bit hash (≈ singleton
-        // partitions among nPart); normal docs hash into [0, nPart)
-        val salted = (if (useSalt)
-          gDocs.withColumn("_salt",
-              when(col("_cost") >= cfg.bigDocBytes,
-                   xxhash64(col("doc_id"), lit(1)))
-                .otherwise(pmod(xxhash64(col("doc_id")), lit(nPart))))
-            .repartition(nPart, col("_salt"))
-          else if (mergeDown) gDocs.coalesce(nPart)
-          else gDocs)
-          .select("doc_id", "spans").as[InputDoc]
-        val out = salted.mapPartitions(it =>
-          extractPartition(it, g, cfg.runId, acc))
-        cfg.tableIO.overwriteGroup(out.toDF(), g)
-        val gDocCount = {
-          // metrics rows for this group (accumulator is cumulative)
-          val rows = acc.value.asScala.filter(_.group == g)
-          rows.groupBy(_.partition_id)
-            .map(_._2.maxBy(_.task_attempt).doc_count).sum
-        }
-        docsProcessed += gDocCount
-        Checkpoint.commitGroup(cfg.outDir, g, cfg.runId, gDocCount,
-          System.currentTimeMillis() - gT0)
-        groupsRun += g
+    // skew isolation: big docs get the full 64-bit hash (≈ singleton
+    // partitions among nPart); normal docs hash into [0, nPart). A doc's
+    // partition depends on its doc_id only, so a group's rows sit in the
+    // same partitions whether it is extracted alone or with other groups
+    def extracted(docs: DataFrame): Dataset[ExtractedRow] =
+      (if (useSalt)
+        docs.withColumn("_salt",
+            when(col("_cost") >= cfg.bigDocBytes,
+                 xxhash64(col("doc_id"), lit(1)))
+              .otherwise(pmod(xxhash64(col("doc_id")), lit(nPart))))
+          .repartition(nPart, col("_salt"))
+        else if (mergeDown) docs.coalesce(nPart)
+        else docs)
+        .select("_group", "doc_id", "spans").as[(Int, String, Seq[Span])]
+        .mapPartitions(it => extractPartition(
+          it.map { case (g, id, spans) => (g, InputDoc(id, spans)) },
+          cfg.groups, cfg.runId, acc))
+
+    var docsProcessed = 0L
+    def writeAndCommit(frameOf: Int => DataFrame): Unit = todo.foreach { g =>
+      val gT0 = System.currentTimeMillis()
+      cfg.tableIO.overwriteGroup(frameOf(g), g)
+      val gDocCount = {
+        // metrics rows for this group (accumulator is cumulative)
+        val rows = acc.value.asScala.filter(_.group == g)
+        rows.groupBy(_.partition_id)
+          .map(_._2.maxBy(_.task_attempt).doc_count).sum
       }
+      docsProcessed += gDocCount
+      Checkpoint.commitGroup(cfg.outDir, g, cfg.runId, gDocCount,
+        System.currentTimeMillis() - gT0)
+    }
+    // with one group left to write (groups = 1, or a resume) its own
+    // sub-job is already the single pass: holding its rows buys nothing
+    if (!onePass || todo.size <= 1)
+      writeAndCommit(g => extracted(withGroup.filter(col("_group") === g)).toDF())
+    else {
+      // the held rows recompute their group from doc_id — the same
+      // expression that made the input's `_group` in [[run]]
+      val held = extracted(withGroup.filter(col("_group").isin(todo: _*)))
+        .withColumn("_group", hashGroup(cfg.groups))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        held.count() // the pass: a failure here commits nothing
+        val heldParts = held.rdd.getNumPartitions
+        writeAndCommit { g =>
+          val rows = held.where(col("_group") === g).drop("_group")
+          // the held partitions with docs of g (from the pass's metrics),
+          // and partition 0, where the writer always puts a file (an empty
+          // one carries the schema): the write launches tasks for these
+          // only and writes the same files. Salted, the normal docs of a
+          // group hash into at most nPart/groups partitions when groups
+          // divides nPart
+          val parts = acc.value.asScala.filter(_.group == g)
+            .map(_.partition_id).toSet + 0
+          if (parts.size == heldParts) rows
+          else spark.createDataFrame(
+            PartitionPruningRDD.create(rows.rdd, parts.contains), rows.schema)
+        }
+      } finally held.unpersist()
     }
 
     // metrics sidecar: dedupe task retries (keep max attempt per partition),
@@ -304,10 +378,8 @@ object ExtractJob {
       val dir = new org.apache.hadoop.fs.Path(cfg.outDir, "metrics")
       val fs = dir.getFileSystem(Checkpoint.hadoopConf())
       fs.mkdirs(dir)
-      def esc(s: String): String =
-        s.replace("\\", "\\\\").replace("\"", "\\\"")
       val body = metrics.map { m =>
-        s"""{"run_id":"${esc(m.run_id)}","group":${m.group},""" +
+        s"""{"run_id":${Checkpoint.jsonString(m.run_id)},"group":${m.group},""" +
         s""""partition_id":${m.partition_id},"task_attempt":${m.task_attempt},""" +
         s""""doc_count":${m.doc_count},"span_count":${m.span_count},""" +
         s""""out_span_count":${m.out_span_count},"chunk_count":${m.chunk_count},""" +
@@ -321,7 +393,7 @@ object ExtractJob {
       try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
-    RunReport(cfg.runId, groupsRun.result(), groupsSkipped.result(),
+    RunReport(cfg.runId, todo, (0 until cfg.groups).filter(committed.contains),
       docsProcessed, System.currentTimeMillis() - t0, useSalt)
   }
 
@@ -374,7 +446,7 @@ object ExtractJob {
   def groupOf(spark: SparkSession, docId: String, groups: Int): Int = {
     import spark.implicits._
     Seq(docId).toDF("doc_id")
-      .select(pmod(xxhash64(col("doc_id")), lit(groups)).cast("int"))
+      .select(hashGroup(groups))
       .collect()(0).getInt(0)
   }
 
@@ -431,8 +503,7 @@ object ExtractJob {
     val committed = Checkpoint.committedGroups(runDir)
     if (committed.nonEmpty) {
       val clash = newDocs
-        .select(pmod(xxhash64(col("doc_id")), lit(cfg.groups)).cast("int")
-          .as("g"))
+        .select(hashGroup(cfg.groups).as("g"))
         .where(col("g").isin(committed.toSeq: _*))
         .limit(1).count() > 0
       if (clash)

@@ -414,7 +414,131 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a run reads its input once: one skew-decision pass plus one extraction pass") {
+    val in = tmpDir("read-once-in")
+    CorpusGen.dataset(spark, N, 42L).write.mode("overwrite").parquet(in)
+    import spark.implicits._
+    val docs = spark.read.parquet(in).as[InputDoc]
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val report =
+      try ExtractJob.run(spark, docs,
+        ExtractJob.Config(tmpDir("read-once-out"), runId = "once", groups = 4))
+      finally {
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(report.groupsRun == Seq(0, 1, 2, 3) && report.docsProcessed == N)
+    // reads of cached batches count one record per batch on top of the
+    // two input passes; one pass per group would read it 5 times here
+    assert(records.get() >= 2L * N && records.get() < 3L * N,
+      s"${records.get()} records read for $N input rows")
+  }
+
+  test("a failure mid-run propagates, keeps earlier commits, holds nothing, resumes") {
+    val docs = CorpusGen.dataset(spark, 300, 42L)
+    val clean = tmpDir("fail-clean")
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    ExtractJob.run(spark, docs,
+      ExtractJob.Config(clean, runId = "ok", groups = 4, partitions = 8))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == held)
+
+    val out = tmpDir("fail")
+    val e = intercept[java.io.IOException] {
+      ExtractJob.run(spark, docs, ExtractJob.Config(out, runId = "f1",
+        groups = 4, partitions = 8, io = ProbeIO(out, failGroup = 1)))
+    }
+    assert(e.getMessage.contains("group 1"))
+    assert(Checkpoint.committedGroups(out) == Set(0))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == held)
+
+    val r = ExtractJob.run(spark, docs,
+      ExtractJob.Config(out, runId = "f2", groups = 4, partitions = 8))
+    assert(r.groupsRun == Seq(1, 2, 3) && r.groupsSkipped == Seq(0))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == held)
+    def rows(dir: String) = ExtractJob.spansView(spark, dir).collect()
+      .map(_.toString).sorted.toSeq
+    assert(rows(out) == rows(clean))
+  }
+
+  test("metrics sidecar and manifest agree with the input per group, salted or not") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val groups = 4
+    val monster = Seq(InputDoc("monster",
+      Vector(Span("text", "x" * (2 << 20), null, 0)))).toDS()
+    val plain = CorpusGen.dataset(spark, 300, 42L)
+    Seq(false -> plain, true -> plain.union(monster)).foreach {
+      case (salt, docs) =>
+        val out = tmpDir(s"per-group-$salt")
+        val io = ProbeIO(out)
+        val rep = ExtractJob.run(spark, docs, ExtractJob.Config(out,
+          runId = s"pg$salt", groups = groups, partitions = 8, io = io))
+        assert(rep.salted == salt)
+        // salted, a group's normal docs hash into 8/4 partitions, so its
+        // write skips the held partitions that hold none of its docs
+        if (salt) assert(io.framePartitions.values.forall(_ < 8),
+          io.framePartitions)
+        val inputDocs = docs.select(pmod(xxhash64(col("doc_id")),
+            lit(groups)).cast("int").as("g"))
+          .groupBy("g").count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val sidecar = spark.read.json(s"$out/metrics")
+          .groupBy("group").agg(sum("doc_count"), sum("out_span_count"))
+          .collect().map(r => r.getLong(0).toInt -> (r.getLong(1), r.getLong(2)))
+          .toMap
+        val manifest = spark.read.json(s"$out/_checkpoint")
+          .select("group", "doc_count").collect()
+          .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+        (0 until groups).foreach { g =>
+          val n = inputDocs.getOrElse(g, 0L)
+          assert(n > 0 && sidecar(g)._1 == n && manifest(g) == n,
+            s"salted=$salt group $g: input $n, sidecar ${sidecar(g)._1}, " +
+              s"manifest ${manifest(g)}")
+          assert(sidecar(g)._2 ==
+            spark.read.parquet(s"$out/data/group=$g").count(),
+            s"salted=$salt group $g out_span_count")
+        }
+    }
+  }
+
+  test("run ids with quotes and backslashes stay valid JSON in manifest and sidecar") {
+    val out = tmpDir("runid-json")
+    val runId = "a\"b\\c"
+    ExtractJob.run(spark, CorpusGen.dataset(spark, 50, 42L),
+      ExtractJob.Config(out, runId = runId, groups = 2, partitions = 4))
+    Seq(s"$out/_checkpoint", s"$out/metrics").foreach { dir =>
+      val m = spark.read.json(dir)
+      assert(!m.columns.contains("_corrupt_record"), s"invalid JSON in $dir")
+      assert(m.select("run_id").distinct().collect().map(_.getString(0))
+        .toSeq == Seq(runId), dir)
+    }
+  }
+
   private implicit class ChunkN(c: Chunk) {
     def chunk_n: Int = c.chunk_id.substring(c.chunk_id.lastIndexOf('c') + 1).toInt
   }
+}
+
+/** HadoopTableIO that records the partition count of each group's frame
+  * and can fail the write of one group, as a crash would.
+  */
+final case class ProbeIO(root: String, failGroup: Int = -1)
+    extends graft.sources.TableIO {
+  private val io = graft.sources.HadoopTableIO(root)
+  val framePartitions = scala.collection.mutable.Map.empty[Int, Int]
+  override def overwriteGroup(df: org.apache.spark.sql.DataFrame,
+                              group: Int): Unit = {
+    if (group == failGroup)
+      throw new java.io.IOException(s"injected failure writing group $group")
+    framePartitions(group) = df.rdd.getNumPartitions
+    io.overwriteGroup(df, group)
+  }
+  override def read(spark: SparkSession) = io.read(spark)
 }
