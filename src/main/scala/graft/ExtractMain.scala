@@ -28,7 +28,8 @@ object ExtractMain {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // measured on the text corpus: zstd beats snappy on BOTH speed and
-      // size (BENCH.md CodecBench row); override via spark-submit --conf
+      // size (BENCH.md "extraction write codec" row); override via
+      // spark-submit --conf
       .config("spark.sql.parquet.compression.codec", "zstd")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

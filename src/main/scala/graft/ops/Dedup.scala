@@ -119,8 +119,7 @@ object Dedup {
         posexplode(graft.functions.ShingleHashes
           .shingleHashes(col(textCol), w)))
       .select(col("id"), col("pos"), col("col").as("sh"))
-      .persist() // reuse point for the frequency agg + join back
-    wnd.count() // force the cache once pre-join — see minhashLshPairs
+      .localCheckpoint() // reuse point for the frequency agg + join back
     val dup = wnd.groupBy("sh")
       .agg(countDistinct(col("id")).as("n_docs"))
       .where(col("n_docs") >= minDocs)
@@ -257,14 +256,16 @@ object Dedup {
     * Emits distinct candidate pairs (id_a < id_b) with their estimated
     * Jaccard (fraction of equal signature positions).
     *
-    * NOT a pure plan builder (r06): the banded frame is eagerly
-    * materialized (one job) at CALL time so the self-join's two side
-    * stages read the cache instead of racing to compute it — callers
-    * that only want the plan (explain/plan dumps) pay the signature
-    * pass. The same holds for every op in this object that forces a
-    * persisted frame before joining it: the pairs-producing self-joins
-    * and [[duplicatedWindows]], whose window frame feeds both its
-    * frequency aggregate and its join back.
+    * NOT a pure plan builder (r06): the signature and banded frames are
+    * eagerly local-checkpointed (one job each) at CALL time so the
+    * self-join's two side stages read checkpointed blocks instead of
+    * racing to compute them — callers that only want the plan
+    * (explain/plan dumps) pay the signature pass. The same holds for
+    * every op in this object that checkpoints a frame before joining
+    * it: the pairs-producing self-joins and [[duplicatedWindows]], whose
+    * window frame feeds both its frequency aggregate and its join back.
+    * Nothing is left in the session's cache: the checkpoint blocks are
+    * freed once the returned frame is unreachable.
     *
     * Shuffle shape: the band self-join moves only (id, band, band-hash)
     * rows — 24 bytes x bands per doc; the k-long signatures shuffle ONCE
@@ -278,24 +279,17 @@ object Dedup {
     val sigDf = df.select(col(idCol).as("id"),
         minhashSignature(col(textCol), w, k).as("sig"))
       .where(col("sig").isNotNull)
-      .persist() // signatures computed once: band join + 2 attaches
+      .localCheckpoint() // signatures computed once: band join + 2 attaches
     val banded = sigDf.select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
           xxhash64(concat_ws(",",
             slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-      .persist() // both sides of the self-join reuse it
-    // force the cache ONCE before the self-join: a lazy persist is
-    // populated by whichever evaluation comes first, and AQE
-    // materializes the join's two side stages CONCURRENTLY — both
-    // sides race to compute the same uncached plan and the whole
-    // signature pass runs twice per invocation ("Block rdd_N already
-    // exists" / "Asked to cache already cached data" in the logs —
-    // measured as two ~equal duplicate jobs per persisted stage in
-    // every dd_* bench row). One count() materializes banded AND, as
-    // its input, sigDf, in a single linear pass; the join sides then
-    // only read the cache. Strictly fewer passes at any scale.
-    banded.count()
+      // eager, before the self-join: AQE materializes the join's two
+      // side stages CONCURRENTLY, so a lazily filled cache is computed by
+      // both (two ~equal duplicate jobs per stage in every r06 dd_* bench
+      // row); the join sides only read the checkpointed blocks
+      .localCheckpoint()
     val candIds = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.id") < col("b.id"))
@@ -385,8 +379,7 @@ object Dedup {
     val banded = fpDf.select(col(idCol).as("id"), col(fpCol).as("fp"))
       .select(col("id"), col("fp"), posexplode(array(keys: _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-      .persist() // both sides of the self-join reuse it
-    banded.count() // force the cache once pre-join — see minhashLshPairs
+      .localCheckpoint() // both join sides reuse it — see minhashLshPairs
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.id") < col("b.id"))
@@ -447,8 +440,7 @@ object Dedup {
     val sketch = Similarity.hyperplaneSketch(col(vecCol), nPlanes)
     val b = df.select(col(idCol).as("id"), col(vecCol).as("v"),
                       sketch.as("bucket"))
-      .persist() // sketch computed once, not once per join side
-    b.count() // force the cache once pre-join — see minhashLshPairs
+      .localCheckpoint() // sketch computed once, not once per join side
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -473,8 +465,7 @@ object Dedup {
     val sketch = Similarity.hyperplaneSketch(col(vecCol), nPlanes)
     val b = df.select(col(idCol).as("id"), col(vecCol).as("v"),
                       sketch.as("bucket"))
-      .persist() // sketch computed once, reused by both join sides
-    b.count() // force the cache once pre-join — see minhashLshPairs
+      .localCheckpoint() // sketch computed once, reused by both join sides
     val probes = b.select(col("id"), col("v"),
       explode(transform(sequence(lit(0), lit(nPlanes)), p =>
         when(p === 0, col("bucket"))

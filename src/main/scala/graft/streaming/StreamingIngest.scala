@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.InputDoc
 import graft.pipeline.ExtractJob
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingestion — the Spark-first replacement for the reference's
@@ -18,9 +18,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the reference's NOT-IN anti-join resume (setup.sql:222).
   *
   * `Trigger.AvailableNow` gives the reference's batch cadence (drain all
-  * new files, then stop — rerun on any schedule); a ProcessingTime
-  * trigger gives continuous ingestion. No watermarks/stateful ops are
-  * needed: extraction is stateless per document (SURVEY.md X5).
+  * new files, then stop — an external schedule reruns it). No
+  * watermarks/stateful ops are needed: extraction is stateless per
+  * document (SURVEY.md X5).
   */
 object StreamingIngest {
 
@@ -30,30 +30,14 @@ object StreamingIngest {
     */
   def start(spark: SparkSession, inputDir: String, outDir: String,
             checkpointDir: String, runId: String = "stream",
-            groups: Int = 4, availableNow: Boolean = true): StreamingQuery = {
+            groups: Int = 4): StreamingQuery = {
     import spark.implicits._
     val schema = org.apache.spark.sql.Encoders.product[InputDoc].schema
-    val stream = spark.readStream
+    extractEach(spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 64)
       .parquet(inputDir)
-      .as[InputDoc]
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[InputDoc],
-                       batchId: Long) =>
-        // one batch = one ExtractJob run into a batch-scoped output dir;
-        // ExtractJob's own manifest makes re-delivered batches no-ops
-        ExtractJob.run(batch.sparkSession, batch, ExtractJob.Config(
-          outDir = s"$outDir/batch=$batchId",
-          runId = s"$runId-$batchId",
-          groups = groups))
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("60 seconds")))
-      .start()
+      .as[InputDoc], outDir, checkpointDir, runId, groups)
   }
 
   /** Streaming ingestion of a RAW FILE directory — watch `rawDir` for new
@@ -70,11 +54,10 @@ object StreamingIngest {
     */
   def startRawDir(spark: SparkSession, rawDir: String, outDir: String,
                   checkpointDir: String, runId: String = "rawstream",
-                  groups: Int = 4, availableNow: Boolean = true)
-      : StreamingQuery = {
+                  groups: Int = 4): StreamingQuery = {
     import spark.implicits._
     val root = if (rawDir.endsWith("/")) rawDir else rawDir + "/"
-    val stream = spark.readStream.format("binaryFile")
+    extractEach(spark.readStream.format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, " +
               "length LONG, content BINARY")
       .option("recursiveFileLookup", "true")
@@ -82,22 +65,27 @@ object StreamingIngest {
       .load(rawDir)
       .select("path", "content")
       .flatMap(r => graft.sources.RawFiles.decodeAny(
-        r.getString(0), r.getAs[Array[Byte]](1), root))
+        r.getString(0), r.getAs[Array[Byte]](1), root)),
+      outDir, checkpointDir, runId, groups)
+  }
 
-    val writer = stream.writeStream
+  /** One batch = one ExtractJob run into a batch-scoped output dir;
+    * ExtractJob's own manifest makes re-delivered batches no-ops.
+    */
+  private def extractEach(stream: Dataset[InputDoc], outDir: String,
+                          checkpointDir: String, runId: String,
+                          groups: Int): StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[InputDoc],
-                       batchId: Long) =>
+      .foreachBatch { (batch: Dataset[InputDoc], batchId: Long) =>
         ExtractJob.run(batch.sparkSession, batch, ExtractJob.Config(
           outDir = s"$outDir/batch=$batchId",
           runId = s"$runId-$batchId",
           groups = groups))
         ()
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("60 seconds")))
+      .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Read back everything ingested so far: each batch's MANIFEST-COMMITTED
     * groups only (same exactly-once read rule as ExtractJob.readAllRuns —
@@ -106,21 +94,6 @@ object StreamingIngest {
     * Iceberg deployment appends to ONE table instead); union them
     * explicitly. Missing/empty output → empty typed DataFrame.
     */
-  def readOutput(spark: SparkSession, outDir: String) = {
-    import spark.implicits._
-    // Hadoop FileSystem, not java.io.File: the batch listing must work on
-    // hdfs:// / object-store outDirs like the Checkpoint manifest and
-    // ExtractJob.listRuns it composes with (ADVICE r02)
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(graft.pipeline.Checkpoint.hadoopConf())
-    val batches =
-      if (!fs.isDirectory(root)) Array.empty[String]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.toString)
-    val dirs = batches.toSeq.flatMap(graft.pipeline.ExtractJob.committedDirs)
-    if (dirs.isEmpty)
-      spark.emptyDataset[graft.core.ExtractedRow].toDF()
-    else spark.read.parquet(dirs: _*)
-  }
+  def readOutput(spark: SparkSession, outDir: String): DataFrame =
+    ExtractJob.readCommitted(spark, outDir, "batch=")
 }

@@ -338,6 +338,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.foreach { case (k, v) => assert(math.abs(v - brute(k)) < 1e-12, k) }
   }
 
+  test("dedup pair ops leave no cached frame behind") {
+    spark.catalog.clearCache()
+    val d = docsDf.select("doc_id", "text").limit(60)
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .where(col("vec_id") < 60)
+    Seq(Dedup.duplicatedWindows(d, "doc_id", "text", w = 3),
+        Dedup.minhashLshPairs(d, "doc_id", "text"),
+        Dedup.simhashPairs(d, "doc_id", "text"),
+        Dedup.embeddingNearDupPairs(e, "vec_id", "embedding", 0.9),
+        Dedup.embeddingNearDupPairsMultiProbe(e, "vec_id", "embedding", 0.9))
+      .foreach(_.collect())
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
+
   test("minhash LSH: injected exact dups all recovered with est_jaccard 1.0") {
     val d = docsDf.select("doc_id", "text").limit(100)
     val dup = d.limit(20).withColumn("doc_id", col("doc_id") + 1000000L)
