@@ -338,7 +338,8 @@ object SparkEntry {
     // /Link URIs + display-mapped rects, domains via urlDomain
     GenRow("q_pdf_links", LinkGen.write(_, 36),
       perFile("doc_id", "page", "uri", "x0", "y0", "x1", "y1") { (name, b) =>
-        RealPdf.links(b).map(l => (name, l.page, l.uri, l.x0, l.y0, l.x1, l.y1))
+        RealPdf.links(RealPdf.open(b))
+          .map(l => (name, l.page, l.uri, l.x0, l.y0, l.x1, l.y1))
       } {
         _.withColumn("domain", TextOps.urlDomain(col("uri")))
           .select("doc_id", "page", "uri", "domain", "x0", "y0", "x1", "y1")
@@ -347,14 +348,15 @@ object SparkEntry {
     // /Outlines preorder walk: title, depth, target page
     GenRow("q_pdf_outline", LinkGen.write(_, 36),
       perFile("doc_id", "pos", "depth", "title", "page") { (name, b) =>
-        RealPdf.outline(b).map(o => (name, o.pos, o.depth, o.title, o.page))
+        RealPdf.outline(RealPdf.open(b))
+          .map(o => (name, o.pos, o.depth, o.title, o.page))
       }(_.orderBy("doc_id", "pos")), truth(LinkGen.expectedOutline(36))),
     // AcroForm field values + display-mapped widget rects
     GenRow("q_pdf_formfields", FormGen.write(_, 36),
       perFile("doc_id", "pos", "page", "name", "ftype", "value",
           "x0", "y0", "x1", "y1") { (name, b) =>
-        RealPdf.formFields(b).map(ff => (name, ff.pos, ff.page, ff.name,
-          ff.ftype, ff.value, ff.x0, ff.y0, ff.x1, ff.y1))
+        RealPdf.formFields(RealPdf.open(b)).map(ff => (name, ff.pos, ff.page,
+          ff.name, ff.ftype, ff.value, ff.x0, ff.y0, ff.x1, ff.y1))
       }(_.orderBy("doc_id", "pos")), truth(FormGen.expected(36))),
     // HTML <table> DOM recovery into the TSV vocabulary
     GenRow("q_table_tsv_html", HtmlTableGen.write(_, 30),
@@ -724,7 +726,7 @@ object SparkEntry {
       val runs = s.createDataset(0 until 18)
         .flatMap { i =>
           val doc = f"rtdoc_$i%03d"
-          graft.extract.RealPdf.parse(graft.gen.TableGen.pdfBytes(i), 1)
+          graft.extract.RealPdf.parse(graft.gen.TableGen.pdfBytes(i))
             .iterator.flatMap(pg => pg.runs.iterator.map(r =>
               (doc, pg.page, r.x0, r.y0, r.x1, r.y1, r.text)))
         }.toDF("doc_id", "page", "x0", "y0", "x1", "y1", "text")

@@ -101,19 +101,61 @@ object RealPdf {
   private case class Indirect(dict: PObj, streamData: Option[Array[Byte]],
                               gen: Int = 0)
 
-  // ---------- public API ----------
+  // ---------- the opened document ----------
 
-  /** Parse a real PDF's bytes into the tokenizer's page model; `firstPage`
-    * is the document-global 1-based number of this payload's first page.
+  /** One page of the page tree in reading order: `obj` is its object
+    * number (-1 for a page given as a direct dict), `no` its 1-based
+    * page number, `res` its inherited /Resources, `annots` its /Annots
+    * entries, and (`width`, `height`, `base`) its display frame from
+    * [[displayBase]] — the page dims after /Rotate and the matrix that
+    * maps user space into the bottom-left-origin frame of text runs.
+    */
+  private final case class PageEntry(obj: Int, no: Int, dict: PObj,
+                                     res: PObj, annots: Vector[PObj],
+                                     width: Double, height: Double,
+                                     base: Array[Double])
+
+  /** One genuine PDF, opened once by [[open]]: the decrypted,
+    * object-stream-expanded object table, the catalog (PNull when there
+    * is none) and the page list. Every reader below is a function of a
+    * `Doc`, so a caller that wants text, images and attachments of one
+    * file scans its bytes once.
+    */
+  final class Doc private[RealPdf] (
+      private[RealPdf] val objs: Map[Int, Indirect],
+      private[RealPdf] val catalog: PObj,
+      private[RealPdf] val pages: Vector[PageEntry])
+
+  private val EmptyDoc = new Doc(Map.empty, PNull, Vector.empty)
+
+  /** Open a PDF's bytes: the object scan, empty-password decryption,
+    * object-stream expansion, the catalog lookup and the page-tree walk
+    * ([[pageTree]]), each done once. Never throws — unparseable input
+    * opens as an empty `Doc` (no objects, no pages), which every reader
+    * maps to its empty result.
+    */
+  def open(bytes: Array[Byte]): Doc =
+    try {
+      val objs = scanObjects(bytes)
+      val catalog = objs.valuesIterator.map(_.dict).collectFirst {
+        case d @ PDict(m) if m.get("Type").contains(PName("Catalog")) => d
+      }.getOrElse(PNull)
+      new Doc(objs, catalog, pageTree(objs, catalog))
+    } catch { case _: Exception => EmptyDoc }
+
+  // ---------- readers ----------
+
+  /** A real PDF's bytes in the tokenizer's page model, pages numbered
+    * from 1: the text half of [[parseDoc]] on a freshly opened `Doc`.
     * Never throws on malformed input — unparsable structure yields
     * `Vector.empty` (the caller's no-spans path), unparsable single pages
     * yield empty pages.
     */
-  def parse(bytes: Array[Byte], firstPage: Int): Vector[PdfTokenizer.Page] =
-    parseDoc(bytes, firstPage)._1
+  def parse(bytes: Array[Byte]): Vector[PdfTokenizer.Page] =
+    parseDoc(open(bytes))._1
 
   /** One embedded-image occurrence (an image XObject painted by `Do`):
-    * `page` is 1-based (doc-global, like [[PdfTokenizer.Page.page]]),
+    * `page` is 1-based (like [[PdfTokenizer.Page.page]]),
     * `seq` the 0-based occurrence order across the whole document
     * (page order, then content-stream order — incl. inside form
     * XObjects), `objNum` the image stream's object number, and
@@ -124,7 +166,7 @@ object RealPdf {
   final case class PdfImage(page: Int, seq: Int, objNum: Int,
                             width: Int, height: Int)
 
-  /** Mutable per-document interpreter context: the object table, the
+  /** Mutable per-parse interpreter context: the object table, the
     * font cache (sibling pages share /Resources), and the image-
     * occurrence collector.
     */
@@ -132,43 +174,33 @@ object RealPdf {
                                   fontCache: MHashMap[PObj, Map[String, Font]],
                                   images: ArrayBuffer[PdfImage])
 
-  /** [[parse]] plus the document's embedded-image occurrences — the
-    * full interleaved text+media view of one genuine PDF.
+  /** The document's pages plus its embedded-image occurrences — the
+    * full interleaved text+media view of one genuine PDF. A page whose
+    * content fails to decode or interpret stays in place, empty.
     */
-  def parseDoc(bytes: Array[Byte], firstPage: Int)
-      : (Vector[PdfTokenizer.Page], Vector[PdfImage]) =
-    try {
-      val objs = scanObjects(bytes)
-      val pageDicts = pageTree(objs)
-      val ctx = DocCtx(objs, MHashMap.empty, ArrayBuffer.empty)
-      var pageNo = firstPage - 1
-      val pages = pageDicts.map { case (dict, mediaBox, res, rotRaw) =>
-        pageNo += 1
-        val (ox, oy, w, h) = mediaBox
-        // /Rotate (§7.7.3.3, inheritable): the display transform the
-        // reference gets from pdfminer's process_page CTM — 90/270 swap
-        // the page dims, and all emitted geometry maps through the
-        // rotation as the page-level affine base (forms compose onto
-        // it). A non-zero MediaBox origin translates by (−llx, −lly)
-        // FIRST — cropped scans put text at page-local coordinates.
-        val (pw, ph, base) = displayBase(ox, oy, w, h, rotRaw)
-        val page = PdfTokenizer.Page(pageNo, pw, ph, new ArrayBuffer[Run])
-        try {
-          val content = contentOf(dict, objs)
-          if (content.nonEmpty)
-            interpret(content, page, fontMap(res, objs, ctx.fontCache),
-              res, ctx, depth = 0, base)
-        } catch { case _: Exception => () } // bad page content: keep empty
-        page
-      }
-      (pages, ctx.images.toVector)
-    } catch { case _: Exception => (Vector.empty, Vector.empty) }
+  def parseDoc(doc: Doc): (Vector[PdfTokenizer.Page], Vector[PdfImage]) = {
+    val ctx = DocCtx(doc.objs, MHashMap.empty, ArrayBuffer.empty)
+    val pages = doc.pages.map { p =>
+      val page =
+        PdfTokenizer.Page(p.no, p.width, p.height, new ArrayBuffer[Run])
+      try {
+        val content = contentOf(p.dict, doc.objs)
+        if (content.nonEmpty)
+          interpret(content, page, fontMap(p.res, doc.objs, ctx.fontCache),
+            p.res, ctx, depth = 0, p.base)
+      } catch { case _: Exception => () } // bad page content: keep empty
+      page
+    }
+    (pages, ctx.images.toVector)
+  }
 
   /** (pageWidth, pageHeight, base display matrix) for one page's
     * /MediaBox origin + /Rotate — the §7.7.3.3 display transform
-    * SHARED by text geometry ([[parseDoc]]) and annotation rectangles
-    * ([[links]]), so a link's bbox lands in the same coordinate frame
-    * as the text runs it overlays.
+    * the reference gets from pdfminer's process_page CTM: 90/270 swap
+    * the page dims, and all emitted geometry maps through the rotation
+    * as the page-level affine base (forms compose onto it). A non-zero
+    * MediaBox origin translates by (−llx, −lly) FIRST — cropped scans
+    * put text at page-local coordinates.
     */
   private def displayBase(ox: Double, oy: Double, w: Double, h: Double,
                           rotRaw: Int): (Double, Double, Array[Double]) = {
@@ -187,12 +219,33 @@ object RealPdf {
     (pw, ph, base)
   }
 
+  /** An annotation /Rect mapped through a page's display matrix and
+    * normalized to x0<=x1, y0<=y1 — the one rect mapping that link and
+    * form-widget boxes share, so they land in the frame of the text
+    * runs they overlay. None unless the rect is four numbers.
+    */
+  private def displayRect(rect: PObj, base: Array[Double],
+                          objs: Map[Int, Indirect])
+      : Option[(Double, Double, Double, Double)] = rect match {
+    case PArr(r0) if r0.length == 4 =>
+      val ns = r0.map(resolve(_, objs)).collect { case PNum(v) => v }
+      if (ns.length != 4) None
+      else {
+        val (ax, ay) = (base(0) * ns(0) + base(2) * ns(1) + base(4),
+                        base(1) * ns(0) + base(3) * ns(1) + base(5))
+        val (bx, by) = (base(0) * ns(2) + base(2) * ns(3) + base(4),
+                        base(1) * ns(2) + base(3) * ns(3) + base(5))
+        Some((math.min(ax, bx), math.min(ay, by),
+              math.max(ax, bx), math.max(ay, by)))
+      }
+    case _ => None
+  }
+
   /** One external hyperlink: a /Subtype /Link annotation whose action
     * is /S /URI (ISO 32000 §12.5.6.5 + §12.6.4.7). `page` is 1-based;
-    * the bbox is the annotation /Rect mapped through the page's
-    * display transform (MediaBox origin + /Rotate) and normalized to
-    * x0<=x1, y0<=y1 — the same bottom-left-origin frame as text runs,
-    * so link rects overlay the [[Run]] geometry directly.
+    * the bbox is the annotation /Rect in the page's display frame
+    * ([[displayRect]]), so link rects overlay the [[Run]] geometry
+    * directly.
     */
   final case class PdfLink(page: Int, uri: String,
                            x0: Double, y0: Double, x1: Double, y1: Double)
@@ -207,18 +260,11 @@ object RealPdf {
     * stream-scoped here) — modern writers put annots in ObjStms, which
     * decrypt correctly.
     */
-  def links(bytes: Array[Byte]): Vector[PdfLink] =
+  def links(doc: Doc): Vector[PdfLink] =
     try {
-      val objs = scanObjects(bytes)
-      var pageNo = 0
-      pageTree(objs).flatMap { case (dict, (ox, oy, w, h), _, rotRaw) =>
-        pageNo += 1
-        val (_, _, base) = displayBase(ox, oy, w, h, rotRaw)
-        val annots = dictGet(dict, "Annots", objs) match {
-          case PArr(items) => items
-          case _           => Vector.empty
-        }
-        annots.flatMap { a =>
+      val objs = doc.objs
+      doc.pages.flatMap { p =>
+        p.annots.flatMap { a =>
           val ad = resolve(a, objs)
           val isLink = dictGet(ad, "Subtype", objs) == PName("Link")
           val uri =
@@ -232,22 +278,8 @@ object RealPdf {
               case _ => None
             }
           uri.flatMap { u =>
-            dictGet(ad, "Rect", objs) match {
-              case PArr(r0) if r0.length == 4 =>
-                val ns = r0.map(resolve(_, objs))
-                  .collect { case PNum(v) => v }
-                if (ns.length != 4) None
-                else {
-                  def tx(x: Double, y: Double): (Double, Double) =
-                    (base(0) * x + base(2) * y + base(4),
-                     base(1) * x + base(3) * y + base(5))
-                  val (ax, ay) = tx(ns(0), ns(1))
-                  val (bx, by) = tx(ns(2), ns(3))
-                  Some(PdfLink(pageNo, u,
-                    math.min(ax, bx), math.min(ay, by),
-                    math.max(ax, bx), math.max(ay, by)))
-                }
-              case _ => None
+            displayRect(dictGet(ad, "Rect", objs), p.base, objs).map {
+              case (x0, y0, x1, y1) => PdfLink(p.no, u, x0, y0, x1, y1)
             }
           }
         }
@@ -267,43 +299,17 @@ object RealPdf {
     * chain from /Root → /Outlines). Titles decode like text strings
     * (PDFDocEncoding ≈ Latin-1, or UTF-16BE with BOM); the target page
     * resolves from the first element of /Dest (or a /GoTo action's /D)
-    * against the page tree's object numbers. Cycles, bombs, and
+    * against the object numbers of the doc's page list, so it uses the
+    * same page numbers as the text. Cycles, bombs, and
     * malformed nodes degrade silently — a crafted /Next loop must not
     * hang an executor (preorder is capped at 10k entries, depth 64).
     */
-  def outline(bytes: Array[Byte]): Vector[PdfOutline] =
+  def outline(doc: Doc): Vector[PdfOutline] =
     try {
-      val objs = scanObjects(bytes)
-      // 1-based page number by page OBJECT number — dest arrays point at
-      // pages by reference, so numbering must follow refs, not dicts
-      val pageNum = scala.collection.mutable.HashMap.empty[Int, Int]
-      locally {
-        val seen = scala.collection.mutable.HashSet.empty[Int]
-        def walk(ref: PObj, depth: Int): Unit = ref match {
-          case PRef(n) if depth <= 64 && seen.add(n) =>
-            val node = resolve(ref, objs)
-            dictGet(node, "Type", objs) match {
-              case PName("Pages") => dictGet(node, "Kids", objs) match {
-                case PArr(kids) => kids.foreach(walk(_, depth + 1))
-                case _          => ()
-              }
-              case PName("Page") => pageNum(n) = pageNum.size + 1
-              case _             => ()
-            }
-          case _ => ()
-        }
-        objs.collectFirst { case (_, Indirect(d @ PDict(m), _, _))
-            if m.get("Type").contains(PName("Catalog")) => d }
-          .foreach { cat =>
-            cat match {
-              case PDict(m) => m.get("Pages") match {
-                case Some(r: PRef) => walk(r, 0)
-                case _             => ()
-              }
-              case _ => ()
-            }
-          }
-      }
+      val objs = doc.objs
+      // dest arrays point at pages by reference: page number by page
+      // OBJECT number, first occurrence winning
+      val pageNum = doc.pages.reverseIterator.map(p => p.obj -> p.no).toMap
       def pageOf(node: PObj): Int = {
         val dest = dictGet(node, "Dest", objs) match {
           case PNull => dictGet(node, "A", objs) match {
@@ -354,17 +360,10 @@ object RealPdf {
           }
         }
       }
-      objs.collectFirst { case (_, Indirect(d @ PDict(m), _, _))
-          if m.get("Type").contains(PName("Catalog")) => d }
-        .foreach { cat =>
-          dictGet(cat, "Outlines", objs) match {
-            case o: PDict => o match {
-              case PDict(m) => m.get("First").foreach(walkItems(_, 0))
-              case _        => ()
-            }
-            case _ => ()
-          }
-        }
+      dictGet(doc.catalog, "Outlines", objs) match {
+        case PDict(m) => m.get("First").foreach(walkItems(_, 0))
+        case _        => ()
+      }
       out.result()
     } catch { case _: Exception => Vector.empty }
 
@@ -382,7 +381,7 @@ object RealPdf {
     * appearance-state NAMES (`Yes`/`Off`); multi-select /Ch arrays join
     * with `", "`; an absent /V reads as `""` — a blank form is still a
     * form. /Sig fields are skipped (no pos consumed). Rects map through
-    * the page display transform (MediaBox + /Rotate); the widget's page
+    * the page display frame ([[displayRect]]); the widget's page
     * resolves by /Annots membership first, /P dict equality second,
     * else 0 with an identity rect. Field VALUES never enter content
     * streams — they render through appearance XObjects the layout walk
@@ -393,31 +392,16 @@ object RealPdf {
     * (/root/reference/setup.sql:72-91) — a north-rule extension, like
     * [[links]] and [[outline]].
     */
-  def formFields(bytes: Array[Byte]): Vector[PdfFormField] =
+  def formFields(doc: Doc): Vector[PdfFormField] =
     try {
-      val objs = scanObjects(bytes)
-      val idBase = Array[Double](1, 0, 0, 1, 0, 0)
-      // per-page: display base, annot-ref membership, the page dict
-      // itself (for /P equality fallback)
+      val objs = doc.objs
+      // annot object number → its first page
       val annotPage =
-        scala.collection.mutable.HashMap.empty[Int, (Int, Array[Double])]
-      val pageDicts = Vector.newBuilder[(PObj, Int, Array[Double])]
-      var pageNo = 0
-      pageTree(objs).foreach { case (dict, (ox, oy, w, h), _, rotRaw) =>
-        pageNo += 1
-        val no = pageNo
-        val (_, _, base) = displayBase(ox, oy, w, h, rotRaw)
-        pageDicts += ((dict, no, base))
-        dictGet(dict, "Annots", objs) match {
-          case PArr(items) => items.foreach {
-            case PRef(n) => if (!annotPage.contains(n))
-              annotPage(n) = (no, base)
-            case _ => ()
-          }
-          case _ => ()
-        }
-      }
-      val pages = pageDicts.result()
+        scala.collection.mutable.HashMap.empty[Int, PageEntry]
+      doc.pages.foreach(p => p.annots.foreach {
+        case PRef(n) => if (!annotPage.contains(n)) annotPage(n) = p
+        case _       => ()
+      })
       val out = Vector.newBuilder[PdfFormField]
       var pos = 0
       val seen = scala.collection.mutable.HashSet.empty[Int]
@@ -431,23 +415,15 @@ object RealPdf {
       def emit(d: PObj, refNum: Int, name: String, ft: String,
                v: PObj): Unit = {
         if (ft == "Sig") return
-        dictGet(d, "Rect", objs) match {
-          case PArr(r0) if r0.length == 4 =>
-            val ns = r0.map(resolve(_, objs)).collect { case PNum(x) => x }
-            if (ns.length != 4) return
-            val (pg, base) = annotPage.get(refNum).getOrElse {
-              dictGet(d, "P", objs) match {
-                case pd: PDict =>
-                  pages.collectFirst { case (q, no, b) if q == pd =>
-                    (no, b) }.getOrElse((0, idBase))
-                case _ => (0, idBase)
-              }
-            }
-            def tx(x: Double, y: Double): (Double, Double) =
-              (base(0) * x + base(2) * y + base(4),
-               base(1) * x + base(3) * y + base(5))
-            val (ax, ay) = tx(ns(0), ns(1))
-            val (bx, by) = tx(ns(2), ns(3))
+        val page = annotPage.get(refNum).orElse {
+          dictGet(d, "P", objs) match {
+            case pd: PDict => doc.pages.find(_.dict == pd)
+            case _         => None
+          }
+        }
+        val base = page.fold(IdentityM)(_.base)
+        displayRect(dictGet(d, "Rect", objs), base, objs).foreach {
+          case (x0, y0, x1, y1) =>
             val ftype = ft match {
               case "Tx"  => "text"
               case "Btn" => "button"
@@ -455,11 +431,9 @@ object RealPdf {
               case ""    => "unknown"
               case other => other.toLowerCase
             }
-            out += PdfFormField(pos, pg, name, ftype, valueOf(v),
-              math.min(ax, bx), math.min(ay, by),
-              math.max(ax, bx), math.max(ay, by))
+            out += PdfFormField(pos, page.fold(0)(_.no), name, ftype,
+              valueOf(v), x0, y0, x1, y1)
             pos += 1
-          case _ => ()
         }
       }
       def walk(ref: PObj, parentName: String, inhFt: String, inhV: PObj,
@@ -492,31 +466,16 @@ object RealPdf {
           case _ => ()
         }
       }
-      objs.collectFirst { case (_, Indirect(d @ PDict(m), _, _))
-          if m.get("Type").contains(PName("Catalog")) => d }
-        .foreach { cat =>
-          dictGet(cat, "AcroForm", objs) match {
-            case af: PDict => dictGet(af, "Fields", objs) match {
-              case PArr(fields) =>
-                fields.foreach(walk(_, "", "", PNull, 0))
-              case _ => ()
-            }
-            case _ => ()
-          }
+      dictGet(doc.catalog, "AcroForm", objs) match {
+        case af: PDict => dictGet(af, "Fields", objs) match {
+          case PArr(fields) => fields.foreach(walk(_, "", "", PNull, 0))
+          case _            => ()
         }
+        case _ => ()
+      }
       out.result()
     } catch { case _: Exception => Vector.empty }
 
-  /** Payload bytes of image XObject `objNum` with its non-image filters
-    * undone: Flate/LZW/RunLength/ASCIIHex/ASCII85 stages are decoded,
-    * while a DCTDecode/JPXDecode stage passes the remaining bytes
-    * through unchanged — a /DCTDecode image therefore returns the
-    * embedded JFIF/JPEG file itself, ready for a standard codec
-    * (`javax.imageio` via [[graft.ops.Multimodal.ImageIoCodec]]).
-    * None for unknown objects or non-streams; Some(empty) only when a
-    * genuinely unsupported filter (JPX raster, exotic chains) blocks
-    * the chain.
-    */
   /** One embedded file (ISO 32000 §7.11.4): `idx` is the 0-based
     * discovery position (catalog /EmbeddedFiles name tree first, then
     * /FileAttachment annotations in page order), `name` the filespec
@@ -533,9 +492,9 @@ object RealPdf {
     * object number); name-less or stream-less filespecs drop; cycles
     * and bombs are capped. Empty on anything unparseable.
     */
-  def attachments(bytes: Array[Byte]): Vector[PdfAttachment] =
+  def attachments(doc: Doc): Vector[PdfAttachment] =
     try {
-      val objs = scanObjects(bytes)
+      val objs = doc.objs
       val out = Vector.newBuilder[(String, Array[Byte])]
       val seenFs = scala.collection.mutable.HashSet.empty[Int]
       def addFileSpec(fs: PObj): Unit = {
@@ -584,43 +543,49 @@ object RealPdf {
           case _          => ()
         }
       }
-      objs.collectFirst { case (_, Indirect(d @ PDict(m), _, _))
-          if m.get("Type").contains(PName("Catalog")) => d }
-        .foreach { cat =>
-          dictGet(cat, "Names", objs) match {
-            case PDict(nm) => nm.get("EmbeddedFiles").foreach(walkTree(_, 0))
-            case _         => ()
-          }
-        }
+      dictGet(doc.catalog, "Names", objs) match {
+        case PDict(nm) => nm.get("EmbeddedFiles").foreach(walkTree(_, 0))
+        case _         => ()
+      }
       // 2) /FileAttachment annotations, page order
-      pageTree(objs).foreach { case (dict, _, _, _) =>
-        dictGet(dict, "Annots", objs) match {
-          case PArr(items) => items.foreach { a =>
-            resolve(a, objs) match {
-              case ad @ PDict(am)
-                  if dictGet(ad, "Subtype", objs) == PName("FileAttachment") =>
-                am.get("FS").foreach(addFileSpec)
-              case _ => ()
-            }
-          }
+      doc.pages.foreach(_.annots.foreach { a =>
+        resolve(a, objs) match {
+          case ad @ PDict(am)
+              if dictGet(ad, "Subtype", objs) == PName("FileAttachment") =>
+            am.get("FS").foreach(addFileSpec)
           case _ => ()
         }
-      }
+      })
       out.result().zipWithIndex.map { case ((n, b), k) =>
         PdfAttachment(k, n, b)
       }
     } catch { case _: Exception => Vector.empty }
 
-  def imageBytes(bytes: Array[Byte], objNum: Int): Option[Array[Byte]] =
+  /** Filters whose stage passes the remaining bytes through as an
+    * embedded image file (JPEG, JPEG 2000).
+    */
+  private val ImageFileFilters = Set("DCTDecode", "JPXDecode")
+
+  /** Payload bytes of image XObject `objNum` with its non-image filters
+    * undone: Flate/LZW/RunLength/ASCIIHex/ASCII85 stages are decoded,
+    * while a DCTDecode/JPXDecode stage passes the remaining bytes
+    * through unchanged — a /DCTDecode image therefore returns the
+    * embedded JFIF/JPEG file itself, ready for a standard codec
+    * (`javax.imageio` via [[graft.ops.Multimodal.ImageIoCodec]]).
+    * None for unknown objects or non-streams; Some(empty) only when a
+    * genuinely unsupported filter (JPX raster, exotic chains) blocks
+    * the chain.
+    */
+  def imageBytes(doc: Doc, objNum: Int): Option[Array[Byte]] =
     try {
-      val objs = scanObjects(bytes)
-      objs.get(objNum).collect {
+      doc.objs.get(objNum).collect {
         case Indirect(d, Some(data), _) =>
-          decode(d, data, objs, passThrough = Set("DCTDecode", "JPXDecode"))
+          decode(d, data, doc.objs, passThrough = ImageFileFilters)
       }
     } catch { case _: Exception => None }
 
-  /** Codec-READY payload of image XObject `objNum` — the byte shape
+  /** Codec-READY payload of image XObject `objNum`: [[imageBytes]]
+    * plus the PNG wrap — the byte shape
     * [[graft.ops.Multimodal.ImageIoCodec]] (any standard codec)
     * consumes directly: a /DCTDecode//JPXDecode image returns its
     * embedded JPEG/JP2 file unchanged; raster images (Flate with or
@@ -634,24 +599,19 @@ object RealPdf {
     * (JPX, symbol-coded JBIG2, exotic colorspaces) — those stay
     * occurrence-only.
     */
-  def imageCodecBytes(bytes: Array[Byte], objNum: Int): Option[Array[Byte]] =
-    try {
-      val objs = scanObjects(bytes)
-      objs.get(objNum) match {
-        case Some(Indirect(d, Some(data), _)) =>
-          val filters = dictGet(d, "Filter", objs) match {
-            case PName(f)    => Vector(f)
-            case PArr(items) => items.collect { case PName(f) => f }
-            case _           => Vector.empty
-          }
-          val decoded = decode(d, data, objs,
-            passThrough = Set("DCTDecode", "JPXDecode"))
-          if (filters.exists(f => f == "DCTDecode" || f == "JPXDecode"))
-            Some(decoded).filter(_.nonEmpty)
-          else wrapPng(d, decoded, objs)
-        case _ => None
-      }
-    } catch { case _: Exception => None }
+  def imageCodecBytes(doc: Doc, objNum: Int): Option[Array[Byte]] =
+    imageBytes(doc, objNum).flatMap { decoded =>
+      try {
+        val d = doc.objs(objNum).dict
+        val filters = dictGet(d, "Filter", doc.objs) match {
+          case PName(f)    => Vector(f)
+          case PArr(items) => items.collect { case PName(f) => f }
+          case _           => Vector.empty
+        }
+        if (filters.exists(ImageFileFilters)) Some(decoded).filter(_.nonEmpty)
+        else wrapPng(d, decoded, doc.objs)
+      } catch { case _: Exception => None }
+    }
 
   /** Wrap decoded raster samples as a PNG per the image dict geometry.
     * Row-major samples, rows padded to byte boundaries for bpc 1 (the
@@ -912,21 +872,23 @@ object RealPdf {
     (0.0, 0.0, ExtractionSpec.DefaultPageWidth,
      ExtractionSpec.DefaultPageHeight)
 
-  /** Pages in reading order with inherited MediaBox AND /Resources
-    * (both inheritable page-tree attributes, ISO 32000 §7.7.3.4):
-    * /Root → /Pages → /Kids walk; fallback = /Type/Page objects in
-    * document order (own resources only — inheritance needs the tree).
+  /** The page list in reading order with inherited MediaBox AND
+    * /Resources (both inheritable page-tree attributes, ISO 32000
+    * §7.7.3.4): `catalog` /Pages → /Kids walk; fallback = /Type/Page
+    * objects in document order (own resources only — inheritance needs
+    * the tree). Pages are numbered 1.. in that order.
     */
-  private def pageTree(objs: Map[Int, Indirect])
-      : Vector[(PObj, (Double, Double, Double, Double), PObj, Int)] = {
-    val out = Vector.newBuilder[(PObj, (Double, Double, Double, Double), PObj, Int)]
+  private def pageTree(objs: Map[Int, Indirect],
+                       catalog: PObj): Vector[PageEntry] = {
+    val out =
+      Vector.newBuilder[(Int, PObj, (Double, Double, Double, Double), PObj, Int)]
     val seen = scala.collection.mutable.HashSet.empty[Int]
     def rotateOf(node: PObj, inherited: Int): Int =
       dictGet(node, "Rotate", objs) match {
         case PNum(v) => v.toInt
         case _       => inherited
       }
-    def walk(node: PObj,
+    def walk(node: PObj, obj: Int,
              inherited: (Double, Double, Double, Double), inhRes: PObj,
              inhRot: Int, depth: Int): Unit = {
       if (depth > 64) return // cycle/bomb guard
@@ -942,28 +904,40 @@ object RealPdf {
           dictGet(node, "Kids", objs) match {
             case PArr(kids) => kids.foreach {
               case PRef(n) if seen.add(n) =>
-                walk(resolve(PRef(n), objs), box, res, rot, depth + 1)
-              case PDict(m) => walk(PDict(m), box, res, rot, depth + 1)
+                walk(resolve(PRef(n), objs), n, box, res, rot, depth + 1)
+              case PDict(m) => walk(PDict(m), -1, box, res, rot, depth + 1)
               case _ => ()
             }
             case _ => ()
           }
-        case PName("Page") => out += ((node, box, res, rot))
+        case PName("Page") => out += ((obj, node, box, res, rot))
         case _ => ()
       }
     }
-    val root = objs.values
-      .map(_.dict)
-      .collectFirst { case d @ PDict(m)
-        if m.get("Type").contains(PName("Catalog")) => d }
-    root.foreach(r => walk(dictGet(r, "Pages", objs), DefaultBox, PNull,
-      0, 0))
+    val rootRef = catalog match {
+      case PDict(m) => m.get("Pages") match {
+        case Some(PRef(n)) => n
+        case _             => -1
+      }
+      case _ => -1
+    }
+    walk(dictGet(catalog, "Pages", objs), rootRef, DefaultBox, PNull, 0, 0)
     val walked = out.result()
-    if (walked.nonEmpty) walked
-    else objs.toVector.sortBy(_._1).map(_._2.dict).collect {
-      case d @ PDict(m) if m.get("Type").contains(PName("Page")) =>
-        (d, mediaBoxOf(dictGet(d, "MediaBox", objs)).getOrElse(DefaultBox),
-         dictGet(d, "Resources", objs), rotateOf(d, 0))
+    val pages =
+      if (walked.nonEmpty) walked
+      else objs.toVector.sortBy(_._1).collect {
+        case (n, Indirect(d @ PDict(m), _, _))
+            if m.get("Type").contains(PName("Page")) =>
+          (n, d, mediaBoxOf(dictGet(d, "MediaBox", objs)).getOrElse(DefaultBox),
+           dictGet(d, "Resources", objs), rotateOf(d, 0))
+      }
+    pages.zipWithIndex.map { case ((obj, dict, (ox, oy, w, h), res, rot), i) =>
+      val (pw, ph, base) = displayBase(ox, oy, w, h, rot)
+      val annots = dictGet(dict, "Annots", objs) match {
+        case PArr(items) => items
+        case _           => Vector.empty
+      }
+      PageEntry(obj, i + 1, dict, res, annots, pw, ph, base)
     }
   }
 
@@ -2287,21 +2261,17 @@ object RealPdf {
 
   private def interpret(content: Array[Byte],
                         page: PdfTokenizer.Page,
-                        fonts: Map[String, Font] = Map.empty,
-                        res: PObj = PNull,
-                        ctx: DocCtx = null,
-                        depth: Int = 0,
-                        base: Array[Double] = IdentityM): Unit = {
+                        fonts: Map[String, Font],
+                        res: PObj,
+                        ctx: DocCtx,
+                        depth: Int,
+                        base: Array[Double]): Unit = {
     // name → object number of the /Resources /XObject entries (XObject
     // streams must be indirect, §7.3.8); resolved on first `Do` only
     lazy val xobjs: Map[String, Int] =
-      if (ctx == null) Map.empty
-      else res match {
-        case PDict(m) => resolve(m.getOrElse("XObject", PNull), ctx.objs) match {
-          case PDict(x) => x.collect { case (n, PRef(num)) => n -> num }
-          case _        => Map.empty
-        }
-        case _ => Map.empty
+      dictGet(res, "XObject", ctx.objs) match {
+        case PDict(x) => x.collect { case (n, PRef(num)) => n -> num }
+        case _        => Map.empty
       }
     def doXObject(nm: String): Unit =
       xobjs.get(nm).foreach { num =>
@@ -2569,7 +2539,7 @@ object RealPdf {
               stack.dropRightInPlace(math.min(1, stack.length))
             case "Do" =>
               stack.lastOption match {
-                case Some(PName(nm)) if ctx != null =>
+                case Some(PName(nm)) =>
                   try doXObject(nm) // a malformed form must not void
                   catch { case _: Exception => () } // the page's own text
                 case _ => ()
@@ -2608,9 +2578,7 @@ object RealPdf {
                   }
                 }
               } catch { case _: Exception => () }
-              if (ctx != null)
-                ctx.images += PdfImage(page.page, ctx.images.length, 0,
-                  iw, ih)
+              ctx.images += PdfImage(page.page, ctx.images.length, 0, iw, ih)
               // skip the binary payload to EI. ISO 32000 §8.9.7 requires
               // EI delimited by whitespace — binary pixel data freely
               // contains the bytes 'E','I', so a bare indexOf resumes

@@ -337,10 +337,12 @@ object RawFiles {
     * NOT fan out its own attachments — the one-level rule.
     */
   private def pdfDocs(path: String, rel: String,
-                      bytes: Array[Byte]): Seq[InputDoc] =
-    oneDoc(rel, pdfSpans(path, bytes)) ++
-      RealPdf.attachments(bytes).flatMap(a =>
+                      bytes: Array[Byte]): Seq[InputDoc] = {
+    val doc = RealPdf.open(bytes)
+    oneDoc(rel, pdfSpans(path, doc)) ++
+      RealPdf.attachments(doc).flatMap(a =>
         attachmentDoc(path, rel, a.idx, a.name, a.body))
+  }
 
   /** One InputDoc per retained jsonl line
     * (`<relpath>#L<lineNo>:<record-id>`) — the shard re-ingestion path;
@@ -512,7 +514,7 @@ object RawFiles {
                      bytes: Array[Byte],
                      transportCharset: String): Vector[Span] =
     format match {
-      case "pdf" => pdfSpans(path, bytes)
+      case "pdf" => pdfSpans(path, RealPdf.open(bytes))
       case "raw" => Vector(Span(if (Binary(kind)) "text" else kind,
         CharsetSniff.decode(bytes, html = kind == "html", transportCharset),
         null, 0))
@@ -528,8 +530,8 @@ object RawFiles {
     * order, so [[graft.core.ExtractionSpec]]'s offset ordering
     * reproduces the document's own text→media sequence.
     */
-  private def pdfSpans(path: String, bytes: Array[Byte]): Vector[Span] = {
-    val (pages, images) = RealPdf.parseDoc(bytes, 1)
+  private def pdfSpans(path: String, doc: RealPdf.Doc): Vector[Span] = {
+    val (pages, images) = RealPdf.parseDoc(doc)
     Span("pdf", RealPdf.toContentStream(pages), null, 0) +:
       images.map { im =>
         val tail = if (im.objNum > 0) s"obj${im.objNum}" else "inline"
@@ -696,12 +698,13 @@ object RawFiles {
         else attachment(EmlExtractor.parse(bytes).attachments.iterator
           .map(a => (a.idx, a.filename, a.body)))
       case "pdf" =>
+        val doc = RealPdf.open(bytes)
         if (tail.startsWith("img")) {
           val colon = tail.indexOf(':')
           if (colon < 0 || !tail.startsWith("obj", colon + 1)) None
           else tail.substring(colon + 4).toIntOption
-            .flatMap(n => RealPdf.imageCodecBytes(bytes, n))
-        } else attachment(RealPdf.attachments(bytes).iterator
+            .flatMap(n => RealPdf.imageCodecBytes(doc, n))
+        } else attachment(RealPdf.attachments(doc).iterator
           .map(a => (a.idx, a.name, a.body)))
       case "json" => JsonlExtractor.routeJson(bytes).left.toOption
         .flatMap(_ => IpynbExtractor.mediaPayload(bytes, tail))

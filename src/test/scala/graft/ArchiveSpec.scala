@@ -15,7 +15,7 @@ import java.nio.file.Files
   * through the batch scan and the streaming decode, nested archives
   * dropped.
   */
-class ArchiveSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ArchiveSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -113,7 +113,7 @@ class ArchiveSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ingest fan-out: one InputDoc per member, batch == streaming decode, nested archives and unknown suffixes drop") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-archspec")
+    val dir = tempDir("graft-archspec")
     ArchiveGen.write(dir.toString, 6)
     // a misnamed .txt that is really a zip still fans out (content magic)
     Files.write(dir.resolve("mislabeled.txt"), ArchiveGen.fileBytes(0))

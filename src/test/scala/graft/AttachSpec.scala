@@ -26,25 +26,25 @@ class AttachSpec extends AnyFunSuite {
 
   test("attachments(): discovery order, dedup, naming, filters") {
     // variant 0: tree order, Flate-decoded body
-    val a0 = RealPdf.attachments(AttachGen.fileBytes(0))
+    val a0 = RealPdf.attachments(RealPdf.open(AttachGen.fileBytes(0)))
     assert(a0.map(_.name) == Vector("notes_0.txt", "readme_0.md"))
     assert(new String(a0(1).body, UTF_8).startsWith("# Readme 0"))
     // variant 1: shared filespec once, ghost + .xyz follow their rules
     // (the name-less filespec never surfaces; the .xyz drops at the
     // ROUTING layer, so attachments() still reports it)
-    val a1 = RealPdf.attachments(AttachGen.fileBytes(1))
+    val a1 = RealPdf.attachments(RealPdf.open(AttachGen.fileBytes(1)))
     assert(a1.map(_.name) ==
       Vector("shared_1.txt", "data_1.xyz", "memo_1.txt"))
     // variant 2: /UF (UTF-16BE) beats /F
-    val a2 = RealPdf.attachments(AttachGen.fileBytes(2))
+    val a2 = RealPdf.attachments(RealPdf.open(AttachGen.fileBytes(2)))
     assert(a2.map(_.name) == Vector("unicodé_2.txt"))
     // variant 3: the inner PDF round-trips byte-exact
-    val a3 = RealPdf.attachments(AttachGen.fileBytes(3))
+    val a3 = RealPdf.attachments(RealPdf.open(AttachGen.fileBytes(3)))
     assert(a3.size == 1 &&
       a3.head.body.sameElements(AttachGen.innerPdf(3)))
     // attachment-less PDFs: none
-    assert(RealPdf.attachments(
-      graft.gen.LinkGen.fileBytes(0)).isEmpty)
+    assert(RealPdf.attachments(RealPdf.open(
+      graft.gen.LinkGen.fileBytes(0))).isEmpty)
   }
 
   test("one fan-out level: a pdf attachment's own attachments stay put") {
@@ -85,11 +85,11 @@ class AttachSpec extends AnyFunSuite {
       val b = AttachGen.fileBytes(v).clone()
       for (_ <- 0 until 8)
         b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
-      RealPdf.attachments(b) // must not throw
+      RealPdf.attachments(RealPdf.open(b)) // must not throw
     }
     val base = AttachGen.fileBytes(1)
     for (_ <- 0 until 40)
-      RealPdf.attachments(java.util.Arrays.copyOf(base,
-        rnd.nextInt(base.length)))
+      RealPdf.attachments(RealPdf.open(java.util.Arrays.copyOf(base,
+        rnd.nextInt(base.length))))
   }
 }

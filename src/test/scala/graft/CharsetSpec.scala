@@ -14,7 +14,7 @@ import java.nio.file.Files
   * quirks, the strict UTF-8 validator, and the end-to-end ingest path
   * against CharsetGen's encoded ground truth.
   */
-class CharsetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CharsetSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -116,7 +116,7 @@ class CharsetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ingest e2e: legacy-charset directory decodes to the generator's exact strings") {
-    val dir = Files.createTempDirectory("graft-charset-spec")
+    val dir = tempDir("graft-charset-spec")
     CharsetGen.write(dir.toString, 24)
     val docs = RawFiles.read(spark, dir.toString).collect()
       .map(d => d.doc_id -> d.spans).toMap

@@ -14,7 +14,7 @@ import java.nio.file.Files
   * resolution), attachment fan-out, mbox spools, and the end-to-end
   * ingest path against EmlGen's hand-assembled ground truth.
   */
-class EmlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EmlSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -140,7 +140,7 @@ class EmlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ingest e2e: 24 generated emails match EmlGen ground truth exactly") {
-    val dir = Files.createTempDirectory("graft-eml-spec")
+    val dir = tempDir("graft-eml-spec")
     EmlGen.write(dir.toString, 24)
     val got = RawFiles.read(spark, dir.toString).collect()
       .flatMap(d => d.spans.map(sp => (d.doc_id, sp.kind,

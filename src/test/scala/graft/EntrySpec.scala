@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   * generator-corpus query equals its generator ground truth; the
   * QueryProfile tool profiles those queries.
   */
-class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
+class EntrySpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -63,7 +63,7 @@ class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
     val cwd = Paths.get("").toAbsolutePath
     val cwdBefore = listing(cwd)
     val plansBefore = listing(cwd.resolve("plans"))
-    val tmp = Files.createTempDirectory("graft-queryprofile")
+    val tmp = tempDir("graft-queryprofile")
     val planDir = tmp.resolve("plans")
     try {
       val lines = QueryProfile.profile(spark, sfDir, names, reps = 1,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class EventAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -25,7 +25,7 @@ class EventAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
                  r.getDouble(3)))
     // file stream source needs a directory, not a single file
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-ev").toString
+    val streamDir = tempDir("graft-ev").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       java.nio.file.Paths.get(s"$streamDir/events.parquet"))

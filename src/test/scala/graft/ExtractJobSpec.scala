@@ -8,10 +8,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
-class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,12 +22,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def tmpDir(name: String): String = {
-    val p = Files.createTempDirectory(s"graft-$name")
-    deleteOnExitRec(p)
-    p.toString
-  }
-  private def deleteOnExitRec(p: Path): Unit = p.toFile.deleteOnExit()
+  private def tmpDir(name: String): String = tempDir(s"graft-$name").toString
 
   private val N = 600
 

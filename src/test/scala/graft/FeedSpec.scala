@@ -14,7 +14,7 @@ import java.nio.file.Files
   * bodies, the stripped-text fallback, enclosure media, identity
   * precedence, against FeedGen's hand-assembled ground truth.
   */
-class FeedSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FeedSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -65,7 +65,7 @@ class FeedSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ingest e2e: 24 generated feeds match FeedGen ground truth exactly") {
-    val dir = Files.createTempDirectory("graft-feed-spec")
+    val dir = tempDir("graft-feed-spec")
     FeedGen.write(dir.toString, 24)
     val got = RawFiles.read(spark, dir.toString).collect()
       .flatMap(d => d.spans.map(sp => (d.doc_id, sp.kind,

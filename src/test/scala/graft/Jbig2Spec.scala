@@ -108,10 +108,10 @@ class Jbig2Spec extends AnyFunSuite {
         (2, true, false), (0, false, true))) {
       val pdf = Jbig2Gen.makeScanPdf(7, template = template,
         tpgdon = tpgdon, mmr = mmr)
-      val (pages, images) = RealPdf.parseDoc(pdf, 1)
+      val (pages, images) = RealPdf.parseDoc(RealPdf.open(pdf))
       assert(images == Vector(RealPdf.PdfImage(1, 0, 5, 200, 120)))
       assert(pages.head.runs.exists(_.text.startsWith("Jbig 7")))
-      val png = RealPdf.imageCodecBytes(pdf, 5).get
+      val png = RealPdf.imageCodecBytes(RealPdf.open(pdf), 5).get
       val img = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(png))
       assert(img.getWidth == 200 && img.getHeight == 120)

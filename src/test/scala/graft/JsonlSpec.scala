@@ -13,7 +13,7 @@ import java.nio.file.Files
   * shard fan-out contract and the generic `.gz` inner-extension
   * routing.
   */
-class JsonlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class JsonlSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -101,7 +101,7 @@ class JsonlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ingest fan-out: shards (.jsonl/.ndjson/.jsonl.gz) and generic .gz route identically in batch and streaming") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-jsonlspec")
+    val dir = tempDir("graft-jsonlspec")
     JsonlGen.write(dir.toString, 6)
     // generic gz: an html page gzipped at rest is still an html doc
     val html = ("<html><body><p>a gzipped page body long enough to " +

@@ -18,7 +18,7 @@ import scala.collection.mutable.ArrayBuffer
   * the scaladoc'd semantics), generator ground truth end-to-end, and
   * the usual corruption storm.
   */
-class OdtSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OdtSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -179,7 +179,7 @@ class OdtSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ingest e2e: 24 generated packages match OdtGen ground truth") {
-    val dir = Files.createTempDirectory("graft-odt-spec")
+    val dir = tempDir("graft-odt-spec")
     OdtGen.write(dir.toString, 24)
     val got = RawFiles.read(spark, dir.toString).collect()
       .flatMap(d => d.spans.map(sp => (d.doc_id, sp.kind,

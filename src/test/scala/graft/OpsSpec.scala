@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OpsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -1345,7 +1345,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cross-format dedup: html/md/txt/eml/xml/json/doc/ppt renditions share one canonical text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cross-spec")
+    val dir = tempDir("graft-cross-spec")
     graft.gen.CrossGen.write(dir.toString, 2, 1)
     val byDoc = graft.sources.RawFiles.read(spark, dir.toString)
       .collect()

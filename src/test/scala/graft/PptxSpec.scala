@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * XML plus java.nio path normalization — different machinery from the
   * hand scanner, so agreement pins the spec.
   */
-class PptxSpec extends AnyFunSuite {
+class PptxSpec extends AnyFunSuite with TempDirs {
 
   // ---------- the DOM twin ----------
 
@@ -285,7 +285,7 @@ class PptxSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", false).getOrCreate()
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("pptx-e2e").toString
+      val tmp = tempDir("pptx-e2e").toString
       graft.gen.PptxGen.write(tmp, 4)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(tmp, "mislabeled.html"),

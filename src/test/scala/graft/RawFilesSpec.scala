@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
-class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +22,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("raw directory scan: suffix->kind classification, relative doc_id, media by reference") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-raw")
+    val dir = tempDir("graft-raw")
     Files.createDirectories(dir.resolve("sub"))
     // a real content-stream payload from the corpus generator
     val pdfPayload = CorpusGen.doc(42L, 1L).spans.head.text
@@ -65,7 +65,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a directory of GENUINE .pdf files produces positioned spans end-to-end") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-realpdf")
+    val dir = tempDir("graft-realpdf")
     val fixture = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_real.pdf").toURI))
     Files.write(dir.resolve("real.pdf"), fixture)
@@ -87,7 +87,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("genuine PDF with embedded images yields interleaved text+media spans") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-mixpdf")
+    val dir = tempDir("graft-mixpdf")
     graft.gen.MixedGen.write(dir.toString, 3) // 0: text pdf, 1: image pdf,
                                               // 2: form pdf
     val docs = RawFiles.read(spark, dir.toString).collect()
@@ -128,7 +128,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("genuine DOCX decodes to interleaved text+media spans at the ingest boundary") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-docx")
+    val dir = tempDir("graft-docx")
     // MixedGen variant 8 (i=8): known paragraphs + one embedded image
     Files.write(dir.resolve("memo_0008.docx"), graft.gen.MixedGen.fileBytes(8))
     // a .docx that is NOT a zip falls back to a verbatim "text" span —
@@ -172,7 +172,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("markdown decodes to text blocks + referenced media at the ingest boundary") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-md")
+    val dir = tempDir("graft-md")
     // MixedGen variant 9 (i=9): heading/para/figure/list/code/quote
     Files.write(dir.resolve("post_0009.md"), graft.gen.MixedGen.fileBytes(9))
     val docs = RawFiles.read(spark, dir.toString).collect()
@@ -198,7 +198,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("genuine EPUB decodes to spine-ordered text+media spans at the ingest boundary") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-epub")
+    val dir = tempDir("graft-epub")
     Files.write(dir.resolve("book_0001.epub"), graft.gen.EpubGen.fileBytes(1))
     // an .epub that is NOT a zip falls back to a verbatim "text" span
     Files.writeString(dir.resolve("fake.epub"), "just plain bytes")
@@ -230,7 +230,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("BOM'd text payloads decode through their charset at ingest") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-bom")
+    val dir = tempDir("graft-bom")
     Files.write(dir.resolve("win.txt"),
       ("\uFEFF" + "wide résumé ✓ text").getBytes("UTF-16LE"))
     Files.write(dir.resolve("be.txt"),
@@ -252,7 +252,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("content magic overrides a lying extension within the text-kind family") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-sniff")
+    val dir = tempDir("graft-sniff")
     // a genuine PDF saved as .txt (crawler artifact) → positioned spans
     Files.write(dir.resolve("really_a.txt"),
       graft.gen.PdfGen.makePdf(7L, 0))
@@ -279,7 +279,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val docs = CorpusGen.corpus(42L, 30).filter(_.spans.nonEmpty)
     val ds = spark.createDataset(docs)
-    val dir = Files.createTempDirectory("graft-fmt").toString
+    val dir = tempDir("graft-fmt").toString
 
     // JSON lines roundtrip
     ds.write.mode("overwrite").json(s"$dir/json")

@@ -25,7 +25,7 @@ class RealPdfSpec extends AnyFunSuite {
   }
 
   test("fixture: pages, dims, text, and positions") {
-    val pages = RealPdf.parse(fixture, firstPage = 1)
+    val pages = RealPdf.parse(fixture)
     assert(pages.length == 2)
 
     val p1 = pages(0)
@@ -65,15 +65,10 @@ class RealPdfSpec extends AnyFunSuite {
     assert(s2.x0 == 20.0 && s2.y0 == 368.0) // ' applied TL 12 leading
   }
 
-  test("firstPage offsets the document-global page counter") {
-    val pages = RealPdf.parse(fixture, firstPage = 7)
-    assert(pages.map(_.page) == Vector(7, 8))
-  }
-
   test("PG/TX serialization round-trips through PdfTokenizer exactly") {
-    val pages = RealPdf.parse(fixture, firstPage = 3)
+    val pages = RealPdf.parse(fixture)
     val payload = RealPdf.toContentStream(pages)
-    val back = PdfTokenizer.tokenize(payload, firstPage = 3)
+    val back = PdfTokenizer.tokenize(payload, firstPage = 1)
     assert(back.length == pages.length)
     pages.zip(back).foreach { case (a, b) =>
       assert(a.page == b.page)
@@ -83,19 +78,19 @@ class RealPdfSpec extends AnyFunSuite {
   }
 
   test("malformed inputs never throw: garbage, truncation, bad stream") {
-    assert(RealPdf.parse(Array.emptyByteArray, 1) == Vector.empty)
-    assert(RealPdf.parse("%PDF-1.4\njunk and nothing else".getBytes, 1)
+    assert(RealPdf.parse(Array.emptyByteArray) == Vector.empty)
+    assert(RealPdf.parse("%PDF-1.4\njunk and nothing else".getBytes)
       == Vector.empty)
     // truncated mid-object: parse what scans, never throw
     for (cut <- Seq(20, 100, 300, 700, fixture.length - 30))
-      RealPdf.parse(fixture.take(cut), 1) // must not throw
+      RealPdf.parse(fixture.take(cut)) // must not throw
     // a page whose content stream is corrupt Flate ⇒ page kept, no runs
     val idx = fixture.indexOfSlice("FlateDecode".getBytes)
     val broken = fixture.clone()
     val streamAt = fixture.indexOfSlice("stream".getBytes, idx)
     for (i <- streamAt + 8 until math.min(streamAt + 24, broken.length))
       broken(i) = 0x00
-    val pages = RealPdf.parse(broken, 1)
+    val pages = RealPdf.parse(broken)
     assert(pages.length == 2)
     assert(pages(1).runs.isEmpty)
     assert(pages(0).runs.nonEmpty) // page 1 unaffected
@@ -104,7 +99,7 @@ class RealPdfSpec extends AnyFunSuite {
   test("modern layout: catalog/page dicts inside a Flate /ObjStm") {
     val bytes = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_objstm.pdf").toURI))
-    val pages = RealPdf.parse(bytes, 1)
+    val pages = RealPdf.parse(bytes)
     assert(pages.length == 1)
     assert((pages(0).width, pages(0).height) == (500.0, 600.0))
     assert(pages(0).runs.map(_.text).toList ==
@@ -162,7 +157,7 @@ class RealPdfSpec extends AnyFunSuite {
       stream(4, "BT /F1 12 Tf 72 700 Td (part one) Tj") +
       stream(5, "0 -20 Td (part two) Tj ET") +
       "%%EOF\n").getBytes("ISO-8859-1")
-    val pages = RealPdf.parse(pdf, 1)
+    val pages = RealPdf.parse(pdf)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList == List("part one", "part two"))
     // text state carried across the stream boundary: Td applied
@@ -183,7 +178,7 @@ class RealPdfSpec extends AnyFunSuite {
     val content = "BT /F1 12 Tf 72 700 Td (filtered text) Tj ET"
       .getBytes("ISO-8859-1")
     def texts(pdf: Array[Byte]): List[String] =
-      RealPdf.parse(pdf, 1).flatMap(_.runs.map(_.text)).toList
+      RealPdf.parse(pdf).flatMap(_.runs.map(_.text)).toList
 
     // ASCIIHexDecode, with whitespace and > terminator
     val hex = content.map(b => f"${b & 0xff}%02x").mkString(" ") + " >"
@@ -222,7 +217,7 @@ class RealPdfSpec extends AnyFunSuite {
       hexOverFlate.getBytes("ISO-8859-1"))) == List("filtered text"))
 
     // unknown filter in the chain: page survives, no text
-    val p = RealPdf.parse(mk("/Filter /DCTDecode", content), 1)
+    val p = RealPdf.parse(mk("/Filter /DCTDecode", content))
     assert(p.length == 1 && p(0).runs.isEmpty)
   }
 
@@ -251,7 +246,7 @@ class RealPdfSpec extends AnyFunSuite {
     val content = "BT /F1 12 Tf 72 700 Td (lzw encoded text) Tj ET"
       .getBytes("ISO-8859-1")
     def texts(pdf: Array[Byte]): List[String] =
-      RealPdf.parse(pdf, 1).flatMap(_.runs.map(_.text)).toList
+      RealPdf.parse(pdf).flatMap(_.runs.map(_.text)).toList
     assert(texts(onePagePdf("/Filter /LZWDecode", lzwEncode(content)))
       == List("lzw encoded text"))
 
@@ -278,7 +273,7 @@ class RealPdfSpec extends AnyFunSuite {
     // truncated stream: decodes the prefix, never throws
     val enc = lzwEncode(content)
     RealPdf.parse(onePagePdf("/Filter /LZWDecode",
-      enc.take(enc.length / 2)), 1)
+      enc.take(enc.length / 2)))
   }
 
   test("RunLengthDecode: literal and repeat runs, EOD honored") {
@@ -311,7 +306,7 @@ class RealPdfSpec extends AnyFunSuite {
     out.write(128) // EOD
     out.write('X') // trailing garbage after EOD must be ignored
     val got = RealPdf.parse(onePagePdf("/Filter /RunLengthDecode",
-      out.toByteArray), 1).flatMap(_.runs.map(_.text)).toList
+      out.toByteArray)).flatMap(_.runs.map(_.text)).toList
     assert(got == List("run" + "n" * 40 + " length"))
   }
 
@@ -321,7 +316,7 @@ class RealPdfSpec extends AnyFunSuite {
     // Flate stream with different object numbers
     val bytes = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_rc4.pdf").toURI))
-    val pages = RealPdf.parse(bytes, 1)
+    val pages = RealPdf.parse(bytes)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList ==
       List("rc4 plain stream", "rc4 over flate"))
@@ -333,7 +328,7 @@ class RealPdfSpec extends AnyFunSuite {
     val uAt = s.indexOf("/U <") + 4
     val broken = bytes.clone()
     broken(uAt) = (if (broken(uAt) == '0') '1' else '0').toByte
-    val locked = RealPdf.parse(broken, 1)
+    val locked = RealPdf.parse(broken)
     assert(locked.length == 1 && locked(0).runs.isEmpty)
   }
 
@@ -343,7 +338,7 @@ class RealPdfSpec extends AnyFunSuite {
     // with PKCS#7 padding; one plain-AES stream + one AES-over-Flate
     val bytes = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_aes.pdf").toURI))
-    val pages = RealPdf.parse(bytes, 1)
+    val pages = RealPdf.parse(bytes)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList ==
       List("aes plain stream", "aes over flate"))
@@ -354,21 +349,21 @@ class RealPdfSpec extends AnyFunSuite {
     val uAt = s.indexOf("/U <") + 4
     val broken = bytes.clone()
     broken(uAt) = (if (broken(uAt) == '0') '1' else '0').toByte
-    val locked = RealPdf.parse(broken, 1)
+    val locked = RealPdf.parse(broken)
     assert(locked.length == 1 && locked(0).runs.isEmpty)
     // corrupted ciphertext must not throw (and never yields text runs
     // that the tokenizer would mistake for valid operators crashing)
     val mangled = bytes.clone()
     val streamAt = s.indexOf("stream\n") + 7
     mangled(streamAt + 20) = 0x7f
-    RealPdf.parse(mangled, 1)
+    RealPdf.parse(mangled)
   }
 
   test("/DecodeParms /Predictor: PNG row filters and TIFF differencing") {
     val content = ("BT /F1 12 Tf 72 700 Td (predictor protected text " +
       "with enough bytes to span many rows) Tj ET").getBytes("ISO-8859-1")
     def texts(pdf: Array[Byte]): List[String] =
-      RealPdf.parse(pdf, 1).flatMap(_.runs.map(_.text)).toList
+      RealPdf.parse(pdf).flatMap(_.runs.map(_.text)).toList
     val want = List("predictor protected text with enough bytes to " +
       "span many rows")
 
@@ -438,7 +433,7 @@ class RealPdfSpec extends AnyFunSuite {
         "%%EOF\n").getBytes("ISO-8859-1")
     }
     def text(pdf: Array[Byte]): String =
-      RealPdf.parse(pdf, 1).flatMap(_.runs.map(_.text)).mkString
+      RealPdf.parse(pdf).flatMap(_.runs.map(_.text)).mkString
     // WinAnsi: 93 94 = double quotes, 97 = em dash, 80 = euro
     assert(text(onePageFont("/WinAnsiEncoding",
       Array(0x93, 0x48, 0x94, 0x97, 0x80).map(_.toByte))) == "“H”—€")
@@ -472,7 +467,7 @@ class RealPdfSpec extends AnyFunSuite {
         "/Type /Encoding /Differences [65 /eacute /emdash /uni0171 " +
         "/glyph9999] >> >>") +
       "%%EOF\n").getBytes("ISO-8859-1")
-    val pages = RealPdf.parse(pdf, 1)
+    val pages = RealPdf.parse(pdf)
     assert(pages(0).runs.map(_.text).toList == List("é—űD"))
     // widths still index by code: (500+600+700+800)/1000 * 10 = 26
     val r = pages(0).runs(0)
@@ -486,7 +481,7 @@ class RealPdfSpec extends AnyFunSuite {
     // objects decrypt with the FILE key directly (no per-object mix)
     val bytes = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_aes256.pdf").toURI))
-    val pages = RealPdf.parse(bytes, 1)
+    val pages = RealPdf.parse(bytes)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList ==
       List("aes256 plain stream", "aes256 over flate"))
@@ -496,7 +491,7 @@ class RealPdfSpec extends AnyFunSuite {
     val uAt = s.indexOf("/U <") + 4
     val broken = bytes.clone()
     broken(uAt) = (if (broken(uAt) == '0') '1' else '0').toByte
-    val locked = RealPdf.parse(broken, 1)
+    val locked = RealPdf.parse(broken)
     assert(locked.length == 1 && locked(0).runs.isEmpty)
   }
 
@@ -511,14 +506,14 @@ class RealPdfSpec extends AnyFunSuite {
       (0 until 1 + next(40)).foreach { _ =>
         b(next(b.length)) = next(256).toByte
       }
-      RealPdf.parse(b, 1) // must not throw, whatever came out
+      RealPdf.parse(b) // must not throw, whatever came out
     }
     // deep-nesting bomb: bounded recursion, not StackOverflowError
     val bomb = ("%PDF-1.4\n1 0 obj " + "[" * 100000 +
       " /Type /Catalog ").getBytes
-    assert(RealPdf.parse(bomb, 1) == Vector.empty)
+    assert(RealPdf.parse(bomb) == Vector.empty)
     val dictBomb = ("%PDF-1.4\n1 0 obj " + "<< /A " * 50000).getBytes
-    assert(RealPdf.parse(dictBomb, 1) == Vector.empty)
+    assert(RealPdf.parse(dictBomb) == Vector.empty)
     // the seven ex_realpdf generator variants (classic/Flate/ObjStm/
     // LZW/two-page/RC4/CJK-CMap) under the same mutation storm — these bytes feed a
     // driver query, so crash-robustness is contract, not nicety
@@ -527,7 +522,7 @@ class RealPdfSpec extends AnyFunSuite {
       (0 until 1 + next(30)).foreach { _ =>
         b(next(b.length)) = next(256).toByte
       }
-      RealPdf.parse(b, 1)
+      RealPdf.parse(b)
     }
     // the r04 media/form/rotation paths under the same storm: MixedGen's
     // image-XObject (incl. inline) and form-recursion variants — these
@@ -538,7 +533,7 @@ class RealPdfSpec extends AnyFunSuite {
       (0 until 1 + next(30)).foreach { _ =>
         b(next(b.length)) = next(256).toByte
       }
-      RealPdf.parseDoc(b, 1)
+      RealPdf.parseDoc(RealPdf.open(b))
     }
     // the scanned codecs under the storm: CCITT (kind 6) and JBIG2
     // (kind 7, incl. the MQ decoder + segment parser) — corrupt
@@ -548,8 +543,8 @@ class RealPdfSpec extends AnyFunSuite {
       (0 until 1 + next(30)).foreach { _ =>
         b(next(b.length)) = next(256).toByte
       }
-      RealPdf.parseDoc(b, 1)
-      RealPdf.imageCodecBytes(b, 5)
+      RealPdf.parseDoc(RealPdf.open(b))
+      RealPdf.imageCodecBytes(RealPdf.open(b), 5)
     }
   }
 
@@ -601,7 +596,7 @@ class RealPdfSpec extends AnyFunSuite {
     w("trailer\n<< /Size 8 /Root 1 0 R /Encrypt 6 0 R /ID [" +
       hex(id0) + " " + hex(id0) + "] >>\nstartxref\n0\n%%EOF\n")
 
-    val pages = RealPdf.parse(out.toByteArray, 1)
+    val pages = RealPdf.parse(out.toByteArray)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList ==
       List("inside encrypted objstm"))
@@ -609,7 +604,7 @@ class RealPdfSpec extends AnyFunSuite {
 
   test("generator RC4 variant decrypts to its ground-truth lines") {
     val pdf = graft.gen.PdfGen.makePdf(7L, 5)
-    val pages = RealPdf.parse(pdf, 1)
+    val pages = RealPdf.parse(pdf)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList ==
       graft.gen.PdfGen.contentLines(7L, 5).toList)
@@ -620,7 +615,7 @@ class RealPdfSpec extends AnyFunSuite {
     // hex-string content with a real CJK prefix on every line
     (0 until 5).foreach { i =>
       val pdf = graft.gen.PdfGen.makePdf(i.toLong, 6)
-      val pages = RealPdf.parse(pdf, 1)
+      val pages = RealPdf.parse(pdf)
       assert(pages.length == 1)
       val want = graft.gen.PdfGen.contentLines(i.toLong, 6)
       assert(pages(0).runs.map(_.text).toList == want.toList, s"doc $i")
@@ -635,7 +630,7 @@ class RealPdfSpec extends AnyFunSuite {
     // shape the reference's pdfminer resolves (setup.sql:72-91)
     val bytes = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_font.pdf").toURI))
-    val pages = RealPdf.parse(bytes, 1)
+    val pages = RealPdf.parse(bytes)
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList == List("abc€", "a b"))
     val r1 = pages(0).runs(0)
@@ -656,7 +651,7 @@ class RealPdfSpec extends AnyFunSuite {
     // /W [1 [500 600 700] 5 6 800], /DW 1000, dummy /FontFile2
     val bytes = Files.readAllBytes(Paths.get(
       getClass.getResource("/fixture_cid.pdf").toURI))
-    val pages = RealPdf.parse(bytes, 1)
+    val pages = RealPdf.parse(bytes)
     assert(pages.length == 1)
     assert((pages(0).width, pages(0).height) == (400.0, 600.0))
     // 2-byte CIDs decode through the CMap: bfchar, scalar bfrange,
@@ -685,7 +680,7 @@ class RealPdfSpec extends AnyFunSuite {
     // /ToUnicode — r04 resolves it to the built-in Adobe Core AFM
     // table (pdfminer ships the same metrics), so advances are exact:
     // Σwidths("Hello, world!") = 5501/1000 em x 12pt = 66.012
-    val pages = RealPdf.parse(fixture, 1)
+    val pages = RealPdf.parse(fixture)
     val r1 = pages(0).runs(0)
     assert(r1.x0 == 72.0 && math.abs(r1.x1 - 138.012) < 1e-9)
     // a font OUTSIDE the standard 14 still takes the estimate path
@@ -693,7 +688,7 @@ class RealPdfSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.ISO_8859_1)
     val odd = s.replace("/BaseFont /Helvetica", "/BaseFont /Oddball12")
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    val est = RealPdf.parse(odd, 1)(0).runs(0)
+    val est = RealPdf.parse(odd)(0).runs(0)
     assert((est.x0, est.x1) == (72.0, 150.0)) // 13 glyphs x 6pt
   }
 
@@ -703,7 +698,7 @@ class RealPdfSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.ISO_8859_1)
     val noCat = s.replace("/Type /Catalog", "/Type /NotACat")
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    val pages = RealPdf.parse(noCat, 1)
+    val pages = RealPdf.parse(noCat)
     assert(pages.length == 2)
     // inheritance is lost without the tree: page 1 falls to the default
     assert((pages(0).width, pages(0).height) == (612.0, 792.0))
@@ -721,7 +716,7 @@ class RealPdfSpec extends AnyFunSuite {
       "4 0 obj << /Length 1 >> all of it"
     val content =
       s"BT /F1 12 Tf 72 700 Td ($poison) Tj ET".getBytes("ISO-8859-1")
-    val texts = RealPdf.parse(onePagePdf("", content), 1)
+    val texts = RealPdf.parse(onePagePdf("", content))
       .flatMap(_.runs.map(_.text)).toList
     assert(texts == List(poison))
   }
@@ -730,7 +725,7 @@ class RealPdfSpec extends AnyFunSuite {
     // MixedGen variant-1 doc (i=1): text block then /Im0 (obj 5) and
     // /Im1 (obj 6) — dims are the generator's formula values
     val bytes = graft.gen.MixedGen.fileBytes(1)
-    val (pages, images) = RealPdf.parseDoc(bytes, 1)
+    val (pages, images) = RealPdf.parseDoc(RealPdf.open(bytes))
     assert(pages.length == 1)
     assert(images == Vector(
       RealPdf.PdfImage(page = 1, seq = 0, objNum = 5, width = 24, height = 16),
@@ -740,13 +735,13 @@ class RealPdfSpec extends AnyFunSuite {
     assert(pages(0).runs.nonEmpty &&
       pages(0).runs.forall(_.text.startsWith("Pic ")))
     // the raw /DeviceGray payload comes back sample-exact
-    val px = RealPdf.imageBytes(bytes, 5)
+    val px = RealPdf.imageBytes(RealPdf.open(bytes), 5)
     assert(px.exists(_.length == 24 * 16))
   }
 
   test("XObjects: form content executes recursively — text AND its image paint") {
     val bytes = graft.gen.MixedGen.fileBytes(2) // variant-2 doc (i=2)
-    val (pages, images) = RealPdf.parseDoc(bytes, 1)
+    val (pages, images) = RealPdf.parseDoc(RealPdf.open(bytes))
     assert(pages.length == 1)
     val texts = pages(0).runs.map(_.text)
     assert(texts.count(_.startsWith("Main ")) == 8)  // nPage(2) = 6+2
@@ -770,7 +765,7 @@ class RealPdfSpec extends AnyFunSuite {
       (s"5 0 obj\n<< /Type /XObject /Subtype /Form /Resources " +
         s"<< /XObject << /Fm0 5 0 R >> >> /Length ${form.length} >>\nstream\n" +
         form + "\nendstream\nendobj\n%%EOF\n").getBytes("ISO-8859-1")
-    val (pages, images) = RealPdf.parseDoc(pdf, 1)
+    val (pages, images) = RealPdf.parseDoc(RealPdf.open(pdf))
     assert(pages.length == 1)
     // depth cap 8: page-level Do is depth 0→1, so 8 executions emit text
     assert(pages(0).runs.count(_.text == "in form") == 8)
@@ -792,7 +787,7 @@ class RealPdfSpec extends AnyFunSuite {
 
     // /Rotate 90 inherited from the Pages node: (x,y) -> (y, w - x),
     // dims (h, w) = (792, 612)
-    val p90 = RealPdf.parse(pdfWithRotate(" /Rotate 90"), 1).head
+    val p90 = RealPdf.parse(pdfWithRotate(" /Rotate 90")).head
     assert((p90.width, p90.height) == (792.0, 612.0))
     val r = p90.runs.head
     assert(r.text == "turned")
@@ -802,17 +797,17 @@ class RealPdfSpec extends AnyFunSuite {
     assert(math.abs(r.y0 - 482.0) < 1e-9 && r.y1 == 512.0)
 
     // /Rotate 180: (x,y) -> (w-x, h-y), dims unchanged
-    val p180 = RealPdf.parse(pdfWithRotate(" /Rotate 180"), 1).head
+    val p180 = RealPdf.parse(pdfWithRotate(" /Rotate 180")).head
     assert((p180.width, p180.height) == (612.0, 792.0))
     val r180 = p180.runs.head
     assert(math.abs(r180.x1 - 512.0) < 1e-9 &&
            math.abs(r180.x0 - 482.0) < 1e-9)
     assert(math.abs(r180.y1 - 592.0) < 1e-9)
     // negative / wrapped values normalize: -90 == 270
-    val p270 = RealPdf.parse(pdfWithRotate(" /Rotate -90"), 1).head
+    val p270 = RealPdf.parse(pdfWithRotate(" /Rotate -90")).head
     assert((p270.width, p270.height) == (792.0, 612.0))
     // unrotated output is bit-identical to the pre-/Rotate rounds
-    val p0 = RealPdf.parse(pdfWithRotate(""), 1).head
+    val p0 = RealPdf.parse(pdfWithRotate("")).head
     val r0 = p0.runs.head
     assert(r0.x0 == 100.0 && r0.y0 == 200.0 && r0.y1 == 210.0)
   }
@@ -822,7 +817,7 @@ class RealPdfSpec extends AnyFunSuite {
     // pinned by the committed fixture
     val content = ("BT /F1 11 Tf 72 650 Td <FFFE48006900> Tj ET")
       .getBytes("ISO-8859-1")
-    val pages = RealPdf.parse(onePagePdf("", content), 1)
+    val pages = RealPdf.parse(onePagePdf("", content))
     val r = pages.head.runs.head
     assert(r.text == "Hi")
     // estimate path: 2 decoded glyphs (not 6 bytes) * 0.5em * 11pt
@@ -842,12 +837,12 @@ class RealPdfSpec extends AnyFunSuite {
       .getBytes("ISO-8859-1")) ++ content ++
       "\nendstream\nendobj\n%%EOF\n".getBytes("ISO-8859-1")
     // cropped-scan box [30 40 642 832]: dims 612x792, origin subtracted
-    val p = RealPdf.parse(pdf("30 40 642 832", ""), 1).head
+    val p = RealPdf.parse(pdf("30 40 642 832", "")).head
     assert((p.width, p.height) == (612.0, 792.0))
     val r = p.runs.head
     assert(r.x0 == 70.0 && r.y0 == 660.0 && r.y1 == 670.0)
     // origin composes with /Rotate 90: (x,y) -> (y - lly, w - (x - llx))
-    val p90 = RealPdf.parse(pdf("30 40 642 832", " /Rotate 90"), 1).head
+    val p90 = RealPdf.parse(pdf("30 40 642 832", " /Rotate 90")).head
     assert((p90.width, p90.height) == (792.0, 612.0))
     val r90 = p90.runs.head
     assert(r90.x0 == 660.0 && r90.y1 == 542.0) // y-oy=660; w-(x-ox)=542
@@ -857,7 +852,7 @@ class RealPdfSpec extends AnyFunSuite {
     val content = ("BT /F1 10 Tf 50 700 Td (one) Tj " +
       "200 Tz (two) Tj ET " + // doubled advances from here
       "BT /F1 10 Tf 50 600 Td 5 Ts (up) Tj ET").getBytes("ISO-8859-1")
-    val pages = RealPdf.parse(onePagePdf("", content), 1)
+    val pages = RealPdf.parse(onePagePdf("", content))
     val runs = pages.head.runs
     assert(runs.map(_.text).toList == List("one", "two", "up"))
     val one = runs(0); val two = runs(1); val up = runs(2)
@@ -890,7 +885,7 @@ class RealPdfSpec extends AnyFunSuite {
         s"/Matrix [2 0 0 2 100 50] /BBox [0 0 612 792] " +
         s"/Length ${form.length} >>\nstream\n" +
         form + "\nendstream\nendobj\n%%EOF\n").getBytes("ISO-8859-1")
-    val pages = RealPdf.parse(pdf, 1)
+    val pages = RealPdf.parse(pdf)
     val r = pages(0).runs.head
     assert(r.text == "scaled")
     assert(r.x0 == 120.0 && r.y0 == 90.0)
@@ -920,7 +915,7 @@ class RealPdfSpec extends AnyFunSuite {
       (s"6 0 obj\n<< /Type /XObject /Subtype /Form " +
         s"/Matrix [1 0 0 1 7 8] /Length ${inner.length} >>\nstream\n" +
         inner + "\nendstream\nendobj\n%%EOF\n").getBytes("ISO-8859-1")
-    val pages = RealPdf.parse(pdf, 1)
+    val pages = RealPdf.parse(pdf)
     val r = pages(0).runs.head
     assert(r.text == "deep")
     assert(r.x0 == 57.0 && r.y0 == 68.0) // (7+50, 8+60)
@@ -933,7 +928,7 @@ class RealPdfSpec extends AnyFunSuite {
     val content = ("BT /F1 12 Tf 72 700 Td (before) Tj ET " +
       "BI /W 6 /H 2 /CS /G /BPC 8 ID xxEIxxyyzzww EI " +
       "BT /F1 12 Tf 72 680 Td (after) Tj ET").getBytes("ISO-8859-1")
-    val (pages, images) = RealPdf.parseDoc(onePagePdf("", content), 1)
+    val (pages, images) = RealPdf.parseDoc(RealPdf.open(onePagePdf("", content)))
     assert(pages(0).runs.map(_.text).toList == List("before", "after"))
     assert(images == Vector(RealPdf.PdfImage(1, 0, 0, 6, 2)))
   }
@@ -945,7 +940,7 @@ class RealPdfSpec extends AnyFunSuite {
     val content = ("BT /F1 12 Tf 72 700 Td (before bomb) Tj ET " +
       "BI /W " + "[" * 200 + " ID xx EI " +
       "BT /F1 12 Tf 72 680 Td (after bomb) Tj ET").getBytes("ISO-8859-1")
-    val (pages, _) = RealPdf.parseDoc(onePagePdf("", content), 1)
+    val (pages, _) = RealPdf.parseDoc(RealPdf.open(onePagePdf("", content)))
     val texts = pages.head.runs.map(_.text).toList
     assert(texts.contains("before bomb") && texts.contains("after bomb"),
       s"got $texts")
@@ -976,9 +971,9 @@ class RealPdfSpec extends AnyFunSuite {
         s"/ColorSpace /DeviceRGB /BitsPerComponent 8 /Filter /DCTDecode " +
         s"/Length ${jpeg.length} >>\nstream\n").getBytes("ISO-8859-1") ++
       jpeg ++ "\nendstream\nendobj\n%%EOF\n".getBytes("ISO-8859-1")
-    val (_, images) = RealPdf.parseDoc(pdf, 1)
+    val (_, images) = RealPdf.parseDoc(RealPdf.open(pdf))
     assert(images == Vector(RealPdf.PdfImage(1, 0, 5, 13, 7)))
-    val bytes = RealPdf.imageBytes(pdf, 5).get
+    val bytes = RealPdf.imageBytes(RealPdf.open(pdf), 5).get
     assert(bytes.sameElements(jpeg))
     val back = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(bytes))
@@ -1115,10 +1110,10 @@ class RealPdfSpec extends AnyFunSuite {
   test("scanned G3 fixture: K=0 and K=2 payloads recover as codec-ready PNG") {
     for (k <- Seq(0, 2)) {
       val pdf = graft.gen.CcittGen.makeScanPdf(3, k = k)
-      val (pages, images) = RealPdf.parseDoc(pdf, 1)
+      val (pages, images) = RealPdf.parseDoc(RealPdf.open(pdf))
       assert(images == Vector(RealPdf.PdfImage(1, 0, 5, 200, 120)))
       assert(pages.head.runs.exists(_.text.startsWith("Scan 3")))
-      val png = RealPdf.imageCodecBytes(pdf, 5).get
+      val png = RealPdf.imageCodecBytes(RealPdf.open(pdf), 5).get
       val img = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(png))
       assert(img.getWidth == 200 && img.getHeight == 120)
@@ -1131,10 +1126,10 @@ class RealPdfSpec extends AnyFunSuite {
 
   test("scanned-style fixture: CCITT payload recovers as codec-ready PNG") {
     val pdf = graft.gen.CcittGen.makeScanPdf(1)
-    val (pages, images) = RealPdf.parseDoc(pdf, 1)
+    val (pages, images) = RealPdf.parseDoc(RealPdf.open(pdf))
     assert(images == Vector(RealPdf.PdfImage(1, 0, 5, 200, 120)))
     assert(pages.head.runs.exists(_.text.startsWith("Scan 1")))
-    val png = RealPdf.imageCodecBytes(pdf, 5).get
+    val png = RealPdf.imageCodecBytes(RealPdf.open(pdf), 5).get
     val img = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(png))
     assert(img.getWidth == 200 && img.getHeight == 120)
@@ -1173,7 +1168,7 @@ class RealPdfSpec extends AnyFunSuite {
       s"/Columns $w >> /Length ${data.length} >>\nstream\n")
       .getBytes("ISO-8859-1")) ++ data ++
       "\nendstream\nendobj\n%%EOF\n".getBytes("ISO-8859-1")
-    val png = RealPdf.imageCodecBytes(pdf, 5).get
+    val png = RealPdf.imageCodecBytes(RealPdf.open(pdf), 5).get
     val img = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(png))
     assert(img.getWidth == w && img.getHeight == h)
@@ -1207,7 +1202,7 @@ class RealPdfSpec extends AnyFunSuite {
   test("predefined CJK CMaps: UniGB-UCS2-H codes decode as UTF-16BE identity") {
     // "中文测试" — UTF-16BE code units ARE the codes under the Unicode
     // predefined CMaps, so extraction needs no Unicode→CID tables
-    val pages = RealPdf.parse(cjkPdf("UniGB-UCS2-H", "4E2D65876D4B8BD5"), 1)
+    val pages = RealPdf.parse(cjkPdf("UniGB-UCS2-H", "4E2D65876D4B8BD5"))
     assert(pages.length == 1)
     assert(pages(0).runs.map(_.text).toList == List("中文测试"))
     // every glyph advances at /DW (CIDs are unknowable without the
@@ -1221,7 +1216,7 @@ class RealPdfSpec extends AnyFunSuite {
     // CIDs — it must not: codes under a predefined Unicode CMap are not
     // CIDs, so per-CID widths are meaningless and every glyph takes /DW
     val p1 = RealPdf.parse(cjkPdf("UniJIS-UCS2-H", "65E5672C8A9E",
-      w = " /W [20069 [100] 26412 [100] 35486 [100]]", dw = 900), 1)
+      w = " /W [20069 [100] 26412 [100] 35486 [100]]", dw = 900))
     assert(p1(0).runs.map(_.text).toList == List("日本語"))
     val r1 = p1(0).runs.head
     // 3 × 900/1000 × 12 = 32.4
@@ -1242,54 +1237,54 @@ class RealPdfSpec extends AnyFunSuite {
       s"7 0 obj\n<< /Length ${cmap.length} >>\nstream\n$cmap\nendstream\nendobj\n" +
       "%%EOF\n").getBytes("ISO-8859-1")
     // <65E5> remapped to "A" by ToUnicode; <672C> falls to the identity
-    assert(RealPdf.parse(pdf2, 1)(0).runs.map(_.text).toList == List("A本"))
+    assert(RealPdf.parse(pdf2)(0).runs.map(_.text).toList == List("A本"))
   }
 
   test("charset CMaps: GBK/RKSJ/UHC/EUC-JP codes decode through the locale charset") {
     // GBK-EUC-H: GBK bytes D6D0 CEC4 = 中文, mixed with a 1-byte ASCII
     // code (lead < 0x81) — variable-length code extraction
-    val gbk = RealPdf.parse(cjkPdf("GBK-EUC-H", "41D6D0CEC4"), 1)
+    val gbk = RealPdf.parse(cjkPdf("GBK-EUC-H", "41D6D0CEC4"))
     assert(gbk(0).runs.map(_.text).toList == List("A中文"))
     // 3 codes × /DW 1000 × 12pt = 36 (widths are /DW-only: CIDs unknown)
     val r = gbk(0).runs.head
     assert(math.abs(r.x1 - r.x0 - 36.0) < 1e-9)
     // 90ms-RKSJ-H: Shift_JIS 93FA 967B 8CEA = 日本語 plus the 1-byte
     // halfwidth katakana B1 = ｱ (the SJIS single-byte 0xA1-0xDF range)
-    val sjis = RealPdf.parse(cjkPdf("90ms-RKSJ-H", "93FA967B8CEAB1"), 1)
+    val sjis = RealPdf.parse(cjkPdf("90ms-RKSJ-H", "93FA967B8CEAB1"))
     assert(sjis(0).runs.map(_.text).toList == List("日本語ｱ"))
     // KSCms-UHC-H: MS949 C7D1 = 한
-    val uhc = RealPdf.parse(cjkPdf("KSCms-UHC-H", "C7D1"), 1)
+    val uhc = RealPdf.parse(cjkPdf("KSCms-UHC-H", "C7D1"))
     assert(uhc(0).runs.map(_.text).toList == List("한"))
     // EUC-H (Adobe-Japan1 EUC-JP): C6FC = 日
-    val euc = RealPdf.parse(cjkPdf("EUC-H", "C6FC"), 1)
+    val euc = RealPdf.parse(cjkPdf("EUC-H", "C6FC"))
     assert(euc(0).runs.map(_.text).toList == List("日"))
     // B5pc-H: Big5 A4A4 = 中
-    val b5 = RealPdf.parse(cjkPdf("B5pc-H", "A4A4"), 1)
+    val b5 = RealPdf.parse(cjkPdf("B5pc-H", "A4A4"))
     assert(b5(0).runs.map(_.text).toList == List("中"))
   }
 
   test("predefined CJK CMaps: UniKS-UTF16-H surrogate pairs recompose; code 0 is U+FFFD") {
     // U+20BB7 (𠮷) is D842 DFB7 in UTF-16BE — two 2-byte codes whose raw
     // chars recompose the supplementary character in the extracted text
-    val p = RealPdf.parse(cjkPdf("UniKS-UTF16-H", "D842DFB7AC00"), 1)
+    val p = RealPdf.parse(cjkPdf("UniKS-UTF16-H", "D842DFB7AC00"))
     assert(p(0).runs.map(_.text).toList == List("𠮷가"))
     assert(p(0).runs.head.text.codePointAt(0) == 0x20BB7)
     // code 0000 has no text identity even under the identity CMaps
-    val z = RealPdf.parse(cjkPdf("UniGB-UCS2-H", "00004E2D"), 1)
+    val z = RealPdf.parse(cjkPdf("UniGB-UCS2-H", "00004E2D"))
     assert(z(0).runs.map(_.text).toList == List("�中"))
     // a predefined CMap outside BOTH supported families (Unicode
     // identity, locale charset) must not take the identity path: codes
     // are neither UTF-16 nor a JDK charset — U+FFFD (CNS-EUC is the
     // EUC-TW family, deliberately unmapped: its 4-byte SS2 planes have
     // no safe DBCS collapse)
-    val g = RealPdf.parse(cjkPdf("CNS-EUC-H", "D6D0"), 1)
+    val g = RealPdf.parse(cjkPdf("CNS-EUC-H", "D6D0"))
     assert(g(0).runs.map(_.text).toList == List("�"))
   }
 
   test("link annotations: URI links with display-mapped rects; decoys skipped") {
     // unrotated doc (i=0, even → INDIRECT /A object): identity mapping;
     // the GoTo (/Dest), /Square, and action-less decoys never emit
-    val l0 = RealPdf.links(graft.gen.LinkGen.fileBytes(0))
+    val l0 = RealPdf.links(RealPdf.open(graft.gen.LinkGen.fileBytes(0)))
     assert(l0 == Vector(
       RealPdf.PdfLink(1, "https://site0.example/page0?ref=a0",
         72, 700, 200, 714),
@@ -1297,14 +1292,14 @@ class RealPdfSpec extends AnyFunSuite {
         72, 650, 260, 664)))
     // rotated doc (i=2, /Rotate 90 on 612×792): (x,y) → (y, 612−x),
     // normalized corners — matches LinkGen's independent hand mapping
-    val l2 = RealPdf.links(graft.gen.LinkGen.fileBytes(2))
+    val l2 = RealPdf.links(RealPdf.open(graft.gen.LinkGen.fileBytes(2)))
     assert(l2 == Vector(
       RealPdf.PdfLink(1, "https://site2.example/page2?ref=a2",
         700, 412, 714, 540),
       RealPdf.PdfLink(1, "http://blog2.example/post2",
         650, 352, 664, 540)))
     // text extraction is unaffected by the annotation army
-    val pages = RealPdf.parse(graft.gen.LinkGen.fileBytes(0), 1)
+    val pages = RealPdf.parse(graft.gen.LinkGen.fileBytes(0))
     assert(pages.length == 1 &&
       pages(0).runs.forall(_.text.startsWith("Link doc 0")))
   }
@@ -1312,13 +1307,13 @@ class RealPdfSpec extends AnyFunSuite {
   test("outline: preorder walk, /Dest and /GoTo targets, cycles terminate") {
     // LinkGen doc 0: chapter (Dest) → child section → chapter 2 (GoTo
     // action); Latin-1 accents in the title decode via PDFDocEncoding
-    val o0 = RealPdf.outline(graft.gen.LinkGen.fileBytes(0))
+    val o0 = RealPdf.outline(RealPdf.open(graft.gen.LinkGen.fileBytes(0)))
     assert(o0 == Vector(
       RealPdf.PdfOutline(0, 0, "Chapter 1 of doc 0", 1),
       RealPdf.PdfOutline(1, 1, "Section 1.1 m0", 1),
       RealPdf.PdfOutline(2, 0, "Chapter 2 résumé 0", 1)))
     // doc 3 (i % 4 == 3) carries no /Outlines
-    assert(RealPdf.outline(graft.gen.LinkGen.fileBytes(3)).isEmpty)
+    assert(RealPdf.outline(RealPdf.open(graft.gen.LinkGen.fileBytes(3))).isEmpty)
     // a crafted /Next cycle must terminate, keeping the pre-cycle items
     def obj(n: Int, body: String) = s"$n 0 obj\n$body\nendobj\n"
     val cyclic = ("%PDF-1.4\n" +
@@ -1329,7 +1324,7 @@ class RealPdfSpec extends AnyFunSuite {
       obj(8, "<< /Title (loop a) /Next 9 0 R >>") +
       obj(9, "<< /Title (loop b) /Next 8 0 R >>") +
       "%%EOF\n").getBytes("ISO-8859-1")
-    assert(RealPdf.outline(cyclic).map(_.title) ==
+    assert(RealPdf.outline(RealPdf.open(cyclic)).map(_.title) ==
       Vector("loop a", "loop b"))
     // mutation storm: outline() degrades, never throws or hangs
     var seed = 777
@@ -1337,8 +1332,32 @@ class RealPdfSpec extends AnyFunSuite {
     (0 until 150).foreach { i =>
       val b = graft.gen.LinkGen.fileBytes(i % 9)
       (0 until 1 + next(25)).foreach(_ => b(next(b.length)) = next(256).toByte)
-      RealPdf.outline(b)
+      RealPdf.outline(RealPdf.open(b))
     }
+  }
+
+  test("outline: target pages use the text's numbering when the page tree is missing") {
+    // the catalog's /Pages names an object that does not exist, so the
+    // pages come from the document-order /Type /Page fallback; the
+    // outline must number its target the same way the text does
+    def obj(n: Int, body: String) = s"$n 0 obj\n$body\nendobj\n"
+    def content(t: String) = s"BT /F1 12 Tf 72 700 Td ($t) Tj ET"
+    val pdf = ("%PDF-1.4\n" +
+      obj(1, "<< /Type /Catalog /Pages 99 0 R /Outlines 5 0 R >>") +
+      obj(3, "<< /Type /Page /Contents 6 0 R >>") +
+      obj(4, "<< /Type /Page /Contents 7 0 R >>") +
+      obj(5, "<< /Type /Outlines /First 8 0 R >>") +
+      obj(6, s"<< /Length ${content("one").length} >>\nstream\n" +
+        content("one") + "\nendstream") +
+      obj(7, s"<< /Length ${content("two").length} >>\nstream\n" +
+        content("two") + "\nendstream") +
+      obj(8, "<< /Title (Second) /Dest [4 0 R /XYZ 0 792 0] >>") +
+      "%%EOF\n").getBytes("ISO-8859-1")
+    val doc = RealPdf.open(pdf)
+    val pages = RealPdf.parseDoc(doc)._1
+    assert(pages.map(p => (p.page, p.runs.map(_.text).toList)) ==
+      Vector((1, List("one")), (2, List("two"))))
+    assert(RealPdf.outline(doc) == Vector(RealPdf.PdfOutline(0, 0, "Second", 2)))
   }
 
   test("link annotations: UTF-16BE /URI decodes; malformed bytes degrade") {
@@ -1352,7 +1371,7 @@ class RealPdfSpec extends AnyFunSuite {
         s"<< /Subtype /Link /Rect [1 2 3 4] /A << /S /URI /URI <$uri16> >> >> " +
         "<< /Subtype /Link /Rect [9] /A << /S /URI /URI (short rect) >> >> ] >>") +
       "%%EOF\n").getBytes("ISO-8859-1")
-    assert(RealPdf.links(pdf) ==
+    assert(RealPdf.links(RealPdf.open(pdf)) ==
       Vector(RealPdf.PdfLink(1, "http://é.example/a", 1, 2, 3, 4)))
     // mutation storm over the LinkGen fixtures: links() degrades, never
     // throws — these bytes feed the q_pdf_links driver query
@@ -1361,7 +1380,7 @@ class RealPdfSpec extends AnyFunSuite {
     (0 until 150).foreach { i =>
       val b = graft.gen.LinkGen.fileBytes(i % 9)
       (0 until 1 + next(25)).foreach(_ => b(next(b.length)) = next(256).toByte)
-      RealPdf.links(b)
+      RealPdf.links(RealPdf.open(b))
     }
   }
 
@@ -1373,19 +1392,19 @@ class RealPdfSpec extends AnyFunSuite {
     val want = FormGen.expected(36).groupBy(_.doc_id)
     (0 until 36).foreach { i =>
       val f = FormGen.fileName(i)
-      val got = RealPdf.formFields(FormGen.fileBytes(i)).map(ff =>
+      val got = RealPdf.formFields(RealPdf.open(FormGen.fileBytes(i))).map(ff =>
         FormGen.GtField(f, ff.pos, ff.page, ff.name, ff.ftype, ff.value,
           ff.x0, ff.y0, ff.x1, ff.y1))
       assert(got == want.getOrElse(f, Seq.empty).toVector, s"doc $i")
     }
     // pin the load-bearing decodes explicitly
-    val f2 = RealPdf.formFields(FormGen.fileBytes(2))
+    val f2 = RealPdf.formFields(RealPdf.open(FormGen.fileBytes(2)))
     assert(f2.find(_.name == "memo").get.value == "Memo № 2 ✓")
     assert(f2.find(_.name == "addr.line2").get.value == "inherited 2")
     assert(f2.find(_.name == "fullname").get.value == "José Müller 2")
     assert(!f2.exists(_.ftype == "sig"))
     // page text is unaffected by the form machinery
-    val pages = RealPdf.parse(FormGen.fileBytes(0), 1)
+    val pages = RealPdf.parse(FormGen.fileBytes(0))
     assert(pages.length == 1 &&
       pages(0).runs.forall(_.text.startsWith("Form doc 0")))
     // a /Kids cycle terminates; the self-reference is skipped while the
@@ -1400,7 +1419,7 @@ class RealPdfSpec extends AnyFunSuite {
       obj(6, "<< /FT /Tx /T (a) /V (v) /Kids [7 0 R 6 0 R] >>") +
       obj(7, "<< /Subtype /Widget /T (b) /Rect [1 2 3 4] >>") +
       "%%EOF\n").getBytes("ISO-8859-1")
-    assert(RealPdf.formFields(cyclic) ==
+    assert(RealPdf.formFields(RealPdf.open(cyclic)) ==
       Vector(RealPdf.PdfFormField(0, 1, "a.b", "text", "v", 1, 2, 3, 4)))
     // mutation storm: formFields() degrades, never throws or hangs —
     // these bytes feed the q_pdf_formfields driver query
@@ -1409,7 +1428,7 @@ class RealPdfSpec extends AnyFunSuite {
     (0 until 150).foreach { i =>
       val b = FormGen.fileBytes(i % 9)
       (0 until 1 + next(25)).foreach(_ => b(next(b.length)) = next(256).toByte)
-      RealPdf.formFields(b)
+      RealPdf.formFields(RealPdf.open(b))
     }
   }
 }

@@ -13,7 +13,7 @@ import scala.collection.mutable.ArrayBuffer
   * stream, then a token fold — different machinery from the
   * index-walking char machine, so agreement pins the spec.
   */
-class RtfSpec extends AnyFunSuite {
+class RtfSpec extends AnyFunSuite with TempDirs {
 
   // ---------- the token-fold twin ----------
 
@@ -336,7 +336,7 @@ class RtfSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", false).getOrCreate()
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("rtf-e2e").toString
+      val tmp = tempDir("rtf-e2e").toString
       graft.gen.RtfGen.write(tmp, 4)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(tmp, "mislabeled.txt"),

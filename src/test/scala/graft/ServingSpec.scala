@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ServingSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -39,7 +38,7 @@ class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val df = Seq((1L, "a,b", "x"), (2L, null, "y"))
       .toDF("id", "tricky", "v")
-    val path = Files.createTempDirectory("graft-csv").toString + "/out"
+    val path = tempDir("graft-csv").toString + "/out"
     Serving.exportCsv(df, path)
     val back = spark.read.option("header", "true").csv(path)
       .orderBy("id").collect()

@@ -6,13 +6,12 @@ import graft.pipeline.ExtractJob
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** SQL-surface parity: the reference's LITERAL serving SQL (modulo
   * doc_name→doc_id) runs unchanged via spark.sql over our output table —
   * a user of the reference can keep their queries.
   */
-class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -25,7 +24,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val ready: Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val out = Files.createTempDirectory("graft-sql").toString
+    val out = tempDir("graft-sql").toString
     ExtractJob.run(spark, CorpusGen.dataset(spark, 400, 42L),
       ExtractJob.Config(out, "sql", groups = 1, partitions = 8))
     ExtractJob.chunksView(spark, out)

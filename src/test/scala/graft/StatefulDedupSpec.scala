@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class StatefulDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StatefulDedupSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -20,14 +19,14 @@ class StatefulDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stateful streaming dedup passes each doc_id exactly once across batches") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val in = Files.createTempDirectory("graft-sd-in").toString
-    val ckpt = Files.createTempDirectory("graft-sd-ckpt").toString
+    val in = tempDir("graft-sd-in").toString
+    val ckpt = tempDir("graft-sd-ckpt").toString
 
     // batch 1 contains internal duplicates; batch 2 replays half of batch 1
     Seq("a", "b", "c", "a", "b").toDF("doc_id").coalesce(1)
       .write.mode("append").parquet(in)
 
-    val out = Files.createTempDirectory("graft-sd-out").toString
+    val out = tempDir("graft-sd-out").toString
     def drain(): Unit = {
       val stream = spark.readStream
         .schema("doc_id STRING").parquet(in).as[String]

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,9 +21,9 @@ class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming ingestion drains new files; restart ingests only new data") {
     spark.sparkContext.setLogLevel("WARN")
-    val in = Files.createTempDirectory("graft-stream-in").toString
-    val out = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val in = tempDir("graft-stream-in").toString
+    val out = tempDir("graft-stream-out").toString
+    val ckpt = tempDir("graft-stream-ckpt").toString
 
     // wave 1: docs [0, 200)
     CorpusGen.dataset(spark, 200, 42L).coalesce(2)
@@ -65,9 +65,9 @@ class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("raw-dir streaming: new real PDFs extracted exactly once across restarts") {
     spark.sparkContext.setLogLevel("WARN")
-    val in = Files.createTempDirectory("graft-rawstream-in")
-    val out = Files.createTempDirectory("graft-rawstream-out").toString
-    val ckpt = Files.createTempDirectory("graft-rawstream-ckpt").toString
+    val in = tempDir("graft-rawstream-in")
+    val out = tempDir("graft-rawstream-out").toString
+    val ckpt = tempDir("graft-rawstream-ckpt").toString
     val fixture = Files.readAllBytes(java.nio.file.Paths.get(
       getClass.getResource("/fixture_real.pdf").toURI))
     val objstm = Files.readAllBytes(java.nio.file.Paths.get(

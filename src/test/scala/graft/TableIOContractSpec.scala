@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Iceberg-readiness evidence (VERDICT r02 #9): the iceberg runtime jar
   * is absent in this sandbox, so what CAN be pinned is pinned —
@@ -25,7 +24,7 @@ import java.nio.file.Files
   *     --conf spark.sql.catalog.cat=org.apache.iceberg.spark.SparkCatalog
   *     --conf spark.sql.catalog.cat.type=hadoop|hive|rest ...
   */
-class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -52,7 +51,7 @@ class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("HadoopTableIO satisfies the overwrite-idempotence contract") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-tableio").toString
+    val root = tempDir("graft-tableio").toString
     contract(HadoopTableIO(root),
       () => (0L until 40L).map(i => (i, s"row_$i")).toDF("doc_id", "text"))
   }
@@ -72,7 +71,7 @@ class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ExtractJob writes data exclusively through the TableIO seam") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-seam").toString
+    val out = tempDir("graft-seam").toString
     val delegate = HadoopTableIO(out)
     val written = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     // recording wrapper: observes every group write the job performs

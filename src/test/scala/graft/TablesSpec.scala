@@ -183,7 +183,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"4 0 obj\n<< /Length ${content.length} >>\nstream\n")
       .getBytes("ISO-8859-1")) ++ content ++
       "\nendstream\nendobj\n%%EOF\n".getBytes("ISO-8859-1")
-    val runs = graft.extract.RealPdf.parse(pdf, 1).head.runs
+    val runs = graft.extract.RealPdf.parse(pdf).head.runs
     assert(runs.size == 9)
     val cells = Tables.detectPage(runs.toSeq)
     assert(cells.size == 9 &&

@@ -13,7 +13,7 @@ import java.nio.file.Files
   * math, environments, tabular TSV, accents) against TexGen's
   * hand-assembled ground truth, plus pins and the corruption storm.
   */
-class TexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TexSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -78,7 +78,7 @@ class TexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ingest e2e: 24 generated papers match TexGen ground truth exactly") {
-    val dir = Files.createTempDirectory("graft-tex-spec")
+    val dir = tempDir("graft-tex-spec")
     TexGen.write(dir.toString, 24)
     val got = RawFiles.read(spark, dir.toString).collect()
       .flatMap(d => d.spans.map(sp => (d.doc_id, sp.kind,

@@ -14,7 +14,7 @@ import java.nio.file.Files
   * record = one InputDoc, routed by MIME through the existing front
   * ends, identical through the batch scan and the streaming decode.
   */
-class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
+class WarcSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -111,7 +111,7 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ingest fan-out: one InputDoc per retained record, batch scan == streaming decode, misnamed WARC reroutes") {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = Files.createTempDirectory("graft-warcspec")
+    val dir = tempDir("graft-warcspec")
     WarcGen.write(dir.toString, 6)
     // a crawler's misnamed .txt that is really WARC still fans out
     Files.write(dir.resolve("mislabeled.txt"), WarcGen.fileBytes(2))

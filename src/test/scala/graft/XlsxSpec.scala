@@ -13,7 +13,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * parser — a different XML machine entirely (real parser vs hand
   * scanner), so agreement pins the spec, not the implementation.
   */
-class XlsxSpec extends AnyFunSuite {
+class XlsxSpec extends AnyFunSuite with TempDirs {
 
   // ---------- xlsx builder (test-local, deterministic) ----------
 
@@ -297,7 +297,7 @@ class XlsxSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", false).getOrCreate()
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("xlsx-e2e").toString
+      val tmp = tempDir("xlsx-e2e").toString
       graft.gen.XlsxGen.write(tmp, 6)
       // content magic: a workbook served with a .txt name still decodes
       java.nio.file.Files.write(
