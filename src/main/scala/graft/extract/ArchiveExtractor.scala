@@ -60,13 +60,34 @@ object ArchiveExtractor {
     bytes.length >= 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4
 
-  /** Zip magic AND not claimed by an OOXML/EPUB front end — those are
-    * zips whose decode belongs to their own extractor.
+  /** Zip magic AND not claimed by an OOXML/EPUB/ODF front end — those
+    * are zips whose decode belongs to their own extractor.
     */
-  def isPlainZip(bytes: Array[Byte]): Boolean =
-    isZip(bytes) && !DocxExtractor.isDocx(bytes) &&
-      !XlsxExtractor.isXlsx(bytes) && !PptxExtractor.isPptx(bytes) &&
-      !EpubExtractor.isEpub(bytes) && !OdtExtractor.isOdt(bytes)
+  def isPlainZip(bytes: Array[Byte]): Boolean = zipKind(bytes) == "zip"
+
+  /** The front end a payload with zip magic belongs to — "docx", "epub",
+    * "xlsx", "pptx" or "odt", in that precedence, when the format's
+    * marker entry is present (the `isDocx` … `isOdt` tests), else "zip";
+    * "" without zip magic. One walk reads every marker entry.
+    */
+  def zipKind(bytes: Array[Byte]): String =
+    if (!isZip(bytes)) ""
+    else {
+      val found = DocxExtractor.entries(bytes, ZipMarkers.map(_._2).toSet)
+      ZipMarkers.collectFirst {
+        case (k, m, ok) if found.get(m).exists(ok) => k
+      }.getOrElse("zip")
+    }
+
+  /** Zip-packaged formats: marker entry and the test its bytes must pass,
+    * in classification order.
+    */
+  private val ZipMarkers: Seq[(String, String, Array[Byte] => Boolean)] = Seq(
+    ("docx", DocxExtractor.DocPath, _ => true),
+    ("epub", EpubExtractor.ContainerPath, _ => true),
+    ("xlsx", XlsxExtractor.WorkbookPath, _ => true),
+    ("pptx", PptxExtractor.PresPath, _ => true),
+    ("odt", OdtExtractor.MimePath, OdtExtractor.isOdfMime))
 
   /** `ustar` magic at +257 (POSIX), or a v7-style header: printable
     * NUL-terminated name + valid octal size + plausible checksum field.

@@ -93,7 +93,7 @@ object DocxExtractor {
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4 && entry(bytes, DocPath).isDefined
 
-  private val DocPath = "word/document.xml"
+  private[extract] val DocPath = "word/document.xml"
   private val RelsPath = "word/_rels/document.xml.rels"
 
   /** First zip entry with this exact name, or None (including on any
@@ -101,14 +101,29 @@ object DocxExtractor {
     */
   private[extract] def entry(bytes: Array[Byte],
                              name: String): Option[Array[Byte]] =
+    entries(bytes, Set(name)).get(name)
+
+  /** The first zip entry of each of `names`, from ONE walk: a name maps
+    * to its bytes iff the walk reached and read its first occurrence
+    * before any zip-format error, which ends the walk — per name exactly
+    * what [[entry]] returns.
+    */
+  private[extract] def entries(bytes: Array[Byte],
+                               names: Set[String]): Map[String, Array[Byte]] = {
+    var out = Map.empty[String, Array[Byte]]
     try {
       val z = new ZipInputStream(new ByteArrayInputStream(bytes))
       try {
-        Iterator.continually(z.getNextEntry)
-          .takeWhile(_ != null)
-          .collectFirst { case e if e.getName == name => z.readAllBytes() }
+        var e = z.getNextEntry
+        while (e != null && out.size < names.size) {
+          if (names(e.getName) && !out.contains(e.getName))
+            out += e.getName -> z.readAllBytes()
+          e = z.getNextEntry
+        }
       } finally z.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(_) => () }
+    out
+  }
 
   private def mediaKind(target: String): String = {
     val dot = target.lastIndexOf('.')

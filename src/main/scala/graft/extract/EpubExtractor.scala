@@ -48,7 +48,7 @@ import Item.Media
   */
 object EpubExtractor {
 
-  private val ContainerPath = "META-INF/container.xml"
+  private[extract] val ContainerPath = "META-INF/container.xml"
 
   def isEpub(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&

@@ -58,9 +58,13 @@ object OdtExtractor {
   def isOdt(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, "mimetype").exists(m =>
-        OdfMimes.contains(
-          new String(m, java.nio.charset.StandardCharsets.UTF_8).trim))
+      DocxExtractor.entry(bytes, MimePath).exists(isOdfMime)
+
+  private[extract] val MimePath = "mimetype"
+
+  /** A `mimetype` entry naming one of the ODF document types. */
+  private[extract] def isOdfMime(m: Array[Byte]): Boolean =
+    OdfMimes.contains(new String(m, java.nio.charset.StandardCharsets.UTF_8).trim)
 
   private val MaxRepeat = 1000
 

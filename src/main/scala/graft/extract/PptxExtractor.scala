@@ -71,7 +71,7 @@ import Item.Text
   */
 object PptxExtractor {
 
-  private val PresPath = "ppt/presentation.xml"
+  private[extract] val PresPath = "ppt/presentation.xml"
   private val PresRels = "ppt/_rels/presentation.xml.rels"
 
   def isPptx(bytes: Array[Byte]): Boolean =

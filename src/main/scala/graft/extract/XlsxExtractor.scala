@@ -71,7 +71,7 @@ import scala.collection.mutable.ArrayBuffer
   */
 object XlsxExtractor {
 
-  private val WorkbookPath = "xl/workbook.xml"
+  private[extract] val WorkbookPath = "xl/workbook.xml"
   private val RelsPath = "xl/_rels/workbook.xml.rels"
 
   def isXlsx(bytes: Array[Byte]): Boolean =

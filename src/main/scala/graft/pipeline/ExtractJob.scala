@@ -18,11 +18,12 @@ import scala.jdk.CollectionConverters._
   *
   * Scale design (SURVEY.md §4):
   *  - ONE PASS per run ([[run]]): the docs of the uncommitted groups are
-  *    scanned, decoded, salted or merged, and extracted once; the
-  *    extracted rows are held (MEMORY_AND_DISK) with their group, and
-  *    each group is written from the held partitions that hold its docs.
-  *    The input is read at most twice — the bounded skew-decision sample
-  *    and the pass — whatever `groups` is.
+  *    scanned, decoded, salted or merged, and extracted once, in one job;
+  *    each pass partition holds its rows as one array per group, an RDD
+  *    block (MEMORY_AND_DISK), and each group is written from its own
+  *    arrays in the pass partitions that hold its docs. The input is read
+  *    at most twice — the bounded skew-decision sample and the pass —
+  *    whatever `groups` is.
   *  - NO shuffle in the hot path except the skew-salting repartition;
   *    extraction is embarrassingly parallel per document, ordering is
   *    computed in-memory per doc (the reference's ROW_NUMBER window
@@ -73,17 +74,18 @@ object ExtractJob {
                        groupsSkipped: Seq[Int], docsProcessed: Long,
                        elapsedMs: Long, salted: Boolean)
 
-  /** Extract an iterator of (group, doc) pairs, streaming
-    * (iterator-to-iterator — no partition materialization), recording one
-    * metrics row per group the partition saw. A task of the one-pass path
-    * holds docs of several groups, so the counters are kept per group and
-    * `duration_ms` is the task time spent on that group's docs (fetching
-    * each doc, extracting it and handing on its rows).
+  /** Extract an iterator of (group, doc) pairs into (group, row) pairs,
+    * streaming (iterator-to-iterator — no partition materialization),
+    * recording one metrics row per group the partition saw under
+    * partition id `part`. A task of the one-pass path holds docs of
+    * several groups, so the counters are kept per group and `duration_ms`
+    * is the task time spent on that group's docs (fetching each doc,
+    * extracting it and handing on its rows).
     */
   private def extractPartition(
-      docs: Iterator[(Int, InputDoc)], groups: Int, runId: String,
+      part: Int, docs: Iterator[(Int, InputDoc)], groups: Int, runId: String,
       acc: CollectionAccumulator[PartitionMetrics])
-      : Iterator[ExtractedRow] = {
+      : Iterator[(Int, ExtractedRow)] = {
     val tc = TaskContext.get()
     val nDocs, nSpans, nOut, nChunks, nText, nMedia, bytesIn, nanos =
       new Array[Long](groups)
@@ -94,7 +96,7 @@ object ExtractJob {
       if (g >= 0) nanos(g) += now - mark
       mark = now
     }
-    new Iterator[ExtractedRow] {
+    new Iterator[(Int, ExtractedRow)] {
       private var cur: Iterator[ExtractedRow] = Iterator.empty
       private var done = false
       override def hasNext: Boolean = {
@@ -119,8 +121,7 @@ object ExtractJob {
         if (!h && !done) {
           done = true
           (0 until groups).filter(nDocs(_) > 0).foreach { k =>
-            acc.add(PartitionMetrics(runId, k,
-              if (tc == null) -1 else tc.partitionId(),
+            acc.add(PartitionMetrics(runId, k, part,
               if (tc == null) -1L else tc.taskAttemptId(),
               nDocs(k), nSpans(k), nOut(k), nChunks(k), nText(k), nMedia(k),
               bytesIn(k), nanos(k) / 1000000L, "committed"))
@@ -128,7 +129,7 @@ object ExtractJob {
         }
         h
       }
-      override def next(): ExtractedRow = cur.next()
+      override def next(): (Int, ExtractedRow) = { hasNext; (g, cur.next()) }
     }
   }
 
@@ -137,14 +138,15 @@ object ExtractJob {
     pmod(xxhash64(col("doc_id")), lit(groups)).cast("int")
 
   /** Extract `docs` into `cfg.outDir`, checkpointed per group (group =
-    * pmod(xxhash64(doc_id), groups)). ONE pass over the docs of the
-    * uncommitted groups scans and decodes them, salts or merges their
-    * partitions, extracts them and holds the rows with their group
-    * (MEMORY_AND_DISK); the groups are then written and committed in
-    * order from the held rows. A run with one group to write writes it
-    * straight from the pass. The input is read at most twice per run
-    * — the bounded skew-decision sample and the pass — whatever `groups`
-    * is.
+    * pmod(xxhash64(doc_id), groups)). ONE pass (one job) over the docs of
+    * the uncommitted groups scans and decodes them, salts or merges their
+    * partitions and extracts them; each pass partition is held as one
+    * RDD block (MEMORY_AND_DISK) of one row array per group. The groups
+    * are then written and committed in order, each from its own arrays
+    * in the held partitions that hold its docs. A run with one group to
+    * write writes it straight from the pass. The input is read at most
+    * twice per run — the bounded skew-decision sample and the pass —
+    * whatever `groups` is.
     */
   def run(spark: SparkSession, docs: Dataset[InputDoc], cfg: Config)
       : RunReport =
@@ -189,9 +191,9 @@ object ExtractJob {
   }
 
   /** The shared run: skew decision, then the groups' write/commit loop.
-    * `onePass` selects how a group's frame is obtained — filtered from the
-    * rows one held extraction pass produced ([[run]], when more than one
-    * group is to be written), or a sub-job of its own ([[runBucketed]]).
+    * `onePass` selects how a group's frame is obtained — its rows in the
+    * blocks one held extraction pass produced ([[run]], when more than
+    * one group is to be written), or a sub-job of its own ([[runBucketed]]).
     */
   private def runImpl(spark: SparkSession, grouped: DataFrame, cfg: Config,
                       onePass: Boolean): RunReport = {
@@ -308,7 +310,7 @@ object ExtractJob {
     // partitions among nPart); normal docs hash into [0, nPart). A doc's
     // partition depends on its doc_id only, so a group's rows sit in the
     // same partitions whether it is extracted alone or with other groups
-    def extracted(docs: DataFrame): Dataset[ExtractedRow] =
+    def prepared(docs: DataFrame): Dataset[(Int, String, Seq[Span])] =
       (if (useSalt)
         docs.withColumn("_salt",
             when(col("_cost") >= cfg.bigDocBytes,
@@ -318,9 +320,10 @@ object ExtractJob {
         else if (mergeDown) docs.coalesce(nPart)
         else docs)
         .select("_group", "doc_id", "spans").as[(Int, String, Seq[Span])]
-        .mapPartitions(it => extractPartition(
-          it.map { case (g, id, spans) => (g, InputDoc(id, spans)) },
-          cfg.groups, cfg.runId, acc))
+    def docsOf(it: Iterator[(Int, String, Seq[Span])]) =
+      it.map { case (g, id, spans) => (g, InputDoc(id, spans)) }
+    // task closures take these, not `cfg`, whose TableIO stays driver-side
+    val (groups, runId) = (cfg.groups, cfg.runId)
 
     var docsProcessed = 0L
     def writeAndCommit(frameOf: Int => DataFrame): Unit = todo.foreach { g =>
@@ -339,18 +342,25 @@ object ExtractJob {
     // with one group left to write (groups = 1, or a resume) its own
     // sub-job is already the single pass: holding its rows buys nothing
     if (!onePass || todo.size <= 1)
-      writeAndCommit(g => extracted(withGroup.filter(col("_group") === g)).toDF())
+      writeAndCommit(g => prepared(withGroup.filter(col("_group") === g))
+        .mapPartitions(it => extractPartition(TaskContext.getPartitionId(),
+          docsOf(it), groups, runId, acc).map(_._2))
+        .toDF())
     else {
-      // the held rows recompute their group from doc_id — the same
-      // expression that made the input's `_group` in [[run]]
-      val held = extracted(withGroup.filter(col("_group").isin(todo: _*)))
-        .withColumn("_group", hashGroup(cfg.groups))
+      // one element per pass partition: its rows, one array per group.
+      // Metrics carry the held partition's own index, so a block lost and
+      // recomputed inside a pruned group write is still recorded under it
+      val held = prepared(withGroup.filter(col("_group").isin(todo: _*))).rdd
+        .mapPartitionsWithIndex { (i, it) =>
+          val by = Array.fill(groups)(Array.newBuilder[ExtractedRow])
+          extractPartition(i, docsOf(it), groups, runId, acc)
+            .foreach { case (g, r) => by(g) += r }
+          Iterator.single(by.map(_.result()))
+        }
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
         held.count() // the pass: a failure here commits nothing
-        val heldParts = held.rdd.getNumPartitions
         writeAndCommit { g =>
-          val rows = held.where(col("_group") === g).drop("_group")
           // the held partitions with docs of g (from the pass's metrics),
           // and partition 0, where the writer always puts a file (an empty
           // one carries the schema): the write launches tasks for these
@@ -359,9 +369,9 @@ object ExtractJob {
           // divides nPart
           val parts = acc.value.asScala.filter(_.group == g)
             .map(_.partition_id).toSet + 0
-          if (parts.size == heldParts) rows
-          else spark.createDataFrame(
-            PartitionPruningRDD.create(rows.rdd, parts.contains), rows.schema)
+          spark.createDataset(
+            PartitionPruningRDD.create(held, parts.contains).flatMap(_(g)))
+            .toDF()
         }
       } finally held.unpersist()
     }

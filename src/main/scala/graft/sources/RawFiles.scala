@@ -217,14 +217,7 @@ object RawFiles {
   private def sniff(kind: String, bytes: Array[Byte],
                     nested: Boolean): String = {
     // the zip-packaged formats share one magic; classify once
-    lazy val zip =
-      if (!ArchiveExtractor.isZip(bytes)) ""
-      else if (DocxExtractor.isDocx(bytes)) "docx"
-      else if (EpubExtractor.isEpub(bytes)) "epub"
-      else if (XlsxExtractor.isXlsx(bytes)) "xlsx"
-      else if (PptxExtractor.isPptx(bytes)) "pptx"
-      else if (OdtExtractor.isOdt(bytes)) "odt"
-      else "zip"
+    lazy val zip = ArchiveExtractor.zipKind(bytes)
     lazy val feed = FeedExtractor.isFeed(bytes)
     def fanOut: Option[String] =
       if (kind == "warc" || WarcExtractor.isWarc(bytes) ||

@@ -430,8 +430,8 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
         spark.sparkContext.removeSparkListener(listener)
       }
     assert(report.groupsRun == Seq(0, 1, 2, 3) && report.docsProcessed == N)
-    // reads of cached batches count one record per batch on top of the
-    // two input passes; one pass per group would read it 5 times here
+    // each read of a held block counts one record on top of the two
+    // input passes; one pass per group would read it 5 times here
     assert(records.get() >= 2L * N && records.get() < 3L * N,
       s"${records.get()} records read for $N input rows")
   }
@@ -469,13 +469,21 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     val monster = Seq(InputDoc("monster",
       Vector(Span("text", "x" * (2 << 20), null, 0)))).toDS()
     val plain = CorpusGen.dataset(spark, 300, 42L)
-    Seq(false -> plain, true -> plain.union(monster)).foreach {
-      case (salt, docs) =>
-        val out = tmpDir(s"per-group-$salt")
-        val io = ProbeIO(out)
+    val salted = plain.union(monster)
+    val held = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the third run loses its held blocks before group 1's write, as an
+    // executor loss would: that pruned write recomputes the partitions it
+    // reads, which must still be recorded under their own partition ids
+    Seq((false, plain, -1), (true, salted, -1), (true, salted, 1)).foreach {
+      case (salt, docs, lostAt) =>
+        val out = tmpDir(s"per-group-$salt$lostAt")
+        val io = ProbeIO(out, beforeWrite = g =>
+          if (g == lostAt) ProbeIO.dropPersistedSince(held))
         val rep = ExtractJob.run(spark, docs, ExtractJob.Config(out,
-          runId = s"pg$salt", groups = groups, partitions = 8, io = io))
+          runId = s"pg$salt$lostAt", groups = groups, partitions = 8, io = io))
         assert(rep.salted == salt)
+        assert(rep.docsProcessed == docs.count(), s"lost at $lostAt")
+        assert(spark.sparkContext.getPersistentRDDs.keySet == held)
         // salted, a group's normal docs hash into 8/4 partitions, so its
         // write skips the held partitions that hold none of its docs
         if (salt) assert(io.framePartitions.values.forall(_ < 8),
@@ -494,13 +502,45 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
         (0 until groups).foreach { g =>
           val n = inputDocs.getOrElse(g, 0L)
           assert(n > 0 && sidecar(g)._1 == n && manifest(g) == n,
-            s"salted=$salt group $g: input $n, sidecar ${sidecar(g)._1}, " +
-              s"manifest ${manifest(g)}")
+            s"salted=$salt lost at $lostAt group $g: input $n, " +
+              s"sidecar ${sidecar(g)._1}, manifest ${manifest(g)}")
           assert(sidecar(g)._2 ==
             spark.read.parquet(s"$out/data/group=$g").count(),
-            s"salted=$salt group $g out_span_count")
+            s"salted=$salt lost at $lostAt group $g out_span_count")
         }
     }
+  }
+
+  test("the pass is one job: three jobs before the first group write, nothing held after") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val atFirstWrite = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val out = tmpDir("pass-jobs")
+    val io = ProbeIO(out, beforeWrite = _ =>
+      if (atFirstWrite.get < 0) atFirstWrite.set(ProbeIO.drainedCount(jobs)))
+    sc.addSparkListener(listener)
+    val report =
+      try ExtractJob.run(spark, CorpusGen.dataset(spark, 300, 42L),
+        ExtractJob.Config(out, runId = "jobs", groups = 4, partitions = 8,
+          io = io))
+      finally {
+        org.apache.spark.ListenerDrain.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(!report.salted && report.docsProcessed == 300)
+    // 4 input partitions: the skew decision is one exact aggregate, two
+    // jobs under AQE; the pass is one more. A held SQL cache with its
+    // count() took three for the pass, so 5 jobs ran before the first
+    // write on this input
+    assert(atFirstWrite.get == 3, s"${atFirstWrite.get} jobs before the first write")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("run ids with quotes and backslashes stay valid JSON in manifest and sidecar") {
@@ -521,19 +561,44 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
   }
 }
 
-/** HadoopTableIO that records the partition count of each group's frame
-  * and can fail the write of one group, as a crash would.
+/** HadoopTableIO that records the partition count of each group's frame,
+  * runs `beforeWrite` before each group's write, and can fail the write
+  * of one group, as a crash would.
   */
-final case class ProbeIO(root: String, failGroup: Int = -1)
+final case class ProbeIO(root: String, failGroup: Int = -1,
+                         beforeWrite: Int => Unit = _ => ())
     extends graft.sources.TableIO {
   private val io = graft.sources.HadoopTableIO(root)
   val framePartitions = scala.collection.mutable.Map.empty[Int, Int]
   override def overwriteGroup(df: org.apache.spark.sql.DataFrame,
                               group: Int): Unit = {
+    beforeWrite(group)
     if (group == failGroup)
       throw new java.io.IOException(s"injected failure writing group $group")
     framePartitions(group) = df.rdd.getNumPartitions
     io.overwriteGroup(df, group)
   }
   override def read(spark: SparkSession) = io.read(spark)
+}
+
+object ProbeIO {
+  private def sc = org.apache.spark.SparkContext.getOrCreate()
+
+  /** Drop the blocks of every RDD persisted since `before` was taken and
+    * keep each persisted at its level, as an executor loss would: the
+    * next read recomputes them.
+    */
+  def dropPersistedSince(before: Set[Int]): Unit =
+    sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
+      .foreach { r =>
+        val level = r.getStorageLevel
+        r.unpersist(blocking = true)
+        r.persist(level)
+      }
+
+  /** `n` once every event already posted has reached the listeners. */
+  def drainedCount(n: java.util.concurrent.atomic.AtomicInteger): Int = {
+    org.apache.spark.ListenerDrain.drain(sc)
+    n.get
+  }
 }
