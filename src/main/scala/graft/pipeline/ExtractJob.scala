@@ -4,7 +4,10 @@ import graft.core._
 import graft.extract.Extractor
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.PartitionPruningRDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftExprBridge,
+  SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
@@ -19,11 +22,12 @@ import scala.jdk.CollectionConverters._
   * Scale design (SURVEY.md §4):
   *  - ONE PASS per run ([[run]]): the docs of the uncommitted groups are
   *    scanned, decoded, salted or merged, and extracted once, in one job;
-  *    each pass partition holds its rows as one array per group, an RDD
-  *    block (MEMORY_AND_DISK), and each group is written from its own
-  *    arrays in the pass partitions that hold its docs. The input is read
-  *    at most twice — the bounded skew-decision sample and the pass —
-  *    whatever `groups` is.
+  *    each pass partition holds its rows, encoded as the output's binary
+  *    rows, as one array per group, an RDD block (MEMORY_AND_DISK). Each
+  *    group is written from its own arrays in only the pass partitions
+  *    that hold its docs, so its write runs no object serializer and
+  *    writes no zero-row file. The input is read at most twice — the
+  *    bounded skew-decision sample and the pass — whatever `groups` is.
   *  - NO shuffle in the hot path except the skew-salting repartition;
   *    extraction is embarrassingly parallel per document, ordering is
   *    computed in-memory per doc (the reference's ROW_NUMBER window
@@ -141,12 +145,14 @@ object ExtractJob {
     * pmod(xxhash64(doc_id), groups)). ONE pass (one job) over the docs of
     * the uncommitted groups scans and decodes them, salts or merges their
     * partitions and extracts them; each pass partition is held as one
-    * RDD block (MEMORY_AND_DISK) of one row array per group. The groups
-    * are then written and committed in order, each from its own arrays
-    * in the held partitions that hold its docs. A run with one group to
-    * write writes it straight from the pass. The input is read at most
-    * twice per run — the bounded skew-decision sample and the pass —
-    * whatever `groups` is.
+    * RDD block (MEMORY_AND_DISK) of one array per group of encoded
+    * (binary) output rows. The groups are then written and committed in
+    * order, each from a frame over its own arrays in only the held
+    * partitions that hold its docs: at most one data file per such
+    * partition, and one schema-only file for a group without docs. A run
+    * with one group to write writes it straight from the pass. The input
+    * is read at most twice per run — the bounded skew-decision sample and
+    * the pass — whatever `groups` is.
     */
   def run(spark: SparkSession, docs: Dataset[InputDoc], cfg: Config)
       : RunReport =
@@ -191,9 +197,10 @@ object ExtractJob {
   }
 
   /** The shared run: skew decision, then the groups' write/commit loop.
-    * `onePass` selects how a group's frame is obtained — its rows in the
-    * blocks one held extraction pass produced ([[run]], when more than
-    * one group is to be written), or a sub-job of its own ([[runBucketed]]).
+    * `onePass` selects how a group's frame is obtained — its encoded rows
+    * in the blocks one held extraction pass produced, read from only the
+    * blocks that hold its docs ([[run]], when more than one group is to
+    * be written), or a sub-job of its own ([[runBucketed]]).
     */
   private def runImpl(spark: SparkSession, grouped: DataFrame, cfg: Config,
                       onePass: Boolean): RunReport = {
@@ -347,31 +354,35 @@ object ExtractJob {
           docsOf(it), groups, runId, acc).map(_._2))
         .toDF())
     else {
-      // one element per pass partition: its rows, one array per group.
-      // Metrics carry the held partition's own index, so a block lost and
-      // recomputed inside a pruned group write is still recorded under it
+      // one element per pass partition: its rows already encoded as the
+      // output's binary rows, one array per group, so the group writes
+      // run no object serializer. Metrics carry the held partition's own
+      // index, so a block lost and recomputed inside a pruned group write
+      // is still recorded under it
+      val enc = ExpressionEncoder[ExtractedRow]()
       val held = prepared(withGroup.filter(col("_group").isin(todo: _*))).rdd
         .mapPartitionsWithIndex { (i, it) =>
-          val by = Array.fill(groups)(Array.newBuilder[ExtractedRow])
+          val ser = enc.createSerializer() // reuses one row: copy each
+          val by = Array.fill(groups)(Array.newBuilder[InternalRow])
           extractPartition(i, docsOf(it), groups, runId, acc)
-            .foreach { case (g, r) => by(g) += r }
+            .foreach { case (g, r) => by(g) += ser(r).copy() }
           Iterator.single(by.map(_.result()))
         }
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
         held.count() // the pass: a failure here commits nothing
         writeAndCommit { g =>
-          // the held partitions with docs of g (from the pass's metrics),
-          // and partition 0, where the writer always puts a file (an empty
-          // one carries the schema): the write launches tasks for these
-          // only and writes the same files. Salted, the normal docs of a
-          // group hash into at most nPart/groups partitions when groups
-          // divides nPart
+          // the held partitions with docs of g (from the pass's metrics):
+          // the write launches tasks for these only, so it writes no
+          // zero-row file for a partition without them. A group with no
+          // docs gets no partition, and the writer then writes one
+          // schema-only file. Salted, the normal docs of a group hash into
+          // at most nPart/groups partitions when groups divides nPart
           val parts = acc.value.asScala.filter(_.group == g)
-            .map(_.partition_id).toSet + 0
-          spark.createDataset(
-            PartitionPruningRDD.create(held, parts.contains).flatMap(_(g)))
-            .toDF()
+            .map(_.partition_id).toSet
+          GraftExprBridge.internalFrame(spark,
+            PartitionPruningRDD.create(held, parts.contains).flatMap(_(g)),
+            enc.schema)
         }
       } finally held.unpersist()
     }
@@ -397,8 +408,10 @@ object ExtractJob {
         s""""bytes_in":${m.bytes_in},"duration_ms":${m.duration_ms},""" +
         s""""status":"${m.status}"}"""
       }.mkString("", "\n", "\n")
+      // named without the run id, which may hold any character (a `:` or
+      // a `/` cannot sit in one file name); `run_id` is in every row
       val f = new org.apache.hadoop.fs.Path(dir,
-        s"${cfg.runId}-${System.currentTimeMillis()}.jsonl")
+        s"${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}.jsonl")
       val out = fs.create(f, true)
       try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
@@ -497,7 +510,12 @@ object ExtractJob {
     */
   def runIncremental(spark: SparkSession, docs: Dataset[InputDoc],
                      cfg: Config): RunReport = {
-    import spark.implicits._
+    // the run id names one directory, `run=<runId>`: a `/` would nest it
+    // where [[listDirs]] never looks, and Spark's reader would expand a
+    // glob character in it to other runs' directories
+    require(!cfg.runId.exists("/\\*?[]{}".contains(_)),
+      s"runId '${cfg.runId}' cannot name one run= directory: it holds one" +
+        " of / \\ * ? [ ] { }")
     val runs = listDirs(cfg.outDir, "run=")
     val newDocs =
       if (runs.isEmpty) docs

@@ -222,7 +222,8 @@ object RawFiles {
     def fanOut: Option[String] =
       if (kind == "warc" || WarcExtractor.isWarc(bytes) ||
           WarcExtractor.isWarcGz(bytes)) Some("warc")
-      else if (kind == "zip" || kind == "tar" || zip == "zip" ||
+      else if (zip == "zip") Some("zip") // a plain zip, classified here
+      else if (kind == "zip" || kind == "tar" ||
                ArchiveExtractor.isTarGz(bytes) ||
                ArchiveExtractor.isTar(bytes) ||
                ArchiveExtractor.isSevenZ(bytes)) Some("archive")
@@ -279,7 +280,7 @@ object RawFiles {
     val rel = relativize(path, root)
     sniff(kind, bytes, nested = false) match {
       case "warc" => warcDocs(path, rel, bytes)
-      case "archive" => archiveDocs(path, rel, bytes)
+      case f @ ("zip" | "archive") => archiveDocs(path, rel, members(f, bytes))
       case "jsonl" => jsonlDocs(rel, bytes)
       case "json" =>
         // ONE Jackson parse routes notebook-vs-plain AND yields the
@@ -424,6 +425,16 @@ object RawFiles {
       if (inflated.isEmpty) Nil else docsOf(k, path, inflated, root)
     }
 
+  /** The member files of a payload [[sniff]] routed to "zip" (a plain zip:
+    * sniff has classified it, so only the member walk is left) or to
+    * "archive" (tar, tar.gz, 7z, or a `.zip` that is no plain zip, which
+    * [[ArchiveExtractor.entries]] routes by magic).
+    */
+  private def members(format: String,
+                      bytes: Array[Byte]): Vector[ArchiveExtractor.Entry] =
+    if (format == "zip") ArchiveExtractor.zipEntries(bytes)
+    else ArchiveExtractor.entries(bytes)
+
   /** One InputDoc per archive MEMBER file (`<relpath>#<member>`),
     * each routed by its own extension through the same suffix dispatch
     * as a directory scan: text kinds decode against the pseudo-path
@@ -436,8 +447,9 @@ object RawFiles {
     * decodes as generic XML; a feed-rooted one yields nothing.
     */
   private def archiveDocs(path: String, rel: String,
-                          bytes: Array[Byte]): Seq[InputDoc] =
-    ArchiveExtractor.entries(bytes).flatMap { en =>
+                          entries: Vector[ArchiveExtractor.Entry])
+      : Seq[InputDoc] =
+    entries.flatMap { en =>
       val docId = s"$rel#${en.name}"
       val pseudo = s"$path#${en.name}"
       memberKind(en.name) match {
@@ -677,8 +689,8 @@ object RawFiles {
           case ((rec, i), rest) => recordRoute(rec).flatMap(r =>
             fetch(r._2, s"$path#r$i", rec.body, rest))
         }
-      case "archive" =>
-        headed(tail, ArchiveExtractor.entries(bytes).iterator)(_.name)
+      case f @ ("zip" | "archive") =>
+        headed(tail, members(f, bytes).iterator)(_.name)
           .flatMap { case (en, rest) =>
             inMember(en.name, en.name, en.body, rest) }
       case "mbox" =>

@@ -21,12 +21,27 @@ trait TableIO extends Serializable {
   * group (`<root>/data/group=<g>`), overwritten atomically enough for the
   * manifest protocol (the manifest rename in [[graft.pipeline.Checkpoint]]
   * is the commit point, not the file write).
+  *
+  * A group write creates only its data files:
+  *  - no `_SUCCESS` marker: the manifest entry is the commit marker, and
+  *    readers read manifest-committed group dirs only;
+  *  - no dictionary for `text` and `chunk_id`, which are unique per row,
+  *    so their dictionary always fell back to plain encoding: the bytes
+  *    are the same, without hashing every value first.
   */
 final case class HadoopTableIO(root: String) extends TableIO {
   override def overwriteGroup(df: DataFrame, group: Int): Unit =
-    df.write.mode("overwrite").parquet(s"$root/data/group=$group")
+    df.write.mode("overwrite").options(HadoopTableIO.WriteOptions)
+      .parquet(s"$root/data/group=$group")
   override def read(spark: SparkSession): DataFrame =
     spark.read.parquet(s"$root/data")
+}
+
+object HadoopTableIO {
+  private val WriteOptions = Map(
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
+    "parquet.enable.dictionary#text" -> "false",
+    "parquet.enable.dictionary#chunk_id" -> "false")
 }
 
 /** Iceberg implementation — the north-rule deployment target. Requires

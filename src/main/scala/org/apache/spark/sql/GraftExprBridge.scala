@@ -1,9 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to sql-private helpers (Column <-> Expression) for graft's
-  * custom expressions — the standard extension-library pattern (cf.
+  * custom expressions, and to frames over binary rows for
+  * [[graft.pipeline.ExtractJob]] — the standard extension-library pattern (cf.
   * SNIPPETS.md [2]/[3]: third-party strategies live in this package for
   * the same reason).
   */
@@ -12,6 +16,14 @@ object GraftExprBridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+  /** A DataFrame over rows already in Catalyst's binary form: no object
+    * encoder runs when it is planned or read.
+    */
+  def internalFrame(spark: SparkSession, rows: RDD[InternalRow],
+                    schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Register a 1-arg expression constructor as a SQL function. */
   def register(spark: SparkSession, name: String,
                ctor: Expression => Expression): Unit =

@@ -544,16 +544,117 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
   }
 
   test("run ids with quotes and backslashes stay valid JSON in manifest and sidecar") {
-    val out = tmpDir("runid-json")
-    val runId = "a\"b\\c"
-    ExtractJob.run(spark, CorpusGen.dataset(spark, 50, 42L),
-      ExtractJob.Config(out, runId = runId, groups = 2, partitions = 4))
-    Seq(s"$out/_checkpoint", s"$out/metrics").foreach { dir =>
-      val m = spark.read.json(dir)
-      assert(!m.columns.contains("_corrupt_record"), s"invalid JSON in $dir")
-      assert(m.select("run_id").distinct().collect().map(_.getString(0))
-        .toSeq == Seq(runId), dir)
+    import org.apache.spark.sql.functions.sum
+    val docs = CorpusGen.dataset(spark, 50, 42L)
+    // an ISO timestamp and a batch path name no file: the sidecar's name
+    // must not come from the run id
+    Seq("a\"b\\c", "2026-10-19T16:00:00", "batch/7").zipWithIndex.foreach {
+      case (runId, i) =>
+        val out = tmpDir(s"runid-json$i")
+        ExtractJob.run(spark, docs,
+          ExtractJob.Config(out, runId = runId, groups = 2, partitions = 4))
+        Seq(s"$out/_checkpoint", s"$out/metrics").foreach { dir =>
+          val m = spark.read.json(dir)
+          assert(!m.columns.contains("_corrupt_record"), s"invalid JSON in $dir")
+          assert(m.select("run_id").distinct().collect().map(_.getString(0))
+            .toSeq == Seq(runId), dir)
+          assert(m.agg(sum("doc_count")).head().getLong(0) == 50L, dir)
+        }
     }
+    // runIncremental names a run=<runId> directory: a ':' fits in one, a
+    // '/' does not and fails before anything is written
+    val inc = tmpDir("runid-inc")
+    val r1 = ExtractJob.runIncremental(spark, docs, ExtractJob.Config(inc,
+      runId = "2026-10-19T16:00:00", groups = 2, partitions = 4))
+    assert(r1.docsProcessed == 50L)
+    assert(ExtractJob.readAllRuns(spark, inc).count() > 0)
+    val r2 = ExtractJob.runIncremental(spark, docs, ExtractJob.Config(inc,
+      runId = "2026-10-19T17:00:00", groups = 2, partitions = 4))
+    // only docs with no output re-extract: the first run's rows were seen
+    assert(r2.docsProcessed == CorpusGen.corpus(42L, 50)
+      .count(d => RefOracle.extract(d).outSpans.isEmpty))
+    val before = ExtractJob.listDirs(inc, "run=").toSet
+    Seq("batch/7", "b*").foreach { bad =>
+      intercept[IllegalArgumentException] {
+        ExtractJob.runIncremental(spark, docs, ExtractJob.Config(inc,
+          runId = bad, groups = 2, partitions = 4))
+      }
+    }
+    assert(ExtractJob.listDirs(inc, "run=").toSet == before)
+  }
+
+  test("a group dir holds only its data files: one per held partition with its docs, no _SUCCESS") {
+    import spark.implicits._
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val schema = Encoders.product[ExtractedRow].schema
+    // (rows, spark schema, parquet repetition per column) of each data
+    // file of a group dir; only data files, apart from hidden checksums
+    def files(dir: String) = {
+      val names = new java.io.File(dir).list().toSeq.filterNot(_.startsWith("."))
+      assert(names.nonEmpty && names.forall(_.endsWith(".parquet")), s"$dir: $names")
+      names.map { n =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(s"$dir/$n"),
+            new org.apache.hadoop.conf.Configuration()))
+        try {
+          val meta = r.getFooter.getFileMetaData
+          (r.getRecordCount,
+            DataType.fromJson(meta.getKeyValueMetaData
+              .get("org.apache.spark.sql.parquet.row.metadata"))
+              .asInstanceOf[StructType],
+            meta.getSchema.getFields.asScala.map(f =>
+              f.getName -> f.getRepetition.toString).toMap)
+        } finally r.close()
+      }
+    }
+    def sameSchema(f: (Long, StructType, Map[String, String])): Unit = {
+      assert(f._2 == schema)
+      schema.fields.foreach(c => assert(
+        f._3(c.name) == (if (c.nullable) "OPTIONAL" else "REQUIRED"), c.name))
+    }
+
+    // salted 4-group run: the monster doc sits alone, so partition 0
+    // does not hold docs of every group
+    val monster = Seq(InputDoc("monster",
+      Vector(Span("text", "x" * (2 << 20), null, 0)))).toDS()
+    val out = tmpDir("layout")
+    val rep = ExtractJob.run(spark,
+      CorpusGen.dataset(spark, 300, 42L).union(monster),
+      ExtractJob.Config(out, runId = "layout", groups = 4, partitions = 8))
+    assert(rep.salted && rep.groupsRun == Seq(0, 1, 2, 3))
+    val held = spark.read.json(s"$out/metrics")
+      .where($"doc_count" > 0).select("group", "partition_id")
+      .as[(Long, Long)].collect().groupBy(_._1.toInt)
+    (0 until 4).foreach { g =>
+      val fs = files(s"$out/data/group=$g")
+      assert(fs.size == held(g).length, s"group $g: ${fs.map(_._1)}")
+      assert(fs.forall(_._1 > 0), s"group $g has a zero-row file")
+      fs.foreach(sameSchema)
+    }
+
+    // 3 docs over 8 groups: each empty group still gets one schema-only
+    // file and a manifest entry, and the output reads back whole
+    val few = CorpusGen.dataset(spark, 3, 42L)
+    val out8 = tmpDir("layout-empty")
+    ExtractJob.run(spark, few,
+      ExtractJob.Config(out8, runId = "few", groups = 8, partitions = 4))
+    assert(Checkpoint.committedGroups(out8) == (0 until 8).toSet)
+    val withDocs = spark.read.json(s"$out8/metrics").select("group")
+      .as[Long].collect().map(_.toInt).toSet
+    assert(withDocs.size <= 3)
+    (0 until 8).filterNot(withDocs).foreach { g =>
+      val fs = files(s"$out8/data/group=$g")
+      assert(fs.map(_._1) == Seq(0L), s"group $g")
+      fs.foreach(sameSchema)
+    }
+    val expected = CorpusGen.corpus(42L, 3)
+      .flatMap(d => RefOracle.extract(d).outSpans
+        .map(o => (d.doc_id, o.kind, o.text, o.media_ref, o.order)))
+    assert(ExtractJob.spansView(spark, out8).as[(String, String, String,
+      String, Int)].collect().map(_.toString).sorted.toSeq ==
+      expected.map(_.toString).sorted)
   }
 
   private implicit class ChunkN(c: Chunk) {
