@@ -19,19 +19,30 @@ import java.nio.charset.StandardCharsets
   * All I/O goes through the Hadoop [[FileSystem]] API (VERDICT r01 #8) —
   * the same code path works on file://, hdfs://, or any object-store
   * connector on the cluster classpath; nothing here assumes a local
-  * filesystem.
+  * filesystem. The conf is [[hadoopConf]]: the session's Hadoop conf,
+  * with `file:` paths on [[graft.sources.LocalFs]], which makes the same
+  * files and modes as Hadoop's local file system without forking a
+  * `chmod` per file.
   */
 object Checkpoint {
 
-  /** The active session's Hadoop conf when one exists (so spark.hadoop.*
-    * credentials/endpoints reach object-store connectors), else a fresh
-    * default — the manifest must work from plain driver code too.
+  /** The conf of the manifest, the metrics sidecar and the run listings:
+    * a copy of the active session's Hadoop conf when one exists (so
+    * spark.hadoop.* credentials/endpoints reach object-store connectors),
+    * else a fresh default — the manifest must work from plain driver code
+    * too — with [[graft.sources.LocalFs.Conf]] on top, so that `file:`
+    * paths set permissions in-process, as the group writes do. The copy is
+    * taken per call, so a later change to the session's conf (a rotated
+    * credential, a umask) reaches the next commit.
     */
-  private[graft] def hadoopConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+  private[graft] def hadoopConf(): Configuration = {
+    val conf = org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
+      .map(s => new Configuration(s.sparkContext.hadoopConfiguration))
       .getOrElse(new Configuration())
+    graft.sources.LocalFs.Conf.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
 
   private def fsFor(p: Path): FileSystem =
     p.getFileSystem(hadoopConf())

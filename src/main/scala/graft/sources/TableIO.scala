@@ -25,9 +25,18 @@ trait TableIO extends Serializable {
   * A group write creates only its data files:
   *  - no `_SUCCESS` marker: the manifest entry is the commit marker, and
   *    readers read manifest-committed group dirs only;
-  *  - no dictionary for `text` and `chunk_id`, which are unique per row,
-  *    so their dictionary always fell back to plain encoding: the bytes
-  *    are the same, without hashing every value first.
+  *  - no dictionary for `text`, `chunk_id` and `media_ref`, which are
+  *    (nearly) unique per row, so their dictionary fell back to plain
+  *    encoding: plain at once writes the same bytes without hashing every
+  *    value first (a rare small `media_ref` chunk that kept its
+  *    dictionary comes out a few bytes smaller).
+  *
+  * The write sets `fs.file.impl` to [[LocalFs]], with
+  * `fs.file.impl.disable.cache` so that `FileSystem.get` does not hand
+  * back the stock `file` instance it cached. The options reach the job's
+  * committer on the driver and its write tasks, so no file or directory
+  * of the write forks a `chmod` process. Only `file:` paths are affected;
+  * other schemes keep their own file systems.
   */
 final case class HadoopTableIO(root: String) extends TableIO {
   override def overwriteGroup(df: DataFrame, group: Int): Unit =
@@ -41,7 +50,8 @@ object HadoopTableIO {
   private val WriteOptions = Map(
     "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
     "parquet.enable.dictionary#text" -> "false",
-    "parquet.enable.dictionary#chunk_id" -> "false")
+    "parquet.enable.dictionary#chunk_id" -> "false",
+    "parquet.enable.dictionary#media_ref" -> "false") ++ LocalFs.Conf
 }
 
 /** Iceberg implementation — the north-rule deployment target. Requires

@@ -657,6 +657,30 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
       expected.map(_.toString).sorted)
   }
 
+  test("a run starts no chmod process: group writes and commits set modes in-process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val out = tmpDir("no-chmod")
+    val docs = CorpusGen.dataset(spark, 300, 42L)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val report =
+      try ExtractJob.run(spark, docs,
+        ExtractJob.Config(out, runId = "chmod", groups = 4, partitions = 8))
+      finally rec.stop()
+    val dump = java.nio.file.Paths.get(tmpDir("no-chmod-jfr"), "run.jfr")
+    try rec.dump(dump) finally rec.close()
+    assert(!report.salted && report.groupsRun == Seq(0, 1, 2, 3))
+    // by the forking frame, not by all process starts: Hadoop's one-time
+    // `setsid` probe may land inside the run
+    val chmods = RecordingFile.readAllEvents(dump).asScala.count(e =>
+      e.getStackTrace != null && e.getStackTrace.getFrames.asScala.exists(f =>
+        f.getMethod.getType.getName == "org.apache.hadoop.fs.RawLocalFileSystem" &&
+          f.getMethod.getName == "setPermission"))
+    assert(chmods == 0, s"$chmods chmod processes started by one run")
+  }
+
   private implicit class ChunkN(c: Chunk) {
     def chunk_n: Int = c.chunk_id.substring(c.chunk_id.lastIndexOf('c') + 1).toInt
   }

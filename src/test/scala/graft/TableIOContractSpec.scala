@@ -1,12 +1,18 @@
 package graft
 
 import graft.gen.CorpusGen
-import graft.pipeline.ExtractJob
-import graft.sources.{HadoopTableIO, IcebergTableIO, TableIO}
+import graft.pipeline.{Checkpoint, ExtractJob}
+import graft.sources.{HadoopTableIO, IcebergTableIO, LocalFs, TableIO}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-readiness evidence (VERDICT r02 #9): the iceberg runtime jar
   * is absent in this sandbox, so what CAN be pinned is pinned —
@@ -94,5 +100,92 @@ class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll with TempDi
     val total = recording.read(spark).count()
     assert(written.map(_._2).sum == total)
     assert(total > 0)
+  }
+
+  /** (name relative to `root` with any uuid masked, is a dir, POSIX mode)
+    * of every entry under `root`.
+    */
+  private def entries(root: java.nio.file.Path): Set[(String, Boolean, String)] = {
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_ != root).map(p =>
+      (root.relativize(p).toString.replaceAll(uuid, "<uuid>"),
+        Files.isDirectory(p),
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))).toSet
+    finally walk.close()
+  }
+
+  test("a group write and commit make the files, checksums and modes of the stock local FS") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val df = (0L until 40L).map(i => (i, s"row_$i", s"ref_$i"))
+      .toDF("doc_id", "text", "media_ref").repartition(3)
+    val hc = spark.sparkContext.hadoopConfiguration
+    // the session conf reaches both the write jobs and Checkpoint
+    Seq(None, Some("077")).foreach { umask =>
+      umask.foreach(hc.set("fs.permissions.umask-mode", _))
+      try {
+        val ours = tempDir("graft-localfs")
+        HadoopTableIO(ours.toString).overwriteGroup(df, 0)
+        Checkpoint.commitGroup(ours.toString, 0, "r", 40L, 1L)
+        // the stock side: Spark's own write and the calls commitGroup makes,
+        // through the file system Hadoop picks for `file:`, uncached as on
+        // our side (a cached one keeps the umask of the conf it was made with)
+        val stock = tempDir("graft-stockfs")
+        df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .option("fs.file.impl.disable.cache", "true")
+          .parquet(s"$stock/data/group=0")
+        val fs = org.apache.hadoop.fs.FileSystem.newInstance(stock.toUri,
+          new Configuration(hc))
+        assert(!fs.isInstanceOf[LocalFs], "the session conf names LocalFs")
+        val ck = new Path(stock.toUri.toString, "_checkpoint")
+        try {
+          fs.mkdirs(ck)
+          fs.create(new Path(ck, ".group_0.json.tmp"), true).close()
+          assert(fs.rename(new Path(ck, ".group_0.json.tmp"),
+            new Path(ck, "group_0.json")))
+        } finally fs.close()
+
+        val got = entries(ours)
+        assert(got == entries(stock), s"umask $umask")
+        val modes = got.map(e => e._2 -> e._3)
+        assert(modes == (umask match {
+          case None => Set(true -> "rwxr-xr-x", false -> "rw-r--r--")
+          case _ => Set(true -> "rwx------", false -> "rw-------")
+        }), s"umask $umask")
+        val names = got.map(_._1)
+        val data = names.filter(_.endsWith(".parquet"))
+        assert(data.nonEmpty && data.forall { n =>
+          val i = n.lastIndexOf('/') + 1
+          names(s"${n.take(i)}.${n.drop(i)}.crc")
+        }, names)
+        assert(names("_checkpoint/.group_0.json.crc"), names)
+        def rows(d: DataFrame) = d.as[(Long, String, String)].collect().sorted.toSeq
+        assert(rows(HadoopTableIO(ours.toString).read(spark).drop("group")) == rows(df))
+      } finally hc.unset("fs.permissions.umask-mode")
+    }
+  }
+
+  test("LocalFs.Raw sets the modes Hadoop's chmod sets, sticky bit included") {
+    val conf = new Configuration()
+    val ours = new LocalFs.Raw
+    val stock = new RawLocalFileSystem
+    Seq(ours, stock).foreach(_.initialize(java.net.URI.create("file:///"), conf))
+    val root = tempDir("graft-modes")
+    def mode(p: java.nio.file.Path) =
+      Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x0fff
+    def make(name: String, dir: Boolean) = {
+      val p = root.resolve(name)
+      if (dir) Files.createDirectory(p) else Files.createFile(p)
+    }
+    for ((m, dir) <- Seq("644" -> false, "600" -> false, "755" -> false,
+        "640" -> false, "444" -> false, "750" -> true, "1777" -> true,
+        "1755" -> true)) {
+      val perm = new FsPermission(Integer.parseInt(m, 8).toShort)
+      val (a, b) = (make(s"ours_$m", dir), make(s"stock_$m", dir))
+      ours.setPermission(new Path(a.toUri), perm)
+      stock.setPermission(new Path(b.toUri), perm)
+      assert(mode(a) == Integer.parseInt(m, 8) && mode(a) == mode(b), m)
+    }
   }
 }

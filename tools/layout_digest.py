@@ -10,12 +10,15 @@ Spark) and prints, for each group:
   - the schema: each column's physical and logical type and its
     repetition (required or optional);
   - for each column, its chunks' encodings, how many chunks have a
-    dictionary page, and the column's compressed bytes.
+    dictionary page, and the column's compressed bytes;
+  - the POSIX modes of the group dir and everything under it, dirs and
+    files apart, and the number of `.crc` checksum files.
+It prints the same modes and `.crc` count for `<outDir>/_checkpoint`.
 
 With two roots it prints each group's figures side by side, marks the
-lines that differ with `!=`, and exits 1 when the rows, the digest or the
-schema of any group differ (file counts, encodings and bytes may differ
-and only print).
+lines that differ with `!=`, and exits 1 when the rows, the digest, the
+schema or the modes of any group or of `_checkpoint` differ (file counts,
+`.crc` counts, encodings and bytes may differ and only print).
 
 Usage: python3 tools/layout_digest.py OUT_DIR [OUT_DIR2]
 """
@@ -23,6 +26,7 @@ import hashlib
 import json
 import math
 import pathlib
+import stat
 import sys
 
 import pyarrow.parquet as pq
@@ -33,6 +37,21 @@ def value_key(v):
     if isinstance(v, float):
         return "nan" if math.isnan(v) else v.hex()
     return v
+
+
+def tree_modes(d):
+    """The modes under `d`, `d` included, and its `.crc` file count."""
+    dirs, files, crc = set(), set(), 0
+    for p in [d, *d.rglob("*")]:
+        st = p.lstat()
+        (dirs if stat.S_ISDIR(st.st_mode) else files).add(
+            format(stat.S_IMODE(st.st_mode), "o"))
+        crc += p.name.endswith(".crc")
+    return {
+        "modes": f"dirs {','.join(sorted(dirs)) or '-'}; "
+                 f"files {','.join(sorted(files)) or '-'}",
+        "crc_files": str(crc),
+    }
 
 
 def group_stats(d):
@@ -88,20 +107,27 @@ def group_stats(d):
             f"encodings {'|'.join(sorted(e['enc']))}, "
             f"dictionary pages {e['dict']}/{e['chunks']}, "
             f"{e['bytes']} bytes")
+    out.update(tree_modes(d))
     return out
 
 
 def layout(root):
-    """{group: stats} for every data/group=<g> dir under `root`."""
-    data = pathlib.Path(root) / "data"
+    """{name: stats} for every data/group=<g> dir under `root`, in group
+    order, then `_checkpoint` when it exists."""
+    root = pathlib.Path(root)
+    data = root / "data"
     if not data.is_dir():
         sys.exit(f"{root}: no data/ dir")
-    return {int(d.name.split("=", 1)[1]): group_stats(d)
-            for d in data.iterdir()
-            if d.is_dir() and d.name.startswith("group=")}
+    groups = sorted((d for d in data.iterdir()
+                     if d.is_dir() and d.name.startswith("group=")),
+                    key=lambda d: int(d.name.split("=", 1)[1]))
+    out = {d.name: group_stats(d) for d in groups}
+    if (root / "_checkpoint").is_dir():
+        out["_checkpoint"] = tree_modes(root / "_checkpoint")
+    return out
 
 
-MUST_MATCH = ("rows", "digest", "schema")
+MUST_MATCH = ("rows", "digest", "schema", "modes")
 
 
 def main(argv):
@@ -109,15 +135,15 @@ def main(argv):
         sys.exit(__doc__)
     a = layout(argv[1])
     if len(argv) == 2:
-        for g in sorted(a):
-            print(f"group={g}")
+        for g in a:
+            print(g)
             for k, v in a[g].items():
                 print(f"  {k}: {v}")
         return 0
     b = layout(argv[2])
     bad = 0
-    for g in sorted(set(a) | set(b)):
-        print(f"group={g}")
+    for g in dict.fromkeys(list(a) + list(b)):
+        print(g)
         sa, sb = a.get(g, {}), b.get(g, {})
         if not sa or not sb:
             print(f"  != only in {argv[1] if sa else argv[2]}")
@@ -130,8 +156,8 @@ def main(argv):
             else:
                 print(f"  {k} != {va}  ->  {vb}")
                 bad += k in MUST_MATCH
-    print("same rows, digests and schemas" if bad == 0 else
-          f"{bad} group figures among {', '.join(MUST_MATCH)} differ")
+    print("same rows, digests, schemas and modes" if bad == 0 else
+          f"{bad} figures among {', '.join(MUST_MATCH)} differ")
     return 1 if bad else 0
 
 
