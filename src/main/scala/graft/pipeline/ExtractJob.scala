@@ -230,32 +230,18 @@ object ExtractJob {
     // BOUNDED (VERDICT r04 #3) in PARTITION units — a scan partition is
     // byte-bounded by the split config (maxPartitionBytes), so touching
     // ≤ ~2x SkewSampleParts evenly-spaced partitions bounds decision
-    // I/O in bytes with NO separate row-count job (r06 second pass: the
-    // previous row-bounded design spent a count() job + a 13-partition
-    // sample job ≈ 0.6 s of every run — ~17% of the whole bench job —
-    // and the sample job's wall time was a fixed cost that did not
-    // scale with cores, dragging measured scaling efficiency). The
-    // total is scaled back up by the kept-partition fraction. A lone
-    // monster doc can evade a sample; the miss cost is one straggler
-    // task on the NARROW path, strictly cheaper than the full-payload
-    // shuffle a false positive would buy at 10^12 docs. In an Iceberg
-    // deployment the exact max/sum come free from table column stats
-    // instead. Skipped entirely when every group is already committed —
-    // a no-op resume must not pay any input scan (report.salted is then
-    // false).
-    // BEHAVIOR DELTA vs the pre-r06.2 row-bounded design (deliberate):
-    // inputs of ≤100k rows spread over many partitions (e.g. a
-    // file-per-doc binaryFile source) used to get an EXACT decision at
-    // the cost of a full extra payload pass per run; they now get the
-    // same bounded sample as everything else. A missed monster costs
-    // one straggler task on the narrow path (after mergeDown it may
-    // share that task with its coalesce neighbors); the removed full
-    // pre-pass was the strictly larger cost at every corpus size. The
-    // partition-fraction total extrapolation can also drift when
-    // bytes-per-partition vary — the 4x fair-share margin and the
-    // absolute bigDocBytes threshold absorb that; both miss directions
-    // degrade to known, bounded shapes (a straggler, or one
-    // payload-shuffle that wasn't needed).
+    // I/O in bytes, in one RDD aggregate: one job, no exchange. The
+    // total is scaled back up by the kept-partition fraction; with fewer
+    // than 2x SkewSampleParts input partitions the stride is 1, every
+    // partition is kept, the scale is 1 and the decision is exact. A
+    // lone monster doc can evade a sample; the miss cost is one
+    // straggler task on the NARROW path (after mergeDown it may share
+    // that task with its coalesce neighbors), strictly cheaper than the
+    // full-payload shuffle a false positive would buy at 10^12 docs. In
+    // an Iceberg deployment the exact max/sum come free from table
+    // column stats instead. Skipped entirely when every group is already
+    // committed — a no-op resume must not pay any input scan
+    // (report.salted is then false).
     // one narrow projection serves both the decision sample and the
     // partition-count probes (partition count is projection-invariant);
     // planning it once avoids a second full-plan-to-RDD conversion
@@ -267,41 +253,28 @@ object ExtractJob {
     }
     val todo = (0 until cfg.groups).filterNot(committed.contains)
     val useSalt = todo.nonEmpty && {
-      val k = srcParts / SkewSampleParts // evenly-spaced stride; 0 handled below
-      if (k <= 1) {
-        // few input partitions (test corpora, resumes of small
-        // groups): one exact aggregate over everything. NOTE this is
-        // a PARTITION-count gate, not a row bound — a caller can
-        // shuffle a huge input into few partitions and land here
-        // paying a full payload pass (exactly what the pre-r06
-        // k>=srcN fallback paid too)
-        val s = withGroup.agg(max("_cost"), sum("_cost")).collect()(0)
-        !s.isNullAt(0) && skewDecision(s.getLong(0), s.getLong(1))
-      } else {
-        // PartitionPruningRDD: launch ONLY the kept partitions'
-        // tasks (a mapPartitionsWithIndex formulation would still
-        // dispatch one no-op task per skipped partition); unpulled
-        // partition iterators never open their files (FileScanRDD
-        // opens lazily on first pull), so the skipped partitions'
-        // payloads are never read
-        val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
-        val kept = PartitionPruningRDD.create(
-          costsRdd, i => i % k == 0)
-        val (mx, tot, cnt) = kept
-          .map(_.getLong(0))
-          .aggregate((0L, 0L, 0L))(
-            { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
-            { case ((m1, t1, c1), (m2, t2, c2)) =>
-              (math.max(m1, m2), t1 + t2, c1 + c2) })
-        // BIAS: file sources pack splits largest-first, so partition
-        // sizes tend to fall with the index, and the first partition of
-        // each stride (the one kept) tends to be the largest of it. The
-        // extrapolated total therefore errs high (a higher fair share,
-        // so the relative test salts less often), while the max always
-        // sees partition 0, which holds the largest file
-        cnt > 0 &&
-          skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
-      }
+      val k = math.max(srcParts / SkewSampleParts, 1) // evenly-spaced stride
+      // PartitionPruningRDD: launch ONLY the kept partitions' tasks (a
+      // mapPartitionsWithIndex formulation would still dispatch one no-op
+      // task per skipped partition); unpulled partition iterators never
+      // open their files (FileScanRDD opens lazily on first pull), so the
+      // skipped partitions' payloads are never read
+      val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
+      val kept = PartitionPruningRDD.create(costsRdd, i => i % k == 0)
+      val (mx, tot, cnt) = kept
+        .map(_.getLong(0))
+        .aggregate((0L, 0L, 0L))(
+          { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
+          { case ((m1, t1, c1), (m2, t2, c2)) =>
+            (math.max(m1, m2), t1 + t2, c1 + c2) })
+      // BIAS: file sources pack splits largest-first, so partition sizes
+      // tend to fall with the index, and the first partition of each
+      // stride (the one kept) tends to be the largest of it. The
+      // extrapolated total therefore errs high (a higher fair share, so
+      // the relative test salts less often), while the max always sees
+      // partition 0, which holds the largest file
+      cnt > 0 &&
+        skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
     }
 
     // small-file sources (a binaryFile directory scan) can arrive with

@@ -166,6 +166,78 @@ class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll with TempDi
     }
   }
 
+  test("group write tasks deserialize no Hadoop conf") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    spark.sparkContext.setLogLevel("WARN")
+    val df = spark.range(0, 400, 1, 4)
+      .selectExpr("id AS doc_id", "concat('row_', id) AS text")
+    val root = tempDir("graft-conf-ser")
+    val rec = new Recording()
+    rec.enable("jdk.Deserialization").withoutStackTrace()
+    rec.start()
+    try HadoopTableIO(root.toString).overwriteGroup(df, 0)
+    finally rec.stop()
+    val dump = root.resolve("write.jfr")
+    try rec.dump(dump) finally rec.close()
+    val onTasks = RecordingFile.readAllEvents(dump).asScala.filter(e =>
+      e.getEventType.getName == "jdk.Deserialization" && e.getThread != null &&
+        e.getThread.getJavaName.startsWith("Executor task launch"))
+    // the recording sees the tasks' own deserialization
+    assert(onTasks.nonEmpty, "no deserialization recorded on task threads")
+    val confs = onTasks.count(e => Option(e.getClass("type"))
+      .exists(_.getName == "org.apache.spark.util.SerializableConfiguration"))
+    assert(confs == 0, s"$confs Hadoop confs deserialized by 4 write tasks")
+    assert(HadoopTableIO(root.toString).read(spark).count() == 400)
+  }
+
+  test("a failure inside a write task aborts the group write; a re-run completes it") {
+    spark.sparkContext.setLogLevel("WARN")
+    val df = spark.range(0, 40, 1, 4)
+      .selectExpr("id AS doc_id", "concat('row_', id) AS text")
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    def left(dir: java.nio.file.Path) =
+      if (Files.exists(dir)) entries(dir).map(_._1)
+        .filter(n => n.endsWith(".parquet") || n.startsWith("_temporary"))
+      else Set.empty[String]
+
+    val ours = tempDir("graft-task-fail")
+    val e = intercept[Exception] {
+      HadoopTableIO(ours.toString).overwriteGroup(ProbeIO.failInTask(df), 0)
+    }
+    assert(causes(e).exists(c => String.valueOf(c.getMessage)
+      .contains("injected task failure")), e)
+    assert(left(ours.resolve("data/group=0")).isEmpty)
+    // a good frame then makes the stock layout
+    HadoopTableIO(ours.toString).overwriteGroup(df, 0)
+    val stock = tempDir("graft-task-fail-stock")
+    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .option("fs.file.impl.disable.cache", "true")
+      .parquet(s"$stock/data/group=0")
+    assert(entries(ours) == entries(stock))
+
+    // through a run: the group is not committed, and a re-run completes it
+    import spark.implicits._
+    val docs = spark.createDataset(CorpusGen.corpus(7L, 60))
+    val clean = tempDir("graft-task-fail-clean").toString
+    ExtractJob.run(spark, docs,
+      ExtractJob.Config(clean, runId = "ok", groups = 3, partitions = 4))
+    val out = tempDir("graft-task-fail-run").toString
+    intercept[Exception] {
+      ExtractJob.run(spark, docs, ExtractJob.Config(out, runId = "tf1",
+        groups = 3, partitions = 4, io = ProbeIO(out, failTaskGroup = 1)))
+    }
+    assert(Checkpoint.committedGroups(out) == Set(0))
+    assert(left(java.nio.file.Paths.get(out, "data", "group=1")).isEmpty)
+    val r = ExtractJob.run(spark, docs,
+      ExtractJob.Config(out, runId = "tf2", groups = 3, partitions = 4))
+    assert(r.groupsRun == Seq(1, 2) && r.groupsSkipped == Seq(0))
+    def rows(dir: String) = ExtractJob.spansView(spark, dir).collect()
+      .map(_.toString).sorted.toSeq
+    assert(rows(out) == rows(clean))
+  }
+
   test("LocalFs.Raw sets the modes Hadoop's chmod sets, sticky bit included") {
     val conf = new Configuration()
     val ours = new LocalFs.Raw

@@ -6,8 +6,10 @@ jobs, stages and tasks) and prints, for every `pipeline.run` span, one
 table: the spans under the run, the Spark jobs that started inside it
 and each job's stages. Times are milliseconds relative to the run's
 start. Job and stage rows also give the task count, the sum and max of
-task wall time (launch to finish) and the shuffle bytes read and
-written. Jobs and stages come from the listener records, so the
+task wall time (launch to finish), `ovh_ms` (that sum minus the tasks'
+executor run time: deserialization, scheduling and result handling) and
+the shuffle bytes read and written. Jobs and stages come from the
+listener records, so the
 `spark.job` spans the benchmark derives from them are not printed again.
 
 Usage: python3 tools/trace_timeline.py TRACE.jsonl [--run N]
@@ -32,9 +34,11 @@ def load(path):
 
 
 def task_cols(tasks):
-    """(tasks, task-ms sum, task-ms max, shuffle read, shuffle write)."""
+    """(tasks, task-ms sum, task-ms max, overhead ms, shuffle read,
+    shuffle write)."""
     durs = [t["finish_ms"] - t["launch_ms"] for t in tasks]
     return (len(tasks), sum(durs), max(durs, default=0),
+            sum(durs) - sum(t["run_ms"] for t in tasks),
             sum(t["shuffle_read_bytes"] for t in tasks),
             sum(t["shuffle_write_bytes"] for t in tasks))
 
@@ -43,8 +47,8 @@ def row(kind, name, start, end, cols=None):
     left = f"{kind:<6} {name[:44]:<44} {start:>8.0f} {end:>8.0f} {end - start:>7.0f}"
     if cols is None:
         return left
-    n, tsum, tmax, rd, wr = cols
-    return f"{left} {n:>6} {tsum:>8} {tmax:>7} {rd:>10} {wr:>10}"
+    n, tsum, tmax, ovh, rd, wr = cols
+    return f"{left} {n:>6} {tsum:>8} {tmax:>7} {ovh:>7} {rd:>10} {wr:>10}"
 
 
 def timeline(run, recs):
@@ -64,8 +68,8 @@ def timeline(run, recs):
     out = [f"pipeline.run id={run['id']} run_id={run['run_id']} "
            f"wall={(run['end_us'] - run['start_us']) / 1000.0:.0f} ms",
            f"{'kind':<6} {'name':<44} {'start':>8} {'end':>8} {'dur':>7} "
-           f"{'tasks':>6} {'task_ms':>8} {'max_ms':>7} {'shuf_rd':>10} "
-           f"{'shuf_wr':>10}"]
+           f"{'tasks':>6} {'task_ms':>8} {'max_ms':>7} {'ovh_ms':>7} "
+           f"{'shuf_rd':>10} {'shuf_wr':>10}"]
     items = []
     for s in spans:
         if s["name"] != "spark.job" and under(s):
