@@ -566,7 +566,7 @@ object SparkEntry {
       val lm = TextOps.trainNgramLm(d.where(col("doc_id") < 200), "text",
         maxVocab = 5000, maxBigrams = 20000)
       d.select(col("doc_id"),
-          round(graft.functions.NgramLmScore.score(col("text"), lm), 6)
+          round(graft.functions.Natives.ngramLmScore(col("text"), lm), 6)
             .as("lm_score"))
         .where(col("lm_score").isNotNull) // token-less docs unscoreable
         .orderBy("doc_id")
@@ -623,7 +623,7 @@ object SparkEntry {
       val sample = d.where(col("doc_id") < 200)
       val lm = TextOps.trainNgramLm(sample, "text",
         maxVocab = 5000, maxBigrams = 20000)
-      def sc = round(graft.functions.NgramLmScore.score(col("text"), lm), 6)
+      def sc = round(graft.functions.Natives.ngramLmScore(col("text"), lm), 6)
       val ss = sample.select(sc.as("s")).where(col("s").isNotNull)
         .collect().map(_.getDouble(0)).sorted
       val (t1, t2) = (ss(ss.length / 3), ss(2 * ss.length / 3))
@@ -643,7 +643,8 @@ object SparkEntry {
       val d = t(s, dir, "documents").select("doc_id", "text")
       val merges = TextOps.trainBpe(d.where(col("doc_id") < 200), "text",
         numMerges = 200, maxWords = 2000)
-      val toks = graft.functions.BpeTokenize.tokenize(col("text"), merges)
+      val toks = graft.functions.Natives.bpeTokenize(col("text"),
+        new graft.functions.BpeTokenize.Model(merges))
       d.select(col("doc_id"),
           size(toks).as("n_bpe_tokens"),
           concat_ws("\u0001", slice(toks, 1, 8)).as("head_tokens"),
@@ -789,7 +790,7 @@ object SparkEntry {
       }.toDF("doc_id", "text")
       base.union(synth)
         .select(col("doc_id"),
-          graft.functions.TrigramLangId.langId(col("text")).as("lang"))
+          graft.functions.Natives.langId(col("text")).as("lang"))
         .orderBy("doc_id")
     }),
     "q_context_assembly" -> ((s, dir) => {

@@ -1,15 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Trainable byte-level BPE tokenizer (Sennrich et al. 2016; the GPT-2
   * byte-level variant — public knowledge) as a native Catalyst
-  * [[Expression]]. The reference counts tokens only via a managed model
+  * expression (a [[Natives]] row). The reference counts tokens only via a managed model
   * service; here the merge table is LEARNED from the corpus itself
   * ([[graft.ops.TextOps.trainBpe]] — bounded driver work like IVF's
   * `trainCentroids`) and applied distributed with no shuffle, making the
@@ -30,40 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * lexicographic — stop when `numMerges` reached or the best pair count
   * is < 2. Overlapping occurrences all count ("aaa" has two (a,a)).
   */
-case class BpeTokenize(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_tokenize"
-
-  @transient private lazy val model = new BpeTokenize.Model(merges)
-
-  override protected def nullSafeEval(input: Any): Any =
-    BpeTokenize.compute(input.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    // the merge-rank table is a runtime object (learned, possibly
-    // thousands of entries): passed into generated code by reference,
-    // not inlined into the Java source
-    val modelRef = ctx.addReferenceObj("bpeModel", model,
-      classOf[BpeTokenize.Model].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.BpeTokenize.compute($c, $modelRef);
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : BpeTokenize = copy(child = newChild)
-}
-
 object BpeTokenize {
 
   /** Prepared merge ranks + a per-executor word→tokens cache (pre-tokens
@@ -199,11 +161,5 @@ object BpeTokenize {
       m += 1
     }
     merges.toSeq
-  }
-
-  /** Column wrapper: array of BPE tokens under the learned `merges`. */
-  def tokenize(c: Column, merges: Seq[(String, String)]): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(BpeTokenize(GraftExprBridge.expression(c), merges))
   }
 }

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd URL canonicalization — the r06 replacement for the
@@ -29,23 +24,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.oracle.PlainOracles.canonicalUrlPlain]] (a single-pass char
   * walk — a different mechanism entirely).
   */
-case class CanonicalUrl(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_canonical_url"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input")
-  override protected def nullSafeEval(input: Any): Any =
-    CanonicalUrl.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.CanonicalUrl.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : CanonicalUrl = copy(child = newChild)
-}
-
 object CanonicalUrl {
   // the same pattern strings as the composed form, compiled once
   private val Frag = java.util.regex.Pattern.compile("#.*$")
@@ -81,10 +59,5 @@ object CanonicalUrl {
         if (joined.isEmpty) base else base + "?" + joined
       }
     UTF8String.fromString(TrailSlash.matcher(rebuilt).replaceAll(""))
-  }
-
-  def canonicalUrl(c: Column): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(CanonicalUrl(GraftExprBridge.expression(c)))
   }
 }

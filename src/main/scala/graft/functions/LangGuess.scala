@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd 6-language heuristic — the r06 replacement for the
@@ -25,23 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Parity vs the composed form is pinned in OpsSpec.
   */
-case class LangGuess(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_lang_guess"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input")
-  override protected def nullSafeEval(input: Any): Any =
-    LangGuess.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.LangGuess.compute($c)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : LangGuess = copy(child = newChild)
-}
-
 object LangGuess {
   private val Zh = UTF8String.fromString("zh")
   private val Ja = UTF8String.fromString("ja")
@@ -76,10 +54,5 @@ object LangGuess {
     if (padded.contains(" le ") || padded.contains(" les ") ||
         padded.contains(" une ")) return Fr
     En
-  }
-
-  def langGuess(c: Column): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(LangGuess(GraftExprBridge.expression(c)))
   }
 }

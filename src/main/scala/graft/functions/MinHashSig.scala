@@ -1,15 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native k-permutation MinHash signature over w-word shingles as a
-  * Catalyst [[Expression]] with real `doGenCode` — one pass per row, no
+  * Catalyst expression (a [[Natives]] row) with real `doGenCode` — one pass per row, no
   * per-shingle string allocation. Bit-identical to the composed-column
   * formulation [[graft.ops.Dedup.minhashSignatureComposed]] (pinned by
   * OpsSpec) and to the plain twin `PlainOracles.minhashSig`:
@@ -29,34 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns NULL when the text has fewer than w tokens (the composed
   * form's `when(size(shingles) > 0, …)`).
   */
-case class MinHashSig(child: Expression, w: Int, k: Int)
-    extends UnaryExpression {
-  require(w >= 1 && k >= 1, "MinHashSig requires w >= 1 and k >= 1")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash_sig"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[UTF8String], w, k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MinHashSig.compute($c, $w, $k);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSig = copy(child = newChild)
-}
-
 object MinHashSig {
   private final val Seed = 42L // spark.sql.functions.xxhash64 default seed
 
@@ -109,11 +77,5 @@ object MinHashSig {
       j += 1
     }
     new GenericArrayData(sig)
-  }
-
-  /** Column wrapper. */
-  def minhashSig(c: Column, w: Int, k: Int): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(MinHashSig(GraftExprBridge.expression(c), w, k))
   }
 }

@@ -1,67 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Corpus-trained bigram language-model scorer with Stupid Backoff
-  * (Brants et al. 2007, "Large Language Models in Machine Translation"
-  * — the web-scale smoothing that needs no discounting passes; public
-  * knowledge). The CCNet-style quality gate: documents whose token
-  * stream the corpus LM finds improbable (gibberish, boilerplate soup,
-  * wrong-language fragments) score low and can be filtered or
-  * bucketed.
-  *
-  * Model semantics (the plain oracle reimplements this spec
-  * independently):
-  *  - tokens: split on single 0x20 bytes, empty tokens skipped (the
-  *    [[TextEmbed]] convention);
-  *  - S(w|prev) = bigramCount(prev w) / unigramCount(prev) when the
-  *    bigram AND its prefix survive the frequency cut, else
-  *    0.4 · S(w); S(w) = count(w)/N for retained vocab, else 0.1/N
-  *    (OOV floor); the first token scores S(w);
-  *  - document score = Σ log10 S / nTokens (mean log-prob; 0 tokens →
-  *    NULL). Summation is left-to-right, so engine and twin are
-  *    bit-identical.
-  *
-  * Training ([[graft.ops.TextOps.trainNgramLm]]) keeps the heavy part
-  * distributed — two aggregates over the corpus; only the top-K
-  * (count desc, gram asc) unigrams/bigrams reach the driver, N stays
-  * the FULL sample token count. The model ships to executors once via
-  * the codegen object reference, like [[BpeTokenize]]'s merge table.
-  */
-case class NgramLmScore(child: Expression, model: NgramLm)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_ngram_lm_score"
-
-  override protected def nullSafeEval(input: Any): Any =
-    model.score(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val modelRef = ctx.addReferenceObj("lmModel", model,
-      classOf[NgramLm].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double r = $modelRef.score($c.toString());
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = r.doubleValue(); }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : NgramLmScore = copy(child = newChild)
-}
 
 /** The trained model: retained unigram/bigram counts + the full-sample
   * token total. Bigram keys are `prev + " " + w` — unambiguous because
@@ -114,10 +53,36 @@ final case class NgramLm(unigrams: Map[String, Long],
   }
 }
 
+/** Corpus-trained bigram language-model scorer with Stupid Backoff
+  * (Brants et al. 2007, "Large Language Models in Machine Translation"
+  * — the web-scale smoothing that needs no discounting passes; public
+  * knowledge). The CCNet-style quality gate: documents whose token
+  * stream the corpus LM finds improbable (gibberish, boilerplate soup,
+  * wrong-language fragments) score low and can be filtered or
+  * bucketed.
+  *
+  * Model semantics (the plain oracle reimplements this spec
+  * independently):
+  *  - tokens: split on single 0x20 bytes, empty tokens skipped (the
+  *    [[TextEmbed]] convention);
+  *  - S(w|prev) = bigramCount(prev w) / unigramCount(prev) when the
+  *    bigram AND its prefix survive the frequency cut, else
+  *    0.4 · S(w); S(w) = count(w)/N for retained vocab, else 0.1/N
+  *    (OOV floor); the first token scores S(w);
+  *  - document score = Σ log10 S / nTokens (mean log-prob; 0 tokens →
+  *    NULL). Summation is left-to-right, so engine and twin are
+  *    bit-identical.
+  *
+  * Training ([[graft.ops.TextOps.trainNgramLm]]) keeps the heavy part
+  * distributed — two aggregates over the corpus; only the top-K
+  * (count desc, gram asc) unigrams/bigrams reach the driver, N stays
+  * the FULL sample token count. The model ships to executors once via
+  * the codegen object reference, like [[BpeTokenize]]'s merge table.
+  */
 object NgramLmScore {
-  /** Column wrapper. */
-  def score(c: Column, model: NgramLm): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(NgramLmScore(GraftExprBridge.expression(c), model))
-  }
+  /** The kernel of `graft_ngram_lm_score`: [[NgramLm.score]] of the
+    * text.
+    */
+  def compute(s: UTF8String, model: NgramLm): java.lang.Double =
+    model.score(s.toString)
 }

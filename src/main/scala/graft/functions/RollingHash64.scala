@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Polynomial rolling-hash document fingerprint (Rabin–Karp form,
@@ -13,29 +9,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * rolling form means a windowed variant (substring fingerprints) can
   * reuse the same arithmetic with precomputed base powers.
   */
-case class RollingHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_rolling_hash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHash64.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RollingHash64.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : RollingHash64 = copy(child = newChild)
-}
-
 object RollingHash64 {
   def compute(s: UTF8String): Long = {
     var h = 1125899906842597L // large prime seed
@@ -43,10 +16,5 @@ object RollingHash64 {
     val n = s.numBytes()
     while (i < n) { h = h * 31L + (s.getByte(i) & 0xffL); i += 1 }
     h
-  }
-
-  def rollingHash64(c: Column): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(RollingHash64(GraftExprBridge.expression(c)))
   }
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** xxhash64 of every w-word shingle as a native codegen'd expression —
@@ -25,31 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * so `explode`/`posexplode` drop the row identically). Tier-(b) custom
   * Expression per SURVEY.md §4, same justification as [[MinHashSig]].
   */
-case class ShingleHashes(child: Expression, w: Int)
-    extends UnaryExpression {
-  require(w >= 1, "ShingleHashes requires w >= 1")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingle_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleHashes.compute(input.asInstanceOf[UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ShingleHashes.compute($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : ShingleHashes = copy(child = newChild)
-}
-
 object ShingleHashes {
   private final val Seed = 42L // spark.sql.functions.xxhash64 default seed
   private val Empty = new GenericArrayData(Array.emptyLongArray)
@@ -86,11 +57,5 @@ object ShingleHashes {
       i += 1
     }
     new GenericArrayData(hs)
-  }
-
-  /** Column wrapper. */
-  def shingleHashes(c: Column, w: Int): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(ShingleHashes(GraftExprBridge.expression(c), w))
   }
 }

@@ -1,15 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 64-bit SimHash over whitespace tokens as a Catalyst
-  * [[Expression]] with real `doGenCode` — one pass over the UTF-8 bytes
+  * expression (a [[Natives]] row) with real `doGenCode` — one pass over the UTF-8 bytes
   * per row, no per-token array allocation. Semantically identical to the
   * composed-column formulation in [[graft.ops.Dedup.simhash]] (pinned by
   * OpsSpec): tokens are split on single 0x20 bytes (empties included,
@@ -22,29 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * preference order in SURVEY.md §4 — the only op where the built-in
   * compositional form measurably wastes work at 100 TB scale.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.SimHash64.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SimHash64 = copy(child = newChild)
-}
-
 object SimHash64 {
   private final val Seed = 42L // spark.sql.functions.xxhash64 default seed
 
@@ -82,11 +54,5 @@ object SimHash64 {
       b += 1
     }
     fp
-  }
-
-  /** Column wrapper. */
-  def simhash64(c: Column): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(SimHash64(GraftExprBridge.expression(c)))
   }
 }

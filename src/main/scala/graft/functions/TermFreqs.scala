@@ -1,11 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd BM25 tokenization stats: one pass over the
@@ -23,29 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * against the composed form by SearchSpec/OpsSpec and by the
   * q_bm25_topk DuckDB twin.
   */
-case class TermFreqs(child: Expression, terms: Seq[String])
-    extends UnaryExpression {
-  require(terms.nonEmpty, "TermFreqs requires at least one term")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_term_freqs"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input")
-  private lazy val termBytes: Array[Array[Byte]] =
-    terms.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-  override protected def nullSafeEval(input: Any): Any =
-    TermFreqs.compute(input.asInstanceOf[UTF8String], termBytes)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val termsRef = ctx.addReferenceObj("terms", termBytes, "byte[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TermFreqs.compute($c, $termsRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression)
-      : TermFreqs = copy(child = newChild)
-}
-
 object TermFreqs {
 
   def compute(s0: UTF8String, terms: Array[Array[Byte]]): ArrayData = {
@@ -77,10 +49,5 @@ object TermFreqs {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  def termFreqs(text: Column, terms: Seq[String]): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(TermFreqs(GraftExprBridge.expression(text), terms))
   }
 }

@@ -1,16 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic text embedder: L2-normalized feature-hashing projection
   * (the "hashing trick", Weinberger et al. 2009 — public knowledge) as a
-  * native codegen'd Catalyst [[Expression]]. Closes the reference's
+  * native codegen'd Catalyst expression (a [[Natives]] row). Closes the reference's
   * embedding-generation half (its EMBED step calls a managed embedding
   * service, /root/reference/setup.sql:187): search and embedding-dedup
   * now compose from RAW TEXT without a precomputed vectors table, and
@@ -30,33 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * deployment swaps in model vectors through the same array<float>
   * column contract.
   */
-case class TextEmbed(child: Expression, dim: Int) extends UnaryExpression {
-  require(dim >= 1, "TextEmbed requires dim >= 1")
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_text_embed"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextEmbed.compute(input.asInstanceOf[UTF8String], dim)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TextEmbed.compute($c, $dim);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : TextEmbed = copy(child = newChild)
-}
-
 object TextEmbed {
   private final val Seed = 42L // spark.sql.functions.xxhash64 default seed
 
@@ -91,11 +60,5 @@ object TextEmbed {
     i = 0
     while (i < dim) { out(i) = (acc(i) * inv).toFloat; i += 1 }
     new GenericArrayData(out)
-  }
-
-  /** Column wrapper. */
-  def embed(c: Column, dim: Int): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(TextEmbed(GraftExprBridge.expression(c), dim))
   }
 }

@@ -2,15 +2,11 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Character-trigram language identifier (Cavnar & Trenkle 1994,
   * "N-Gram-Based Text Categorization" — public knowledge) as a native
-  * codegen'd Catalyst [[Expression]]. Replaces the 6-language
+  * codegen'd Catalyst expression (a [[Natives]] row). Replaces the 6-language
   * stopword-cascade heuristic ([[graft.ops.TextOps.langIdGuess]], kept
   * for the stable q_langid oracle) with a 25-language classifier whose
   * per-language profiles are TRAINED at class-load time from the seeded
@@ -49,29 +45,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * training-data-pipeline role (corpus routing / per-language stats)
   * that its corpus lacks.
   */
-case class TrigramLangId(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"$prettyName requires a string input")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_langid"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TrigramLangId.classifyUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TrigramLangId.classifyUtf8($c);")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : TrigramLangId = copy(child = newChild)
-}
-
 object TrigramLangId {
 
   /** Profile depth K: both the max profile length and the miss penalty. */
@@ -515,10 +488,4 @@ object TrigramLangId {
   /** Codegen/eval entry point. */
   def classifyUtf8(s: UTF8String): UTF8String =
     UTF8String.fromString(classify(s.toString))
-
-  /** Column wrapper. */
-  def langId(c: Column): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(TrigramLangId(GraftExprBridge.expression(c)))
-  }
 }

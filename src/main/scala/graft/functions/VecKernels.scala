@@ -1,12 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** Native codegen'd vector kernels for the similarity / quantization /
   * embedding-dedup operators (optimization round, guide §1.2 step 2 /
@@ -25,15 +20,6 @@ import org.apache.spark.sql.types._
   * the driver's expected-table oracles).
   */
 object VecKernels {
-
-  private def isFloatArr(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  private def isVecArr(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
 
   @inline private def elem(a: ArrayData, i: Int, isF: Boolean): Double =
     if (isF) a.getFloat(i).toDouble else a.getDouble(i)
@@ -278,227 +264,4 @@ object VecKernels {
     }
     s
   }
-
-  // ---------- Column wrappers ----------
-
-  private def col(e: Expression): Column = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.column(e)
-  }
-  private def expr(c: Column): Expression = {
-    import org.apache.spark.sql.GraftExprBridge
-    GraftExprBridge.expression(c)
-  }
-
-  def cosineSim(a: Column, b: Column): Column = col(CosineSim(expr(a), expr(b)))
-  def sq8ScaleCol(v: Column): Column = col(Sq8Scale(expr(v)))
-  def sq8CodesCol(v: Column, scale: Column): Column =
-    col(Sq8Codes(expr(v), expr(scale)))
-  def codeCosineCol(a: Column, b: Column): Column =
-    col(CodeCosine(expr(a), expr(b)))
-  def hyperplaneSketchCol(v: Column, nPlanes: Int): Column =
-    col(HyperplaneSketchExpr(expr(v), nPlanes))
-  def bestCellCol(v: Column, cents: Array[Array[Double]],
-                  ids: Array[Long]): Column =
-    col(BestCell(expr(v), cents, ids))
-  def pqCodesCol(v: Column, books: Array[Array[Array[Double]]]): Column =
-    col(PqEncodeExpr(expr(v), books))
-  def adcScoreCol(codes: Column, lut: Array[Array[Double]]): Column =
-    col(AdcScore(expr(codes), lut))
-
-  private[functions] def vecTypeCheck(e: Expression, name: String)
-      : TypeCheckResult =
-    if (isVecArr(e.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name requires array<float> or array<double> input, " +
-        s"got ${e.dataType}")
-
-  private[functions] def floatFlag(e: Expression): Boolean =
-    isFloatArr(e.dataType)
-}
-
-/** Cosine similarity of two numeric arrays (see [[VecKernels.cosine]]). */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_cosine"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = VecKernels.vecTypeCheck(left, prettyName)
-    if (l != TypeCheckResult.TypeCheckSuccess) l
-    else VecKernels.vecTypeCheck(right, prettyName)
-  }
-  private lazy val aF = VecKernels.floatFlag(left)
-  private lazy val bF = VecKernels.floatFlag(right)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.cosine(a.asInstanceOf[ArrayData], aF,
-      b.asInstanceOf[ArrayData], bF)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      |java.lang.Double r = graft.functions.VecKernels.cosine($a, $aF, $b, $bF);
-      |if (r == null) { ${ev.isNull} = true; }
-      |else { ${ev.value} = r.doubleValue(); }
-      |""".stripMargin)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** SQ8 per-vector quantization scale (see [[VecKernels.sq8Scale]]). */
-case class Sq8Scale(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_sq8_scale"
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecKernels.vecTypeCheck(child, prettyName)
-  private lazy val isF = VecKernels.floatFlag(child)
-  override def nullSafeEval(v: Any): Any =
-    VecKernels.sq8Scale(v.asInstanceOf[ArrayData], isF)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VecKernels.sq8Scale($c, $isF)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : Sq8Scale = copy(child = newChild)
-}
-
-/** SQ8 integer codes (see [[VecKernels.sq8Codes]]). */
-case class Sq8Codes(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_sq8_codes"
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val l = VecKernels.vecTypeCheck(left, prettyName)
-    if (l != TypeCheckResult.TypeCheckSuccess) l
-    else if (right.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a double scale")
-  }
-  private lazy val isF = VecKernels.floatFlag(left)
-  override def nullSafeEval(v: Any, s: Any): Any =
-    VecKernels.sq8Codes(v.asInstanceOf[ArrayData], isF,
-      s.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (v, s) => s"graft.functions.VecKernels.sq8Codes($v, $isF, $s)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Sq8Codes =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Cosine over SQ8 code arrays (see [[VecKernels.codeCosine]]). */
-case class CodeCosine(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_code_cosine"
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<int> inputs")
-    }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecKernels.codeCosine(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      |java.lang.Double r = graft.functions.VecKernels.codeCosine($a, $b);
-      |if (r == null) { ${ev.isNull} = true; }
-      |else { ${ev.value} = r.doubleValue(); }
-      |""".stripMargin)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CodeCosine =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Hyperplane LSH sketch (see [[VecKernels.hyperplaneSketch]]). */
-case class HyperplaneSketchExpr(child: Expression, nPlanes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hyperplane_sketch"
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecKernels.vecTypeCheck(child, prettyName)
-  private lazy val isF = VecKernels.floatFlag(child)
-  override def nullSafeEval(v: Any): Any =
-    VecKernels.hyperplaneSketch(v.asInstanceOf[ArrayData], isF, nPlanes)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VecKernels.hyperplaneSketch($c, $isF, $nPlanes)")
-  override protected def withNewChildInternal(newChild: Expression)
-      : HyperplaneSketchExpr = copy(child = newChild)
-}
-
-/** Nearest-centroid assignment (see [[VecKernels.bestCell]]). */
-case class BestCell(child: Expression, cents: Array[Array[Double]],
-                    ids: Array[Long]) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_best_cell"
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecKernels.vecTypeCheck(child, prettyName)
-  private lazy val isF = VecKernels.floatFlag(child)
-  override def nullSafeEval(v: Any): Any =
-    VecKernels.bestCell(v.asInstanceOf[ArrayData], isF, cents, ids)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      |java.lang.Long r = graft.functions.VecKernels.bestCell(
-      |  $c, $isF, $centsRef, $idsRef);
-      |if (r == null) { ${ev.isNull} = true; }
-      |else { ${ev.value} = r.longValue(); }
-      |""".stripMargin)
-  }
-  override protected def withNewChildInternal(newChild: Expression)
-      : BestCell = copy(child = newChild)
-}
-
-/** PQ code assignment (see [[VecKernels.pqCodes]]). */
-case class PqEncodeExpr(child: Expression,
-                        books: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-  override def checkInputDataTypes(): TypeCheckResult =
-    VecKernels.vecTypeCheck(child, prettyName)
-  private lazy val isF = VecKernels.floatFlag(child)
-  override def nullSafeEval(v: Any): Any =
-    VecKernels.pqCodes(v.asInstanceOf[ArrayData], isF, books)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("books", books, "double[][][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VecKernels.pqCodes($c, $isF, $booksRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression)
-      : PqEncodeExpr = copy(child = newChild)
-}
-
-/** ADC lookup score (see [[VecKernels.adcScore]]). */
-case class AdcScore(child: Expression, lut: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_adc_score"
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<int> codes, got $t")
-    }
-  override def nullSafeEval(codes: Any): Any =
-    VecKernels.adcScore(codes.asInstanceOf[ArrayData], lut)
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val lutRef = ctx.addReferenceObj("lut", lut, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VecKernels.adcScore($c, $lutRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression)
-      : AdcScore = copy(child = newChild)
 }

@@ -140,7 +140,7 @@ object CorpusPipeline {
 
     val langExpr =
       if (cfg.langClassifier == "trigram")
-        graft.functions.TrigramLangId.langId(col(textCol))
+        graft.functions.Natives.langId(col(textCol))
       else TextOps.langIdGuess(col(textCol))
     val lang = count("lang_filter",
       if (cfg.keepLangs.isEmpty) quality
@@ -155,7 +155,7 @@ object CorpusPipeline {
           lang.orderBy(col(idCol)).limit(cfg.lmTrainDocs), textCol,
           cfg.lmMaxVocab, cfg.lmMaxBigrams)
         count("lm_gate", lang.where(
-          graft.functions.NgramLmScore.score(col(textCol), lm) >= floor))
+          graft.functions.Natives.ngramLmScore(col(textCol), lm) >= floor))
     }
 
     // exact dedup: keep the min-id row per identical text. The digest

@@ -38,7 +38,7 @@ object CorpusReport {
     * multilingual pipeline actually keys shards on.
     */
   def byLanguageTrigram(df: DataFrame, textCol: String): DataFrame =
-    df.groupBy(graft.functions.TrigramLangId.langId(col(textCol))
+    df.groupBy(graft.functions.Natives.langId(col(textCol))
         .as("lang"))
       .agg(count(lit(1)).as("n"),
            round(avg(length(col(textCol))), 2).as("avg_chars"))

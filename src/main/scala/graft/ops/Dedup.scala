@@ -57,7 +57,7 @@ object Dedup {
     // xxhash64 over the materialized shingle string — no per-window
     // string allocation).
     val sh = df.select(col(idCol).as("id"),
-        explode(array_distinct(graft.functions.ShingleHashes
+        explode(array_distinct(graft.functions.Natives
           .shingleHashes(col(textCol), w))).as("sh"))
       .persist()
     // force the cache ONCE before the freq-filter join: AQE materializes
@@ -116,7 +116,7 @@ object Dedup {
   def duplicatedWindows(df: DataFrame, idCol: String, textCol: String,
                         w: Int, minDocs: Int = 2): DataFrame = {
     val wnd = df.select(col(idCol).as("id"),
-        posexplode(graft.functions.ShingleHashes
+        posexplode(graft.functions.Natives
           .shingleHashes(col(textCol), w)))
       .select(col("id"), col("pos"), col("col").as("sh"))
       .localCheckpoint() // reuse point for the frequency agg + join back
@@ -213,10 +213,10 @@ object Dedup {
                           bench: DataFrame, benchTextCol: String,
                           w: Int): DataFrame = {
     val cw = corpus.select(col(idCol).as("id"),
-        explode(array_distinct(graft.functions.ShingleHashes
+        explode(array_distinct(graft.functions.Natives
           .shingleHashes(col(textCol), w))).as("sh"))
     val bw = bench.select(
-        explode(array_distinct(graft.functions.ShingleHashes
+        explode(array_distinct(graft.functions.Natives
           .shingleHashes(col(benchTextCol), w))).as("sh"))
       .distinct()
     cw.join(broadcast(bw.withColumn("hit", lit(1L))), Seq("sh"), "left")
@@ -236,7 +236,7 @@ object Dedup {
     * composed form below pins its semantics in OpsSpec.
     */
   def minhashSignature(text: Column, w: Int, k: Int): Column =
-    graft.functions.MinHashSig.minhashSig(text, w, k)
+    graft.functions.Natives.minhashSig(text, w, k)
 
   /** Pure-Catalyst composed formulation (transform + array_min over the
     * shingle array) — semantic twin of the native expression, kept as
@@ -352,7 +352,7 @@ object Dedup {
     // native codegen'd expression (graft.functions.SimHash64); the
     // composed-column twin `simhash` below pins its semantics in tests
     val fp = df.select(col(idCol).as("id"),
-      graft.functions.SimHash64.simhash64(col(textCol)).as("fp"))
+      graft.functions.Natives.simhash64(col(textCol)).as("fp"))
     hammingPairs64(fp, "id", "fp", maxHamming)
   }
 
@@ -392,7 +392,7 @@ object Dedup {
   // ---------- embedding near-dup ----------
 
   /** Cosine similarity of two numeric-array columns — the native
-    * codegen'd kernel ([[graft.functions.CosineSim]]); bit-identical to
+    * codegen'd kernel (`Natives.cosine`); bit-identical to
     * the composed zip_with/aggregate form it replaced (Spark's
     * higher-order functions are CodegenFallback — interpreted lambda
     * evaluation with per-element boxing dominated every similarity
@@ -400,7 +400,7 @@ object Dedup {
     * pinned in OpsSpec).
     */
   def cosine(a: Column, b: Column): Column =
-    graft.functions.VecKernels.cosineSim(a, b)
+    graft.functions.Natives.cosine(a, b)
 
   /** The pre-r06 composed form, kept as the in-engine semantic
     * reference the native kernel is tested against (OpsSpec parity).

@@ -35,11 +35,16 @@ object Search {
     // r06: dl + per-term tfs come from ONE native byte-pass
     // (graft.functions.TermFreqs) instead of a split(lower) plus an
     // interpreted filter-HOF per term; tokenization/equality semantics
-    // are identical (parity pinned in SearchSpec + the DuckDB twin)
-    val tfdl = graft.functions.TermFreqs.termFreqs(col(textCol), terms)
-    val perDoc = df.select(
-      col(idCol) +: element_at(tfdl, 1).as("dl") +:
-        terms.indices.map(i => element_at(tfdl, i + 2).as(s"tf$i")): _*)
+    // are identical (parity pinned in SearchSpec + the DuckDB twin).
+    // The pass is projected once as its own column, which the
+    // element_at reads share: CollapseProject keeps a non-cheap alias
+    // that is read more than once in its own projection.
+    val tfdl = graft.functions.Natives.termFreqs(col(textCol),
+      terms.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray)
+    val perDoc = df.select(col(idCol), tfdl.as("tfdl")).select(
+      col(idCol) +: element_at(col("tfdl"), 1).as("dl") +:
+        terms.indices.map(i =>
+          element_at(col("tfdl"), i + 2).as(s"tf$i")): _*)
     val aggs = count(lit(1)).as("n") +: avg(col("dl")).as("avgdl") +:
       terms.indices.map(i =>
         sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))

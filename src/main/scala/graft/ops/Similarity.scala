@@ -17,7 +17,7 @@ object Similarity {
     * Pure Catalyst; identical across runs and partitionings.
     */
   def hyperplaneSketch(vec: Column, nPlanes: Int): Column =
-    graft.functions.VecKernels.hyperplaneSketchCol(vec, nPlanes)
+    graft.functions.Natives.hyperplaneSketch(vec, nPlanes)
 
   /** The pre-r06 composed form — the in-engine semantic reference the
     * native kernel is parity-tested against (OpsSpec); interpreted HOF
@@ -46,7 +46,7 @@ object Similarity {
     * array<float> contract at deployment.
     */
   def embedText(text: Column, dim: Int): Column =
-    graft.functions.TextEmbed.embed(text, dim)
+    graft.functions.Natives.textEmbed(text, dim)
 
   /** Exact brute-force cosine top-k for a single query vector: broadcast
     * the query as a literal array, one codegen'd scan, TakeOrderedAndProject
@@ -80,21 +80,21 @@ object Similarity {
     * and referenced twice).
     */
   def int8Scale(vec: Column): Column =
-    graft.functions.VecKernels.sq8ScaleCol(vec)
+    graft.functions.Natives.sq8Scale(vec)
 
   /** Codes for [[int8Scale]]'s scale column — see its scaladoc. */
   def int8Codes(vec: Column, scale: Column): Column =
-    graft.functions.VecKernels.sq8CodesCol(vec, scale)
+    graft.functions.Natives.sq8Codes(vec, scale)
 
   /** Cosine over int8 code arrays: dot/(|a||b|) computed on the raw
     * integer codes — the per-vector scales cancel, so this equals the
     * cosine of the dequantized vectors exactly. Integer products are
     * ≤ 127², sums stay exact in double. Native codegen'd kernel
-    * ([[graft.functions.CodeCosine]]) — the composed HOF form was the
+    * (`Natives.codeCosine`) — the composed HOF form was the
     * single-task 0.46 s hot spot of sim_sq8_topk.
     */
   def codeCosine(a: Column, b: Column): Column =
-    graft.functions.VecKernels.codeCosineCol(a, b)
+    graft.functions.Natives.codeCosine(a, b)
 
   /** Pre-r06 composed int8 forms — semantic references for the OpsSpec
     * parity tests of the native kernels.
@@ -178,13 +178,13 @@ object Similarity {
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                books: Array[Array[Array[Double]]]): DataFrame =
-    // native codegen'd kernel (graft.functions.PqEncodeExpr): the
+    // native codegen'd kernel (graft.functions.Natives.pqEncode): the
     // composed form evaluated m·ksub interpreted zip_with/aggregate
     // lambdas per row; arithmetic (normalize → per-subspace first-min
     // squared L2) is replicated op-for-op — OpsSpec pins parity against
     // [[pqEncodeComposed]]
     df.select(col(idCol),
-      graft.functions.VecKernels.pqCodesCol(col(vecCol), books)
+      graft.functions.Natives.pqEncode(col(vecCol), books)
         .as("codes"))
 
   /** Pre-r06 composed PQ encode — the OpsSpec parity reference. */
@@ -232,7 +232,7 @@ object Similarity {
     * load. This is why PQ is the 100 TB read path.
     */
   def pqAdcScore(codes: Column, lut: Array[Array[Double]]): Column =
-    graft.functions.VecKernels.adcScoreCol(codes, lut)
+    graft.functions.Natives.adcScore(codes, lut)
 
   /** Pre-r06 composed ADC score — the OpsSpec parity reference. */
   private[graft] def pqAdcScoreComposed(codes: Column,
@@ -442,14 +442,14 @@ object Similarity {
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
                 centroids: Array[(Long, Array[Float])]): DataFrame = {
     require(centroids.nonEmpty, "ivfAssign requires at least one centroid")
-    // native codegen'd argmax kernel (graft.functions.BestCell): the
+    // native codegen'd argmax kernel (graft.functions.Natives.bestCell): the
     // composed form ran nCells interpreted HOF cosines per row; the
     // kernel replicates the double-product cosine, Double.compare
     // ordering and first-occurrence (lowest cell id) tie-break exactly
     // (OpsSpec parity vs [[ivfAssignComposed]])
     val sorted = centroids.sortBy(_._1)
     df.select(col(idCol), col(vecCol),
-      graft.functions.VecKernels.bestCellCol(col(vecCol),
+      graft.functions.Natives.bestCell(col(vecCol),
         sorted.map(_._2.map(_.toDouble)), sorted.map(_._1)).as("cell_id"))
   }
 

@@ -46,7 +46,7 @@ object TextOps {
     * input, then only the top `maxWords` (word, count) rows — a bounded,
     * sf-independent table like IVF's centroid sample — reach the driver
     * for the merge loop ([[graft.functions.BpeTokenize.learnMerges]]).
-    * Apply with [[graft.functions.BpeTokenize.tokenize]]: a native
+    * Apply with `graft.functions.Natives.bpeTokenize`: a native
     * expression, zero shuffle, model shipped once per executor via the
     * codegen reference (a broadcast-sized object, not per-row state).
     */
@@ -181,7 +181,7 @@ object TextOps {
     * ([[graft.oracle.PlainOracles.canonicalUrlPlain]]).
     */
   def canonicalUrl(url: Column): Column =
-    graft.functions.CanonicalUrl.canonicalUrl(url)
+    graft.functions.Natives.canonicalUrl(url)
 
   /** Pre-r06 composed five-regexp form — the in-engine reference the
     * native [[graft.functions.CanonicalUrl]] is parity-tested against
@@ -243,7 +243,7 @@ object TextOps {
     * exact SQL twin via CASE + regexp.
     */
   def langIdGuess(text: Column): Column =
-    graft.functions.LangGuess.langGuess(text)
+    graft.functions.Natives.langGuess(text)
 
   /** Pre-r06 composed rlike/contains cascade — the in-engine reference
     * the native [[graft.functions.LangGuess]] is parity-tested against
@@ -326,7 +326,7 @@ object TextOps {
   def fingerprint(text: Column): Column = xxhash64(text)
 
   def rollingFingerprint(text: Column): Column =
-    graft.functions.RollingHash64.rollingHash64(text)
+    graft.functions.Natives.rollingHash64(text)
 
   /** Truncated preview ≅ the reference's 300/200/50-char truncations
     * (streamlit_app.py:364-374,689,733).

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.core.{ExtractionSpec, InputDoc, Run}
 import graft.extract.{Layout, PdfTokenizer}
-import graft.functions.{BpeTokenize, TrigramLangId}
+import graft.functions.{BpeTokenize, Natives, TrigramLangId}
 import graft.gen.{ArchiveGen, CorpusGen, GtRow, JsonlGen, PdfGen, WarcGen}
 import graft.ops.{CorpusPipeline, MediaDedup, Multimodal, TableExtract, TextOps}
 import graft.pipeline.ExtractJob
@@ -184,7 +184,7 @@ object Volume {
         (i / langs.size + k).toInt % 977)).mkString(" "))
     }.toDF("id", "text")
     val (byLang, sec) = timed(docs.select(
-        TrigramLangId.langId(col("text")).as("lang"),
+        Natives.langId(col("text")).as("lang"),
         element_at(array(langs.map(lit): _*),
           (col("id") % langs.size).cast("int") + 1).as("want"))
       .groupBy("lang", "want").count().collect()
@@ -259,7 +259,8 @@ object Volume {
     val (merges, trainSec) = timed(TextOps.trainBpe(docs(5000), "text",
       numMerges = 500, maxWords = 5000))
     val (Seq(tokens, pre), sec) = timed(docs(n).select(
-        sum(size(BpeTokenize.tokenize(col("text"), merges))),
+        sum(size(Natives.bpeTokenize(col("text"),
+          new BpeTokenize.Model(merges)))),
         sum(TextOps.bpeTokenCount(col("text"))))
       .collect()(0).toSeq.map(_.asInstanceOf[Long]))
     f"| trainable BPE volume | ${merges.size} merges learned from 5000 " +

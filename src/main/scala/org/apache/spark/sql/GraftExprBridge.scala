@@ -129,44 +129,19 @@ object GraftExprBridge {
     }
   }
 
-  /** Register a 1-arg expression constructor as a SQL function. */
-  def register(spark: SparkSession, name: String,
-               ctor: Expression => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ctor(exprs.head), "scala_udf")
-
-  /** Register an n-arg expression constructor as a SQL function (the
-    * trailing args beyond the first must be foldable int literals for
-    * graft's parameterized expressions — validated by the ctor itself).
+  /** Register a [[graft.functions.Natives]] row as a SQL function: its
+    * inputs, then one integer literal per param; another argument count
+    * fails with the function name and the count it takes.
     */
-  def registerN(spark: SparkSession, name: String,
-                ctor: Seq[Expression] => Expression): Unit =
+  def register(spark: SparkSession, fn: graft.functions.NativeFn): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ctor(exprs), "scala_udf")
+      fn.name, fn.fromSql, "scala_udf")
 
-  /** Register every graft native expression for SQL use:
-    * graft_simhash64(text), graft_minhash_sig(text, w, k),
-    * graft_shingle_hashes(text, w), graft_text_embed(text, dim),
-    * graft_rolling_hash64(text), graft_langid(text). Int parameters
-    * must be literals.
+  /** Register every `Natives` row marked `sql`: graft_simhash64(text),
+    * graft_rolling_hash64(text), graft_langid(text),
+    * graft_minhash_sig(text, w, k), graft_shingle_hashes(text, w) and
+    * graft_text_embed(text, dim).
     */
-  def registerAll(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    def intLit(e: Expression, what: String): Int = e match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    register(spark, "graft_simhash64", graft.functions.SimHash64(_))
-    register(spark, "graft_langid", graft.functions.TrigramLangId(_))
-    register(spark, "graft_rolling_hash64",
-      graft.functions.RollingHash64(_))
-    registerN(spark, "graft_minhash_sig", es =>
-      graft.functions.MinHashSig(es.head,
-        intLit(es(1), "w"), intLit(es(2), "k")))
-    registerN(spark, "graft_shingle_hashes", es =>
-      graft.functions.ShingleHashes(es.head, intLit(es(1), "w")))
-    registerN(spark, "graft_text_embed", es =>
-      graft.functions.TextEmbed(es.head, intLit(es(1), "dim")))
-  }
+  def registerAll(spark: SparkSession): Unit =
+    graft.functions.Natives.all.filter(_.sql).foreach(register(spark, _))
 }

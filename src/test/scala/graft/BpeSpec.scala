@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.BpeTokenize
+import graft.functions.{BpeTokenize, Natives}
 import graft.ops.TextOps
 import graft.oracle.PlainOracles
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,7 +39,7 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val merges = Seq(("a", "a"), ("a", "b"), ("aa", "ab"))
     val got = Seq("aaab aab aaab").toDF("text")
-      .select(BpeTokenize.tokenize(col("text"), merges).as("toks"))
+      .select(Natives.bpeTokenize(col("text"), new BpeTokenize.Model(merges)).as("toks"))
       .collect()(0).getSeq[String](0)
     // pre-tokens "aaab" / " aab" / " aaab" (GPT-2 pattern keeps the
     // leading space on the letter run): lowest-rank-first fusing gives
@@ -55,7 +55,7 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
         .groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }
         .toSeq.sortBy { case (w, c) => (-c, w) }, numMerges = 50)
     val rows = texts.toDF("text")
-      .select(col("text"), BpeTokenize.tokenize(col("text"), merges)
+      .select(col("text"), Natives.bpeTokenize(col("text"), new BpeTokenize.Model(merges))
         .as("toks")).collect()
     rows.foreach { r =>
       val bytes = r.getString(0)
@@ -78,7 +78,7 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(merges.length == 120) // corpus is rich enough to fill the cap
     val got = docsDf.where(col("doc_id") < 100)
       .select(col("doc_id"),
-        BpeTokenize.tokenize(col("text"), merges).as("toks"))
+        Natives.bpeTokenize(col("text"), new BpeTokenize.Model(merges)).as("toks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     texts.foreach { case (id, tx) =>
       assert(got(id) == PlainOracles.bpeApplyPlain(tx, merges), s"doc $id")

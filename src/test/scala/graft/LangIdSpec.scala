@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TrigramLangId
+import graft.functions.{Natives, TrigramLangId}
 import graft.oracle.PlainOracles
 
 /** Trigram language-ID: engine/twin parity, known-language accuracy on
@@ -91,7 +91,7 @@ class LangIdSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("DataFrame execution (codegen path) matches direct classify") {
     import spark.implicits._
     val df = allSeedSentences.take(60).map(_._2).toDF("text")
-      .select(col("text"), TrigramLangId.langId(col("text")).as("lang"))
+      .select(col("text"), Natives.langId(col("text")).as("lang"))
     df.collect().foreach { r =>
       assert(r.getString(1) == TrigramLangId.classify(r.getString(0)))
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{NgramLm, NgramLmScore}
+import graft.functions.{Natives, NgramLm}
 import graft.ops.TextOps
 import graft.oracle.PlainOracles
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -61,7 +61,7 @@ class NgramLmSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lm = TextOps.trainNgramLm(d, "text", 2000, 8000)
     val plainLm = (lm.unigrams, lm.bigrams, lm.total)
     val got = d.select(col("doc_id"),
-        NgramLmScore.score(col("text"), lm).as("s"))
+        Natives.ngramLmScore(col("text"), lm).as("s"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     d.collect().foreach { r =>
       val want = PlainOracles.lmScorePlain(r.getString(1), plainLm).get

@@ -413,7 +413,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   test("native SimHash64 expression == composed-column simhash (and codegen'd)") {
     val d = docsDf.select("doc_id", "text").limit(200)
-    val a = d.select(graft.functions.SimHash64.simhash64(col("text")))
+    val a = d.select(graft.functions.Natives.simhash64(col("text")))
       .collect().map(_.getLong(0))
     val b = d.select(Dedup.simhash(col("text"))).collect().map(_.getLong(0))
     assert(a.sameElements(b))
@@ -421,16 +421,16 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     import spark.implicits._
     val edge = Seq("", " ", "a  b", "naïve 中文 x ", "\u00a0nbsp")
       .toDF("text")
-    val ea = edge.select(graft.functions.SimHash64.simhash64(col("text")))
+    val ea = edge.select(graft.functions.Natives.simhash64(col("text")))
       .collect().map(_.getLong(0))
     val eb = edge.select(Dedup.simhash(col("text"))).collect().map(_.getLong(0))
     assert(ea.sameElements(eb))
     // participates in whole-stage codegen, and SQL-registrable
-    val plan = d.select(graft.functions.SimHash64.simhash64(col("text")))
+    val plan = d.select(graft.functions.Natives.simhash64(col("text")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"not codegen'd:\n$plan")
-    org.apache.spark.sql.GraftExprBridge.register(spark, "graft_simhash64",
-      graft.functions.SimHash64(_))
+    org.apache.spark.sql.GraftExprBridge.register(spark,
+      graft.functions.Natives.simhash64)
     d.createOrReplaceTempView("t_simhash")
     val viaSql = spark.sql(
       "SELECT graft_simhash64(text) FROM t_simhash").collect()
@@ -444,7 +444,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     val edge = Seq("", " ", "  ", "a", "a b", "a  b", " a b ",
       "naïve 中文 emoji🙂 x", "a b c d e").toDF("text")
     for (src <- Seq(d, edge); w <- Seq(1, 2, 3, 5)) {
-      val a = src.select(graft.functions.ShingleHashes
+      val a = src.select(graft.functions.Natives
           .shingleHashes(col("text"), w).as("h"))
         .collect().map(_.getSeq[Long](0))
       val b = src.select(transform(Dedup.wordShingles(col("text"), w),
@@ -454,7 +454,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
         s"shingle-hash mismatch at w=$w")
     }
     // codegen'd
-    val plan = d.select(graft.functions.ShingleHashes
+    val plan = d.select(graft.functions.Natives
         .shingleHashes(col("text"), 3))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"not codegen'd:\n$plan")

@@ -19,6 +19,9 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
 
+  private def utf8(terms: Seq[String]): Array[Array[Byte]] =
+    terms.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+
   test("bm25Scores == driver-side brute-force BM25 (k1=1.2, b=0.75)") {
     val terms = Seq("hash", "join", "vector")
     val rows = docs.select("doc_id", "text").collect()
@@ -56,13 +59,13 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
         size(filter(toks, x => x === lit(t)))): _*).collect()
       .map(_.toSeq.map(_.asInstanceOf[Int]))
     val native = edge.select(
-      graft.functions.TermFreqs.termFreqs(col("text"), terms)).collect()
+      graft.functions.Natives.termFreqs(col("text"), utf8(terms))).collect()
       .map(_.getSeq[Int](0))
     assert(native.map(_.toSeq).toSeq == composed.map(_.toSeq).toSeq)
     // parquet-backed corpus too, and codegen'd
     val d = docs.limit(300)
-    val cn = d.select(graft.functions.TermFreqs
-        .termFreqs(col("text"), Seq("hash", "join"))).collect()
+    val cn = d.select(graft.functions.Natives
+        .termFreqs(col("text"), utf8(Seq("hash", "join")))).collect()
       .map(_.getSeq[Int](0))
     val cc = d.select(
       size(split(lower(col("text")), " ")) +: Seq("hash", "join").map(t =>
@@ -70,10 +73,23 @@ class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
           x => x === lit(t)))): _*).collect()
       .map(_.toSeq.map(_.asInstanceOf[Int]))
     assert(cn.map(_.toSeq).toSeq == cc.map(_.toSeq).toSeq)
-    val plan = d.select(graft.functions.TermFreqs
-        .termFreqs(col("text"), Seq("x")))
+    val plan = d.select(graft.functions.Natives
+        .termFreqs(col("text"), utf8(Seq("x"))))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"not codegen'd:\n$plan")
+  }
+
+  test("bm25Scores evaluates graft_term_freqs once per projection of the input") {
+    val plan = Search.bm25Scores(docs, "doc_id", "text",
+      Seq("hash", "join", "vector")).queryExecution.optimizedPlan
+    val perProject = plan.collect {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+        p.projectList.map(_.collect {
+          case e if e.prettyName == "graft_term_freqs" => e
+        }.size).sum
+    }.filter(_ > 0)
+    assert(perProject.nonEmpty && perProject.forall(_ == 1),
+      s"graft_term_freqs per projection: $perProject\n$plan")
   }
 
   test("bm25TopK plans TakeOrderedAndProject (no global sort)") {

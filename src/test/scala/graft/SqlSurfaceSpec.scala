@@ -91,10 +91,10 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
                 graft_text_embed(t, 16)
          FROM t_native""").collect()
     val viaApi = spark.table("t_native").select(
-      graft.functions.SimHash64.simhash64(org.apache.spark.sql.functions.col("t")),
+      graft.functions.Natives.simhash64(org.apache.spark.sql.functions.col("t")),
       graft.ops.TextOps.rollingFingerprint(org.apache.spark.sql.functions.col("t")),
       graft.ops.Dedup.minhashSignature(org.apache.spark.sql.functions.col("t"), 2, 8),
-      graft.functions.ShingleHashes.shingleHashes(org.apache.spark.sql.functions.col("t"), 2),
+      graft.functions.Natives.shingleHashes(org.apache.spark.sql.functions.col("t"), 2),
       graft.ops.Similarity.embedText(org.apache.spark.sql.functions.col("t"), 16))
       .collect()
     viaSql.zip(viaApi).foreach { case (a, b) =>
@@ -111,5 +111,20 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     }
     assert(err.getMessage.contains("integer literal") ||
       Option(err.getCause).exists(_.getMessage.contains("integer literal")))
+    // a wrong argument count fails with the name and the count it takes
+    for ((q, name, n) <- Seq(
+        ("graft_simhash64(t, 5)", "graft_simhash64", 1),
+        ("graft_text_embed(t, 4, 7)", "graft_text_embed", 2),
+        ("graft_minhash_sig(t, 2, 4, 9)", "graft_minhash_sig", 3),
+        ("graft_simhash64()", "graft_simhash64", 1),
+        ("graft_minhash_sig(t, 2)", "graft_minhash_sig", 3))) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT $q FROM t_native").collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(m => String.valueOf(m.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(name) && m.contains(s"takes $n")),
+        s"$q: ${msgs.mkString(" / ")}")
+    }
   }
 }
