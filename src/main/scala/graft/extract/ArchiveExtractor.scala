@@ -18,11 +18,11 @@ import scala.collection.mutable.ArrayBuffer
   *
   * == Exact member semantics (shared with the test-side twin) ==
   *
-  *  - ZIP: local-file-record walk via `ZipInputStream` (sequential —
-  *    no central-directory seek, so a truncated tail keeps the members
-  *    already read). Directory entries skip; on duplicate names the
-  *    FIRST occurrence wins (the [[DocxExtractor]] rule). A zip that
-  *    an OOXML/EPUB detector claims is NOT an archive — those formats
+  *  - ZIP: the one zip walk, [[Codecs.unzip]], keeping the prefix
+  *    under its error rule ([[Codecs.Read]]) — a truncated tail keeps
+  *    the members already read. Directory entries skip ([[isFile]]);
+  *    on duplicate names the FIRST occurrence wins. A zip that an
+  *    OOXML/EPUB/ODF detector claims is NOT an archive — those formats
   *    are zips too and their front ends own them ([[isPlainZip]]).
   *  - TAR (POSIX ustar and pre-POSIX v7): 512-byte headers — NUL-
   *    terminated name at +0 (prefixed by the ustar `prefix` field at
@@ -32,8 +32,9 @@ import scala.collection.mutable.ArrayBuffer
   *    blocks consumed). Data pads to the 512 boundary; two zero blocks
   *    (or running off the end) terminate. A malformed header ends the
   *    walk with the members already read.
-  *  - `.tar.gz` / `.tgz`: gunzip (all members, corrupt-tail-tolerant
-  *    — [[WarcExtractor.gunzipAll]]) then the tar walk.
+  *  - `.tar.gz` / `.tgz`: gunzip (all members, through the one
+  *    [[Codecs.drain]], so a corrupt tail keeps what inflated) then the
+  *    tar walk.
   *  - 7z (`'7z'` BC AF 27 1C magic): LZMA/LZMA2 solid archives via the
   *    commons-compress `SevenZFile` already on Spark's classpath (the
   *    one container here whose compression spec — LZMA range coding —
@@ -73,7 +74,7 @@ object ArchiveExtractor {
   def zipKind(bytes: Array[Byte]): String =
     if (!isZip(bytes)) ""
     else {
-      val found = DocxExtractor.entries(bytes, ZipMarkers.map(_._2).toSet)
+      val found = Codecs.zipParts(bytes, ZipMarkers.map(_._2): _*)
       ZipMarkers.collectFirst {
         case (k, m, ok) if found.get(m).exists(ok) => k
       }.getOrElse("zip")
@@ -110,14 +111,7 @@ object ArchiveExtractor {
 
   def isTarGz(bytes: Array[Byte]): Boolean =
     bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f &&
-      (bytes(1) & 0xff) == 0x8b && isTar(gunzipHead512(bytes))
-
-  private def gunzipHead512(bytes: Array[Byte]): Array[Byte] =
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try in.readNBytes(512) finally in.close()
-    } catch { case _: Exception => Array.emptyByteArray }
+      (bytes(1) & 0xff) == 0x8b && isTar(Codecs.inflate("gz", bytes, 512))
 
   /** Header checksum: sum of all 512 header bytes with the checksum
     * field [148,156) read as spaces equals the octal value stored
@@ -159,22 +153,8 @@ object ArchiveExtractor {
       java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
-  def zipEntries(bytes: Array[Byte]): Vector[Entry] = {
-    val out = ArrayBuffer.empty[Entry]
-    val seen = scala.collection.mutable.Set.empty[String]
-    try {
-      val z = new java.util.zip.ZipInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      var e = z.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory && seen.add(e.getName))
-          out += Entry(e.getName, z.readAllBytes())
-        e = z.getNextEntry
-      }
-      z.close()
-    } catch { case _: Exception => () }
-    out.toVector
-  }
+  /** A zip entry name that is not a directory: a plain zip's members. */
+  def isFile(name: String): Boolean = !name.endsWith("/")
 
   def tarEntries(bytes: Array[Byte]): Vector[Entry] = {
     val out = ArrayBuffer.empty[Entry]
@@ -212,15 +192,16 @@ object ArchiveExtractor {
     * not an archive → empty.
     */
   def entries(bytes: Array[Byte]): Vector[Entry] =
-    if (isPlainZip(bytes)) zipEntries(bytes)
-    else if (isTarGz(bytes)) tarEntries(WarcExtractor.gunzipAll(bytes))
+    if (isPlainZip(bytes)) Codecs.unzip(bytes, isFile).value
+    else if (isTarGz(bytes)) tarEntries(Codecs.inflate("gz", bytes))
     else if (isTar(bytes)) tarEntries(bytes)
     else if (isSevenZ(bytes)) sevenZEntries(bytes)
     else Vector.empty
 
-  /** 7z member walk (commons-compress). Per-entry try: a corruption
-    * mid-stream keeps the members already inflated; password-protected
-    * entries (which throw on read) skip. Dirs skip; dup names
+  /** 7z member walk (commons-compress). Each entry is read through
+    * [[Codecs.drain]]: the first entry whose read fails (corruption, or
+    * a password-protected entry) ends the walk and is dropped; the
+    * members already inflated are kept. Dirs skip; dup names
     * first-wins — the zip rule.
     */
   def sevenZEntries(bytes: Array[Byte]): Vector[Entry] = {
@@ -238,16 +219,16 @@ object ArchiveExtractor {
         var ok = true
         while (ok && e != null) {
           if (!e.isDirectory && seen.add(e.getName)) {
-            // read the CURRENT entry's stream (solid archives decode
-            // sequentially; a failure poisons everything after it)
-            val body = try {
-              val bos = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](8192)
-              var n = f.read(buf)
-              while (n > 0) { bos.write(buf, 0, n); n = f.read(buf) }
-              Some(bos.toByteArray)
-            } catch { case _: Exception => ok = false; None }
-            body.foreach(b => out += Entry(e.getName, b))
+            // drain the CURRENT entry's stream (solid archives decode
+            // sequentially; a failure poisons everything after it, and
+            // the entry it hit is dropped whole)
+            val body = Codecs.drain(new java.io.InputStream {
+              def read(): Int = f.read()
+              override def read(b: Array[Byte], o: Int, n: Int): Int =
+                f.read(b, o, n)
+            })
+            if (body.failed) ok = false
+            else out += Entry(e.getName, body.value)
           }
           if (ok) e = try f.getNextEntry catch {
             case _: Exception => null

@@ -1,14 +1,19 @@
 package graft.extract
 
+import java.io.InputStream
+import org.apache.commons.compress.compressors._
+import scala.util.control.NonFatal
+
 /** Whole-stream decompression for the crawl-at-rest codecs beyond
   * gzip: zstd (`.zst` — the Dolma/RedPajama shard codec), xz, bzip2
   * (both long-lived archive-dump codecs), LZ4 frame (`.lz4` — the
   * fast-path shard codec), and framed Snappy (`.sz`/`.snappy` — the
   * Hadoop-ecosystem at-rest codec). Backed by the commons-compress +
   * zstd-jni + xz jars already on Spark's runtime classpath — no new
-  * dependency. Corrupt input returns the bytes decoded so far
-  * (possibly empty), never throws — the same tolerance posture as
-  * [[WarcExtractor.gunzipAll]].
+  * dependency. Also home to the one stream [[drain]] and the one
+  * [[unzip]] walk that every container front end (gzip, the codecs,
+  * zip-packaged formats, plain zips) decodes through, under the one
+  * error rule stated on [[Read]].
   *
   * Scale: one compressed file = one scan row, decompressed streamwise
   * inside the ingest task; the shard conventions of web corpora
@@ -47,43 +52,90 @@ object Codecs {
       bytes(4) == 's' && bytes(5) == 'N' && bytes(6) == 'a' &&
       bytes(7) == 'P' && bytes(8) == 'p' && bytes(9) == 'Y'
 
-  /** Inflate one whole stream by algorithm ("gz" | "zst" | "xz" |
-    * "bz2" | "lz4" | "sz"/"snappy"); concatenated members/frames are
-    * read through. Unknown algo or corrupt framing → the bytes decoded
-    * so far.
+  /** What one [[unzip]] walk or [[drain]] read, and whether an error
+    * ended it. Both follow ONE rule, the one every container front end
+    * inherits: read until the end of the stream or the first error, keep
+    * what was read, and say which of the two happened. A front end that
+    * wants all or nothing checks `failed`; the others keep the prefix.
     */
-  def inflate(algo: String, bytes: Array[Byte]): Array[Byte] =
-    algo match {
-      case "gz" => WarcExtractor.gunzipAll(bytes)
-      case "zst" => drain(new org.apache.commons.compress.compressors
-        .zstandard.ZstdCompressorInputStream(
-          new java.io.ByteArrayInputStream(bytes)))
-      case "xz" => drain(new org.apache.commons.compress.compressors
-        .xz.XZCompressorInputStream(
-          new java.io.ByteArrayInputStream(bytes), true))
-      case "bz2" => drain(new org.apache.commons.compress.compressors
-        .bzip2.BZip2CompressorInputStream(
-          new java.io.ByteArrayInputStream(bytes), true))
-      case "lz4" => drain(new org.apache.commons.compress.compressors
-        .lz4.FramedLZ4CompressorInputStream(
-          new java.io.ByteArrayInputStream(bytes), true))
-      case "sz" | "snappy" =>
-        drain(new org.apache.commons.compress.compressors
-          .snappy.FramedSnappyCompressorInputStream(
-            new java.io.ByteArrayInputStream(bytes)))
-      case _ => Array.empty[Byte]
-    }
+  final case class Read[A](value: A, failed: Boolean)
 
-  private def drain(mk: => java.io.InputStream): Array[Byte] = {
+  /** The stream drain: the bytes of the stream `open` makes, up to its
+    * end, `limit` bytes, or the first error (opening it included). The
+    * stream is closed.
+    */
+  def drain(open: => java.io.InputStream,
+            limit: Int = Int.MaxValue): Read[Array[Byte]] = {
     val out = new java.io.ByteArrayOutputStream()
-    try {
-      val in = mk
+    val failed = try {
+      val in = open
       try {
         val buf = new Array[Byte](64 * 1024)
-        var k = in.read(buf)
-        while (k > 0) { out.write(buf, 0, k); k = in.read(buf) }
+        var k = 1
+        while (k > 0 && out.size < limit) {
+          k = in.read(buf, 0, math.min(buf.length, limit - out.size))
+          if (k > 0) out.write(buf, 0, k)
+        }
       } finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-    out.toByteArray
+      false
+    } catch { case NonFatal(_) => true }
+    Read(out.toByteArray, failed)
   }
+
+  private val Streams: Map[String, InputStream => InputStream] = Map(
+    "gz" -> (new java.util.zip.GZIPInputStream(_)),
+    "zst" -> (new zstandard.ZstdCompressorInputStream(_)),
+    "xz" -> (new xz.XZCompressorInputStream(_, true)),
+    "bz2" -> (new bzip2.BZip2CompressorInputStream(_, true)),
+    "lz4" -> (new lz4.FramedLZ4CompressorInputStream(_, true)),
+    "sz" -> (new snappy.FramedSnappyCompressorInputStream(_)),
+    "snappy" -> (new snappy.FramedSnappyCompressorInputStream(_)))
+
+  /** Inflate a stream by algorithm ("gz" | "zst" | "xz" | "bz2" | "lz4"
+    * | "sz"/"snappy") through the [[drain]], up to `limit` bytes;
+    * concatenated members/frames are read through. Unknown algo → empty.
+    */
+  def inflate(algo: String, bytes: Array[Byte],
+              limit: Int = Int.MaxValue): Array[Byte] =
+    Streams.get(algo).fold(Array.emptyByteArray)(s =>
+      drain(s(new java.io.ByteArrayInputStream(bytes)), limit).value)
+
+  /** The zip walk: local records in archive order (sequential, no
+    * central-directory seek, so a cut archive keeps its head). It reads
+    * the entries whose name `keep` accepts, the FIRST occurrence of each
+    * name only, and ends at the end of the archive, at the first
+    * zip-format error (an entry whose data fails is not kept), or once
+    * `need` entries are read.
+    */
+  def unzip(bytes: Array[Byte], keep: String => Boolean,
+            need: Int = Int.MaxValue): Read[Vector[ArchiveExtractor.Entry]] = {
+    val out = Vector.newBuilder[ArchiveExtractor.Entry]
+    val seen = scala.collection.mutable.Set.empty[String]
+    val failed = try {
+      val z = new java.util.zip.ZipInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try {
+        var e = if (need > 0) z.getNextEntry else null
+        while (e != null) {
+          if (keep(e.getName) && seen.add(e.getName))
+            out += ArchiveExtractor.Entry(e.getName, z.readAllBytes())
+          e = if (seen.size < need) z.getNextEntry else null
+        }
+      } finally z.close()
+      false
+    } catch { case NonFatal(_) => true }
+    Read(out.result(), failed)
+  }
+
+  /** The first occurrence of each of `names`, from one [[unzip]] walk
+    * that stops once all are read: a name is present iff the walk read
+    * it before any error.
+    */
+  def zipParts(bytes: Array[Byte], names: String*): Map[String, Array[Byte]] = {
+    val want = names.toSet
+    unzip(bytes, want, want.size).value.iterator.map(e => e.name -> e.body).toMap
+  }
+
+  def zipPart(bytes: Array[Byte], name: String): Option[Array[Byte]] =
+    zipParts(bytes, name).get(name)
 }

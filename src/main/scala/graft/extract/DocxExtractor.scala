@@ -1,7 +1,5 @@
 package graft.extract
 
-import java.io.ByteArrayInputStream
-import java.util.zip.ZipInputStream
 import scala.collection.mutable.ArrayBuffer
 import Item.{Media, Text}
 
@@ -21,9 +19,11 @@ import Item.{Media, Text}
   * == Exact spec (shared with the test-side DOM twin) ==
   *
   * A payload is DOCX iff it starts with the ZIP local-header magic
-  * `PK\x03\x04` AND the archive contains an entry `word/document.xml`
-  * (entries read sequentially via ZipInputStream; on duplicate names the
-  * FIRST occurrence wins; any zip-format error anywhere ⇒ not DOCX).
+  * `PK\x03\x04` AND the archive contains an entry `word/document.xml`.
+  * Parts are read by the one zip walk, [[Codecs.unzip]], under its
+  * error rule ([[Codecs.Read]]): a part is the FIRST entry of its name,
+  * present iff the walk read it before any zip-format error.
+  * `document.xml` and its rels come from one walk.
   *
   * Relationships: entry `word/_rels/document.xml.rels`, if present, is
   * scanned for `<Relationship ...>` tags; each contributes Id → Target
@@ -91,41 +91,16 @@ object DocxExtractor {
 
   def isDocx(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4 && entry(bytes, DocPath).isDefined
+      bytes(2) == 3 && bytes(3) == 4 &&
+      Codecs.zipPart(bytes, DocPath).isDefined
 
   private[extract] val DocPath = "word/document.xml"
   private val RelsPath = "word/_rels/document.xml.rels"
 
-  /** First zip entry with this exact name, or None (including on any
-    * zip-format error — a mutated archive degrades, never throws).
+  /** Media kind by target extension: png/jpg/… and anything unknown →
+    * "image", mp3/wav/flac → "audio", mp4/mkv/webm → "video".
     */
-  private[extract] def entry(bytes: Array[Byte],
-                             name: String): Option[Array[Byte]] =
-    entries(bytes, Set(name)).get(name)
-
-  /** The first zip entry of each of `names`, from ONE walk: a name maps
-    * to its bytes iff the walk reached and read its first occurrence
-    * before any zip-format error, which ends the walk — per name exactly
-    * what [[entry]] returns.
-    */
-  private[extract] def entries(bytes: Array[Byte],
-                               names: Set[String]): Map[String, Array[Byte]] = {
-    var out = Map.empty[String, Array[Byte]]
-    try {
-      val z = new ZipInputStream(new ByteArrayInputStream(bytes))
-      try {
-        var e = z.getNextEntry
-        while (e != null && out.size < names.size) {
-          if (names(e.getName) && !out.contains(e.getName))
-            out += e.getName -> z.readAllBytes()
-          e = z.getNextEntry
-        }
-      } finally z.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-    out
-  }
-
-  private def mediaKind(target: String): String = {
+  private[extract] def mediaKind(target: String): String = {
     val dot = target.lastIndexOf('.')
     val e = if (dot < 0) "" else target.substring(dot + 1).toLowerCase
     e match {
@@ -139,14 +114,12 @@ object DocxExtractor {
     * have checked [[isDocx]]; a non-archive here returns Vector.empty.
     */
   def items(bytes: Array[Byte]): Vector[Item] = {
-    val doc = entry(bytes, DocPath) match {
+    val parts = Codecs.zipParts(bytes, DocPath, RelsPath)
+    val doc = parts.get(DocPath) match {
       case Some(b) => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case None    => return Vector.empty
     }
-    val rels = entry(bytes, RelsPath)
-      .map(b => parseRels(
-        new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-      .getOrElse(Map.empty[String, String])
+    val rels = relsOf(parts.get(RelsPath))
 
     val out = ArrayBuffer.empty[Item]
     val para = new StringBuilder
@@ -245,8 +218,8 @@ object DocxExtractor {
     * bytes: `word/<target>`, or package-absolute when `/`-prefixed.
     */
   def mediaPayload(bytes: Array[Byte], target: String): Option[Array[Byte]] =
-    entry(bytes, if (target.startsWith("/")) target.substring(1)
-                 else "word/" + target)
+    Codecs.zipPart(bytes, if (target.startsWith("/")) target.substring(1)
+                          else "word/" + target)
 
   // ---------- tag machinery ----------
 
@@ -286,6 +259,11 @@ object DocxExtractor {
     }
     None
   }
+
+  /** An OPC rels part, if read: its Id → Target map (empty without it). */
+  private[extract] def relsOf(part: Option[Array[Byte]]): Map[String, String] =
+    part.fold(Map.empty[String, String])(b =>
+      parseRels(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
 
   private def parseRels(xml: String): Map[String, String] = {
     val m = Map.newBuilder[String, String]

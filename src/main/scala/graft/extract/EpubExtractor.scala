@@ -22,9 +22,10 @@ import Item.Media
   *    `META-INF/container.xml` entry (checked AFTER
   *    [[DocxExtractor.isDocx]] in ingestion — the two cannot clash,
   *    each requires its own marker entry).
-  *  - Zip entries read in one sequential pass; on duplicate names the
-  *    FIRST wins (matches [[DocxExtractor.entry]]); any zip-format
-  *    error degrades to no items, never throws.
+  *  - Zip entries read in one pass of the one zip walk,
+  *    [[Codecs.unzip]]: on duplicate names the FIRST wins. EPUB is the
+  *    all-or-nothing case of its error rule ([[Codecs.Read]]): a walk
+  *    that ended at a zip-format error yields no items, never throws.
   *  - container.xml: the FIRST `<rootfile>`'s `full-path` attribute
   *    (entity-decoded) names the OPF. Missing/unreadable → no items.
   *  - OPF: manifest `<item>` `id` → `href`; spine `<itemref>` `idref`s
@@ -53,7 +54,7 @@ object EpubExtractor {
   def isEpub(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, ContainerPath).isDefined
+      Codecs.zipPart(bytes, ContainerPath).isDefined
 
   private val RootfileRx =
     "(?s)<rootfile\\b[^>]*\\bfull-path\\s*=\\s*\"([^\"]*)\"".r
@@ -89,23 +90,6 @@ object EpubExtractor {
     if (sl < 0) "" else path.substring(0, sl)
   }
 
-  /** All zip entries in one pass, FIRST definition winning on duplicate
-    * names; Map.empty on any zip error.
-    */
-  private def allEntries(bytes: Array[Byte]): Map[String, Array[Byte]] =
-    try {
-      val z = new java.util.zip.ZipInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        var m = Map.empty[String, Array[Byte]]
-        Iterator.continually(z.getNextEntry).takeWhile(_ != null)
-          .foreach { e =>
-            if (!m.contains(e.getName)) m += e.getName -> z.readAllBytes()
-          }
-        m
-      } finally z.close()
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
   private def decodeChapter(b: Array[Byte]): String =
     graft.sources.RawFiles.decodeTextPayload(b)
 
@@ -114,7 +98,10 @@ object EpubExtractor {
     * have checked [[isEpub]]; a non-archive here returns Vector.empty.
     */
   def items(bytes: Array[Byte]): Vector[Item] = {
-    val entries = allEntries(bytes)
+    val walk = Codecs.unzip(bytes, _ => true)
+    val entries =
+      if (walk.failed) Map.empty[String, Array[Byte]]
+      else walk.value.iterator.map(e => e.name -> e.body).toMap
     val opt = for {
       cBytes <- entries.get(ContainerPath)
       opfPath <- RootfileRx.findFirstMatchIn(new String(cBytes, "UTF-8"))
@@ -156,5 +143,5 @@ object EpubExtractor {
     * bytes.
     */
   def mediaPayload(bytes: Array[Byte], path: String): Option[Array[Byte]] =
-    DocxExtractor.entry(bytes, path)
+    Codecs.zipPart(bytes, path)
 }

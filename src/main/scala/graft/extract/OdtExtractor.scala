@@ -1,7 +1,5 @@
 package graft.extract
 
-import java.io.ByteArrayInputStream
-import java.util.zip.ZipInputStream
 import scala.collection.mutable.ArrayBuffer
 import Item.Text
 
@@ -58,7 +56,7 @@ object OdtExtractor {
   def isOdt(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, MimePath).exists(isOdfMime)
+      Codecs.zipPart(bytes, MimePath).exists(isOdfMime)
 
   private[extract] val MimePath = "mimetype"
 
@@ -69,7 +67,7 @@ object OdtExtractor {
   private val MaxRepeat = 1000
 
   def items(bytes: Array[Byte]): Vector[Item] = {
-    val doc = DocxExtractor.entry(bytes, "content.xml") match {
+    val doc = Codecs.zipPart(bytes, "content.xml") match {
       case Some(b) => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case None    => return Vector.empty
     }
@@ -210,6 +208,6 @@ object OdtExtractor {
 
   /** Byte-fetch for an in-archive media target (`Pictures/…`). */
   def mediaPayload(bytes: Array[Byte], target: String): Option[Array[Byte]] =
-    DocxExtractor.entry(bytes,
+    Codecs.zipPart(bytes,
       if (target.startsWith("/")) target.substring(1) else target)
 }

@@ -17,10 +17,11 @@ import Item.Text
   * == Exact spec (shared with the test-side DOM twin) ==
   *
   * A payload is PPTX iff it starts with the ZIP local-header magic AND
-  * the archive contains `ppt/presentation.xml` (first-entry-wins
-  * sequential read, any zip error ⇒ not PPTX — the [[DocxExtractor]]
-  * archive rules; the required entry makes DOCX/XLSX/PPTX/EPUB
-  * classification mutually exclusive on honest files).
+  * the archive contains `ppt/presentation.xml` (the [[DocxExtractor]]
+  * part rules; the required entry makes DOCX/XLSX/PPTX/EPUB
+  * classification mutually exclusive on honest files). The
+  * presentation and its rels come from one walk, each slide and its
+  * rels from one more.
   *
   * Slide order: `ppt/presentation.xml` is scanned for `<p:sldId ...>`
   * tags in document order; each one's `r:id` resolves through
@@ -77,7 +78,7 @@ object PptxExtractor {
   def isPptx(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, PresPath).isDefined
+      Codecs.zipPart(bytes, PresPath).isDefined
 
   /** `.`/`..` segment normalization for OPC part paths. */
   private[graft] def normalizePath(path: String): String = {
@@ -90,52 +91,17 @@ object PptxExtractor {
     out.mkString("/")
   }
 
-  private def mediaKind(target: String): String = {
-    val dot = target.lastIndexOf('.')
-    val e = if (dot < 0) "" else target.substring(dot + 1).toLowerCase
-    e match {
-      case "mp3" | "wav" | "flac" => "audio"
-      case "mp4" | "mkv" | "webm" => "video"
-      case _                      => "image"
-    }
-  }
-
   private def utf8(b: Array[Byte]): String =
     new String(b, java.nio.charset.StandardCharsets.UTF_8)
 
-  /** OPC rels Id → Target, first Id wins (the shared grammar). */
-  private def parseRels(xml: String): Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    val seen = scala.collection.mutable.Set.empty[String]
-    var i = 0
-    while (i < xml.length) {
-      val lt = xml.indexOf("<Relationship", i)
-      if (lt < 0) i = xml.length
-      else {
-        val gt = xml.indexOf('>', lt)
-        if (gt < 0) i = xml.length
-        else {
-          val after = xml.charAt(lt + "<Relationship".length)
-          if (after.isWhitespace || after == '/') {
-            for (id <- DocxExtractor.attrOf(xml, lt, gt, "Id");
-                 t <- DocxExtractor.attrOf(xml, lt, gt, "Target"))
-              if (seen.add(id)) m += id -> t
-          }
-          i = gt + 1
-        }
-      }
-    }
-    m.result()
-  }
-
   /** Slide part paths in presentation order (normalized, in-archive). */
   private[extract] def slideParts(bytes: Array[Byte]): Vector[String] = {
-    val pres = DocxExtractor.entry(bytes, PresPath) match {
+    val parts = Codecs.zipParts(bytes, PresPath, PresRels)
+    val pres = parts.get(PresPath) match {
       case Some(b) => utf8(b)
       case None    => return Vector.empty
     }
-    val rels = DocxExtractor.entry(bytes, PresRels)
-      .map(b => parseRels(utf8(b))).getOrElse(Map.empty[String, String])
+    val rels = DocxExtractor.relsOf(parts.get(PresRels))
     val out = ArrayBuffer.empty[String]
     var i = 0
     while (i < pres.length) {
@@ -165,21 +131,20 @@ object PptxExtractor {
   def items(bytes: Array[Byte]): Vector[Item] = {
     val out = ArrayBuffer.empty[Item]
     slideParts(bytes).foreach { part =>
-      DocxExtractor.entry(bytes, part).foreach { slideBytes =>
-        val dir = part.substring(0, part.lastIndexOf('/') + 1)
-        val relsPath = dir + "_rels/" +
-          part.substring(part.lastIndexOf('/') + 1) + ".rels"
-        val rels = DocxExtractor.entry(bytes, relsPath)
-          .map(b => parseRels(utf8(b)))
-          .getOrElse(Map.empty[String, String])
-        slideItems(utf8(slideBytes), dir, rels, out)
+      val dir = part.substring(0, part.lastIndexOf('/') + 1)
+      val relsPath = dir + "_rels/" +
+        part.substring(part.lastIndexOf('/') + 1) + ".rels"
+      val parts = Codecs.zipParts(bytes, part, relsPath)
+      parts.get(part).foreach { slideBytes =>
+        slideItems(utf8(slideBytes), dir,
+          DocxExtractor.relsOf(parts.get(relsPath)), out)
       }
     }
     out.toVector
   }
 
   /** Whitespace collapse + trim — the shared cell-normal form. */
-  private def normalizeCell(s: String): String = {
+  private[extract] def normalizeCell(s: String): String = {
     val sb = new StringBuilder
     var ws = false
     s.foreach { c =>
@@ -280,7 +245,7 @@ object PptxExtractor {
                     if (Item.isWebUrl(t)) t
                     else normalizePath(
                       if (t.startsWith("/")) t.substring(1) else dir + t)
-                  out += Item.packaged(mediaKind(t), ref)
+                  out += Item.packaged(DocxExtractor.mediaKind(t), ref)
                 }
             case _ => ()
           }
@@ -296,5 +261,5 @@ object PptxExtractor {
     * back to its part bytes.
     */
   def mediaPayload(bytes: Array[Byte], ref: String): Option[Array[Byte]] =
-    DocxExtractor.entry(bytes, ref)
+    Codecs.zipPart(bytes, ref)
 }

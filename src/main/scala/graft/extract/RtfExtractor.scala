@@ -81,17 +81,6 @@ object RtfExtractor {
     "headerl", "headerr", "headerf", "footerl", "footerr", "footerf",
     "footnote", "nonshppict", "themedata", "generator", "pntext")
 
-  /** Whitespace collapse + trim — the shared cell-normal form. */
-  private def normalizeCell(s: String): String = {
-    val sb = new StringBuilder
-    var ws = false
-    s.foreach { c =>
-      if (c.isWhitespace) ws = true
-      else { if (ws && sb.nonEmpty) sb.append(' '); ws = false; sb.append(c) }
-    }
-    sb.toString
-  }
-
   /** Parse one RTF payload into its ordered item stream. */
   def items(bytes: Array[Byte]): Vector[Item] = parse(bytes)._1
 
@@ -238,7 +227,8 @@ object RtfExtractor {
               case "line" => appendText("\n")
               case "tab"  => appendText("\t")
               case "cell" =>
-                rowCells += normalizeCell(para.toString); para.setLength(0)
+                rowCells += PptxExtractor.normalizeCell(para.toString)
+                para.setLength(0)
               case "row" =>
                 if (rowCells.nonEmpty) {
                   tblRows += rowCells.toVector; rowCells.clear()

@@ -246,7 +246,8 @@ object TexExtractor {
                   val (arg, after) = group(a)
                   val ref = arg.trim
                   if (ref.nonEmpty)
-                    out += Media(mediaKind(ref), ref, inFile = false)
+                    out += Media(DocxExtractor.mediaKind(ref), ref,
+                      inFile = false)
                   i = after
                 } else i = a
               case k if KeepArgCmds.contains(k) =>
@@ -339,16 +340,6 @@ object TexExtractor {
   /** Inline-only processing for a keep-arg command argument. */
   private def inlineText(arg: String, inlineOf: String => String): String =
     inlineOf(arg)
-
-  private def mediaKind(target: String): String = {
-    val dot = target.lastIndexOf('.')
-    val e = if (dot < 0) "" else target.substring(dot + 1).toLowerCase
-    e match {
-      case "mp3" | "wav" | "flac" => "audio"
-      case "mp4" | "mkv" | "webm" => "video"
-      case _                      => "image"
-    }
-  }
 
   private def normWs(t: String): String =
     t.split("\n", -1).map(_.trim.replaceAll("[ \\t]+", " "))

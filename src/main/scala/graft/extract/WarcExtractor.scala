@@ -24,8 +24,8 @@ import scala.collection.mutable.ArrayBuffer
   * gzip magic `1f 8b` and their INFLATED stream starts with `WARC/`
   * (the standard layout is one gzip member per record — Java's
   * GZIPInputStream reads concatenated members natively, so the whole
-  * file inflates in one pass; a corrupt tail keeps the records already
-  * decoded).
+  * file inflates in one pass of [[Codecs.drain]]; a corrupt tail keeps
+  * the records already decoded).
   *
   * Records parse as: version line `WARC/x.y`, CRLF header lines
   * `Name: value` (names case-insensitive, LF-only tolerated) up to an
@@ -85,30 +85,7 @@ object WarcExtractor {
     */
   def isWarcGz(bytes: Array[Byte]): Boolean =
     bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f &&
-      (bytes(1) & 0xff) == 0x8b && isWarc(gunzipHead(bytes, 5))
-
-  private def gunzipHead(bytes: Array[Byte], n: Int): Array[Byte] =
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try in.readNBytes(n) finally in.close()
-    } catch { case _: Exception => Array.emptyByteArray }
-
-  /** Inflate ALL gzip members (the per-record-member WARC convention);
-    * a corrupt tail returns what decoded so far.
-    */
-  private[graft] def gunzipAll(bytes: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(bytes.length * 4)
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val buf = new Array[Byte](64 * 1024)
-      var k = in.read(buf)
-      while (k > 0) { out.write(buf, 0, k); k = in.read(buf) }
-      in.close()
-    } catch { case _: Exception => () }
-    out.toByteArray
-  }
+      (bytes(1) & 0xff) == 0x8b && isWarc(Codecs.inflate("gz", bytes, 5))
 
   /** Parse a `.warc` / `.warc.gz` payload into its RETAINED records,
     * file order. Not WARC → empty.
@@ -116,7 +93,7 @@ object WarcExtractor {
   def records(bytes: Array[Byte]): Vector[Rec] = {
     val raw =
       if (isWarc(bytes)) bytes
-      else if (isWarcGz(bytes)) gunzipAll(bytes)
+      else if (isWarcGz(bytes)) Codecs.inflate("gz", bytes)
       else return Vector.empty
     val out = ArrayBuffer.empty[Rec]
     var pos = 0

@@ -386,16 +386,11 @@ object XlsExtractor {
     }
   }
 
-  private def tsvSafe(s: String): String =
-    if (s.exists(ch => ch == '\t' || ch == '\n' || ch == '\r'))
-      s.replaceAll("[\\t\\n\\r]+", " ")
-    else s
-
   private def sheetTsv(wb: Array[Byte], at: Int,
                        sst: Vector[String]): String = {
     val cells = scala.collection.mutable.Map.empty[(Int, Int), String]
     def put(r: Int, c: Int, v: String): Unit =
-      if (r >= 0 && c >= 0) cells((r, c)) = tsvSafe(v)
+      if (r >= 0 && c >= 0) cells((r, c)) = XlsxExtractor.tsvSafe(v)
     var pos = at
     var stop = false
     var sawBof = false
@@ -460,13 +455,6 @@ object XlsExtractor {
         pos += 4 + len
       }
     }
-    if (cells.isEmpty) return ""
-    val rMin = cells.keysIterator.map(_._1).min
-    val rMax = cells.keysIterator.map(_._1).max
-    val cMin = cells.keysIterator.map(_._2).min
-    val cMax = cells.keysIterator.map(_._2).max
-    (rMin to rMax).map { r =>
-      (cMin to cMax).map(c => cells.getOrElse((r, c), "")).mkString("\t")
-    }.mkString("\n")
+    XlsxExtractor.usedRange(cells)
   }
 }

@@ -20,10 +20,10 @@ import scala.collection.mutable.ArrayBuffer
   *
   * A payload is XLSX iff it starts with the ZIP local-header magic
   * `PK\x03\x04` AND the archive contains an entry `xl/workbook.xml`
-  * (first-entry-wins sequential read, any zip error ⇒ not XLSX — the
-  * same archive rules as [[DocxExtractor]]; `word/document.xml` vs
+  * (the [[DocxExtractor]] part rules; `word/document.xml` vs
   * `xl/workbook.xml` makes the two classifications mutually exclusive
-  * on honest files).
+  * on honest files). The workbook, its rels and the shared strings come
+  * from one walk; each sheet part from one more.
   *
   * Workbook order: `xl/workbook.xml` is scanned left-to-right for
   * `<sheet ...>` tags (exact tag name — `<sheets>` the container never
@@ -73,25 +73,24 @@ object XlsxExtractor {
 
   private[extract] val WorkbookPath = "xl/workbook.xml"
   private val RelsPath = "xl/_rels/workbook.xml.rels"
+  private val SstPath = "xl/sharedStrings.xml"
 
   def isXlsx(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, WorkbookPath).isDefined
+      Codecs.zipPart(bytes, WorkbookPath).isDefined
 
   /** (sheetName, tsv) in workbook order — empty sheets keep their slot
     * with tsv = "" so callers can decide (the ingest layer drops them).
     */
   def sheets(bytes: Array[Byte]): Vector[(String, String)] = {
-    val wb = DocxExtractor.entry(bytes, WorkbookPath) match {
+    val parts = Codecs.zipParts(bytes, WorkbookPath, RelsPath, SstPath)
+    val wb = parts.get(WorkbookPath) match {
       case Some(b) => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case None    => return Vector.empty
     }
-    val rels = DocxExtractor.entry(bytes, RelsPath)
-      .map(b => parseRels(
-        new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-      .getOrElse(Map.empty[String, String])
-    val sst = DocxExtractor.entry(bytes, "xl/sharedStrings.xml")
+    val rels = DocxExtractor.relsOf(parts.get(RelsPath))
+    val sst = parts.get(SstPath)
       .map(b => parseSst(
         new String(b, java.nio.charset.StandardCharsets.UTF_8)))
       .getOrElse(Vector.empty)
@@ -100,7 +99,7 @@ object XlsxExtractor {
       rels.get(rid).flatMap { target =>
         val path = if (target.startsWith("/")) target.substring(1)
                    else "xl/" + target
-        DocxExtractor.entry(bytes, path).map(part =>
+        Codecs.zipPart(bytes, path).map(part =>
           name -> sheetTsv(
             new String(part, java.nio.charset.StandardCharsets.UTF_8), sst))
       }
@@ -131,34 +130,6 @@ object XlsxExtractor {
       }
     }
     out.toVector
-  }
-
-  /** OPC rels: Id → Target, first Id wins (the [[DocxExtractor]] rule;
-    * duplicated here only because its twin is private to that object's
-    * spec — the grammar is the shared `attrOf` machinery either way).
-    */
-  private def parseRels(xml: String): Map[String, String] = {
-    val m = Map.newBuilder[String, String]
-    val seen = scala.collection.mutable.Set.empty[String]
-    var i = 0
-    while (i < xml.length) {
-      val lt = xml.indexOf("<Relationship", i)
-      if (lt < 0) i = xml.length
-      else {
-        val gt = xml.indexOf('>', lt)
-        if (gt < 0) i = xml.length
-        else {
-          val after = xml.charAt(lt + "<Relationship".length)
-          if (after.isWhitespace || after == '/') {
-            for (id <- DocxExtractor.attrOf(xml, lt, gt, "Id");
-                 t <- DocxExtractor.attrOf(xml, lt, gt, "Target"))
-              if (seen.add(id)) m += id -> t
-          }
-          i = gt + 1
-        }
-      }
-    }
-    m.result()
   }
 
   // ---------- shared strings ----------
@@ -223,7 +194,8 @@ object XlsxExtractor {
     if (i == 0) -1 else c
   }
 
-  private def tsvSafe(s: String): String =
+  /** Runs of tab/CR/LF in a cell → one space (TSV-safe cell text). */
+  private[extract] def tsvSafe(s: String): String =
     if (s.exists(ch => ch == '\t' || ch == '\n' || ch == '\r'))
       s.replaceAll("[\\t\\n\\r]+", " ")
     else s
@@ -272,7 +244,7 @@ object XlsxExtractor {
         val gt = xml.indexOf('>', lt)
         if (gt < 0) i = xml.length
         else {
-          val (name, closing, selfClosing) = tagOf(xml, lt, gt)
+          val (name, closing, selfClosing) = DocxExtractor.tagOf(xml, lt, gt)
           name match {
             case "row" if !closing =>
               closeCell()
@@ -298,6 +270,14 @@ object XlsxExtractor {
     }
     closeCell()
 
+    usedRange(cells)
+  }
+
+  /** A sparse (row, column) → cell map as TSV over its used range: rows
+    * min..max × columns min..max, absent cells empty; "" without cells.
+    */
+  private[extract] def usedRange(
+      cells: scala.collection.Map[(Int, Int), String]): String = {
     if (cells.isEmpty) return ""
     val rMin = cells.keysIterator.map(_._1).min
     val rMax = cells.keysIterator.map(_._1).max
@@ -306,17 +286,5 @@ object XlsxExtractor {
     (rMin to rMax).map { r =>
       (cMin to cMax).map(c => cells.getOrElse((r, c), "")).mkString("\t")
     }.mkString("\n")
-  }
-
-  /** (name, isClosing, isSelfClosing) — the [[DocxExtractor]] tag rule. */
-  private def tagOf(doc: String, lt: Int, gt: Int)
-      : (String, Boolean, Boolean) = {
-    var s = lt + 1
-    val closing = s < gt && doc.charAt(s) == '/'
-    if (closing) s += 1
-    var e = s
-    while (e < gt && !doc.charAt(e).isWhitespace && doc.charAt(e) != '/')
-      e += 1
-    (doc.substring(s, e), closing, doc.charAt(gt - 1) == '/')
   }
 }

@@ -174,12 +174,13 @@ object VecKernels {
     * with a runtime-null index reads a garbage value slot — measured
     * first-element through the constant-fold path, last-element
     * through codegen). The kernel pins the defined answer: NULL cell
-    * id (boxed return, expression is nullable).
+    * id (boxed return, expression is nullable). A vector whose length
+    * differs from a centroid's is NULL too, as in [[cosine]].
     */
   def bestCell(v: ArrayData, isF: Boolean, cents: Array[Array[Double]],
                ids: Array[Long]): java.lang.Long = {
-    if (anyNull(v)) return null
     val n = v.numElements()
+    if (anyNull(v) || cents.exists(_.length != n)) return null
     var bestIdx = 0
     var best = 0.0
     var c = 0

@@ -432,7 +432,7 @@ object RawFiles {
     */
   private def members(format: String,
                       bytes: Array[Byte]): Vector[ArchiveExtractor.Entry] =
-    if (format == "zip") ArchiveExtractor.zipEntries(bytes)
+    if (format == "zip") Codecs.unzip(bytes, ArchiveExtractor.isFile).value
     else ArchiveExtractor.entries(bytes)
 
   /** One InputDoc per archive MEMBER file (`<relpath>#<member>`),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.ArchiveExtractor
+import graft.extract.{ArchiveExtractor, Codecs}
 import graft.gen.ArchiveGen
 import graft.sources.RawFiles
 import org.apache.spark.sql.SparkSession
@@ -75,7 +75,7 @@ class ArchiveSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
       java.nio.charset.StandardCharsets.ISO_8859_1)
       .replace("b.txt", "a.txt")
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    val es = ArchiveExtractor.zipEntries(dup)
+    val es = Codecs.unzip(dup, ArchiveExtractor.isFile).value
     assert(es.map(_.name) == Vector("a.txt"))
     assert(new String(es.head.body, "UTF-8") == "first")
     assert(ArchiveExtractor.isPlainZip(dup))

@@ -121,7 +121,7 @@ class CodecsSpec extends AnyFunSuite {
   test("seg.warc.zst and dump.tar.zst fan out like their .gz twins") {
     val warcRaw = graft.gen.WarcGen.fileBytes(0) match {
       case bytes if graft.extract.WarcExtractor.isWarc(bytes) => bytes
-      case bytes => graft.extract.WarcExtractor.gunzipAll(bytes)
+      case bytes => Codecs.inflate("gz", bytes)
     }
     // the compressed name rides into doc_ids AND span media_refs (the
     // pseudo-path is the compressed file) — normalize both for compare
@@ -137,7 +137,7 @@ class CodecsSpec extends AnyFunSuite {
 
     val tarRaw = graft.gen.ArchiveGen.fileBytes(1) match {
       case bytes if graft.extract.ArchiveExtractor.isTar(bytes) => bytes
-      case bytes => graft.extract.WarcExtractor.gunzipAll(bytes)
+      case bytes => Codecs.inflate("gz", bytes)
     }
     if (graft.extract.ArchiveExtractor.isTar(tarRaw)) {
       val viaTz = RawFiles.decodeAny("dump.tar.zst", zst(tarRaw), "")

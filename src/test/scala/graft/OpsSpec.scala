@@ -592,6 +592,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     val nat = Similarity.ivfAssign(nullElem, "id", "v", smallCents)
       .select("cell_id").collect()(0)
     assert(nat.isNullAt(0), "null-elem cell id must be null")
+    // a vector longer or shorter than the centroids: null cell, not a
+    // task failure or a score against a centroid prefix
+    val ragged = Seq((5L, Seq(1.0f, 0.0f, 0.0f, 0.0f, 1.0f)),
+      (3L, Seq(0.0f, 1.0f, 0.0f))).toDF("id", "v")
+    assert(Similarity.ivfAssign(ragged, "id", "v", smallCents)
+      .select("cell_id").collect().forall(_.isNullAt(0)),
+      "length-mismatch cell id must be null")
     val smallBooks = Array(
       Array(Array(0.3, 0.4), Array(0.1, 0.2)),
       Array(Array(0.5, 0.5), Array(0.0, 0.1)))
