@@ -135,6 +135,8 @@ case class ExtractedRow(
 
 /** Per-partition lineage/metrics sidecar row (north-rule requirement;
   * generalizes the reference's processed-count counter, setup.sql:259-274).
+  * `bytes_in` is the UTF-8 byte count of the docs' span texts, the cost
+  * the skew decision sums.
   */
 case class PartitionMetrics(
   run_id: String, group: Int, partition_id: Int, task_attempt: Long,

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.core._
 import graft.extract.Extractor
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftExprBridge,
   SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -20,22 +20,24 @@ import scala.jdk.CollectionConverters._
   * warehouse size (README.md:268).
   *
   * Scale design (SURVEY.md §4):
-  *  - ONE PASS per run ([[run]]): the docs of the uncommitted groups are
-  *    scanned, decoded, salted or merged, and extracted once, in one job;
-  *    each pass partition holds its rows, encoded as the output's binary
-  *    rows, as one array per group, an RDD block (MEMORY_AND_DISK). Each
-  *    group is written from its own arrays in only the pass partitions
-  *    that hold its docs, so its write runs no object serializer and
-  *    writes no zero-row file. The input is read at most twice — the
-  *    bounded skew-decision sample and the pass — whatever `groups` is.
-  *  - NO shuffle in the hot path except the skew-salting repartition;
+  *  - ONE READ per run ([[run]]): the docs of the uncommitted groups are
+  *    planned once, as one projection, and read and decoded once, by the
+  *    skew decision's job, which holds them as RDD blocks
+  *    (MEMORY_AND_DISK). The pass then salts or merges the held docs with
+  *    RDD steps only and extracts them, in one job; each pass partition
+  *    holds its rows, encoded as the output's binary rows, as one array
+  *    per group, an RDD block. Each group is written from its own arrays
+  *    in only the pass partitions that hold its docs, so its write runs
+  *    no object serializer and writes no zero-row file.
+  *  - NO shuffle in the hot path except the skew-salting exchange;
   *    extraction is embarrassingly parallel per document, ordering is
   *    computed in-memory per doc (the reference's ROW_NUMBER window
   *    degenerates to a local index).
-  *  - SKEW: a cheap cost proxy (`sum(length(span.text))`, computed as a
-  *    codegen'd Catalyst `aggregate`) routes pathological docs to their
-  *    own hash space; normal docs hash-partition uniformly. One giant doc
-  *    occupies one task that the scheduler backfills around.
+  *  - SKEW: a cheap cost proxy (the UTF-8 bytes of a doc's span texts, a
+  *    Catalyst `aggregate`, which Spark interprets span by span) routes
+  *    pathological docs to their own hash space; normal docs
+  *    hash-partition uniformly. One giant doc occupies one task that the
+  *    scheduler backfills around.
   *  - CHECKPOINT/RESUME: docs are bucketed by `xxhash64(doc_id)` into
   *    `groups`; each group's output directory is written with overwrite
   *    semantics and committed to the manifest atomically ([[Checkpoint]])
@@ -78,16 +80,18 @@ object ExtractJob {
                        groupsSkipped: Seq[Int], docsProcessed: Long,
                        elapsedMs: Long, salted: Boolean)
 
-  /** Extract an iterator of (group, doc) pairs into (group, row) pairs,
-    * streaming (iterator-to-iterator — no partition materialization),
-    * recording one metrics row per group the partition saw under
-    * partition id `part`. A task of the one-pass path holds docs of
-    * several groups, so the counters are kept per group and `duration_ms`
-    * is the task time spent on that group's docs (fetching each doc,
-    * extracting it and handing on its rows).
+  /** Extract an iterator of (group, doc, cost) triples into (group, row)
+    * pairs, streaming (iterator-to-iterator — no partition
+    * materialization), recording one metrics row per group the partition
+    * saw under partition id `part`. A task of the one-pass path holds docs
+    * of several groups, so the counters are kept per group and
+    * `duration_ms` is the task time spent on that group's docs (fetching
+    * each doc, extracting it and handing on its rows). `bytes_in` sums
+    * the docs' skew costs, the UTF-8 bytes of their span texts.
     */
   private def extractPartition(
-      part: Int, docs: Iterator[(Int, InputDoc)], groups: Int, runId: String,
+      part: Int, docs: Iterator[(Int, InputDoc, Long)], groups: Int,
+      runId: String,
       acc: CollectionAccumulator[PartitionMetrics])
       : Iterator[(Int, ExtractedRow)] = {
     val tc = TaskContext.get()
@@ -105,13 +109,11 @@ object ExtractJob {
       private var done = false
       override def hasNext: Boolean = {
         while (!cur.hasNext && { charge(); docs.hasNext }) {
-          val (dg, d) = docs.next()
+          val (dg, d, cost) = docs.next()
           g = dg
           nDocs(g) += 1
-          if (d.spans != null) {
-            nSpans(g) += d.spans.size
-            d.spans.foreach(s => if (s.text != null) bytesIn(g) += s.text.length)
-          }
+          if (d.spans != null) nSpans(g) += d.spans.size
+          bytesIn(g) += cost
           val rows = Extractor.extractRows(d)
           nOut(g) += rows.size
           rows.foreach { r =>
@@ -142,17 +144,17 @@ object ExtractJob {
     pmod(xxhash64(col("doc_id")), lit(groups)).cast("int")
 
   /** Extract `docs` into `cfg.outDir`, checkpointed per group (group =
-    * pmod(xxhash64(doc_id), groups)). ONE pass (one job) over the docs of
-    * the uncommitted groups scans and decodes them, salts or merges their
-    * partitions and extracts them; each pass partition is held as one
-    * RDD block (MEMORY_AND_DISK) of one array per group of encoded
-    * (binary) output rows. The groups are then written and committed in
-    * order, each from a frame over its own arrays in only the held
+    * pmod(xxhash64(doc_id), groups)). The docs of the uncommitted groups
+    * are planned once, and read and decoded once per run, whatever
+    * `groups` is: the skew decision's job scans them and holds them as
+    * RDD blocks (MEMORY_AND_DISK). ONE pass (one job) salts or merges the
+    * held docs and extracts them; each pass partition is held as one RDD
+    * block of one array per group of encoded (binary) output rows, and
+    * the held docs are freed. The groups are then written and committed
+    * in order, each from a frame over its own arrays in only the held
     * partitions that hold its docs: at most one data file per such
     * partition, and one schema-only file for a group without docs. A run
-    * with one group to write writes it straight from the pass. The input
-    * is read at most twice per run — the bounded skew-decision sample and
-    * the pass — whatever `groups` is.
+    * with one group to write writes it straight from the pass.
     */
   def run(spark: SparkSession, docs: Dataset[InputDoc], cfg: Config)
       : RunReport =
@@ -197,168 +199,196 @@ object ExtractJob {
   }
 
   /** The shared run: skew decision, then the groups' write/commit loop.
-    * `onePass` selects how a group's frame is obtained — its encoded rows
-    * in the blocks one held extraction pass produced, read from only the
-    * blocks that hold its docs ([[run]], when more than one group is to
-    * be written), or a sub-job of its own ([[runBucketed]]).
+    * Every pass reads the same projection of the input and shapes it
+    * with the same RDD steps. `onePass` selects where a group's frame
+    * comes from: the held input of [[run]] — straight from its pass with
+    * one group to write, else from the encoded rows its one held
+    * extraction pass produced, read from only the blocks that hold the
+    * group's docs — or a sub-job of its own over the group's pruned scan
+    * ([[runBucketed]]).
     */
   private def runImpl(spark: SparkSession, grouped: DataFrame, cfg: Config,
                       onePass: Boolean): RunReport = {
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
     val nPart = if (cfg.partitions > 0) cfg.partitions
                 else spark.sparkContext.defaultParallelism * 4
     val committed = Checkpoint.committedGroups(cfg.outDir)
+    val todo = (0 until cfg.groups).filterNot(committed.contains)
     val acc = new CollectionAccumulator[PartitionMetrics]
     spark.sparkContext.register(acc, "graft.extract.metrics")
 
-    // skew cost proxy, a codegen'd column expr — no data pass beyond the
-    // scan itself. cost proxy = payload bytes via octet_length (O(1) per
-    // span — byte count off the UTF8 buffer, unlike length() which scans
-    // for chars); catches both many-span and single-giant-span docs
-    val withGroup = grouped
+    // the rows every pass reads, as one projection (_group, doc_id, spans,
+    // _cost, _salt). _cost is the skew cost proxy: payload bytes via
+    // octet_length (O(1) per span — byte count off the UTF8 buffer,
+    // unlike length() which scans for chars), which catches both
+    // many-span and single-giant-span docs. Spark 4.1's `aggregate`
+    // (ArrayAggregate) is a CodegenFallback: the otherwise codegen'd
+    // projection interprets it, one lambda call per span. _salt is the
+    // doc's exchange key if the pass salts: big docs get the full 64-bit
+    // hash (≈ singleton partitions among nPart); normal docs hash into
+    // [0, nPart). A doc's partition depends on its doc_id only, so a
+    // group's rows sit in the same partitions whether it is extracted
+    // alone or with other groups
+    val input = grouped
       .withColumn("_cost",
         coalesce(aggregate(col("spans"), lit(0L),
           (a, s) => a + coalesce(octet_length(s.getField("text")).cast("long"),
                                  lit(0L))), lit(0L)))
-
-    // salting decision: the repartition shuffle moves the full payload —
-    // worth it iff the cost distribution is skewed RELATIVE TO a
-    // partition's fair share (one doc ≥ 25% of a partition, or over the
-    // absolute big-doc threshold). The expensive part of the stats pass
-    // is _cost itself (octet_length over every span payload), so it is
-    // BOUNDED (VERDICT r04 #3) in PARTITION units — a scan partition is
-    // byte-bounded by the split config (maxPartitionBytes), so touching
-    // ≤ ~2x SkewSampleParts evenly-spaced partitions bounds decision
-    // I/O in bytes, in one RDD aggregate: one job, no exchange. The
-    // total is scaled back up by the kept-partition fraction; with fewer
-    // than 2x SkewSampleParts input partitions the stride is 1, every
-    // partition is kept, the scale is 1 and the decision is exact. A
-    // lone monster doc can evade a sample; the miss cost is one
-    // straggler task on the NARROW path (after mergeDown it may share
-    // that task with its coalesce neighbors), strictly cheaper than the
-    // full-payload shuffle a false positive would buy at 10^12 docs. In
-    // an Iceberg deployment the exact max/sum come free from table
-    // column stats instead. Skipped entirely when every group is already
-    // committed — a no-op resume must not pay any input scan
-    // (report.salted is then false).
-    // one narrow projection serves both the decision sample and the
-    // partition-count probes (partition count is projection-invariant);
-    // planning it once avoids a second full-plan-to-RDD conversion
-    lazy val costsRdd = withGroup.select(col("_cost")).rdd
-    lazy val srcParts = costsRdd.getNumPartitions
-    def skewDecision(mx: Long, total: Long): Boolean = {
-      val fairShare = math.max(total / math.max(nPart, 1), 1L)
-      mx >= cfg.bigDocBytes || mx >= fairShare / 4
-    }
-    val todo = (0 until cfg.groups).filterNot(committed.contains)
-    val useSalt = todo.nonEmpty && {
-      val k = math.max(srcParts / SkewSampleParts, 1) // evenly-spaced stride
-      // PartitionPruningRDD: launch ONLY the kept partitions' tasks (a
-      // mapPartitionsWithIndex formulation would still dispatch one no-op
-      // task per skipped partition); unpulled partition iterators never
-      // open their files (FileScanRDD opens lazily on first pull), so the
-      // skipped partitions' payloads are never read
-      val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
-      val kept = PartitionPruningRDD.create(costsRdd, i => i % k == 0)
-      val (mx, tot, cnt) = kept
-        .map(_.getLong(0))
-        .aggregate((0L, 0L, 0L))(
-          { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
-          { case ((m1, t1, c1), (m2, t2, c2)) =>
-            (math.max(m1, m2), t1 + t2, c1 + c2) })
-      // BIAS: file sources pack splits largest-first, so partition sizes
-      // tend to fall with the index, and the first partition of each
-      // stride (the one kept) tends to be the largest of it. The
-      // extrapolated total therefore errs high (a higher fair share, so
-      // the relative test salts less often), while the max always sees
-      // partition 0, which holds the largest file
-      cnt > 0 &&
-        skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
-    }
-
-    // small-file sources (a binaryFile directory scan) can arrive with
-    // ONE partition per file — that many write tasks each paying a
-    // parquet-writer init (measured: 40k tiny partitions turned a 30s
-    // ingest into 170s). When the source partitioning is pathological
-    // relative to the configured parallelism, merge with a NARROW
-    // coalesce (no shuffle; skewed inputs take the salted repartition
-    // path instead, which the salting decision already detects).
-    val mergeDown = !useSalt && srcParts > nPart * 4
-
-    // skew isolation: big docs get the full 64-bit hash (≈ singleton
-    // partitions among nPart); normal docs hash into [0, nPart). A doc's
-    // partition depends on its doc_id only, so a group's rows sit in the
-    // same partitions whether it is extracted alone or with other groups
-    def prepared(docs: DataFrame): Dataset[(Int, String, Seq[Span])] =
-      (if (useSalt)
-        docs.withColumn("_salt",
-            when(col("_cost") >= cfg.bigDocBytes,
-                 xxhash64(col("doc_id"), lit(1)))
-              .otherwise(pmod(xxhash64(col("doc_id")), lit(nPart))))
-          .repartition(nPart, col("_salt"))
-        else if (mergeDown) docs.coalesce(nPart)
-        else docs)
-        .select("_group", "doc_id", "spans").as[(Int, String, Seq[Span])]
-    def docsOf(it: Iterator[(Int, String, Seq[Span])]) =
-      it.map { case (g, id, spans) => (g, InputDoc(id, spans)) }
-    // task closures take these, not `cfg`, whose TableIO stays driver-side
-    val (groups, runId) = (cfg.groups, cfg.runId)
-
-    var docsProcessed = 0L
-    def writeAndCommit(frameOf: Int => DataFrame): Unit = todo.foreach { g =>
-      val gT0 = System.currentTimeMillis()
-      cfg.tableIO.overwriteGroup(frameOf(g), g)
-      val gDocCount = {
-        // metrics rows for this group (accumulator is cumulative)
-        val rows = acc.value.asScala.filter(_.group == g)
-        rows.groupBy(_.partition_id)
-          .map(_._2.maxBy(_.task_attempt).doc_count).sum
-      }
-      docsProcessed += gDocCount
-      Checkpoint.commitGroup(cfg.outDir, g, cfg.runId, gDocCount,
-        System.currentTimeMillis() - gT0)
-    }
-    // with one group left to write (groups = 1, or a resume) its own
-    // sub-job is already the single pass: holding its rows buys nothing
-    if (!onePass || todo.size <= 1)
-      writeAndCommit(g => prepared(withGroup.filter(col("_group") === g))
-        .mapPartitions(it => extractPartition(TaskContext.getPartitionId(),
-          docsOf(it), groups, runId, acc).map(_._2))
-        .toDF())
-    else {
-      // one element per pass partition: its rows already encoded as the
-      // output's binary rows, one array per group, so the group writes
-      // run no object serializer. Metrics carry the held partition's own
-      // index, so a block lost and recomputed inside a pruned group write
-      // is still recorded under it
-      val enc = ExpressionEncoder[ExtractedRow]()
-      val held = prepared(withGroup.filter(col("_group").isin(todo: _*))).rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          val ser = enc.createSerializer() // reuses one row: copy each
-          val by = Array.fill(groups)(Array.newBuilder[InternalRow])
-          extractPartition(i, docsOf(it), groups, runId, acc)
-            .foreach { case (g, r) => by(g) += ser(r).copy() }
-          Iterator.single(by.map(_.result()))
-        }
+      .withColumn("_salt",
+        when(col("_cost") >= cfg.bigDocBytes, xxhash64(col("doc_id"), lit(1)))
+          .otherwise(pmod(xxhash64(col("doc_id")), lit(nPart))))
+      .select("_group", "doc_id", "spans", "_cost", "_salt")
+    val pending = input.filter(col("_group").isin(todo: _*))
+    // [[run]] holds the input: the decision job below reads, decodes and
+    // keeps the partitions it samples, and the pass reads them from there
+    // (and the rest from the scan), so each input partition is read once.
+    // Freed once the pass has run, or when the decision or the pass fails;
+    // a held block lost before then is recomputed from the scan
+    val in = if (onePass && todo.nonEmpty)
+      GraftExprBridge.toRdd(pending).map(_.copy())
         .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        held.count() // the pass: a failure here commits nothing
-        writeAndCommit { g =>
-          // the held partitions with docs of g (from the pass's metrics):
-          // the write launches tasks for these only, so it writes no
-          // zero-row file for a partition without them. A group with no
-          // docs gets no partition, and the writer then writes one
-          // schema-only file. Salted, the normal docs of a group hash into
-          // at most nPart/groups partitions when groups divides nPart
-          val parts = acc.value.asScala.filter(_.group == g)
-            .map(_.partition_id).toSet
-          GraftExprBridge.internalFrame(spark,
-            PartitionPruningRDD.create(held, parts.contains).flatMap(_(g)),
-            enc.schema)
+    else null
+    def free(): Unit =
+      if (in != null && in.getStorageLevel != StorageLevel.NONE) in.unpersist()
+
+    var useSalt = false
+    var docsProcessed = 0L
+    try {
+      // salting decision: the exchange moves the full payload — worth it
+      // iff the cost distribution is skewed RELATIVE TO a partition's fair
+      // share (one doc ≥ 25% of a partition, or over the absolute big-doc
+      // threshold), over the docs of the groups to write. The expensive
+      // part of the stats pass is _cost itself (octet_length over every
+      // span payload), so it is BOUNDED (VERDICT r04 #3) in PARTITION
+      // units — a scan partition is byte-bounded by the split config
+      // (maxPartitionBytes), so touching ≤ ~2x SkewSampleParts
+      // evenly-spaced partitions bounds decision I/O in bytes, in one RDD
+      // aggregate: one job, no exchange. The total is scaled back up by
+      // the kept-partition fraction; with fewer than 2x SkewSampleParts
+      // input partitions the stride is 1, every partition is kept, the
+      // scale is 1 and the decision is exact. A lone monster doc can evade
+      // a sample; the miss cost is one straggler task on the NARROW path
+      // (after mergeDown it may share that task with its coalesce
+      // neighbors), strictly cheaper than the full-payload shuffle a false
+      // positive would buy at 10^12 docs. In an Iceberg deployment the
+      // exact max/sum come free from table column stats instead. Skipped
+      // entirely when every group is already committed — a no-op resume
+      // must not pay any input scan (report.salted is then false).
+      lazy val costs = if (in != null) in else GraftExprBridge.toRdd(pending)
+      lazy val srcParts = costs.getNumPartitions
+      def skewDecision(mx: Long, total: Long): Boolean = {
+        val fairShare = math.max(total / math.max(nPart, 1), 1L)
+        mx >= cfg.bigDocBytes || mx >= fairShare / 4
+      }
+      useSalt = todo.nonEmpty && {
+        val k = math.max(srcParts / SkewSampleParts, 1) // evenly-spaced stride
+        // PartitionPruningRDD: launch ONLY the kept partitions' tasks (a
+        // mapPartitionsWithIndex formulation would still dispatch one no-op
+        // task per skipped partition); unpulled partition iterators never
+        // open their files (FileScanRDD opens lazily on first pull), so the
+        // skipped partitions' payloads are never read
+        val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
+        val (mx, tot, cnt) = PartitionPruningRDD.create(costs, i => i % k == 0)
+          .map(_.getLong(3))
+          .aggregate((0L, 0L, 0L))(
+            { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
+            { case ((m1, t1, c1), (m2, t2, c2)) =>
+              (math.max(m1, m2), t1 + t2, c1 + c2) })
+        // BIAS: file sources pack splits largest-first, so partition sizes
+        // tend to fall with the index, and the first partition of each
+        // stride (the one kept) tends to be the largest of it. The
+        // extrapolated total therefore errs high (a higher fair share, so
+        // the relative test salts less often), while the max always sees
+        // partition 0, which holds the largest file
+        cnt > 0 &&
+          skewDecision(mx, (tot * (srcParts.toDouble / keptN)).toLong)
+      }
+
+      // small-file sources (a binaryFile directory scan) can arrive with
+      // ONE partition per file — that many write tasks each paying a
+      // parquet-writer init (measured: 40k tiny partitions turned a 30s
+      // ingest into 170s). When the source partitioning is pathological
+      // relative to the configured parallelism, merge with a NARROW
+      // coalesce (no shuffle; skewed inputs take the salted exchange
+      // instead, which the salting decision already detects).
+      val mergeDown = todo.nonEmpty && !useSalt && srcParts > nPart * 4
+
+      // the pass over input rows: salted by Spark's own hash exchange on
+      // _salt (what `repartition(nPart, col("_salt"))` plans, without a
+      // second plan or its adaptive re-planning), merged down by the
+      // coalesce `CoalesceExec` runs, or narrow; then each row decoded as
+      // `.as[(Int, String, Seq[Span])]` would, extracted, and each output
+      // row encoded as the output's binary row (one reused row: copy it to
+      // keep it). Metrics carry the pass partition's own index, so a block
+      // lost and recomputed inside a pruned group write is still recorded
+      // under it. Task closures take `groups` and `runId`, not `cfg`, whose
+      // TableIO stays driver-side
+      val (groups, runId) = (cfg.groups, cfg.runId)
+      val enc = ExpressionEncoder[ExtractedRow]()
+      val dec = GraftExprBridge.decoder(
+        ExpressionEncoder[(Int, String, Seq[Span])](), input.schema)
+      def extracted(rows: RDD[InternalRow]): RDD[(Int, InternalRow)] =
+        (if (useSalt)
+          GraftExprBridge.hashShuffle(rows, input.schema, "_salt", nPart)
+        else if (mergeDown) rows.coalesce(nPart)
+        else rows).mapPartitionsWithIndex { (i, it) =>
+          val de = dec.createDeserializer()
+          val ser = enc.createSerializer()
+          extractPartition(i, it.map { r =>
+            val (g, id, spans) = de(r)
+            (g, InputDoc(id, spans), r.getLong(3))
+          }, groups, runId, acc).map { case (g, r) => (g, ser(r)) }
         }
-      } finally held.unpersist()
-    }
+      def frame(rows: RDD[InternalRow]): DataFrame =
+        GraftExprBridge.internalFrame(spark, rows, enc.schema)
+
+      def writeAndCommit(frameOf: Int => DataFrame): Unit = todo.foreach { g =>
+        val gT0 = System.currentTimeMillis()
+        cfg.tableIO.overwriteGroup(frameOf(g), g)
+        val gDocCount = {
+          // metrics rows for this group (accumulator is cumulative)
+          val rows = acc.value.asScala.filter(_.group == g)
+          rows.groupBy(_.partition_id)
+            .map(_._2.maxBy(_.task_attempt).doc_count).sum
+        }
+        docsProcessed += gDocCount
+        Checkpoint.commitGroup(cfg.outDir, g, cfg.runId, gDocCount,
+          System.currentTimeMillis() - gT0)
+      }
+      if (!onePass)
+        writeAndCommit(g => frame(extracted(GraftExprBridge.toRdd(
+          input.filter(col("_group") === g))).map(_._2)))
+      // with one group to write (groups = 1, or a resume) the pass is its
+      // write: holding its rows buys nothing
+      else if (todo.size == 1) writeAndCommit(_ => frame(extracted(in).map(_._2)))
+      else if (todo.nonEmpty) {
+        // one element per pass partition: its rows already encoded as the
+        // output's binary rows, one array per group, so the group writes
+        // run no object serializer
+        val held = extracted(in)
+          .mapPartitions { it =>
+            val by = Array.fill(groups)(Array.newBuilder[InternalRow])
+            it.foreach { case (g, r) => by(g) += r.copy() }
+            Iterator.single(by.map(_.result()))
+          }
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          try held.count() // the pass: a failure here commits nothing
+          finally free()
+          writeAndCommit { g =>
+            // the held partitions with docs of g (from the pass's metrics):
+            // the write launches tasks for these only, so it writes no
+            // zero-row file for a partition without them. A group with no
+            // docs gets no partition, and the writer then writes one
+            // schema-only file. Salted, the normal docs of a group hash into
+            // at most nPart/groups partitions when groups divides nPart
+            val parts = acc.value.asScala.filter(_.group == g)
+              .map(_.partition_id).toSet
+            frame(PartitionPruningRDD.create(held, parts.contains).flatMap(_(g)))
+          }
+        } finally held.unpersist()
+      }
+    } finally free()
 
     // metrics sidecar: dedupe task retries (keep max attempt per partition),
     // written driver-side as JSONL (one row per task partition — tiny; a

@@ -8,22 +8,29 @@ import org.apache.spark.TaskContext
 import org.apache.spark.internal.io.{FileCommitProtocol, SparkHadoopWriterUtils}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.{CaseInsensitiveMap, DateTimeUtils}
 import org.apache.spark.sql.errors.QueryExecutionErrors
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{SQLExecution, ShuffledRowRDD,
+  UnsafeRowSerializer}
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils,
   FileFormatWriter, WriteJobDescription}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter,
+  SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.SchemaUtils
 import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** Bridge to sql-private helpers (Column <-> Expression) for graft's
-  * custom expressions, to frames over binary rows for
-  * [[graft.pipeline.ExtractJob]] and to Spark's parquet write task for
+  * custom expressions, to binary rows for [[graft.pipeline.ExtractJob]]
+  * (a plan's rows, their decoding, Spark's hash exchange over them and
+  * frames over them) and to Spark's parquet write task for
   * [[graft.sources.HadoopTableIO]] — the standard extension-library pattern (cf.
   * SNIPPETS.md [2]/[3]: third-party strategies live in this package for
   * the same reason).
@@ -40,6 +47,42 @@ object GraftExprBridge {
                     schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** The rows of `df`'s executed plan in Catalyst's binary form
+    * (`queryExecution.toRdd`), planned once here. A partition may hand
+    * out one reused row: copy a row to keep it.
+    */
+  def toRdd(df: DataFrame): RDD[InternalRow] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+
+  /** `enc` resolved against the leading columns of `schema`, as `.as[T]`
+    * resolves it against a frame of those columns: its deserializer turns
+    * a row of `schema` into a `T` with the null handling of `.as[T]`.
+    */
+  def decoder[T](enc: ExpressionEncoder[T], schema: StructType)
+      : ExpressionEncoder[T] =
+    enc.resolveAndBind(DataTypeUtils.toAttributes(
+      StructType(schema.take(enc.schema.length))))
+
+  /** What `repartition(n, col(key))` does to binary rows of `schema`,
+    * without planning a query: Spark's own hash exchange
+    * (`ShuffleExchangeExec`'s dependency, partition
+    * `pmod(murmur3_hash(key), n)`, `UnsafeRowSerializer`), read back as
+    * a `ShuffledRowRDD` of exactly `n` partitions. A job over the result
+    * runs the exchange as its map stage; nothing re-plans it. The rows
+    * must be `UnsafeRow`s, as a projection's output is.
+    */
+  def hashShuffle(rows: RDD[InternalRow], schema: StructType, key: String,
+                  n: Int): RDD[InternalRow] = {
+    val sc = rows.sparkContext
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val dep = ShuffleExchangeExec.prepareShuffleDependency(rows, attrs,
+      HashPartitioning(attrs.filter(_.name == key), n),
+      new UnsafeRowSerializer(attrs.size),
+      SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sc))
+    new ShuffledRowRDD(dep,
+      SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sc))
+  }
 
   /** What `df.write.mode("overwrite").options(options).parquet(dir)` does
     * — the same files, checksums and modes, through Spark's own write task

@@ -178,6 +178,29 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
       .map(_.getString(0)).toSet == Set("committed"))
   }
 
+  test("metrics sidecar bytes_in counts UTF-8 bytes, the skew cost") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val out = tmpDir("bytes-in")
+    // 2-, 3- and 4-byte UTF-8 chars: a UTF-16 char count differs from each
+    val wide = Seq(
+      InputDoc("wide-1", Vector(Span("text", "café déjà vu", null, 0),
+        Span("text", "漢字のテキスト", null, 1))),
+      InputDoc("wide-2", Vector(Span("text", "emoji \uD83D\uDE00 and ß", null, 0),
+        Span("text", null, null, 1))))
+    val docs = CorpusGen.dataset(spark, 100, 42L).union(wide.toDS())
+    ExtractJob.run(spark, docs,
+      ExtractJob.Config(out, runId = "bytes", groups = 2, partitions = 4))
+    val want = docs.select(explode(col("spans")).as("s"))
+      .agg(sum(coalesce(octet_length(col("s.text")), lit(0)))).head().getLong(0)
+    val utf16 = (CorpusGen.corpus(42L, 100) ++ wide)
+      .flatMap(_.spans.flatMap(s => Option(s.text))).map(_.length.toLong).sum
+    assert(want != utf16, "the input must tell bytes from chars")
+    val got = spark.read.json(s"$out/metrics").agg(sum("bytes_in"))
+      .head().getLong(0)
+    assert(got == want, s"bytes_in $got, octet_length $want, chars $utf16")
+  }
+
   test("chunks view matches oracle chunks (document_chunks semantics)") {
     val out = tmpDir("chunks")
     val docs = CorpusGen.dataset(spark, 300, 42L)
@@ -436,6 +459,45 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
       s"${records.get()} records read for $N input rows")
   }
 
+  test("the input's source is read once per run: parquet rows once, raw files decoded once") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val held = sc.getPersistentRDDs.keySet.toSet
+    // parquet: the rows the file source hands out, counted by a typed map
+    // right over the scan, in every task that pulls them
+    val in = tmpDir("source-once-in")
+    CorpusGen.dataset(spark, N, 42L).write.mode("overwrite").parquet(in)
+    val rows = sc.longAccumulator("source rows")
+    val docs = spark.read.parquet(in).as[InputDoc]
+      .map { d => rows.add(1); d }
+    val rep = ExtractJob.run(spark, docs,
+      ExtractJob.Config(tmpDir("source-once-out"), runId = "src", groups = 4))
+    assert(rep.groupsRun == Seq(0, 1, 2, 3) && rep.docsProcessed == N)
+    assert(rows.value == N, s"the parquet source handed out ${rows.value} rows")
+
+    // raw files, salted: RawFiles.read's plan (one binaryFile scan, one
+    // decodeAny per file) with a counter around decodeAny
+    val dir = tmpDir("source-once-raw")
+    graft.gen.MixedGen.write(dir, 44)
+    val calls = sc.longAccumulator("decodeAny calls")
+    val root = dir + "/"
+    val raw = spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true").load(dir)
+      .select(col("path"), col("content"))
+      .flatMap { r =>
+        calls.add(1)
+        graft.sources.RawFiles.decodeAny(r.getString(0),
+          r.getAs[Array[Byte]]("content"), root)
+      }
+    val out = tmpDir("source-once-raw-out")
+    val rr = ExtractJob.run(spark, raw, ExtractJob.Config(out, runId = "raw",
+      groups = 4, partitions = 8, bigDocBytes = 1))
+    assert(rr.salted && rr.groupsRun == Seq(0, 1, 2, 3))
+    assert(calls.value == 44, s"${calls.value} decodeAny calls for 44 files")
+    assert(rr.docsProcessed == graft.sources.RawFiles.read(spark, dir).count())
+    assert(sc.getPersistentRDDs.keySet == held)
+  }
+
   test("a failure mid-run propagates, keeps earlier commits, holds nothing, resumes") {
     val docs = CorpusGen.dataset(spark, 300, 42L)
     val clean = tmpDir("fail-clean")
@@ -540,6 +602,76 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     // write on this input
     assert(atFirstWrite.get == 2, s"${atFirstWrite.get} jobs before the first write")
     assert(spark.sharedState.cacheManager.isEmpty)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("a salted pass is one job of two stages: two jobs before the first group write") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val atFirstWrite = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        stages.add(e.stageInfos.size)
+      }
+    }
+    val monster = Seq(InputDoc("monster",
+      Vector(Span("text", "x" * (2 << 20), null, 0)))).toDS()
+    val out = tmpDir("salted-jobs")
+    val io = ProbeIO(out, beforeWrite = _ =>
+      if (atFirstWrite.get < 0) atFirstWrite.set(ProbeIO.drainedCount(jobs)))
+    sc.addSparkListener(listener)
+    val report =
+      try ExtractJob.run(spark,
+        CorpusGen.dataset(spark, 300, 42L).union(monster),
+        ExtractJob.Config(out, runId = "sjobs", groups = 4, partitions = 8,
+          io = io))
+      finally {
+        org.apache.spark.ListenerDrain.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(report.salted && report.docsProcessed == 301)
+    // the skew decision (which reads and holds the input), then the pass:
+    // its exchange's map stage and its extraction stage. A pass planned as
+    // a query ran the map stage as a job of its own under AQE: 3 jobs
+    assert(atFirstWrite.get == 2, s"${atFirstWrite.get} jobs before the first write")
+    assert(stages.asScala.take(2).toSeq == Seq(1, 2), stages)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("a run whose skew decision fails holds nothing and commits nothing") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobs.add(e.jobResult == org.apache.spark.scheduler.JobSucceeded)
+    }
+    // a task failure injected in the scan, at one doc
+    val docs = CorpusGen.dataset(spark, 300, 42L).map { d =>
+      if (d.doc_id == "doc_00000007")
+        throw new IllegalStateException("injected scan failure")
+      d
+    }
+    val out = tmpDir("decision-fails")
+    sc.addSparkListener(listener)
+    val e =
+      try intercept[org.apache.spark.SparkException] {
+        ExtractJob.run(spark, docs,
+          ExtractJob.Config(out, runId = "df", groups = 4, partitions = 8))
+      } finally {
+        org.apache.spark.ListenerDrain.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(e.getMessage.contains("injected scan failure"), e)
+    assert(jobs.asScala.toSeq == Seq(false), s"jobs ended: $jobs")
+    assert(Checkpoint.committedGroups(out).isEmpty)
     assert(sc.getPersistentRDDs.keySet == before)
   }
 

@@ -12,9 +12,16 @@ the shuffle bytes read and written. Jobs and stages come from the
 listener records, so the
 `spark.job` spans the benchmark derives from them are not printed again.
 
-Usage: python3 tools/trace_timeline.py TRACE.jsonl [--run N]
+Each table opens with one summary line of the run's planning layer, up
+to its first group write (`sources.overwrite_group`, else the run's
+end): `first_job_ms`, the driver time from the run's start to its first
+job; `gaps_ms`, the time from that job's start to the first write in
+which no job runs; and the jobs and stages that started before the
+first write.
+
+Usage: python3 tools/trace_timeline.py TRACE.jsonl [--run N] [--summary]
 (`--run N` prints only the N-th traced run, 0-based; negative counts
-from the end.)
+from the end. `--summary` prints only each run's summary line.)
 """
 import argparse
 import json
@@ -51,9 +58,41 @@ def row(kind, name, start, end, cols=None):
     return f"{left} {n:>6} {tsum:>8} {tmax:>7} {ovh:>7} {rd:>10} {wr:>10}"
 
 
-def timeline(run, recs):
-    spans = recs["span"]
-    by_id = {s["id"]: s for s in spans}
+def run_jobs(run, recs):
+    """The listener jobs that started inside the run, in start order."""
+    t0_ms, end_ms = run["start_us"] / 1000.0, run["end_us"] / 1000.0
+    return sorted((j for j in recs["job"] if t0_ms - 1 <= j["start_ms"] <= end_ms),
+                  key=lambda j: j["start_ms"])
+
+
+def job_stages(job):
+    return [int(x) for x in str(job["stages"]).split(",") if x != ""]
+
+
+def summary(run, recs):
+    """One line: the run's driver time before its first job, the summed
+    time without a job from there to the first group write, and the jobs
+    and stages that started before that write."""
+    t0_ms, end_ms = run["start_us"] / 1000.0, run["end_us"] / 1000.0
+    under = under_run(run, recs)
+    writes = [s["start_us"] / 1000.0 for s in recs["span"]
+              if s["name"] == "sources.overwrite_group" and under(s)]
+    first_write = min(writes, default=end_ms)
+    before = [j for j in run_jobs(run, recs) if j["start_ms"] < first_write]
+    first_job = before[0]["start_ms"] if before else first_write
+    gaps, reach = 0.0, first_job
+    for j in before:
+        gaps += max(0.0, j["start_ms"] - reach)
+        reach = max(reach, j["end_ms"])
+    gaps += max(0.0, first_write - reach)
+    return (f"summary run_id={run['run_id']} first_job_ms={first_job - t0_ms:.0f} "
+            f"gaps_ms={gaps:.0f} jobs={len(before)} "
+            f"stages={sum(len(job_stages(j)) for j in before)} "
+            f"(before the first group write at {first_write - t0_ms:.0f} ms)")
+
+
+def under_run(run, recs):
+    by_id = {s["id"]: s for s in recs["span"]}
 
     def under(s):
         p = s["parent"]
@@ -62,11 +101,16 @@ def timeline(run, recs):
                 return True
             p = by_id[p]["parent"] if p in by_id else -1
         return False
+    return under
 
+
+def timeline(run, recs):
+    spans = recs["span"]
+    under = under_run(run, recs)
     t0_ms = run["start_us"] / 1000.0
-    end_ms = run["end_us"] / 1000.0
     out = [f"pipeline.run id={run['id']} run_id={run['run_id']} "
            f"wall={(run['end_us'] - run['start_us']) / 1000.0:.0f} ms",
+           summary(run, recs),
            f"{'kind':<6} {'name':<44} {'start':>8} {'end':>8} {'dur':>7} "
            f"{'tasks':>6} {'task_ms':>8} {'max_ms':>7} {'ovh_ms':>7} "
            f"{'shuf_rd':>10} {'shuf_wr':>10}"]
@@ -82,10 +126,8 @@ def timeline(run, recs):
     tasks = {}
     for t in recs["task"]:
         tasks.setdefault(t["stage_id"], []).append(t)
-    for j in recs["job"]:
-        if not (t0_ms - 1 <= j["start_ms"] <= end_ms):
-            continue
-        ids = [int(x) for x in str(j["stages"]).split(",") if x != ""]
+    for j in run_jobs(run, recs):
+        ids = job_stages(j)
         jt = [t for i in ids for t in tasks.get(i, [])]
         ok = "" if j["ok"] else " FAILED"
         items.append((j["start_ms"], 1, row(
@@ -107,6 +149,7 @@ def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("trace")
     ap.add_argument("--run", type=int, default=None)
+    ap.add_argument("--summary", action="store_true")
     a = ap.parse_args(argv)
     recs = load(a.trace)
     runs = sorted((s for s in recs["span"] if s["name"] == "pipeline.run"),
@@ -116,7 +159,10 @@ def main(argv):
     if not runs:
         print("no pipeline.run span in the trace", file=sys.stderr)
         return 1
-    print("\n\n".join(timeline(r, recs) for r in runs))
+    if a.summary:
+        print("\n".join(summary(r, recs) for r in runs))
+    else:
+        print("\n\n".join(timeline(r, recs) for r in runs))
     return 0
 
 
