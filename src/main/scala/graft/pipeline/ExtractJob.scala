@@ -21,10 +21,12 @@ import scala.jdk.CollectionConverters._
   *
   * Scale design (SURVEY.md §4):
   *  - ONE READ per run ([[run]]): the docs of the uncommitted groups are
-  *    planned once, as one projection, and read and decoded once, by the
-  *    skew decision's job, which holds them as RDD blocks
-  *    (MEMORY_AND_DISK). The pass then salts or merges the held docs with
-  *    RDD steps only and extracts them, in one job; each pass partition
+  *    planned once, as one projection. An input of fewer than 16 (2 x
+  *    SkewSampleParts) partitions is read and decoded once, by the skew
+  *    decision's job, which holds it as RDD blocks (MEMORY_AND_DISK); a
+  *    larger one is sampled by the decision and read in full by the pass
+  *    only, with nothing held. The pass salts or merges the docs with RDD
+  *    steps only and extracts them, in one job; each pass partition
   *    holds its rows, encoded as the output's binary rows, as one array
   *    per group, an RDD block. Each group is written from its own arrays
   *    in only the pass partitions that hold its docs, so its write runs
@@ -145,16 +147,18 @@ object ExtractJob {
 
   /** Extract `docs` into `cfg.outDir`, checkpointed per group (group =
     * pmod(xxhash64(doc_id), groups)). The docs of the uncommitted groups
-    * are planned once, and read and decoded once per run, whatever
-    * `groups` is: the skew decision's job scans them and holds them as
-    * RDD blocks (MEMORY_AND_DISK). ONE pass (one job) salts or merges the
-    * held docs and extracts them; each pass partition is held as one RDD
-    * block of one array per group of encoded (binary) output rows, and
-    * the held docs are freed. The groups are then written and committed
-    * in order, each from a frame over its own arrays in only the held
-    * partitions that hold its docs: at most one data file per such
-    * partition, and one schema-only file for a group without docs. A run
-    * with one group to write writes it straight from the pass.
+    * are planned once per run, whatever `groups` is. When the skew
+    * decision reads every input partition (fewer than 16), its job is the
+    * run's one read and decode of them and holds them as RDD blocks
+    * (MEMORY_AND_DISK); a larger input is sampled by the decision and
+    * read by the pass, with nothing held. ONE pass (one job) salts or
+    * merges the docs and extracts them; each pass partition is held as
+    * one RDD block of one array per group of encoded (binary) output
+    * rows, and the held docs are freed. The groups are then written and
+    * committed in order, each from a frame over its own arrays in only
+    * the held partitions that hold its docs: at most one data file per
+    * such partition, and one schema-only file for a group without docs. A
+    * run with one group to write writes it straight from the pass.
     */
   def run(spark: SparkSession, docs: Dataset[InputDoc], cfg: Config)
       : RunReport =
@@ -201,7 +205,7 @@ object ExtractJob {
   /** The shared run: skew decision, then the groups' write/commit loop.
     * Every pass reads the same projection of the input and shapes it
     * with the same RDD steps. `onePass` selects where a group's frame
-    * comes from: the held input of [[run]] — straight from its pass with
+    * comes from: the input of [[run]] — straight from its pass with
     * one group to write, else from the encoded rows its one held
     * extraction pass produced, read from only the blocks that hold the
     * group's docs — or a sub-job of its own over the group's pruned scan
@@ -239,15 +243,28 @@ object ExtractJob {
           .otherwise(pmod(xxhash64(col("doc_id")), lit(nPart))))
       .select("_group", "doc_id", "spans", "_cost", "_salt")
     val pending = input.filter(col("_group").isin(todo: _*))
-    // [[run]] holds the input: the decision job below reads, decodes and
-    // keeps the partitions it samples, and the pass reads them from there
-    // (and the rest from the scan), so each input partition is read once.
-    // Freed once the pass has run, or when the decision or the pass fails;
-    // a held block lost before then is recomputed from the scan
-    val in = if (onePass && todo.nonEmpty)
-      GraftExprBridge.toRdd(pending).map(_.copy())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // the rows the decision reads: [[run]]'s pass rows, so the input is
+    // planned once; [[runBucketed]]'s pass scans group by group, so its
+    // decision reads `_cost` alone. Planned only if a group is to be
+    // written — a no-op resume must not pay any input scan
+    lazy val scan = GraftExprBridge.toRdd(
+      if (onePass) pending else pending.select("_cost"))
+    val costCol = if (onePass) 3 else 0
+    lazy val srcParts = scan.getNumPartitions
+    // the decision reads every k-th input partition: the stride k keeps
+    // ≤ ~2x SkewSampleParts of them
+    lazy val k = math.max(srcParts / SkewSampleParts, 1)
+    // [[run]] holds its input when the decision reads all of it (k = 1):
+    // the decision's job reads, decodes and keeps every partition, and the
+    // pass reads them from there, so the input is read once. With k > 1
+    // the decision reads 1 in k partitions, and holding would store rows
+    // that no one reads again, so the pass scans the input itself. Freed
+    // once the pass has run, or when the decision or the pass fails; a
+    // held block lost before then is recomputed from the scan
+    val in = if (onePass && todo.nonEmpty && k == 1)
+      scan.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     else null
+    lazy val src = if (in != null) in else scan
     def free(): Unit =
       if (in != null && in.getStorageLevel != StorageLevel.NONE) in.unpersist()
 
@@ -272,24 +289,22 @@ object ExtractJob {
       // neighbors), strictly cheaper than the full-payload shuffle a false
       // positive would buy at 10^12 docs. In an Iceberg deployment the
       // exact max/sum come free from table column stats instead. Skipped
-      // entirely when every group is already committed — a no-op resume
-      // must not pay any input scan (report.salted is then false).
-      lazy val costs = if (in != null) in else GraftExprBridge.toRdd(pending)
-      lazy val srcParts = costs.getNumPartitions
+      // entirely when every group is already committed
+      // (report.salted is then false).
       def skewDecision(mx: Long, total: Long): Boolean = {
         val fairShare = math.max(total / math.max(nPart, 1), 1L)
         mx >= cfg.bigDocBytes || mx >= fairShare / 4
       }
       useSalt = todo.nonEmpty && {
-        val k = math.max(srcParts / SkewSampleParts, 1) // evenly-spaced stride
         // PartitionPruningRDD: launch ONLY the kept partitions' tasks (a
         // mapPartitionsWithIndex formulation would still dispatch one no-op
         // task per skipped partition); unpulled partition iterators never
         // open their files (FileScanRDD opens lazily on first pull), so the
         // skipped partitions' payloads are never read
-        val keptN = (srcParts + k - 1) / k // |{i : i % k == 0}|
-        val (mx, tot, cnt) = PartitionPruningRDD.create(costs, i => i % k == 0)
-          .map(_.getLong(3))
+        val kk = k // a lazy val in a task closure would capture this object
+        val keptN = (srcParts + kk - 1) / kk // |{i : i % kk == 0}|
+        val (mx, tot, cnt) = PartitionPruningRDD.create(src, i => i % kk == 0)
+          .map(_.getLong(costCol))
           .aggregate((0L, 0L, 0L))(
             { case ((m, t, c), v) => (math.max(m, v), t + v, c + 1) },
             { case ((m1, t1, c1), (m2, t2, c2)) =>
@@ -360,12 +375,13 @@ object ExtractJob {
           input.filter(col("_group") === g))).map(_._2)))
       // with one group to write (groups = 1, or a resume) the pass is its
       // write: holding its rows buys nothing
-      else if (todo.size == 1) writeAndCommit(_ => frame(extracted(in).map(_._2)))
+      else if (todo.size == 1)
+        writeAndCommit(_ => frame(extracted(src).map(_._2)))
       else if (todo.nonEmpty) {
         // one element per pass partition: its rows already encoded as the
         // output's binary rows, one array per group, so the group writes
         // run no object serializer
-        val held = extracted(in)
+        val held = extracted(src)
           .mapPartitions { it =>
             val by = Array.fill(groups)(Array.newBuilder[InternalRow])
             it.foreach { case (g, r) => by(g) += r.copy() }

@@ -4,8 +4,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.Job
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
-import org.apache.spark.TaskContext
+import org.apache.spark.{JobExecutionStatus, SparkContext, TaskContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, SparkHadoopWriterUtils}
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -25,7 +26,10 @@ import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter,
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.SchemaUtils
 import org.apache.spark.util.SerializableConfiguration
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success}
 
 /** Bridge to sql-private helpers (Column <-> Expression) for graft's
   * custom expressions, to binary rows for [[graft.pipeline.ExtractJob]]
@@ -105,6 +109,10 @@ object GraftExprBridge {
     * and its SQL execution events (no execution id, so no SQL tab entry
     * and no `SparkListenerSQLExecutionStart`/`End`); the write tasks'
     * output metrics stay 0. The session's SQL confs still reach the tasks.
+    *
+    * One more difference: when the write job fails, the job is aborted
+    * (its `_temporary` deleted) only once no task of it runs any more
+    * ([[awaitTasksEnded]]), so a failed write leaves no file behind.
     */
   def overwriteParquet(df: DataFrame, dir: String,
                        options: Map[String, String]): Unit = {
@@ -144,14 +152,17 @@ object GraftExprBridge {
     val timeZone = opts.getOrElse(DateTimeUtils.TIMEZONE_OPTION,
       state.conf.sessionLocalTimeZone)
     val tracker = SparkHadoopWriterUtils.createJobTrackerID(new java.util.Date)
+    val sc = session.sparkContext
     try {
       val commits = session.withActive(SQLExecution.withSQLConfPropagated(session) {
         val rdd = plan.execute()
         // an empty frame still writes one schema-only file, as Spark does
         val rows = if (rdd.partitions.isEmpty)
-          session.sparkContext.parallelize(Array.empty[InternalRow], 1) else rdd
-        session.sparkContext.runJob(rows,
-          (tc: TaskContext, it: Iterator[InternalRow]) => {
+          sc.parallelize(Array.empty[InternalRow], 1) else rdd
+        val msgs = new Array[TaskCommitMessage](rows.partitions.length)
+        val write = sc.submitJob(rows,
+          (it: Iterator[InternalRow]) => {
+            val tc = TaskContext.get()
             val conf = new Configuration(false)
             var i = 0
             while (i < entries.length) { conf.set(entries(i), entries(i + 1)); i += 2 }
@@ -161,7 +172,13 @@ object GraftExprBridge {
             FileFormatWriter.executeTask(desc, tracker, tc.stageId(),
               tc.partitionId(), tc.taskAttemptId().toInt & Int.MaxValue,
               committer, it, None).commitMsg
-          })
+          }, rows.partitions.indices,
+          (i: Int, m: TaskCommitMessage) => msgs(i) = m, msgs)
+        Await.ready(write, Duration.Inf)
+        write.value.get match {
+          case Success(m) => m
+          case Failure(e) => awaitTasksEnded(sc, write.jobIds); throw e
+        }
       })
       commits.foreach(committer.onTaskCommit)
       committer.commitJob(job, commits.toSeq)
@@ -170,6 +187,23 @@ object GraftExprBridge {
         committer.abortJob(job)
         throw e
     }
+  }
+
+  /** Waits, for at most a minute, until no task of the failed jobs `ids`
+    * runs. A failed job's other tasks are only told to stop: one still
+    * running, or launched just before the failure, can write its file
+    * under `_temporary` after an abort has deleted it. Read from the
+    * status store: once it holds a job's end, it holds the start of every
+    * task the job launched, and a stage's active task count reaches 0
+    * only with the end of its last task.
+    */
+  private def awaitTasksEnded(sc: SparkContext, ids: Seq[Int]): Unit = {
+    val st = sc.statusTracker
+    def running = ids.exists(id => st.getJobInfo(id).forall(j =>
+      j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0))))
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
   /** Register a [[graft.functions.Natives]] row as a SQL function: its

@@ -498,6 +498,49 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     assert(sc.getPersistentRDDs.keySet == held)
   }
 
+  test("the input is held only when the skew decision reads all of it") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // the RDDs that stored a block during a run over `parts` input
+    // partitions: the pass output, and the input if it was held
+    def run(parts: Int): (String, ExtractJob.RunReport, Set[Int]) = {
+      val rdds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onBlockUpdated(
+            e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
+          val b = e.blockUpdatedInfo
+          if (b.storageLevel.isValid)
+            b.blockId.asRDDId.foreach(id => rdds.add(id.rddId))
+        }
+      }
+      val docs = sc.parallelize(CorpusGen.corpus(42L, 300), parts).toDS()
+      val out = tmpDir(s"held-$parts")
+      sc.addSparkListener(listener)
+      val rep =
+        try ExtractJob.run(spark, docs, ExtractJob.Config(out,
+          runId = "held", groups = 4, partitions = 4))
+        finally {
+          org.apache.spark.ListenerDrain.drain(sc)
+          sc.removeSparkListener(listener)
+        }
+      (out, rep, rdds.asScala.toSet)
+    }
+    // 12 partitions: stride 1, the decision reads and holds every one
+    val (outAll, all, heldAll) = run(12)
+    assert(all.docsProcessed == 300)
+    assert(heldAll.size == 2, s"RDDs with blocks: $heldAll")
+    // 20 partitions: stride 2, the decision reads 10, nothing of the
+    // input is held; only the pass output is
+    val (outSampled, sampled, heldSampled) = run(20)
+    assert(sampled.docsProcessed == 300)
+    assert(heldSampled.size == 1, s"RDDs with blocks: $heldSampled")
+    assert(sc.getPersistentRDDs.keySet == before)
+    val a = ExtractJob.spansView(spark, outAll)
+    val b = ExtractJob.spansView(spark, outSampled)
+    assert(a.count() == b.count() && a.exceptAll(b).isEmpty)
+  }
+
   test("a failure mid-run propagates, keeps earlier commits, holds nothing, resumes") {
     val docs = CorpusGen.dataset(spark, 300, 42L)
     val clean = tmpDir("fail-clean")

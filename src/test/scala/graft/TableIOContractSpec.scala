@@ -238,6 +238,34 @@ class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll with TempDi
     assert(rows(out) == rows(clean))
   }
 
+  test("a failed group write returns once its last task has ended, leaving no file") {
+    import spark.implicits._
+    import TableIOContractSpec.{lateRunning, lateStarted}
+    lateStarted.set(false); lateRunning.set(false)
+    // task 0 fails 0.3 s in; task 1 has started by then and runs 3 s: a
+    // failed job's other tasks are told to stop, not stopped
+    val df = spark.range(0, 2, 1, 2).as[Long].mapPartitions { it =>
+      val tc = org.apache.spark.TaskContext.get()
+      if (tc.partitionId() == 1) {
+        lateStarted.set(true); lateRunning.set(true)
+        tc.addTaskCompletionListener[Unit](_ => lateRunning.set(false))
+      }
+      it.map { id =>
+        Thread.sleep(if (id == 0) 300 else 3000)
+        if (id == 0) throw new IllegalStateException("injected task failure")
+        id
+      }
+    }.toDF("doc_id")
+    val out = tempDir("graft-late-task")
+    intercept[Exception](HadoopTableIO(out.toString).overwriteGroup(df, 0))
+    assert(lateStarted.get)
+    assert(!lateRunning.get, "the failed write returned while a task still ran")
+    val dir = out.resolve("data/group=0")
+    if (Files.exists(dir))
+      assert(entries(dir).map(_._1).filter(n =>
+        n.endsWith(".parquet") || n.startsWith("_temporary")).isEmpty)
+  }
+
   test("LocalFs.Raw sets the modes Hadoop's chmod sets, sticky bit included") {
     val conf = new Configuration()
     val ours = new LocalFs.Raw
@@ -260,4 +288,8 @@ class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll with TempDi
       assert(mode(a) == Integer.parseInt(m, 8) && mode(a) == mode(b), m)
     }
   }
+}
+
+object TableIOContractSpec {
+  val lateStarted, lateRunning = new java.util.concurrent.atomic.AtomicBoolean
 }

@@ -17,11 +17,12 @@ to its first group write (`sources.overwrite_group`, else the run's
 end): `first_job_ms`, the driver time from the run's start to its first
 job; `gaps_ms`, the time from that job's start to the first write in
 which no job runs; and the jobs and stages that started before the
-first write.
+first write. `grep '^summary'` on the output keeps one such line per
+run.
 
-Usage: python3 tools/trace_timeline.py TRACE.jsonl [--run N] [--summary]
+Usage: python3 tools/trace_timeline.py TRACE.jsonl [--run N]
 (`--run N` prints only the N-th traced run, 0-based; negative counts
-from the end. `--summary` prints only each run's summary line.)
+from the end.)
 """
 import argparse
 import json
@@ -149,7 +150,6 @@ def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("trace")
     ap.add_argument("--run", type=int, default=None)
-    ap.add_argument("--summary", action="store_true")
     a = ap.parse_args(argv)
     recs = load(a.trace)
     runs = sorted((s for s in recs["span"] if s["name"] == "pipeline.run"),
@@ -159,10 +159,7 @@ def main(argv):
     if not runs:
         print("no pipeline.run span in the trace", file=sys.stderr)
         return 1
-    if a.summary:
-        print("\n".join(summary(r, recs) for r in runs))
-    else:
-        print("\n\n".join(timeline(r, recs) for r in runs))
+    print("\n\n".join(timeline(r, recs) for r in runs))
     return 0
 
 
